@@ -43,12 +43,8 @@ object Bench {
     // the driver can override via SPARK_GRAFT_CPUS for bigger SFs where
     // parallelism wins (d03 at sf0.1 already runs 2x faster at 32)
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // the tested session configuration, so the measured one is the same
+    val spark = GraftSession.local(cpus.toInt)
     // JVM/codegen warmup outside the timed loop so the first measured
     // query isn't charged for classloading and compiler ramp-up
     try SparkEntry.entry(spark).count() catch { case _: Throwable => () }

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev measurement main for the dup-rate gates (d06 SimHash and d04
   * MinHash near-dup pairs): times each operator with the gate FORCED each
   * way on the same corpus, so the dedup-first overhead (or win) is a
@@ -13,13 +11,7 @@ import org.apache.spark.sql.SparkSession
 object DedupBench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt)
     import org.apache.spark.sql.functions._
     val docs = Tables.documents(spark, sfDir)
     // same null-ignoring probe as the gate itself (count(text), not count(*))

@@ -15,14 +15,15 @@ object Streams {
 
   /** A FRESH readStream over the events parquet (each call its own source
     * so stream-stream joins are two independent streams, not a self-join).
-    * readStream requires an explicit schema, so probe it from a batch read
-    * of the same file — never pin a hand-written one, which silently
+    * readStream requires an explicit schema, so take the one the file's
+    * footer declares (read once per file version by Tables.parquet) —
+    * never pin a hand-written one, which silently
     * reinterprets values when the upstream writer changes physical type —
     * then apply the same schema-adaptive ts normalization as
     * graft.Tables.events. */
   private def eventStream(s: SparkSession, dir: String): DataFrame = {
     s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val sch = s.read.parquet(s"$dir/events.parquet").schema
+    val sch = Tables.parquet(s, s"$dir/events.parquet").schema
     Tables.normalizeTs(
       s.readStream.schema(sch)
         .option("pathGlobFilter", "events.parquet").parquet(dir))
@@ -280,7 +281,7 @@ object Streams {
     // integer quantized units via SQL round (engine-shared semantics).
     "v11_streaming_kmeans" -> { (s, dir) =>
       import graft.ext.Clustering
-      val sch = s.read.parquet(s"$dir/embeddings.parquet").schema
+      val sch = Tables.parquet(s, s"$dir/embeddings.parquet").schema
       val stream = s.readStream.schema(sch)
         .option("pathGlobFilter", "embeddings.parquet").parquet(dir)
       var centers = Clustering

@@ -539,6 +539,19 @@ class StreamingSpec extends SparkSpec {
     }
   }
 
+  test("a stream run again reuses its generated classes: no recompile on the second run") {
+    import org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME
+    val v08 = SparkEntry.queries("v08_transform_with_state")
+    val first = v08(spark, sf001).collect().toSeq
+    // each stream runs in a cloned session; only with artifact isolation
+    // off do its executors share the class loader the codegen cache keys on
+    val before = METRIC_COMPILATION_TIME.getCount
+    val second = v08(spark, sf001).collect().toSeq
+    assert(METRIC_COMPILATION_TIME.getCount - before === 0L,
+      "the second stream run recompiled generated classes")
+    assert(second === first)
+  }
+
   test("Trigger.AvailableNow: drains everything available, then stops on its own") {
     import org.apache.spark.sql.streaming.Trigger
     val src = s"/tmp/graft_io/avail_now_src_${System.nanoTime}"

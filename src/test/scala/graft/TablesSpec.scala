@@ -42,6 +42,65 @@ class TablesSpec extends SparkSpec {
     assert(e.count() > 0)
   }
 
+  /** Jobs the body starts, counted by a listener. Listener events arrive
+    * in order, so once a marker job run afterwards has been seen, every
+    * job of the body has been seen too. */
+  private def jobsStartedBy(body: => Unit): Int = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val (group, marker) = ("tables-spec-body", "tables-spec-marker")
+    val seen = new java.util.concurrent.atomic.AtomicInteger()
+    val markerSeen = new java.util.concurrent.CountDownLatch(1)
+    val l = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).map(_.getProperty("spark.jobGroup.id")) match {
+          case Some(`group`) => seen.incrementAndGet()
+          case Some(`marker`) => markerSeen.countDown()
+          case _ => ()
+        }
+    }
+    sc.addSparkListener(l)
+    try {
+      sc.setJobGroup(group, group)
+      try body finally sc.clearJobGroup()
+      sc.setJobGroup(marker, marker)
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      assert(markerSeen.await(60, java.util.concurrent.TimeUnit.SECONDS), "marker job never reported")
+      seen.get()
+    } finally sc.removeSparkListener(l)
+  }
+
+  test("table reads infer the footer schema once: a second read starts no job") {
+    Tables.orders(spark, sf001)
+    assert(jobsStartedBy { Tables.orders(spark, sf001) } === 0,
+      "a repeated accessor call re-read the footer with a Spark job")
+    assert(Tables.orders(spark, sf001).schema === spark.read.parquet(s"$sf001/orders.parquet").schema)
+  }
+
+  test("table reads: a file rewritten in place reads back with its new schema") {
+    import spark.implicits._
+    val tmp = java.nio.file.Files.createTempDirectory("tables-spec")
+    val file = tmp.resolve("t.parquet")
+    // a single-file table, as the accessors read: Spark writes a directory,
+    // so the lone part file is copied over `file`
+    def install(df: org.apache.spark.sql.DataFrame): Unit = {
+      val out = tmp.resolve("out")
+      df.coalesce(1).write.mode("overwrite").parquet(out.toString)
+      val part = out.toFile.listFiles().find(_.getName.endsWith(".parquet")).get
+      java.nio.file.Files.copy(part.toPath, file, java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+    }
+    try {
+      install(Seq((1L, "a")).toDF("id", "name"))
+      assert(Tables.parquet(spark, file.toString).schema.fieldNames.toSeq === Seq("id", "name"))
+      install(Seq((2, 0.5, "b")).toDF("k", "score", "tag"))
+      val again = Tables.parquet(spark, file.toString)
+      assert(again.schema === spark.read.parquet(file.toString).schema)
+      assert(again.schema.fieldNames.toSeq === Seq("k", "score", "tag"))
+      assert(again.collect().map(r => (r.getInt(0), r.getDouble(1), r.getString(2))).toSeq ===
+        Seq((2, 0.5, "b")))
+    } finally org.apache.commons.io.FileUtils.deleteDirectory(tmp.toFile)
+  }
+
   // Drift detector: the driver regenerates /root/testdata between rounds
   // and has changed physical types before (r9: events.ts ns -> µs, which
   // errored 14 queries). This pins the CURRENT schema of every table so a
