@@ -552,6 +552,34 @@ class StreamingSpec extends SparkSpec {
     assert(second === first)
   }
 
+  test("a stream run forks no shell for its file operations") {
+    // Without the native Hadoop library the stock local file system forks
+    // `chmod` per created file and directory and `readlink` per FileContext
+    // rename: over 100 processes per run of this query. The session's
+    // file systems do both in process (graft.LocalFs); this fails if the
+    // factory's settings are lost or a stock `file://` FileSystem reached
+    // Hadoop's cache first.
+    import jdk.jfr.Recording
+    import jdk.jfr.consumer.RecordingFile
+    import scala.jdk.CollectionConverters._
+    val v08 = SparkEntry.queries("v08_transform_with_state")
+    val jfr = java.nio.file.Files.createTempFile("graft_forks", ".jfr")
+    val rec = new Recording()
+    try {
+      rec.enable("jdk.ProcessStart").withoutStackTrace()
+      rec.start()
+      try assert(v08(spark, sf001).collect().nonEmpty) finally rec.stop()
+      rec.dump(jfr)
+      val commands = RecordingFile.readAllEvents(jfr).asScala
+        .filter(_.getEventType.getName == "jdk.ProcessStart").map(_.getString("command"))
+      val shellFs = commands.filter(c => c.startsWith("chmod") || c.startsWith("readlink"))
+      assert(shellFs.size === 0, s"chmod/readlink forks in one stream run, e.g. ${shellFs.take(3)}")
+    } finally {
+      rec.close()
+      java.nio.file.Files.deleteIfExists(jfr)
+    }
+  }
+
   test("Trigger.AvailableNow: drains everything available, then stops on its own") {
     import org.apache.spark.sql.streaming.Trigger
     val src = s"/tmp/graft_io/avail_now_src_${System.nanoTime}"
