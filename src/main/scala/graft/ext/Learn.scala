@@ -1,7 +1,8 @@
 package graft.ext
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
 /** Classic-MLlib learning thin-slice beyond clustering/recommendation:
   * closed-form linear regression and multinomial Naive Bayes — the two
@@ -778,35 +779,26 @@ object Learn {
     st.select("w0q", "w1q", "w2q")
   }
 
-  // ---- multilayer perceptron (reference ml/ann/Layer.scala — AffineLayer
-  // :173 forward x·W + b / :194 delta backprop W'·δ, FunctionalLayer
-  // sigmoid :528 + its δ·f'(x) backprop; stacked by FeedForwardTopology
-  // :319 multiLayerPerceptron exactly as the 2-2-1 net here; driven by
+  // ---- multilayer perceptron, d inputs -> h sigmoid units -> 1 sigmoid
+  // output (reference ml/ann/Layer.scala — AffineLayer :173 forward
+  // x·W + b / :194 delta backprop W'·δ, FunctionalLayer sigmoid :528 +
+  // its δ·f'(x) backprop; stacked by FeedForwardTopology :319
+  // multiLayerPerceptron, which takes layers: Array[Int]; driven by
   // ml/classification/MultilayerPerceptronClassifier.scala:154 through
-  // GradientDescent. DECLARED DEVIATIONS, the s19 conventions: per-unit
+  // GradientDescent). DECLARED DEVIATIONS, the s19 conventions: per-unit
   // activations and per-row hidden deltas quantized to exact micro
   // integers (so every gradient sum is partitioning-independent), a
-  // constant step, full batch, and a FIXED asymmetric integer init
-  // (±1-weight difference detectors) in place of the reference's seeded
-  // random init — zero init would leave the hidden units permanently
-  // identical, and randomness is exactly what the oracle gate cannot
-  // allow. -------------------------------------------------------------
-
-  /** Hidden-unit micro sigmoid over (bias, u, v) quantized weights and
-    * BIGINT (x1, x2) — the [[lrProbExpr]] algebra with nameable weight
-    * columns; shared verbatim with the oracle. */
-  def mlpHiddenExpr(b: String, u: String, v: String): String =
-    s"CAST(round(1000000.0 / (1.0 + exp(-(CAST((($b + ($u * x1)) + ($v * x2)) AS DOUBLE) / 65536.0)))) AS BIGINT)"
-
-  /** Output-unit micro sigmoid over quantized (v0q, v1q, v2q) and the
-    * micro hidden activations (h1, h2): the affine term is
-    * v0 + v1·h1/1e6 + v2·h2/1e6, all in one exact integer numerator. */
-  val mlpOutExpr: String =
-    "CAST(round(1000000.0 / (1.0 + exp(-(CAST(((v0q * 1000000) + ((v1q * h1) + (v2q * h2))) AS DOUBLE) / 65536000000.0)))) AS BIGINT)"
+  // constant step, full batch, and a FIXED cyclic difference-detector
+  // init in place of the reference's seeded random init — zero init would
+  // leave the hidden units permanently identical, and randomness is
+  // exactly what the oracle gate cannot allow. The layer formulas are
+  // GENERATED per (d, h) (the s105 featPickExpr pattern applied to both
+  // layers) and shared verbatim with the oracle; the training loop
+  // [[mlpFitDh]] evaluates the same formulas on the JVM. ----------------
 
   /** Per-row hidden delta in micro units: δ_h = δ_o·v/2^16 · h'(a) with
     * h' = h(1−h) on the micro activation — one fixed double expression,
-    * quantized so the six hidden-gradient sums stay exact integers. */
+    * quantized so the hidden-gradient sums stay exact integers. */
   def mlpHidDeltaExpr(vq: String, h: String): String =
     s"CAST(round((CAST((dlt * $vq) AS DOUBLE) / 65536.0) * ((CAST($h AS DOUBLE) / 1000000.0) * (1.0 - (CAST($h AS DOUBLE) / 1000000.0)))) AS BIGINT)"
 
@@ -816,99 +808,14 @@ object Learn {
   def mlpUpd12Expr(wq: String, g: String, lr: Double): String =
     s"$wq + CAST(round(($lr * ((CAST($g AS DOUBLE) / 1000000000000.0) / n)) * 65536.0) AS BIGINT)"
 
-  val mlpWeightCols: Seq[String] =
-    Seq("w10q", "w11q", "w12q", "w20q", "w21q", "w22q", "v0q", "v1q", "v2q")
-
-  /** The fixed difference-detector init: h1 fires on x1 > x2, h2 on
-    * x2 > x1, the output sums both. */
-  def mlpInit(spark: org.apache.spark.sql.SparkSession): DataFrame =
-    spark.sql("SELECT " + Seq(0L, 65536L, -65536L, 0L, -65536L, 65536L,
-        0L, 65536L, 65536L)
-      .zip(mlpWeightCols)
-      .map { case (v, c) => s"CAST($v AS BIGINT) AS $c" }.mkString(", "))
-
-  /** The per-row forward + delta projection under the weight row in
-    * scope — the shared unit of the training step, the scorer, and the
-    * oracle's unrolled iterations. */
-  private def mlpForwardCols: Seq[String] = Seq(
-    s"${mlpHiddenExpr("w10q", "w11q", "w12q")} AS h1",
-    s"${mlpHiddenExpr("w20q", "w21q", "w22q")} AS h2")
-
-  /** ONE full-batch backprop step over (x1, x2, yq) from the 1-row
-    * weight frame: forward, per-row quantized deltas, ten exact integer
-    * gradient sums, nine weight updates. */
-  def mlpStep(feats: DataFrame, w: DataFrame, lr: Double): DataFrame = {
-    // r21: single-reference — the nine weight columns ride through the
-    // forward/delta projections and the aggregate (max of a broadcast
-    // constant), so the lazy-checkpoint chain in [[mlpFitPredict]] is
-    // safe; the update projection runs over the aggregate's 1-row output.
-    val fwd = feats.crossJoin(broadcast(w))
-      .selectExpr(Seq("x1", "x2", "yq") ++ mlpWeightCols ++ mlpForwardCols: _*)
-      .selectExpr(Seq("x1", "x2", "h1", "h2",
-        s"yq - $mlpOutExpr AS dlt") ++ mlpWeightCols: _*)
-      .selectExpr(Seq("x1", "x2", "h1", "h2", "dlt",
-        s"${mlpHidDeltaExpr("v1q", "h1")} AS dh1",
-        s"${mlpHidDeltaExpr("v2q", "h2")} AS dh2") ++ mlpWeightCols: _*)
-    fwd.agg(count(lit(1)).as("n"),
-      Seq(sum("dlt").as("gv0"),
-        sum(col("dlt") * col("h1")).as("gv1"),
-        sum(col("dlt") * col("h2")).as("gv2"),
-        sum("dh1").as("g10"), sum(col("dh1") * col("x1")).as("g11"),
-        sum(col("dh1") * col("x2")).as("g12"),
-        sum("dh2").as("g20"), sum(col("dh2") * col("x1")).as("g21"),
-        sum(col("dh2") * col("x2")).as("g22")) ++
-        mlpWeightCols.map(c => max(c).as(c)): _*)
-      .selectExpr(
-        s"${lrUpdExpr("w10q", "g10", lr)} AS w10q",
-        s"${lrUpdExpr("w11q", "g11", lr)} AS w11q",
-        s"${lrUpdExpr("w12q", "g12", lr)} AS w12q",
-        s"${lrUpdExpr("w20q", "g20", lr)} AS w20q",
-        s"${lrUpdExpr("w21q", "g21", lr)} AS w21q",
-        s"${lrUpdExpr("w22q", "g22", lr)} AS w22q",
-        s"${lrUpdExpr("v0q", "gv0", lr)} AS v0q",
-        s"${mlpUpd12Expr("v1q", "gv1", lr)} AS v1q",
-        s"${mlpUpd12Expr("v2q", "gv2", lr)} AS v2q")
-  }
-
-  /** Train `iters` steps, then score (idCol, x1, x2, yq) rows: emits
-    * (id, label, h1, h2, o_micro, pred) — hidden activations gated too. */
-  def mlpFitPredict(feats: DataFrame, iters: Int, lr: Double,
-                    idCol: String, cohort: Long): DataFrame = {
-    val f = feats.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // r21: lazy-chained like [[logisticFit2]]
-    var w = mlpInit(f.sparkSession).localCheckpoint(false)
-    for (t <- 1 to iters) w = mlpStep(f, w, lr).localCheckpoint(t == iters)
-    val out = f.filter(col(idCol) <= cohort)
-      .crossJoin(broadcast(w))
-      .selectExpr(Seq(idCol, "yq") ++ mlpWeightCols ++ mlpForwardCols: _*)
-      .selectExpr(idCol, "CAST(yq DIV 1000000 AS BIGINT) AS label",
-        "h1", "h2", s"$mlpOutExpr AS o_micro")
-      .selectExpr(idCol, "label", "h1", "h2", "o_micro",
-        "CAST(CASE WHEN o_micro >= 500000 THEN 1 ELSE 0 END AS BIGINT) AS pred")
-      .orderBy(idCol)
-    f.unpersist()
-    out
-  }
-
-  // ---- general (d, h) multilayer perceptron (reference ml/ann/Layer
-  // .scala stacks ARBITRARY affine+sigmoid layers and
-  // MultilayerPerceptronClassifier takes layers: Array[Int]; the 2-2-1
-  // member above is its smallest slice). The d-feature input and h-unit
-  // hidden layer are GENERATED (the s105 featPickExpr pattern applied
-  // to both layers): weight/gradient names, the fold-left affine text,
-  // and the cyclic difference-detector init all extend the 2-2-1
-  // strings, whose (2, 2) instantiation is byte-identical (MlpDhSpec
-  // pins the fitted scoring output equal to mlpFitPredict). ------------
-
-  /** Hidden unit j's weight columns then output weights — the (2, 2)
-    * slice is [[mlpWeightCols]] order-for-order. */
+  /** Hidden unit j's weight columns (bias w_j0q, then w_jiq per input),
+    * then the output weights v0q..vhq. */
   def mlpWeightColsDh(d: Int, h: Int): Seq[String] =
     (1 to h).flatMap(j => (0 to d).map(i => s"w$j${i}q")) ++
       (0 to h).map(j => s"v${j}q")
 
   /** Cyclic difference-detector init: unit j fires on
-    * x_{jm} − x_{jm+1} (jm = ((j−1) mod d) + 1), output sums all units
-    * — the (2, 2) values are the legacy fixed init exactly. */
+    * x_{jm} − x_{jm+1} (jm = ((j−1) mod d) + 1), output sums all units. */
   def mlpInitValsDh(d: Int, h: Int): Seq[Long] =
     (1 to h).flatMap { j =>
       val jm = ((j - 1) % d) + 1
@@ -917,67 +824,170 @@ object Learn {
         if (i == jm) 65536L else if (i == neg) -65536L else 0L)
     } ++ (0L +: Seq.fill(h)(65536L))
 
-  /** [[mlpHiddenExpr]] generalized: fold-left affine over d inputs. */
+  /** Hidden unit j's micro sigmoid over its quantized weights and BIGINT
+    * x1..xd — the [[lrProbExprK]] algebra, fold-left affine. */
   def mlpHiddenExprDh(j: Int, d: Int): String = {
     val aff = (1 to d).map(i => s"(w$j${i}q * x$i)")
       .foldLeft(s"w${j}0q")((a, t) => s"($a + $t)")
     s"CAST(round(1000000.0 / (1.0 + exp(-(CAST($aff AS DOUBLE) / 65536.0)))) AS BIGINT)"
   }
 
-  /** [[mlpOutExpr]] generalized: reduce-left over h hidden terms. */
+  /** Output-unit micro sigmoid over quantized v0q..vhq and the micro
+    * hidden activations h1..hh: the affine term v0 + Σ v_j·h_j/1e6 is one
+    * exact integer numerator, reduce-left over the h terms. */
   def mlpOutExprH(h: Int): String = {
     val inner = (1 to h).map(j => s"(v${j}q * h$j)").reduce((a, b) => s"($a + $b)")
     s"CAST(round(1000000.0 / (1.0 + exp(-(CAST(((v0q * 1000000) + $inner) AS DOUBLE) / 65536000000.0)))) AS BIGINT)"
   }
 
-  def mlpInitDh(spark: org.apache.spark.sql.SparkSession, d: Int, h: Int): DataFrame =
-    spark.sql("SELECT " + mlpInitValsDh(d, h).zip(mlpWeightColsDh(d, h))
-      .map { case (v, c) => s"CAST($v AS BIGINT) AS $c" }.mkString(", "))
+  /** Spark's `round(x)` on DOUBLE (`RoundBase`): HALF_UP through
+    * `BigDecimal.valueOf`, NaN and ±∞ passed through. */
+  private def sqlRound(x: Double): Double =
+    if (x.isNaN || x.isInfinite) x
+    else java.math.BigDecimal.valueOf(x).setScale(0, java.math.RoundingMode.HALF_UP).doubleValue
 
-  /** ONE full-batch backprop step at (d, h) — the [[mlpStep]] loop with
-    * generated per-unit/per-input columns: forward, quantized deltas,
-    * (h+1)(d+2) exact integer gradient sums, the same update strings. */
-  def mlpStepDh(feats: DataFrame, w: DataFrame, d: Int, h: Int,
-                lr: Double): DataFrame = {
-    val xs = (1 to d).map(i => s"x$i")
-    val hs = (1 to h).map(j => s"h$j")
-    // r21: single-reference like [[mlpStep]] — the weight columns ride
-    // through the projections and the aggregate
-    val wCols = mlpWeightColsDh(d, h)
-    val fwd = feats.crossJoin(broadcast(w))
-      .selectExpr(xs ++ Seq("yq") ++ wCols ++
-        (1 to h).map(j => s"${mlpHiddenExprDh(j, d)} AS h$j"): _*)
-      .selectExpr(xs ++ hs ++ Seq(s"yq - ${mlpOutExprH(h)} AS dlt") ++
-        wCols: _*)
-      .selectExpr(xs ++ hs ++ Seq("dlt") ++
-        (1 to h).map(j => s"${mlpHidDeltaExpr(s"v${j}q", s"h$j")} AS dh$j") ++
-        wCols: _*)
-    val aggs = sum("dlt").as("gv0") +:
-      ((1 to h).map(j => sum(col("dlt") * col(s"h$j")).as(s"gv$j")) ++
-        (1 to h).flatMap(j => sum(s"dh$j").as(s"g${j}0") +:
-          (1 to d).map(i => sum(col(s"dh$j") * col(s"x$i")).as(s"g$j$i"))) ++
-        wCols.map(c => max(c).as(c)))
-    fwd.agg(count(lit(1)).as("n"), aggs: _*).selectExpr(
-      ((1 to h).flatMap(j => (0 to d).map(i =>
-        s"${lrUpdExpr(s"w$j${i}q", s"g$j$i", lr)} AS w$j${i}q")) ++
-        (s"${lrUpdExpr("v0q", "gv0", lr)} AS v0q" +:
-          (1 to h).map(j => s"${mlpUpd12Expr(s"v${j}q", s"gv$j", lr)} AS v${j}q"))): _*)
+  /** ANSI `CAST(x AS BIGINT)` on DOUBLE: truncates toward zero, and fails
+    * on NaN or outside the BIGINT range by the same comparison. */
+  private def sqlLong(x: Double): Long =
+    if (Math.floor(x) <= Long.MaxValue && Math.ceil(x) >= Long.MinValue) x.toLong
+    else throw new ArithmeticException(s"CAST($x AS BIGINT) overflows")
+
+  /** Adds the gradient sums of one partition's packed rows (x1..xd, yq
+    * repeated) under weights `w` into `acc`, whose layout is n, gv0..gvh,
+    * then g_j0..g_jd per hidden unit j: the weight layout of
+    * [[mlpWeightColsDh]] shifted by 2 + h, with v0q..vhq mapped to
+    * gv0..gvh. Each value is its SQL string's, operation for operation
+    * (see [[mlpFitDh]]). */
+  private def mlpGradSums(acc: Array[Long], rows: Array[Long], w: Array[Long],
+                          d: Int, h: Int): Array[Long] = {
+    import Math.{addExact, multiplyExact}
+    val (width, v0, g0) = (d + 1, h * (d + 1), 2 + h)
+    val hid = new Array[Long](h)
+    var r = 0
+    while (r < rows.length) {
+      var j = 0
+      while (j < h) { // mlpHiddenExprDh
+        var a = w(j * width)
+        var i = 1
+        while (i <= d) { a = addExact(a, multiplyExact(w(j * width + i), rows(r + i - 1))); i += 1 }
+        hid(j) = sqlLong(sqlRound(1000000.0 / (1.0 + StrictMath.exp(-(a.toDouble / 65536.0)))))
+        j += 1
+      }
+      var s = multiplyExact(w(v0 + 1), hid(0)) // mlpOutExprH
+      j = 1
+      while (j < h) { s = addExact(s, multiplyExact(w(v0 + 1 + j), hid(j))); j += 1 }
+      val o = sqlLong(sqlRound(1000000.0 / (1.0 + StrictMath.exp(
+        -(addExact(multiplyExact(w(v0), 1000000L), s).toDouble / 65536000000.0)))))
+      val dlt = Math.subtractExact(rows(r + d), o)
+      acc(0) = addExact(acc(0), 1L)
+      acc(1) = addExact(acc(1), dlt)
+      j = 0
+      while (j < h) {
+        val hm = hid(j).toDouble / 1000000.0 // mlpHidDeltaExpr
+        val dh = sqlLong(sqlRound(
+          (multiplyExact(dlt, w(v0 + 1 + j)).toDouble / 65536.0) * (hm * (1.0 - hm))))
+        acc(2 + j) = addExact(acc(2 + j), multiplyExact(dlt, hid(j)))
+        val b = g0 + j * width
+        acc(b) = addExact(acc(b), dh)
+        var i = 1
+        while (i <= d) { acc(b + i) = addExact(acc(b + i), multiplyExact(dh, rows(r + i - 1))); i += 1 }
+        j += 1
+      }
+      r += width
+    }
+    acc
   }
 
-  /** Train `iters` steps at (d, h), then score the cohort: emits
-    * (id, label, h1..hh, o_micro, pred) — the [[mlpFitPredict]] shape
-    * with h hidden activations. */
+  /** The driver-side update from the sums of [[mlpGradSums]]:
+    * [[lrUpdExpr]] for w_jiq and v0q, [[mlpUpd12Expr]] for v1q..vhq. */
+  private def mlpUpdate(w: Array[Long], g: Array[Long], h: Int, lr: Double): Array[Long] = {
+    val v0 = w.length - (h + 1)
+    Array.tabulate(w.length) { k =>
+      val (sum, scale) =
+        if (k < v0) (g(2 + h + k), 1e6) else (g(1 + k - v0), if (k == v0) 1e6 else 1e12)
+      Math.addExact(w(k),
+        sqlLong(sqlRound((lr * ((sum.toDouble / scale) / g(0).toDouble)) * 65536.0)))
+    }
+  }
+
+  /** Train `iters` full-batch backprop steps at (d, h) over the BIGINT
+    * columns x1..xd and yq of `feats`; returns the fitted weights in
+    * [[mlpWeightColsDh]] order, starting from [[mlpInitValsDh]].
+    *
+    * The rows are read once into a persisted RDD (one packed array of
+    * longs per partition). Each step is then ONE `treeAggregate` of the
+    * 1 + (h+1) + h(d+1) exact sums — n, gv0..gvh and the g_ji — followed
+    * by the weight update on the driver: the shape of the reference's
+    * optimizers (mllib GradientDescent.runMiniBatchSGD runs one
+    * treeAggregate per iteration over cached data). The loop runs outside
+    * Catalyst because a step written as SQL is a planned, code-generated
+    * and checkpointed query that AQE runs as several stage jobs, while the
+    * work is one pass over the rows; a SQL step's fixed cost is most of a
+    * small fit's time.
+    *
+    * The arithmetic repeats the SQL step's formula strings operation for
+    * operation, so the weights are the ones those strings compute (the
+    * DuckDB oracle runs them; MlpDhSpec compares against the SQL step in
+    * Spark):
+    *   - per row: h_j = [[mlpHiddenExprDh]] (fold-left affine),
+    *     o = [[mlpOutExprH]] (reduce-left), dlt = yq − o and
+    *     dh_j = [[mlpHidDeltaExpr]];
+    *   - sums: gv0 = Σ dlt, gv_j = Σ dlt·h_j, g_j0 = Σ dh_j,
+    *     g_ji = Σ dh_j·x_i;
+    *   - update: [[lrUpdExpr]] for w_jiq and v0q, [[mlpUpd12Expr]] for
+    *     v_jq, `(lr * ((g / scale) / n)) * 65536.0` in that order.
+    * BIGINT `+ − ×` and the sums use `Math.*Exact`, so they fail on
+    * overflow as ANSI mode does. `exp` is `StrictMath.exp`, which Spark's
+    * `Exp` calls; `round` and `CAST(double AS BIGINT)` are [[sqlRound]]
+    * and [[sqlLong]]. The decimal literals of the strings (`1000000.0`,
+    * `65536.0`, `lr` printed as text) are exact or widen back to the same
+    * double.
+    *
+    * A null in x1..xd or yq raises IllegalArgumentException naming the
+    * column (the SQL step would drop such a row from every sum but n). */
+  def mlpFitDh(feats: DataFrame, d: Int, h: Int, iters: Int, lr: Double): Seq[Long] = {
+    require(d >= 2 && d <= 4 && h >= 2 && h <= 4,
+      s"mlpFitDh: (d, h) = ($d, $h) outside [2, 4] x [2, 4]")
+    if (iters == 0) return mlpInitValsDh(d, h)
+    val cols = (1 to d).map(i => s"x$i") :+ "yq"
+    cols.foreach(c => require(feats.schema(c).dataType == LongType,
+      s"mlpFitDh: column $c is ${feats.schema(c).dataType.sql}, not BIGINT"))
+    val rows = feats.select(cols.map(col): _*).queryExecution.toRdd.mapPartitions { it =>
+      val packed = new scala.collection.mutable.ArrayBuilder.ofLong
+      it.foreach { r =>
+        for (k <- cols.indices) {
+          if (r.isNullAt(k))
+            throw new IllegalArgumentException(s"mlpFitDh: column ${cols(k)} holds a null")
+          packed += r.getLong(k)
+        }
+      }
+      Iterator.single(packed.result())
+    }.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    try (1 to iters).foldLeft(mlpInitValsDh(d, h).toArray) { (w, _) =>
+      val g = rows.treeAggregate(new Array[Long](2 + h + h * (d + 1)))(
+        (acc, part) => mlpGradSums(acc, part, w, d, h),
+        (a, b) => { for (k <- a.indices) a(k) = Math.addExact(a(k), b(k)); a })
+      // no rows: the SQL update is NULL, and there is no row to score
+      if (g(0) == 0L) w else mlpUpdate(w, g, h, lr)
+    }.toSeq
+    catch {
+      // a task's input or overflow error, not Spark's job-abort wrapper
+      case e: org.apache.spark.SparkException
+          if e.getCause.isInstanceOf[IllegalArgumentException] ||
+            e.getCause.isInstanceOf[ArithmeticException] => throw e.getCause
+    } finally rows.unpersist(blocking = false)
+  }
+
+  /** Train `iters` steps at (d, h) with [[mlpFitDh]], then score the
+    * cohort: emits (id, label, h1..hh, o_micro, pred). The fitted weights
+    * enter the scoring projection as a one-row local relation. */
   def mlpFitPredictDh(feats: DataFrame, d: Int, h: Int, iters: Int,
                       lr: Double, idCol: String, cohort: Long): DataFrame = {
-    require(d >= 2 && d <= 4 && h >= 2 && h <= 4,
-      s"mlpFitPredictDh: (d, h) = ($d, $h) outside [2, 4] x [2, 4]")
-    val f = feats.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // r21: lazy-chained like [[logisticFit2]]
-    var w = mlpInitDh(f.sparkSession, d, h).localCheckpoint(false)
-    for (t <- 1 to iters)
-      w = mlpStepDh(f, w, d, h, lr).localCheckpoint(t == iters)
+    val w = feats.sparkSession.createDataFrame(
+      java.util.List.of(Row.fromSeq(mlpFitDh(feats, d, h, iters, lr))),
+      StructType(mlpWeightColsDh(d, h).map(StructField(_, LongType))))
     val hs = (1 to h).map(j => s"h$j")
-    val out = f.filter(col(idCol) <= cohort)
+    feats.filter(col(idCol) <= cohort)
       .crossJoin(broadcast(w))
       .selectExpr(Seq(idCol, "yq") ++ mlpWeightColsDh(d, h) ++
         (1 to h).map(j => s"${mlpHiddenExprDh(j, d)} AS h$j"): _*)
@@ -986,8 +996,6 @@ object Learn {
       .selectExpr(Seq(idCol, "label") ++ hs ++ Seq("o_micro",
         "CAST(CASE WHEN o_micro >= 500000 THEN 1 ELSE 0 END AS BIGINT) AS pred"): _*)
       .orderBy(idCol)
-    f.unpersist()
-    out
   }
 
   // ---- one-vs-rest multiclass reduction (reference ml/classification/

@@ -1114,27 +1114,23 @@ object Ml {
     // integer-sum scan, z-scores and the principal projection
     // micro-quantized, eigenvalues gated through the per-row
     // explained-variance column.
-    // Multilayer perceptron, 2-2-1 (reference ml/ann/Layer.scala affine
-    // + sigmoid stack via FeedForwardTopology.multiLayerPerceptron:319,
+    // Multilayer perceptron (reference ml/ann/Layer.scala affine +
+    // sigmoid stack via FeedForwardTopology.multiLayerPerceptron:319,
     // driven by ml/classification/MultilayerPerceptronClassifier
-    // .scala:154 — mechanics and declared deviations on Learn.mlpStep):
-    // two full-batch quantized backprop steps on the s19 problem, then
-    // cohort scoring with the hidden activations gated alongside the
-    // output.
+    // .scala:154 — mechanics and declared deviations on Learn.mlpFitDh):
+    // the smallest 2-2-1 net on the s19 problem, two full-batch quantized
+    // backprop steps, then cohort scoring with the hidden activations
+    // gated alongside the output.
     "s44_mlp" -> { (s, dir) =>
-      Learn.mlpFitPredict(lrFeatures(s, dir, 10, 1000000L), iters = 2,
-        lr = 1.0, "o_orderkey", 2000L)
+      Learn.mlpFitPredictDh(lrFeatures(s, dir, 10, 1000000L), d = 2, h = 2,
+        iters = 2, lr = 1.0, "o_orderkey", 2000L)
     },
 
-    // General (d, h) multilayer perceptron (reference ml/ann/Layer.scala
-    // stacks ARBITRARY layers; MultilayerPerceptronClassifier takes
-    // layers: Array[Int] — s44 is the fixed 2-2-1 slice): a 3-3-1 net
-    // over the s19 base plus a third orderkey-residue feature, generated
-    // layer text whose (2, 2) instantiation is byte-identical to the
-    // legacy strings (MlpDhSpec pins text AND fitted output; the spec
-    // also shows 3-3-1 learning an x1 xor x3 parity the 2-2-1 net
-    // cannot see). Two backprop steps, cohort scoring with all three
-    // hidden activations gated.
+    // The same kernel at (d, h) = (3, 3) (the reference's layers:
+    // Array[Int] takes any widths): a 3-3-1 net over the s19 base plus a
+    // third orderkey-residue feature (MlpDhSpec shows 3-3-1 learning an
+    // x1 xor x3 parity the 2-2-1 net cannot see). Two backprop steps,
+    // cohort scoring with all three hidden activations gated.
     "s112_mlp_dh" -> { (s, dir) =>
       val feats = ordersBase(s, dir).select(col("o_orderkey"), col("x1"),
         expr("CAST(qty DIV 10 AS BIGINT)").as("x2"),
@@ -1695,6 +1691,55 @@ object Ml {
        |  SELECT o_orderkey, x1, CAST(qty // $xDiv AS BIGINT) AS x2,
        |         CAST(CASE WHEN qty + 5 * (o_orderkey % 13) > 130 THEN $yScale ELSE 0 END AS BIGINT) AS yq
        |  FROM base)""".stripMargin
+
+  /** The DuckDB side of Learn.mlpFitPredictDh at (d, h), lr 1.0 and two
+    * iterations over the `feats` CTE (o_orderkey, x1..xd, yq): each step
+    * is the SQL the kernel mirrors — forward with the generated layer
+    * strings, quantized deltas, the exact BIGINT gradient sums, the
+    * update strings — then the o_orderkey <= 2000 cohort is scored. */
+  private def mlpOracleSql(featsCte: String, d: Int, h: Int): String = {
+    val hs = (1 to h).map(j => s"h$j").mkString(", ")
+    val hExprs = (1 to h).map(j => s"${Learn.mlpHiddenExprDh(j, d)} AS h$j").mkString(", ")
+    val xs = (1 to d).map(i => s"x$i").mkString(", ")
+    val initSel = Learn.mlpInitValsDh(d, h).zip(Learn.mlpWeightColsDh(d, h))
+      .map { case (v, c) => s"CAST($v AS BIGINT) AS $c" }.mkString(", ")
+    val gsums = (s"CAST(sum(dlt) AS BIGINT) AS gv0" +:
+      ((1 to h).map(j => s"CAST(sum(dlt * h$j) AS BIGINT) AS gv$j") ++
+        (1 to h).flatMap(j => s"CAST(sum(dh$j) AS BIGINT) AS g${j}0" +:
+          (1 to d).map(i => s"CAST(sum(dh$j * x$i) AS BIGINT) AS g$j$i")))).mkString(",\n    ")
+    val upds = ((1 to h).flatMap(j => (0 to d).map(i =>
+      s"${Learn.lrUpdExpr(s"w$j${i}q", s"g$j$i", 1.0)} AS w$j${i}q")) ++
+      (s"${Learn.lrUpdExpr("v0q", "gv0", 1.0)} AS v0q" +:
+        (1 to h).map(j => s"${Learn.mlpUpd12Expr(s"v${j}q", s"gv$j", 1.0)} AS v${j}q")))
+      .mkString(",\n    ")
+    val iters = (1 to 2).map { k =>
+      s"""mfwd$k AS MATERIALIZED (
+         |  SELECT $xs, $hs, dlt,
+         |    ${(1 to h).map(j => s"${Learn.mlpHidDeltaExpr(s"v${j}q", s"h$j")} AS dh$j").mkString(",\n    ")}
+         |  FROM (SELECT $xs, $hs, ${(1 to h).map(j => s"v${j}q").mkString(", ")},
+         |          yq - ${Learn.mlpOutExprH(h)} AS dlt
+         |        FROM (SELECT f.*, w.*, $hExprs
+         |              FROM feats f CROSS JOIN mw${k - 1} w))),
+         |mg$k AS (SELECT CAST(count(*) AS BIGINT) AS n,
+         |    $gsums
+         |  FROM mfwd$k),
+         |mw$k AS MATERIALIZED (SELECT
+         |    $upds
+         |  FROM mw${k - 1} CROSS JOIN mg$k)""".stripMargin
+    }.mkString(",\n")
+    s"""WITH $ordersBaseCte,
+       |$featsCte,
+       |mw0 AS (SELECT $initSel),
+       |$iters
+       |SELECT o_orderkey, CAST(yq // 1000000 AS BIGINT) AS label, $hs,
+       |  o_micro,
+       |  CAST(CASE WHEN o_micro >= 500000 THEN 1 ELSE 0 END AS BIGINT) AS pred
+       |FROM (SELECT o_orderkey, yq, $hs, ${Learn.mlpOutExprH(h)} AS o_micro
+       |      FROM (SELECT f.*, w.*, $hExprs
+       |            FROM (SELECT * FROM feats WHERE o_orderkey <= 2000) f
+       |            CROSS JOIN mw2 w))
+       |ORDER BY o_orderkey""".stripMargin
+  }
 
   /** One unrolled logistic-regression gradient iteration: the sigmoid
     * micro-probability and the quantized update REUSE graft.ext.Learn's
@@ -3261,107 +3306,16 @@ object Ml {
 
     // One exact-integer-sum scan -> graft.ext.Pipeline.Moments2's three
     // formula levels verbatim -> micro-quantized z-scores + projection.
-    // Mirror of the MLP: two unrolled backprop iterations sharing every
-    // forward/delta/update formula string, then the scoring projection.
-    "s44_mlp" -> {
-      val h1 = Learn.mlpHiddenExpr("w10q", "w11q", "w12q")
-      val h2 = Learn.mlpHiddenExpr("w20q", "w21q", "w22q")
-      val initSel = Seq(0L, 65536L, -65536L, 0L, -65536L, 65536L, 0L, 65536L, 65536L)
-        .zip(Learn.mlpWeightCols)
-        .map { case (v, c) => s"CAST($v AS BIGINT) AS $c" }.mkString(", ")
-      val iters = (1 to 2).map { k =>
-        s"""mfwd$k AS MATERIALIZED (
-           |  SELECT x1, x2, h1, h2, dlt,
-           |    ${Learn.mlpHidDeltaExpr("v1q", "h1")} AS dh1,
-           |    ${Learn.mlpHidDeltaExpr("v2q", "h2")} AS dh2
-           |  FROM (SELECT x1, x2, h1, h2, v1q, v2q,
-           |          yq - ${Learn.mlpOutExpr} AS dlt
-           |        FROM (SELECT f.*, w.*, $h1 AS h1, $h2 AS h2
-           |              FROM feats f CROSS JOIN mw${k - 1} w))),
-           |mg$k AS (SELECT CAST(count(*) AS BIGINT) AS n,
-           |    CAST(sum(dlt) AS BIGINT) AS gv0,
-           |    CAST(sum(dlt * h1) AS BIGINT) AS gv1,
-           |    CAST(sum(dlt * h2) AS BIGINT) AS gv2,
-           |    CAST(sum(dh1) AS BIGINT) AS g10, CAST(sum(dh1 * x1) AS BIGINT) AS g11,
-           |    CAST(sum(dh1 * x2) AS BIGINT) AS g12,
-           |    CAST(sum(dh2) AS BIGINT) AS g20, CAST(sum(dh2 * x1) AS BIGINT) AS g21,
-           |    CAST(sum(dh2 * x2) AS BIGINT) AS g22
-           |  FROM mfwd$k),
-           |mw$k AS MATERIALIZED (SELECT
-           |    ${Learn.lrUpdExpr("w10q", "g10", 1.0)} AS w10q,
-           |    ${Learn.lrUpdExpr("w11q", "g11", 1.0)} AS w11q,
-           |    ${Learn.lrUpdExpr("w12q", "g12", 1.0)} AS w12q,
-           |    ${Learn.lrUpdExpr("w20q", "g20", 1.0)} AS w20q,
-           |    ${Learn.lrUpdExpr("w21q", "g21", 1.0)} AS w21q,
-           |    ${Learn.lrUpdExpr("w22q", "g22", 1.0)} AS w22q,
-           |    ${Learn.lrUpdExpr("v0q", "gv0", 1.0)} AS v0q,
-           |    ${Learn.mlpUpd12Expr("v1q", "gv1", 1.0)} AS v1q,
-           |    ${Learn.mlpUpd12Expr("v2q", "gv2", 1.0)} AS v2q
-           |  FROM mw${k - 1} CROSS JOIN mg$k)""".stripMargin
-      }.mkString(",\n")
-      s"""WITH $ordersBaseCte,
-         |${lrFeatsCte(10, 1000000L)},
-         |mw0 AS (SELECT $initSel),
-         |$iters
-         |SELECT o_orderkey, CAST(yq // 1000000 AS BIGINT) AS label, h1, h2,
-         |  o_micro,
-         |  CAST(CASE WHEN o_micro >= 500000 THEN 1 ELSE 0 END AS BIGINT) AS pred
-         |FROM (SELECT o_orderkey, yq, h1, h2, ${Learn.mlpOutExpr} AS o_micro
-         |      FROM (SELECT f.*, w.*, $h1 AS h1, $h2 AS h2
-         |            FROM (SELECT * FROM feats WHERE o_orderkey <= 2000) f
-         |            CROSS JOIN mw2 w))
-         |ORDER BY o_orderkey""".stripMargin
-    },
-
-    // Mirror of the (3, 3) MLP: the s44 chain with generated per-unit /
-    // per-input columns — same forward/delta/update strings at (d, h).
-    "s112_mlp_dh" -> {
-      val (d, h) = (3, 3)
-      val hs = (1 to h).map(j => s"${Learn.mlpHiddenExprDh(j, d)} AS h$j").mkString(", ")
-      val xs = (1 to d).map(i => s"x$i").mkString(", ")
-      val initSel = Learn.mlpInitValsDh(d, h).zip(Learn.mlpWeightColsDh(d, h))
-        .map { case (v, c) => s"CAST($v AS BIGINT) AS $c" }.mkString(", ")
-      val iters = (1 to 2).map { k =>
-        val gsums = (s"CAST(sum(dlt) AS BIGINT) AS gv0" +:
-          ((1 to h).map(j => s"CAST(sum(dlt * h$j) AS BIGINT) AS gv$j") ++
-            (1 to h).flatMap(j => s"CAST(sum(dh$j) AS BIGINT) AS g${j}0" +:
-              (1 to d).map(i => s"CAST(sum(dh$j * x$i) AS BIGINT) AS g$j$i")))).mkString(",\n    ")
-        val upds = ((1 to h).flatMap(j => (0 to d).map(i =>
-          s"${Learn.lrUpdExpr(s"w$j${i}q", s"g$j$i", 1.0)} AS w$j${i}q")) ++
-          (s"${Learn.lrUpdExpr("v0q", "gv0", 1.0)} AS v0q" +:
-            (1 to h).map(j => s"${Learn.mlpUpd12Expr(s"v${j}q", s"gv$j", 1.0)} AS v${j}q")))
-          .mkString(",\n    ")
-        s"""mfwd$k AS MATERIALIZED (
-           |  SELECT $xs, ${(1 to h).map(j => s"h$j").mkString(", ")}, dlt,
-           |    ${(1 to h).map(j => s"${Learn.mlpHidDeltaExpr(s"v${j}q", s"h$j")} AS dh$j").mkString(",\n    ")}
-           |  FROM (SELECT $xs, ${(1 to h).map(j => s"h$j").mkString(", ")}, ${(1 to h).map(j => s"v${j}q").mkString(", ")},
-           |          yq - ${Learn.mlpOutExprH(h)} AS dlt
-           |        FROM (SELECT f.*, w.*, $hs
-           |              FROM feats f CROSS JOIN mw${k - 1} w))),
-           |mg$k AS (SELECT CAST(count(*) AS BIGINT) AS n,
-           |    $gsums
-           |  FROM mfwd$k),
-           |mw$k AS MATERIALIZED (SELECT
-           |    $upds
-           |  FROM mw${k - 1} CROSS JOIN mg$k)""".stripMargin
-      }.mkString(",\n")
-      s"""WITH $ordersBaseCte,
-         |feats AS MATERIALIZED (
+    // Mirrors of the MLP kernel (Learn.mlpFitDh evaluates these strings
+    // on the JVM; here DuckDB runs them): two unrolled SQL backprop steps
+    // over each query's feats CTE, then the scoring projection.
+    "s44_mlp" -> mlpOracleSql(lrFeatsCte(10, 1000000L), d = 2, h = 2),
+    "s112_mlp_dh" -> mlpOracleSql(
+      s"""feats AS MATERIALIZED (
          |  SELECT o_orderkey, x1, CAST(qty // 10 AS BIGINT) AS x2,
          |         CAST(o_orderkey % 7 AS BIGINT) AS x3,
          |         CAST(CASE WHEN qty + 5 * (o_orderkey % 13) > 130 THEN 1000000 ELSE 0 END AS BIGINT) AS yq
-         |  FROM base),
-         |mw0 AS (SELECT $initSel),
-         |$iters
-         |SELECT o_orderkey, CAST(yq // 1000000 AS BIGINT) AS label, ${(1 to h).map(j => s"h$j").mkString(", ")},
-         |  o_micro,
-         |  CAST(CASE WHEN o_micro >= 500000 THEN 1 ELSE 0 END AS BIGINT) AS pred
-         |FROM (SELECT o_orderkey, yq, ${(1 to h).map(j => s"h$j").mkString(", ")}, ${Learn.mlpOutExprH(h)} AS o_micro
-         |      FROM (SELECT f.*, w.*, $hs
-         |            FROM (SELECT * FROM feats WHERE o_orderkey <= 2000) f
-         |            CROSS JOIN mw2 w))
-         |ORDER BY o_orderkey""".stripMargin
-    },
+         |  FROM base)""".stripMargin, d = 3, h = 3),
 
     // Mirror of the OVR reduction: one prefixed 4-iteration logistic
     // chain per class over its own rest-label CTE, then the scoring

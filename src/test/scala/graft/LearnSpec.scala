@@ -721,18 +721,18 @@ class LearnSpec extends SparkSpec {
         (r * 4 + 3L, 1L, 0L, 1000000L), (r * 4 + 4L, 1L, 1L, 0L))
     }.toDF("id", "x1", "x2", "yq")
     def loss(iters: Int): Long =
-      Learn.mlpFitPredict(xor, iters, lr = 8.0, "id", 1000L)
+      Learn.mlpFitPredictDh(xor, d = 2, h = 2, iters, lr = 8.0, "id", 1000L)
         .selectExpr("sum(abs((label * 1000000) - o_micro)) AS l").head().getLong(0)
     val l0 = loss(0)
     val l40 = loss(40)
     assert(l40 < l0)
     // at init the output really is constant 731059
-    val init = Learn.mlpFitPredict(xor, 0, 8.0, "id", 1000L)
+    val init = Learn.mlpFitPredictDh(xor, 2, 2, 0, 8.0, "id", 1000L)
       .select("o_micro").distinct().collect().map(_.getLong(0)).toSeq
     assert(init === Seq(731059L))
     // the quantized chain is bit-identical under any partitioning
-    val a = Learn.mlpFitPredict(xor.repartition(1), 3, 8.0, "id", 1000L).collect()
-    val b = Learn.mlpFitPredict(xor.repartition(7, col("x2")), 3, 8.0, "id", 1000L).collect()
+    val a = Learn.mlpFitPredictDh(xor.repartition(1), 2, 2, 3, 8.0, "id", 1000L).collect()
+    val b = Learn.mlpFitPredictDh(xor.repartition(7, col("x2")), 2, 2, 3, 8.0, "id", 1000L).collect()
     assert(a.toSeq === b.toSeq)
   }
 
