@@ -259,9 +259,11 @@ object Plans {
         "count, and the preAggregate two-level merge collapses duplicate " +
         "distance vectors map-side before any reducer sees them."),
     "s12_als_recommend" ->
-      ("ALS: each half-step is one equi-join of ratings to a (key, 2 " +
-        "longs) factor table + one map-side-combined hash aggregate of " +
-        "five exact integer sums; the closed-form solve is a projection. " +
+      ("ALS on the rank-r kernel at rank 2: each half-step is one " +
+        "equi-join of ratings to a (key, 2 longs) factor table + one " +
+        "map-side-combined hash aggregate of r(r+3)/2 = 5 exact integer " +
+        "sums; the generated elimination layers solve every key's 2x2 " +
+        "system as a per-row projection chain. " +
         "Recommendation broadcasts the item factors, so the serving pass " +
         "is join-free on the corpus side."),
     "s13_svdpp" ->
@@ -372,26 +374,31 @@ object Plans {
         "tracks nnz^2/rows like DIMSUM-at-threshold-0, with norms one " +
         "map-side-combined aggregate."),
     "s38_plsa_topics" ->
-      ("PLSA EM: per iteration ONE counts-join-theta-join-phi " +
-        "projection (row-linear in distinct doc-term pairs; phi " +
-        "broadcasts at vocabulary size) + a per-doc and a per-word hash " +
-        "aggregate; both state tables localCheckpoint so plan depth " +
+      ("PLSA EM on the K-topic kernel at K = 2: per iteration ONE " +
+        "counts-join-theta-join-phi projection (row-linear in distinct " +
+        "doc-term pairs; phi broadcasts at vocabulary size) + a per-doc " +
+        "and a per-word hash aggregate of K-1 and K sum columns; both " +
+        "state tables localCheckpoint so plan depth " +
         "stays constant across iterations — the EMLDAOptimizer " +
         "edge-reaggregation cost shape without the graph machinery."),
     "s46_lda_topics" ->
-      ("Smoothed LDA EM (s38's shape with Dirichlet priors): the same " +
+      ("Smoothed LDA EM on the K-topic kernel at K = 2 (s38's shape " +
+        "with Dirichlet priors): the same " +
         "row-linear counts ⋈ docState ⋈ termState join per iteration, " +
         "plus TWO 1-row broadcast frames (global topic totals and the " +
         "(ntot, vn) constants) feeding the smoothed E-step ratio; state " +
         "is expected COUNTS so every M-step sum is an exact integer."),
     "s47_implicit_als" ->
-      ("Implicit ALS: the YᵀY Gramian is ONE 3-sum aggregate over the " +
-        "factor table, broadcast as a 1-row frame into every per-key " +
-        "solve — the Hu/Koren/Volinsky trick that keeps per-key work " +
-        "proportional to OBSERVED ratings; the confidence-weighted sums " +
-        "ride the same single equi-join + hash aggregate as s12."),
+      ("Implicit ALS on the rank-r kernel at rank 2: the YᵀY Gramian " +
+        "is ONE r(r+1)/2 = 3-sum aggregate over the factor table, " +
+        "broadcast as a 1-row frame into every per-key solve — the " +
+        "Hu/Koren/Volinsky trick that keeps per-key work proportional to " +
+        "OBSERVED ratings; the confidence-weighted sums ride the same " +
+        "single equi-join + hash aggregate as s12 and feed the same " +
+        "elimination layers."),
     "s48_word2vec" ->
-      ("Word2vec: pair extraction is the only row-linear stage (a " +
+      ("Word2vec on the dims-generated kernel at dims = 2: pair " +
+        "extraction is the only row-linear stage (a " +
         "per-document positional self-join bounded by the ±2 window); " +
         "the vocabulary table (30 rows) broadcasts into all three " +
         "factor joins, and every gradient is a map-side-combined exact " +

@@ -385,90 +385,27 @@ object Clustering {
   // the whole E-step shares the s19 sigmoid machinery and quantizes to
   // exact micro integers) ----------------------------------------------
 
-  // ---- topic-model thin-slice (reference mllib/clustering/LDA.scala:46;
-  // the EM path — LDAOptimizer.scala:79 EMLDAOptimizer — re-aggregates
-  // per-edge topic responsibilities over the doc-term graph every
-  // iteration (:150 next, responsibilities from LDA.scala:418
-  // computePTopic), which is exactly the counts ⋈ theta ⋈ phi join +
-  // two groupBys below. DECLARED DEVIATIONS: two topics, PLSA EM (the
-  // alpha = eta → 0 limit — no Dirichlet smoothing), and parity-seeded
-  // doc mixtures: EM needs an asymmetric start to leave the symmetric
-  // fixed point, and the reference's randomized init is exactly what an
-  // oracle gate cannot allow. INTEGER-EXACT throughout: micro-unit
-  // responsibilities make the E-step one integer multiply/divide — not
-  // one double in the whole chain (the p13 standard). Resolution note:
-  // phi lives in micro-units, so vocabularies must stay well under 1e6
-  // tokens (raise the quantization scale beyond that). -------------------
-
-  /** The E-step: topic-1 responsibility of one (doc, word) cell over
-    * (th, p1, p2) in micro-units — pure integer arithmetic; the zero
-    * denominator (a word with zero mass in BOTH topics) falls back to
-    * the uninformative 1/2. */
-  val plsaRespExpr: String =
-    "CAST(CASE WHEN ((th * p1) + ((1000000 - th) * p2)) = 0 THEN 500000 " +
-      "ELSE ((th * p1) * 1000000) DIV ((th * p1) + ((1000000 - th) * p2)) END AS BIGINT)"
-
-  /** Two-topic PLSA over (`idCol`, `textCol`) documents: `iters` EM
-    * iterations, each ONE counts ⋈ theta ⋈ phi join (row-linear in
-    * distinct (doc, word) pairs) plus a per-doc and a per-word hash
-    * aggregate; both state tables localCheckpoint per iteration (the
-    * pregel discipline — theta is doc-scaled, phi vocabulary-bounded).
-    * Returns the top-`topK` words per topic:
-    * (topic, rnk, tok, phi_micro), ties toward the smaller token. */
-  def plsaTopics(docs: DataFrame, idCol: String, textCol: String,
-                 iters: Int = 2, topK: Int = 8): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val counts = docs.select(col(idCol).as("did"),
-        explode(split(col(textCol), " ")).as("tok"))
-      .groupBy("did", "tok").agg(count(lit(1)).as("c"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    counts.count()
-    val vocabN = counts.agg(count_distinct(col("tok")).as("vn"))
-    var theta = counts.select("did").distinct()
-      .selectExpr("did", "CAST(250000 + (did % 2) * 500000 AS BIGINT) AS th")
-      .localCheckpoint()
-    var phi = counts.select("tok").distinct()
-      .crossJoin(broadcast(vocabN))
-      .selectExpr("tok", "CAST(1000000 DIV vn AS BIGINT) AS p1",
-        "CAST(1000000 DIV vn AS BIGINT) AS p2")
-      .localCheckpoint()
-    for (_ <- 1 to iters) {
-      val scored = counts.join(theta, "did").join(phi, "tok")
-        .selectExpr("did", "tok", "c", s"$plsaRespExpr AS r")
-        .selectExpr("did", "c", "tok", "r * c AS s1c", "(1000000 - r) * c AS s2c")
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      theta = scored.groupBy("did")
-        .agg(sum("s1c").as("sc1"), sum("c").as("sc"))
-        .selectExpr("did", "CAST(sc1 DIV sc AS BIGINT) AS th")
-        .localCheckpoint()
-      val pa = scored.groupBy("tok")
-        .agg(sum("s1c").as("w1"), sum("s2c").as("w2"))
-      val tot = pa.agg(sum("w1").as("t1"), sum("w2").as("t2"))
-      phi = pa.crossJoin(broadcast(tot))
-        .selectExpr("tok", "CAST((w1 * 1000000) DIV t1 AS BIGINT) AS p1",
-          "CAST((w2 * 1000000) DIV t2 AS BIGINT) AS p2")
-        .localCheckpoint()
-      scored.unpersist()
-    }
-    counts.unpersist()
-    phi.select(lit(1L).as("topic"), col("tok"), col("p1").as("phi_micro"))
-      .union(phi.select(lit(2L).as("topic"), col("tok"), col("p2").as("phi_micro")))
-      .select(col("topic"), col("tok"), col("phi_micro"),
-        row_number().over(Window.partitionBy("topic")
-          .orderBy(col("phi_micro").desc, col("tok"))).cast("long").as("rnk"))
-      .filter(col("rnk") <= topK)
-      .select("topic", "rnk", "tok", "phi_micro")
-  }
-
-  // ---- K-topic PLSA EM (the α = η → 1 limit of the smoothed EM below,
-  // s38's declared model class, generalized over the topic axis with the
-  // [[ldaTopicsK]] discipline: K−1 stored mixtures/responsibilities,
-  // complement columns keep every sum exact, integer-only E-step). ------
+  // ---- topic models, K-topic PLSA EM (reference mllib/clustering/
+  // LDA.scala:46, `k` the headline parameter — :131 setK; the EM path —
+  // LDAOptimizer.scala:79 EMLDAOptimizer — re-aggregates per-edge topic
+  // responsibilities over the doc-term graph every iteration (:150 next,
+  // responsibilities from LDA.scala:418 computePTopic), which is exactly
+  // the counts ⋈ theta ⋈ phi join + two groupBys below). DECLARED
+  // DEVIATIONS: PLSA EM (the α = η → 1 limit of the smoothed EM below —
+  // no Dirichlet smoothing), and parity-seeded doc mixtures: EM needs an
+  // asymmetric start to leave the symmetric fixed point, and the
+  // reference's randomized init is exactly what an oracle gate cannot
+  // allow. INTEGER-EXACT throughout: K−1 stored mixtures and
+  // responsibilities in micro units, complement columns keep every sum
+  // exact, so the E-step is one integer multiply/divide — not one double
+  // in the whole chain (the p13 standard). Resolution note: phi lives in
+  // micro-units, so vocabularies must stay well under 1e6 tokens (raise
+  // the quantization scale beyond that). -------------------------------
 
   /** Topic-k PLSA responsibility in micro units over the K−1 stored doc
     * mixtures (th1..) and the K emissions (p1..pK) — pure integer
     * arithmetic; a word with zero mass in EVERY topic falls back to the
-    * uniform 1e6 DIV K (the legacy ½ at K = 2). */
+    * uniform 1e6 DIV K (½ at K = 2). */
   def plsaRespExprK(kTot: Int, k: Int): String = {
     val thK = s"(1000000 - ${(1 until kTot).map(j => s"th$j").reduce((a, b) => s"($a + $b)")})"
     def term(j: Int) = if (j < kTot) s"(th$j * p$j)" else s"($thK * p$kTot)"
@@ -477,13 +414,15 @@ object Clustering {
       s"ELSE (${term(k)} * 1000000) DIV $den END AS BIGINT)"
   }
 
-  /** K-topic PLSA over (`idCol`, `textCol`) documents — the
-    * [[plsaTopics]] loop with K−1 stored topics: each iteration ONE
-    * counts ⋈ theta ⋈ phi join plus a per-doc and a per-word hash
-    * aggregate (K−1 and K sum columns respectively); states
-    * localCheckpoint per iteration. Doc mixtures seed by the
-    * [[ldaSeedFracExpr]] K-residue parity (the legacy 250000/750000
-    * values at K = 2). Returns the top-`topK` words per topic. */
+  /** K-topic PLSA over (`idCol`, `textCol`) documents: `iters` EM
+    * iterations, each ONE counts ⋈ theta ⋈ phi join (row-linear in
+    * distinct (doc, word) pairs) plus a per-doc and a per-word hash
+    * aggregate (K−1 and K sum columns respectively); both state tables
+    * localCheckpoint per iteration (the pregel discipline — theta is
+    * doc-scaled, phi vocabulary-bounded). Doc mixtures seed by the
+    * [[ldaSeedFracExpr]] K-residue parity (250000/750000 at K = 2).
+    * Returns the top-`topK` words per topic: (topic, rnk, tok,
+    * phi_micro), ties toward the smaller token. */
   def plsaTopicsK(docs: DataFrame, idCol: String, textCol: String,
                   kTot: Int, iters: Int = 2, topK: Int = 8): DataFrame = {
     require(kTot >= 2 && kTot <= 6, s"plsaTopicsK: K = $kTot outside [2, 6]")
@@ -495,7 +434,6 @@ object Clustering {
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     counts.count()
     val vocabN = counts.agg(count_distinct(col("tok")).as("vn"))
-    val uni = 1000000 / kTot
     var theta = counts.select("did").distinct()
       .selectExpr("did" +:
         ks.map(k => s"CAST(${ldaSeedFracExpr(kTot, k)} AS BIGINT) AS th$k"): _*)
@@ -545,113 +483,23 @@ object Clustering {
   // computePTopic — γ_wjk ∝ (N_wk + η−1)(N_jk + α−1)/(N_k + W(η−1)) —
   // driven by LDAOptimizer.scala:150 next(): E-step scales γ by the
   // token count N_wj, M-step re-aggregates expected counts per doc
-  // vertex, per term vertex and globally. This is the reference's
-  // ACTUAL EM (s38's PLSA is its α = η → 1 limit, a declared
-  // deviation; this closes it): the state is EXPECTED COUNTS in micro
-  // units, not normalized mixtures, and the reference's default priors
-  // are kept — α = 50/k + 1 = 26, η = 1.1 (LDA.scala:131,163 document
-  // the -1 → default resolution). DECLARED DEVIATIONS, the s38
-  // conventions: K = 2 topics and a parity-seeded doc split in place of
-  // the randomized γ init (LDAOptimizer.scala:130) — EM needs asymmetry
-  // to leave the symmetric fixed point and randomness is exactly what
-  // the oracle gate cannot allow. The E-step ratio is ONE double
-  // expression over exact integer state with fixed parenthesization
-  // (the gmm convention), re-quantized to micro; every M-step sum is an
-  // exact integer. Resolution bound (s38's note sharpened): the final
-  // φ normalization multiplies a micro count by 1e6, so total corpus
-  // tokens must stay under ~9e6 at BIGINT — past that, widen the
-  // normalization to DECIMAL(38,0). ------------------------------------
-
-  /** Topic-1 responsibility of one (doc, term) cell in micro-units over
-    * exact integer state columns — nw1/nj1/n1 the topic-1 expected
-    * counts (micro), nw/nj/ntot the constant totals, vn the vocabulary
-    * size. η−1 = 0.1 → 100000 micro; α−1 = 25 → 25000000 micro. Strictly
-    * positive numerators (η > 1), so no zero-denominator fallback
-    * exists to mirror. */
-  val ldaRespExpr: String = {
-    def g(nwk: String, njk: String, nk: String) =
-      s"((($nwk + 100000.0) * ($njk + 25000000.0)) / ($nk + (CAST(vn AS DOUBLE) * 100000.0)))"
-    val g1 = g("CAST(nw1 AS DOUBLE)", "CAST(nj1 AS DOUBLE)", "CAST(n1 AS DOUBLE)")
-    val g2 = g("CAST((nw * 1000000) - nw1 AS DOUBLE)",
-      "CAST((nj * 1000000) - nj1 AS DOUBLE)",
-      "CAST((ntot * 1000000) - n1 AS DOUBLE)")
-    s"CAST(round(($g1 / ($g1 + $g2)) * 1000000.0) AS BIGINT)"
-  }
-
-  /** Two-topic smoothed LDA EM over (`idCol`, `textCol`) documents:
-    * `iters` iterations, each ONE counts ⋈ docState ⋈ termState join
-    * (row-linear in distinct (doc, word) pairs; the 1-row global state
-    * broadcasts) plus per-doc / per-term hash aggregates — the exact
-    * relational transcription of the aggregateMessages send/merge above.
-    * Both state tables localCheckpoint per iteration (the pregel
-    * discipline). Returns the top-`topK` terms per topic:
-    * (topic, rnk, tok, phi_micro), φ the unsmoothed normalized
-    * term-topic count, ties toward the smaller token. */
-  def ldaTopics(docs: DataFrame, idCol: String, textCol: String,
-                iters: Int = 2, topK: Int = 8): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val counts = docs.select(col(idCol).as("did"),
-        explode(split(col(textCol), " ")).as("tok"))
-      .groupBy("did", "tok").agg(count(lit(1)).as("c"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    counts.count()
-    val docTotals = counts.groupBy("did").agg(sum("c").as("nj"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val termTotals = counts.groupBy("tok").agg(sum("c").as("nw"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val totals = termTotals
-      .agg(sum("nw").as("ntot"), count(lit(1)).as("vn"))
-      .localCheckpoint()
-    var doc = docTotals
-      .selectExpr("did", "nj",
-        "CAST(nj * (250000 + ((did % 2) * 500000)) AS BIGINT) AS nj1")
-      .localCheckpoint()
-    var term = termTotals
-      .selectExpr("tok", "nw", "CAST(nw * 500000 AS BIGINT) AS nw1")
-      .localCheckpoint()
-    var glob = totals.selectExpr("CAST(ntot * 500000 AS BIGINT) AS n1")
-      .localCheckpoint()
-    for (_ <- 1 to iters) {
-      val scored = counts
-        .join(doc, "did").join(term, "tok")
-        .crossJoin(broadcast(glob)).crossJoin(broadcast(totals))
-        .selectExpr("did", "tok", "c", s"$ldaRespExpr AS r")
-        .selectExpr("did", "tok", "c * r AS s1c")
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      doc = scored.groupBy("did").agg(sum("s1c").as("nj1"))
-        .join(docTotals, "did").select("did", "nj", "nj1")
-        .localCheckpoint()
-      term = scored.groupBy("tok").agg(sum("s1c").as("nw1"))
-        .join(termTotals, "tok").select("tok", "nw", "nw1")
-        .localCheckpoint()
-      glob = term.agg(sum("nw1").as("n1")).localCheckpoint()
-      scored.unpersist()
-    }
-    counts.unpersist(); docTotals.unpersist()
-    val phi = term.crossJoin(broadcast(glob)).crossJoin(broadcast(totals))
-      .selectExpr("tok",
-        "CAST((nw1 * 1000000) DIV n1 AS BIGINT) AS p1",
-        "CAST((((nw * 1000000) - nw1) * 1000000) DIV ((ntot * 1000000) - n1) AS BIGINT) AS p2")
-    termTotals.unpersist()
-    phi.select(lit(1L).as("topic"), col("tok"), col("p1").as("phi_micro"))
-      .union(phi.select(lit(2L).as("topic"), col("tok"), col("p2").as("phi_micro")))
-      .select(col("topic"), col("tok"), col("phi_micro"),
-        row_number().over(Window.partitionBy("topic")
-          .orderBy(col("phi_micro").desc, col("tok"))).cast("long").as("rnk"))
-      .filter(col("rnk") <= topK)
-      .select("topic", "rnk", "tok", "phi_micro")
-  }
-
-  // ---- K-topic smoothed LDA EM (reference mllib/clustering/LDA.scala —
-  // `k` is the headline parameter, :131 setK; the K = 2 member above is
-  // its binary slice). The generalization follows the s107/GmmKd
-  // discipline: topic K is the exact complement of the stored K−1 on
-  // every count, the responsibility is a generated K-fold ratio whose
-  // K = 2 instantiation is value-identical to [[ldaRespExpr]] (same
-  // parse tree, same doubles — LdaKSpec pins the fitted output), and
-  // the reference's K-dependent prior α = 50/K + 1 is embedded as a
-  // shared double literal (η = 1.1 stays the reference's K-independent
-  // EM default). ---------------------------------------------------------
+  // vertex, per term vertex and globally; `k` is the headline
+  // parameter, :131 setK). This is the reference's ACTUAL EM (PLSA
+  // above is its α = η → 1 limit): the state is EXPECTED COUNTS in
+  // micro units, not normalized mixtures, and the reference's default
+  // priors are kept — α = 50/K + 1 (26 at K = 2) embedded as a shared
+  // double literal, η = 1.1 (LDA.scala:131,163 document the -1 →
+  // default resolution). Topic K is the exact complement of the stored
+  // K−1 on every count. DECLARED DEVIATION, the PLSA convention: a
+  // parity-seeded doc split in place of the randomized γ init
+  // (LDAOptimizer.scala:130) — EM needs asymmetry to leave the
+  // symmetric fixed point and randomness is exactly what the oracle
+  // gate cannot allow. The E-step ratio is ONE double expression over
+  // exact integer state with fixed parenthesization (the gmm
+  // convention), re-quantized to micro; every M-step sum is an exact
+  // integer. Resolution bound: the final φ normalization multiplies a
+  // micro count by 1e6, so total corpus tokens must stay under ~9e6 at
+  // BIGINT — past that, widen the normalization to DECIMAL(38,0). -------
 
   /** α−1 in micro units as a Double.toString round-trip literal —
     * identical text, identical double in both engines. */
@@ -662,7 +510,9 @@ object Clustering {
 
   /** Topic-k responsibility of one (doc, term) cell in micro units over
     * the K−1 stored expected-count columns (nw1.., nj1.., n1..) and the
-    * constant totals; topic K's counts are exact 1e6-complements. */
+    * constant totals; topic K's counts are exact 1e6-complements. η−1 =
+    * 0.1 → 100000 micro. Strictly positive numerators (η > 1), so no
+    * zero-denominator fallback exists to mirror. */
   def ldaRespExprK(kTot: Int, k: Int): String = {
     val al = ldaAlphaM1Micro(kTot)
     def g(nwk: String, njk: String, nk: String) =
@@ -679,20 +529,23 @@ object Clustering {
   /** Parity-seeded doc-mixture fraction of topic k in micro units:
     * doc `did` prefers topic K − (did % K); the preferred topic takes
     * 1e6 − (K−1)·base, the rest base = 1e6 DIV 2K — the K = 2 values
-    * are the legacy 250000/750000 split. */
+    * are the 250000/750000 split. */
   def ldaSeedFracExpr(kTot: Int, k: Int): String = {
     val base = 1000000 / (2 * kTot)
     val pref = 1000000 - (kTot - 1) * base
     s"(CASE WHEN (did % $kTot) = ${kTot - k} THEN $pref ELSE $base END)"
   }
 
-  /** K-topic smoothed LDA EM over (`idCol`, `textCol`) documents — the
-    * [[ldaTopics]] loop with K−1 stored topics: each iteration is still
-    * ONE counts ⋈ docState ⋈ termState join plus per-doc / per-term
-    * hash aggregates (now K−1 sum columns each); states localCheckpoint
-    * per iteration. Returns (topic, rnk, tok, phi_micro) for the
-    * top-`topK` terms of each of the K topics. Same corpus-token
-    * resolution bound as [[ldaTopics]]. */
+  /** K-topic smoothed LDA EM over (`idCol`, `textCol`) documents:
+    * `iters` iterations, each ONE counts ⋈ docState ⋈ termState join
+    * (row-linear in distinct (doc, word) pairs; the 1-row global state
+    * broadcasts) plus per-doc / per-term hash aggregates of K−1 sum
+    * columns each — the exact relational transcription of the
+    * aggregateMessages send/merge above. Both state tables
+    * localCheckpoint per iteration (the pregel discipline). Returns
+    * (topic, rnk, tok, phi_micro) for the top-`topK` terms of each of
+    * the K topics, φ the unsmoothed normalized term-topic count, ties
+    * toward the smaller token. */
   def ldaTopicsK(docs: DataFrame, idCol: String, textCol: String,
                  kTot: Int, iters: Int = 2, topK: Int = 8): DataFrame = {
     require(kTot >= 2 && kTot <= 6, s"ldaTopicsK: K = $kTot outside [2, 6]")
@@ -763,25 +616,31 @@ object Clustering {
   }
 
   // ---- ONLINE variational LDA (reference mllib/clustering/
-  // LDAOptimizer.scala:231 OnlineLDAOptimizer — the second registered
-  // optimizer and the production-corpus path: instead of EM's full
-  // doc-topic-term re-aggregation, each iteration samples a MINIBATCH,
-  // runs per-doc variational inference against the broadcast topic
-  // state (:538 variationalTopicInference), and blends the batch's
-  // sufficient statistics into λ at learning rate
-  // ρ_t = (τ0 + t)^−κ (:467 updateLambda). DECLARED DEVIATIONS, the
-  // s38/s46 conventions sharpened for the online path: K = 2;
+  // LDAOptimizer.scala:231 OnlineLDAOptimizer, `k` taken from the
+  // enclosing LDA — the second registered optimizer and the
+  // production-corpus path: instead of EM's full doc-topic-term
+  // re-aggregation, each iteration samples a MINIBATCH, runs per-doc
+  // variational inference against the broadcast topic state (:538
+  // variationalTopicInference), and blends the batch's sufficient
+  // statistics into λ at learning rate ρ_t = (τ0 + t)^−κ (:467
+  // updateLambda). No complement trick here: the reference's λ stores
+  // ALL K topic rows, and so does this state — per-topic column loops
+  // over the SAME ratio / fraction / blend formula strings. DECLARED
+  // DEVIATIONS, the EM conventions sharpened for the online path:
   // deterministic hash-residue minibatches (¼ of the docs per
   // iteration, disjoint across iterations — the sample-with-replacement
-  // draw is exactly what the oracle gate cannot allow); parity-seeded
-  // λ and γ inits in place of the random Gamma(100, 0.01) matrices;
-  // ONE γ update per doc instead of the 1e-3-convergence inner loop;
-  // and exp∘digamma(x) ≈ x − 1/2 (exact to O(1/x) for the x ≥ 0.5
-  // shapes every state here keeps), which turns the reference's
-  // expElogbeta/expElogtheta rows into pure integer ratio expressions.
-  // Defaults kept: α = η = 1/k = 0.5, τ0 = 1024, κ = 0.51. All state
-  // is micro-unit BIGINT; the only doubles are the ρ-blend update, ONE
-  // shared formula string rounded once per cell. ----------------------
+  // draw is exactly what the oracle gate cannot allow); seeded λ and γ
+  // inits in place of the random Gamma(100, 0.01) matrices (K = 2 the
+  // parity seeds; K ≥ 3 rotates a +½/−½ γ perturbation by doc residue
+  // and favors topic K − residue in the λ seed); ONE γ update per doc
+  // instead of the 1e-3-convergence inner loop; and exp∘digamma(x) ≈
+  // x − 1/2 (exact to O(1/x) for the x ≥ 0.5 shapes every state here
+  // keeps), which turns the reference's expElogbeta/expElogtheta rows
+  // into pure integer ratio expressions. Priors α = η = ½ (the
+  // reference's 1/k default at K = 2, held at ½ for every K); defaults
+  // kept: τ0 = 1024, κ = 0.51. All state is micro-unit
+  // BIGINT; the only doubles are the ρ-blend update, ONE shared formula
+  // string rounded once per cell. ----------------------------------
 
   /** exp(digamma(a) − digamma(s)) ≈ (a − ½)/(s − ½) over micro-unit
     * state, emitted in micro units. Non-negative operands (state never
@@ -792,7 +651,7 @@ object Clustering {
   /** The per-(doc, term, topic) responsibility fraction
     * et_k·eb_k/φ in micro units over the exact integer φ = Σ_k et·eb;
     * a zero φ (every topic's mass rounded away) falls back to the
-    * uninformative ½ like [[plsaRespExpr]]. */
+    * uninformative ½ like [[plsaRespExprK]] at K = 2. */
   def oldaFracExpr(et: String, eb: String, pn: String, div: String): String =
     s"CAST(CASE WHEN $pn = 0 THEN 500000 ELSE (($et * $eb) * 1000000) $div $pn END AS BIGINT)"
 
@@ -806,95 +665,6 @@ object Clustering {
   /** ρ_t = (τ0 + t)^−κ with the reference defaults, as a shared libm
     * literal (1-ulp pow slack is absorbed by the micro rounding). */
   def oldaRho(t: Int): String = s"power(${1024 + t}.0, -0.51)"
-
-  /** The per-(doc, term, topic) responsibility stage shared by the fit
-    * and the perplexity evaluation, over a PRE-JOINED `ce` = cells ⋈
-    * expElogbeta frame (r21, guide §2.4 "two operations keyed the same
-    * way share one exchange": every iteration scores TWICE — the γ
-    * update, then the sufficient statistics under the updated γ — and
-    * both scores join the same cells against the same eb rows, so the
-    * tok-keyed join is computed once per iteration and pinned; only the
-    * cheap did-keyed γ join differs between the two scores. Join
-    * reordering only — the per-row formula strings are unchanged, so
-    * every value is bit-identical). Emits (did, tok, c, f1, f2, pn). */
-  private def oldaScore(ce: DataFrame, g: DataFrame): DataFrame =
-    ce.join(g, "did")
-      .selectExpr("did", "tok", "c",
-        s"${oldaRatioExpr("g1", "(g1 + g2)", "DIV")} AS et1",
-        s"${oldaRatioExpr("g2", "(g1 + g2)", "DIV")} AS et2", "eb1", "eb2")
-      .selectExpr("did", "tok", "c", "et1", "et2", "eb1", "eb2",
-        "(et1 * eb1) + (et2 * eb2) AS pn")
-      .selectExpr("did", "tok", "c", "pn",
-        s"${oldaFracExpr("et1", "eb1", "pn", "DIV")} AS f1",
-        s"${oldaFracExpr("et2", "eb2", "pn", "DIV")} AS f2")
-
-  /** Parity γ seeds for a doc set (the declared Gamma(100, 0.01)
-    * stand-in). */
-  private def oldaGammaInit(cells: DataFrame): DataFrame =
-    cells.select("did").distinct()
-      .selectExpr("did", "CAST(750000 + (did % 2) * 500000 AS BIGINT) AS g1",
-        "CAST(1750000 - (did % 2) * 500000 AS BIGINT) AS g2")
-
-  /** One γ update from a scored frame (the declared inner-loop
-    * slice). */
-  private def oldaGammaStep(scored: DataFrame): DataFrame =
-    scored.groupBy("did")
-      .agg(sum(expr("c * f1")).as("s1"), sum(expr("c * f2")).as("s2"))
-      .selectExpr("did", "CAST(500000 + s1 AS BIGINT) AS g1",
-        "CAST(500000 + s2 AS BIGINT) AS g2")
-
-  /** expElogbeta rows for a λ state. */
-  private def oldaEb(lambda: DataFrame): DataFrame = {
-    val lsum = lambda.agg(sum("l1").as("ls1"), sum("l2").as("ls2"))
-    lambda.crossJoin(broadcast(lsum))
-      .selectExpr("tok", s"${oldaRatioExpr("l1", "ls1", "DIV")} AS eb1",
-        s"${oldaRatioExpr("l2", "ls2", "DIV")} AS eb2")
-  }
-
-  /** The [[onlineLdaTopics]] fitting loop, returning (counts — still
-    * persisted, caller unpersists — and the final λ state). */
-  private def onlineLdaState(docs: DataFrame, idCol: String,
-                             textCol: String,
-                             iters: Int): (DataFrame, DataFrame) = {
-    val counts = docs.select(col(idCol).as("did"),
-        explode(split(col(textCol), " ")).as("tok"))
-      .groupBy("did", "tok").agg(count(lit(1)).as("c"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    counts.count()
-    val dTot = counts.select("did").distinct()
-      .agg(count(lit(1)).as("dd")).localCheckpoint()
-    val tokPar = s"(${Dedup.portableHash("tok", "'olda'")} % 2)"
-    var lambda = counts.select("tok").distinct()
-      .selectExpr("tok",
-        s"CAST(1000000 + $tokPar * 500000 AS BIGINT) AS l1",
-        s"CAST(1500000 - $tokPar * 500000 AS BIGINT) AS l2")
-      .localCheckpoint()
-    for (t <- 1 to iters) {
-      val eb = oldaEb(lambda)
-      // residue rotates mod 4 so iters > 4 reuses the batches instead of
-      // selecting an empty one (pmod ∈ {0..3} never equals t-1 ≥ 4, and an
-      // empty batch makes ss = 0 → dd/0 → NaN λ)
-      val bc = counts.filter(expr(
-        s"pmod(${Dedup.portableHash("cast(did as string)", "'oldab'")}, 4) = ${(t - 1) % 4}"))
-      // one γ update (the declared inner-loop slice), then the batch
-      // sufficient statistics under the UPDATED γ — the reference's
-      // post-loop sstats shape. The batch ⋈ expElogbeta join is shared
-      // by both scores (oldaScore scaladoc) and pinned for the iteration.
-      val ce = bc.join(eb, "tok").localCheckpoint()
-      val g1 = oldaGammaStep(oldaScore(ce, oldaGammaInit(bc)))
-      val br = oldaScore(ce, g1).groupBy("tok")
-        .agg(sum(expr("c * f1")).as("br1"), sum(expr("c * f2")).as("br2"))
-      val bs = bc.select("did").distinct().agg(count(lit(1)).as("ss"))
-      lambda = lambda.join(br, Seq("tok"), "left")
-        .na.fill(0L, Seq("br1", "br2"))
-        .crossJoin(broadcast(dTot)).crossJoin(broadcast(bs))
-        .selectExpr("tok", s"${oldaLambdaUpdExpr("l1", "br1", oldaRho(t))} AS l1",
-          s"${oldaLambdaUpdExpr("l2", "br2", oldaRho(t))} AS l2")
-        .localCheckpoint()
-      ce.unpersist()
-    }
-    (counts, lambda)
-  }
 
   /** The per-cell log-probability in milli-nats over the exact integer
     * φ-norm pn (= θ·β scaled by 1e12): one shared libm ln, rounded
@@ -910,31 +680,33 @@ object Clustering {
   def oldaPerpExpr: String =
     "CAST(round(exp(-(CAST(ll_milli AS DOUBLE) / 1000.0) / CAST(n_tokens AS DOUBLE)) * 1000000.0) AS BIGINT)"
 
-  /** logPerplexity of the fitted online model (reference
+  /** logPerplexity of the fitted two-topic online model (reference
     * LDAModel.scala:255 logPerplexity = −logLikelihood / corpus token
     * count, with :235 logLikelihood delegating to the :280
-    * variational bound): run the [[onlineLdaState]] fit, then — like
-    * the reference — variational inference per doc over the FULL
-    * corpus (γ init + one update, the fit's declared inner slice)
-    * and the bound's dominant token term Σ_dw c·ln(θ_d·β_w), each
-    * cell milli-rounded through ONE shared ln so the corpus sum is an
-    * exact integer. DECLARED DEVIATION beyond the s75 set: the
-    * Dirichlet prior/entropy terms of the bound (E[log p(θ|α)] −
+    * variational bound): run the [[onlineLdaStateK]] fit at K = 2,
+    * then — like the reference — variational inference per doc over
+    * the FULL corpus (γ init + one update, the fit's declared inner
+    * slice) and the bound's dominant token term Σ_dw c·ln(θ_d·β_w),
+    * each cell milli-rounded through ONE shared ln so the corpus sum is
+    * an exact integer. DECLARED DEVIATION beyond the online-fit set:
+    * the Dirichlet prior/entropy terms of the bound (E[log p(θ|α)] −
     * E[log q(θ|γ)] and the topic analogs) are omitted — they need
     * lgamma, which Spark SQL lacks; the token term is the
     * data-dependent part perplexity comparisons rank by. Returns ONE
     * row: (n_cells, n_tokens, ll_milli, perplexity_micro). */
   def onlineLdaPerplexity(docs: DataFrame, idCol: String, textCol: String,
                           iters: Int = 2): DataFrame = {
-    val (counts, lambda) = onlineLdaState(docs, idCol, textCol, iters)
-    val eb = oldaEb(lambda)
+    val kTot = 2
+    val (counts, lambda) = onlineLdaStateK(docs, idCol, textCol, kTot, iters)
     // the full-corpus evaluation scores twice (γ update, then the bound
     // under the updated γ) — the corpus ⋈ expElogbeta join is shared and
     // pinned exactly like the fit's per-iteration batch join
-    val ce = counts.join(eb, "tok")
+    val ce = counts.join(oldaEbK(lambda, kTot), "tok")
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val g1 = oldaGammaStep(oldaScore(ce, oldaGammaInit(counts)))
-    val out = oldaScore(ce, g1)
+    val gz = counts.select("did").distinct()
+      .selectExpr("did" +: oldaGammaInitExprsK(kTot): _*)
+    val g1 = oldaGammaStepK(oldaScoreK(ce, gz, kTot), kTot)
+    val out = oldaScoreK(ce, g1, kTot)
       .selectExpr("c", s"$oldaLnCellExpr AS lnq")
       .agg(count(lit(1)).as("n_cells"), sum("c").as("n_tokens"),
         sum(expr("c * lnq")).as("ll_milli"))
@@ -948,44 +720,8 @@ object Clustering {
     out
   }
 
-  /** Two-topic online variational LDA over (`idCol`, `textCol`)
-    * documents: `iters` minibatch iterations, each ONE batch ⋈ γ ⋈
-    * expElogbeta join (row-linear in the BATCH's (doc, word) pairs —
-    * the corpus is never re-aggregated, the point of the online path)
-    * plus a per-doc γ aggregate, a per-term sufficient-statistics
-    * aggregate, and the vocabulary-sized λ blend; λ localCheckpoints
-    * per iteration (the pregel discipline). At 100 TB the per-iteration
-    * cost is batch-proportional and λ is vocabulary-bounded — the exact
-    * reason the reference ships this optimizer next to EM. Returns the
-    * top-`topK` terms per topic: (topic, rnk, tok, lambda_micro), ties
-    * toward the smaller token. */
-  def onlineLdaTopics(docs: DataFrame, idCol: String, textCol: String,
-                      iters: Int = 2, topK: Int = 8): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val (counts, lambda) = onlineLdaState(docs, idCol, textCol, iters)
-    counts.unpersist()
-    lambda.select(lit(1L).as("topic"), col("tok"), col("l1").as("lambda_micro"))
-      .union(lambda.select(lit(2L).as("topic"), col("tok"), col("l2").as("lambda_micro")))
-      .select(col("topic"), col("tok"), col("lambda_micro"),
-        row_number().over(Window.partitionBy("topic")
-          .orderBy(col("lambda_micro").desc, col("tok"))).cast("long").as("rnk"))
-      .filter(col("rnk") <= topK)
-      .select("topic", "rnk", "tok", "lambda_micro")
-  }
-
-  // ---- K-topic ONLINE variational LDA (LDAOptimizer.scala:231 takes k
-  // from the enclosing LDA; the chain above fixes K = 2 — the last
-  // online-path topic-axis scaffolding). No complement trick here: the
-  // reference's λ stores ALL K topic rows, and so does this state — the
-  // generalization is per-topic column loops over the SAME ratio /
-  // fraction / blend formula strings. The binary slice keeps the
-  // historical parity seeds verbatim (spec-pinned); K ≥ 3 rotates a
-  // +½/−½ γ perturbation by doc residue and favors topic K − residue
-  // in the λ seed — the K = 2 values of both schemes coincide with the
-  // legacy text. -------------------------------------------------------
-
   /** γ seed expressions for K topics (the declared Gamma(100, 0.01)
-    * stand-in): K = 2 the historical parity text; K ≥ 3 docs with
+    * stand-in): K = 2 the doc-parity seeds; K ≥ 3 docs with
     * residue r perturb topic r+1 by +½ and its successor by −½ around
     * the 1.25 base (every doc asymmetric, every topic reachable). */
   def oldaGammaInitExprsK(kTot: Int): Seq[String] =
@@ -998,16 +734,21 @@ object Clustering {
     }
 
   /** λ seed for K topics over the token-hash residue `par` (in scope):
-    * topic K − par takes the +½ boost — the K = 2 values are the
-    * historical l1/l2 parity seeds. */
+    * topic K − par takes the +½ boost (at K = 2, the token-parity
+    * seeds). */
   def oldaLambdaInitExprK(kTot: Int, k: Int, parExpr: String): String =
     s"CAST(1000000 + (CASE WHEN ($parExpr) = ${kTot - k} THEN 500000 ELSE 0 END) AS BIGINT) AS l$k"
 
-  /** The K-topic responsibility stage over a PRE-JOINED `ce` = cells ⋈
-    * expElogbeta frame (shared by both per-iteration scores — the
-    * [[oldaScore]] rationale): θ ratios over the γ sum, exact integer φ,
-    * per-topic fractions — the legacy 2-column projection
-    * loop-generalized. */
+  /** The per-(doc, term, topic) responsibility stage shared by the fit
+    * and the perplexity evaluation, over a PRE-JOINED `ce` = cells ⋈
+    * expElogbeta frame (r21, guide §2.4 "two operations keyed the same
+    * way share one exchange": every iteration scores TWICE — the γ
+    * update, then the sufficient statistics under the updated γ — and
+    * both scores join the same cells against the same eb rows, so the
+    * tok-keyed join is computed once per iteration and pinned; only the
+    * cheap did-keyed γ join differs between the two scores). θ ratios
+    * over the γ sum, exact integer φ, per-topic fractions. Emits (did,
+    * tok, c, pn, f1..fK). */
   private def oldaScoreK(ce: DataFrame, g: DataFrame,
                          kTot: Int): DataFrame = {
     val ks = 1 to kTot
@@ -1023,9 +764,29 @@ object Clustering {
         ks.map(k => s"${oldaFracExpr(s"et$k", s"eb$k", "pn", "DIV")} AS f$k"): _*)
   }
 
-  /** The K-topic online fitting loop ([[onlineLdaState]] with per-topic
-    * column loops): returns (counts — still persisted — and the final
-    * K-column λ). */
+  /** expElogbeta rows for a K-column λ state. */
+  private def oldaEbK(lambda: DataFrame, kTot: Int): DataFrame = {
+    val ks = 1 to kTot
+    val lsum = lambda.agg(sum("l1").as("ls1"),
+      ks.drop(1).map(k => sum(s"l$k").as(s"ls$k")): _*)
+    lambda.crossJoin(broadcast(lsum))
+      .selectExpr("tok" +:
+        ks.map(k => s"${oldaRatioExpr(s"l$k", s"ls$k", "DIV")} AS eb$k"): _*)
+  }
+
+  /** One γ update from a scored frame (the declared inner-loop
+    * slice). */
+  private def oldaGammaStepK(scored: DataFrame, kTot: Int): DataFrame = {
+    val ks = 1 to kTot
+    scored.groupBy("did")
+      .agg(sum(expr("c * f1")).as("s1"),
+        ks.drop(1).map(k => sum(expr(s"c * f$k")).as(s"s$k")): _*)
+      .selectExpr("did" +:
+        ks.map(k => s"CAST(500000 + s$k AS BIGINT) AS g$k"): _*)
+  }
+
+  /** The K-topic online fitting loop: returns (counts — still
+    * persisted, caller unpersists — and the final K-column λ). */
   private def onlineLdaStateK(docs: DataFrame, idCol: String,
                               textCol: String, kTot: Int,
                               iters: Int): (DataFrame, DataFrame) = {
@@ -1043,23 +804,20 @@ object Clustering {
         ks.map(k => oldaLambdaInitExprK(kTot, k, tokPar)): _*)
       .localCheckpoint()
     for (t <- 1 to iters) {
-      val lsum = lambda.agg(sum("l1").as("ls1"),
-        ks.drop(1).map(k => sum(s"l$k").as(s"ls$k")): _*)
-      val eb = lambda.crossJoin(broadcast(lsum))
-        .selectExpr("tok" +:
-          ks.map(k => s"${oldaRatioExpr(s"l$k", s"ls$k", "DIV")} AS eb$k"): _*)
+      val eb = oldaEbK(lambda, kTot)
+      // residue rotates mod 4 so iters > 4 reuses the batches instead of
+      // selecting an empty one (pmod ∈ {0..3} never equals t-1 ≥ 4, and an
+      // empty batch makes ss = 0 → dd/0 → NaN λ)
       val bc = counts.filter(expr(
         s"pmod(${Dedup.portableHash("cast(did as string)", "'oldab'")}, 4) = ${(t - 1) % 4}"))
       val gz = bc.select("did").distinct()
         .selectExpr("did" +: oldaGammaInitExprsK(kTot): _*)
-      // shared batch ⋈ expElogbeta join, pinned for both scores (the
-      // oldaScore rationale)
+      // one γ update (the declared inner-loop slice), then the batch
+      // sufficient statistics under the UPDATED γ — the reference's
+      // post-loop sstats shape. The batch ⋈ expElogbeta join is shared
+      // by both scores (oldaScoreK scaladoc) and pinned for the iteration.
       val ce = bc.join(eb, "tok").localCheckpoint()
-      val g1 = oldaScoreK(ce, gz, kTot).groupBy("did")
-        .agg(sum(expr("c * f1")).as("s1"),
-          ks.drop(1).map(k => sum(expr(s"c * f$k")).as(s"s$k")): _*)
-        .selectExpr("did" +:
-          ks.map(k => s"CAST(500000 + s$k AS BIGINT) AS g$k"): _*)
+      val g1 = oldaGammaStepK(oldaScoreK(ce, gz, kTot), kTot)
       val br = oldaScoreK(ce, g1, kTot).groupBy("tok")
         .agg(sum(expr("c * f1")).as("br1"),
           ks.drop(1).map(k => sum(expr(s"c * f$k")).as(s"br$k")): _*)
@@ -1075,8 +833,17 @@ object Clustering {
     (counts, lambda)
   }
 
-  /** K-topic online LDA topics: the [[onlineLdaTopics]] output shape
-    * over the K-column λ state. */
+  /** K-topic online variational LDA over (`idCol`, `textCol`)
+    * documents: `iters` minibatch iterations, each ONE batch ⋈ γ ⋈
+    * expElogbeta join (row-linear in the BATCH's (doc, word) pairs —
+    * the corpus is never re-aggregated, the point of the online path)
+    * plus a per-doc γ aggregate, a per-term sufficient-statistics
+    * aggregate, and the vocabulary-sized λ blend; λ localCheckpoints
+    * per iteration (the pregel discipline). At 100 TB the per-iteration
+    * cost is batch-proportional and λ is vocabulary-bounded — the exact
+    * reason the reference ships this optimizer next to EM. Returns the
+    * top-`topK` terms per topic: (topic, rnk, tok, lambda_micro), ties
+    * toward the smaller token. */
   def onlineLdaTopicsK(docs: DataFrame, idCol: String, textCol: String,
                        kTot: Int, iters: Int = 2, topK: Int = 8): DataFrame = {
     require(kTot >= 2 && kTot <= 6, s"onlineLdaTopicsK: K = $kTot outside [2, 6]")
@@ -1183,159 +950,6 @@ object Clustering {
     out
   }
 
-  // ---- THREE-component, per-component-variance 1-D Gaussian mixture
-  // (reference mllib/clustering/GaussianMixture.scala:161 run — the
-  // reference takes arbitrary k and fits a variance per component;
-  // [[gmmFit1d]] is the k = 2 pooled-variance thin slice, this member
-  // closes BOTH of its declared deviations at k = 3: responsibilities
-  // are a max-shifted 3-way softmax of the component log-densities
-  // (each with its OWN variance), the third component's statistics are
-  // exact complements, and every parameter re-quantizes per step so the
-  // state stays engine-portable. Deterministic init: the mean split's
-  // two HALF-MEANS cut the line into three regions (low / middle /
-  // high), each seeding its own (weight, mean, variance) — the same
-  // data-derived-over-random-sampling convention as gmmSplitExpr,
-  // declared. Variances are milli-quantized and floored at 1. ---------
-
-  /** Constant totals carried through the k-3 EM state: n, Σx exact
-    * BIGINTs, Σx² DECIMAL(38,0)/HUGEINT. */
-  val gmm3ConstCols = Seq("n", "sx", "sxx")
-
-  private def g3l(k: Int) = {
-    val w = if (k == 3) "CAST(1000000 - (w1u + w2u) AS DOUBLE)"
-            else s"CAST(w${k}u AS DOUBLE)"
-    s"((ln($w) - (0.5 * ln(CAST(v${k}m AS DOUBLE) / 1000.0))) - (((CAST(x AS DOUBLE) - (CAST(m${k}m AS DOUBLE) / 1000.0)) * (CAST(x AS DOUBLE) - (CAST(m${k}m AS DOUBLE) / 1000.0))) / (2.0 * (CAST(v${k}m AS DOUBLE) / 1000.0))))"
-  }
-
-  private val g3max = s"greatest(${g3l(1)}, ${g3l(2)}, ${g3l(3)})"
-  private val g3den =
-    s"((exp(${g3l(1)} - $g3max) + exp(${g3l(2)} - $g3max)) + exp(${g3l(3)} - $g3max))"
-
-  /** Component-k responsibility in micro units: the max-shifted softmax
-    * (the s15 softmax stabilization, so exp never overflows); w3u is
-    * the exact complement downstream, never re-rounded. */
-  def gmm3RespExpr(k: Int): String =
-    s"CAST(round((1000000.0 * exp(${g3l(k)} - $g3max)) / $g3den) AS BIGINT)"
-
-  private def g3meanD(sr: String, srx: String) =
-    s"(CAST($srx AS DOUBLE) / CAST($sr AS DOUBLE))"
-  private def g3varM(sr: String, srx: String, srxx: String) =
-    s"greatest(CAST(round(((CAST($srxx AS DOUBLE) / CAST($sr AS DOUBLE)) - (${g3meanD(sr, srx)} * ${g3meanD(sr, srx)})) * 1000.0) AS BIGINT), 1)"
-
-  /** M-step over (sr1, srx1, srxx1, sr2, srx2, srxx2) + the totals:
-    * component 3 is the exact complement on every axis. Weights are
-    * floored at 1 micro so ln(w) stays finite; a component whose
-    * responsibility mass truly collapses (sr = 0) fails loudly in the
-    * mean division — the input must keep all three components alive,
-    * the gmmRespExpr non-degeneracy contract. */
-  val gmm3UpdateExprs: Seq[(String, String)] = {
-    val sr3 = "((n * 1000000) - (sr1 + sr2))"
-    val srx3 = "((CAST(sx AS DOUBLE) * 1000000.0) - (CAST(srx1 AS DOUBLE) + CAST(srx2 AS DOUBLE)))"
-    val srxx3 = "((CAST(sxx AS DOUBLE) * 1000000.0) - (CAST(srxx1 AS DOUBLE) + CAST(srxx2 AS DOUBLE)))"
-    Seq(
-      "w1u" -> "greatest(CAST(sr1 DIV n AS BIGINT), 1)",
-      "w2u" -> "greatest(CAST(sr2 DIV n AS BIGINT), 1)",
-      "m1m" -> s"CAST(round(${g3meanD("sr1", "srx1")} * 1000.0) AS BIGINT)",
-      "m2m" -> s"CAST(round(${g3meanD("sr2", "srx2")} * 1000.0) AS BIGINT)",
-      "m3m" -> s"CAST(round(($srx3 / CAST($sr3 AS DOUBLE)) * 1000.0) AS BIGINT)",
-      "v1m" -> g3varM("sr1", "srx1", "srxx1"),
-      "v2m" -> g3varM("sr2", "srx2", "srxx2"),
-      "v3m" -> s"greatest(CAST(round((($srxx3 / CAST($sr3 AS DOUBLE)) - (($srx3 / CAST($sr3 AS DOUBLE)) * ($srx3 / CAST($sr3 AS DOUBLE)))) * 1000.0) AS BIGINT), 1)")
-  }
-
-  /** Init from the three half-mean regions (region stats nl/sl/ssl,
-    * nm/sm/ssm, nh2/sh2/ssh2 in scope). */
-  val gmm3InitExprs: Seq[(String, String)] = Seq(
-    "w1u" -> "greatest(CAST((nl * 1000000) DIV n AS BIGINT), 1)",
-    "w2u" -> "greatest(CAST((nm * 1000000) DIV n AS BIGINT), 1)",
-    "m1m" -> s"CAST(round(${g3meanD("nl", "sl")} * 1000.0) AS BIGINT)",
-    "m2m" -> s"CAST(round(${g3meanD("nm", "sm")} * 1000.0) AS BIGINT)",
-    "m3m" -> s"CAST(round(${g3meanD("nh2", "sh2")} * 1000.0) AS BIGINT)",
-    "v1m" -> g3varM("nl", "sl", "ssl"),
-    "v2m" -> g3varM("nm", "sm", "ssm"),
-    "v3m" -> g3varM("nh2", "sh2", "ssh2"))
-
-  /** EM fit of a 3-component heteroscedastic 1-D mixture over (x
-    * BIGINT): totals scan, half-means scan, region-stats scan, then
-    * `iters` iterations of ONE scan each (the gmmFit1d discipline).
-    * Output: 3 rows (comp, weight_micro, mean_milli, var_milli,
-    * n_hard) — hard assignment by argmax responsibility, ties to the
-    * lower component. */
-  def gmmFit1dK3(xs: DataFrame, iters: Int = 3): DataFrame = {
-    val f = xs.select(col("x"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // no eager count (r21): the tot pin's scan populates the cache.
-    // KEYLESS aggregates + 1-row reattach (the GmmKd shape): the former
-    // groupBy(n, sx, sxx) hashed a DECIMAL(38,0) total PER ROW in both
-    // init scans for a single-by-construction group. tot/halves pin
-    // eagerly — each is referenced from two places (the broadcast into
-    // the next scan AND the reattach), and without the pin the lazy
-    // aggregate subtree (a full corpus scan) would re-execute per
-    // reference.
-    val tot = f.agg(count(lit(1)).as("n"), sum("x").as("sx"),
-      sum(expr("CAST(x * x AS DECIMAL(38,0))")).as("sxx"))
-      .localCheckpoint()
-    // the two half-means of the global-mean split, as exact integer
-    // fractions (nlo, slo, nhi, shi) — region membership compares
-    // x·nlo < slo etc., never a rounded double
-    val halves = f.crossJoin(broadcast(tot))
-      .selectExpr("x", s"CASE WHEN $gmmSplitExpr THEN 1 ELSE 0 END AS lo")
-      .agg(sum(expr("lo")).as("nlo"), sum(expr("x * lo")).as("slo"),
-        sum(expr("1 - lo")).as("nhi"), sum(expr("x * (1 - lo)")).as("shi"))
-      .crossJoin(tot)
-      .localCheckpoint()
-    val regions = f.crossJoin(broadcast(halves.select("nlo", "slo", "nhi", "shi")))
-      .selectExpr("x",
-        "CASE WHEN (x * nlo) < slo THEN 1 WHEN (x * nhi) < shi THEN 2 ELSE 3 END AS reg")
-      .agg(
-        sum(expr("CASE WHEN reg = 1 THEN 1 ELSE 0 END")).as("nl"),
-        sum(expr("CASE WHEN reg = 1 THEN x ELSE 0 END")).as("sl"),
-        sum(expr("CAST(CASE WHEN reg = 1 THEN x * x ELSE 0 END AS DECIMAL(38,0))")).as("ssl"),
-        sum(expr("CASE WHEN reg = 2 THEN 1 ELSE 0 END")).as("nm"),
-        sum(expr("CASE WHEN reg = 2 THEN x ELSE 0 END")).as("sm"),
-        sum(expr("CAST(CASE WHEN reg = 2 THEN x * x ELSE 0 END AS DECIMAL(38,0))")).as("ssm"),
-        sum(expr("CASE WHEN reg = 3 THEN 1 ELSE 0 END")).as("nh2"),
-        sum(expr("CASE WHEN reg = 3 THEN x ELSE 0 END")).as("sh2"),
-        sum(expr("CAST(CASE WHEN reg = 3 THEN x * x ELSE 0 END AS DECIMAL(38,0))")).as("ssh2"))
-      .crossJoin(halves)
-    var state = regions.selectExpr(gmm3ConstCols ++
-        gmm3InitExprs.map { case (c, e) => s"$e AS $c" }: _*)
-      .localCheckpoint()
-    // the responsibility chain reads ONLY the param columns — broadcast
-    // just those into the scans (the GmmKd trim): the constant
-    // DECIMAL(38,0) totals otherwise ride the nested-loop join and the
-    // scorer as passthrough columns
-    val params3 = Seq("w1u", "w2u", "m1m", "m2m", "m3m", "v1m", "v2m", "v3m")
-    for (_ <- 1 to iters) {
-      val sums = f.crossJoin(broadcast(state.selectExpr(params3: _*)))
-        .selectExpr(s"${gmm3RespExpr(1)} AS r1", s"${gmm3RespExpr(2)} AS r2", "x")
-        .agg(sum("r1").as("sr1"),
-          sum(expr("CAST(r1 * x AS DECIMAL(38,0))")).as("srx1"),
-          sum(expr("CAST(r1 * x AS DECIMAL(38,0)) * x")).as("srxx1"),
-          sum("r2").as("sr2"),
-          sum(expr("CAST(r2 * x AS DECIMAL(38,0))")).as("srx2"),
-          sum(expr("CAST(r2 * x AS DECIMAL(38,0)) * x")).as("srxx2"))
-      state = sums.crossJoin(state)
-        .selectExpr(gmm3ConstCols ++
-          gmm3UpdateExprs.map { case (c, e) => s"$e AS $c" }: _*)
-        .localCheckpoint()
-    }
-    val hard = f.crossJoin(broadcast(state.selectExpr(params3: _*)))
-      .selectExpr(s"${gmm3RespExpr(1)} AS r1", s"${gmm3RespExpr(2)} AS r2")
-      .selectExpr("CAST(CASE WHEN r1 >= r2 AND r1 >= 1000000 - (r1 + r2) THEN 1 " +
-        "WHEN r2 >= 1000000 - (r1 + r2) THEN 2 ELSE 3 END AS BIGINT) AS comp")
-      .groupBy("comp").agg(count(lit(1)).as("n_hard"))
-    val comps = state.selectExpr("CAST(1 AS BIGINT) AS comp",
-        "w1u AS weight_micro", "m1m AS mean_milli", "v1m AS var_milli")
-      .union(state.selectExpr("CAST(2 AS BIGINT)", "w2u", "m2m", "v2m"))
-      .union(state.selectExpr("CAST(3 AS BIGINT)",
-        "CAST(1000000 - (w1u + w2u) AS BIGINT)", "m3m", "v3m"))
-    val out = comps.join(hard, Seq("comp"), "left")
-      .na.fill(0L, Seq("n_hard"))
-    f.unpersist()
-    out
-  }
-
   // ---- 2-D FULL-covariance Gaussian mixture (reference mllib/
   // clustering/GaussianMixture.scala:161 run — the reference model is
   // d-dimensional with full Σ via MultivariateGaussian; this is the
@@ -1346,7 +960,12 @@ object Clustering {
   // random sampling; responsibilities and parameters quantized to
   // micro/milli integers each step so every state is engine-portable;
   // diagonal covariance entries floored at 1 micro so the closed-form
-  // inverse never divides by a collapsed variance. ---------------------
+  // inverse never divides by a collapsed variance. GmmKd.gmmFitKd at
+  // (d 2, K 2) yields the same rows from generated text, but s96 keeps
+  // this member: on the sf0.001 benchmark tables the GmmKd fit ran
+  // 1.33 → 1.55 s (median of five interleaved pairs, 4-core host) — it
+  // spreads the corpus before persisting and scores through a layered
+  // projection chain, both sized for the larger (d, K) points. ---------
 
   /** Constant per-corpus sufficient statistics carried through every EM
     * state row: count, exact coordinate sums and second moments. The
@@ -1385,7 +1004,7 @@ object Clustering {
     * covariance entries are E[ab] − E[a]E[b] in micro units, diagonals
     * floored at 1. */
   val gmm2UpdateExprs: Seq[(String, String)] = Seq(
-    // weight floored at 1 micro and capped at 999999 (the gmm3 ln-safety
+    // weight floored at 1 micro and capped at 999999 (the GmmKd ln-safety
     // convention): a collapsed component keeps a live ln() argument on
     // BOTH sides of the 1e6 complement instead of dying silently
     "w1u" -> "greatest(least(CAST(sr DIV n AS BIGINT), 999999), 1)",

@@ -6,39 +6,48 @@ import org.apache.spark.sql.functions._
 /** Joint (d, K) Gaussian-mixture EM (reference mllib/clustering/
   * GaussianMixture.scala:161 run — the reference model is d-dimensional
   * with K components and a FULL covariance per component via
-  * MultivariateGaussian; the repo's earlier members each fixed one axis:
-  * [[Clustering.gmmFit1dK3]] = (d 1, K 3), [[Clustering.gmmFit2d]] =
-  * (d 2, K 2)). This module GENERATES the whole EM expression text for
-  * any (d ≤ 3, K ≤ 4) from per-dimension kernels (determinant /
+  * MultivariateGaussian). This module GENERATES the whole EM expression
+  * text for any (d ≤ 3, K ≤ 4) from per-dimension kernels (determinant /
   * Mahalanobis / naming / unit-scale) composed with K-fold complement
-  * machinery, so the historical arities reproduce the legacy fitted
-  * STATE exactly — same parse trees, same IEEE doubles, same quantized
-  * integers (GmmKdSpec pins both slices output-for-output) — while the
-  * new joint points ((2, 3), (3, 2), (2, 4), (1, 4), (1, 2)-heteroscedastic)
-  * come from the same text.
+  * machinery; the fixed-size GMM rows (1, 3) s101, (2, 3) s110 and
+  * (3, 2) s116 are instantiations of the same text, each with
+  * [[oracleSql]] at the same (d, K) as its oracle. The (2, 2) point
+  * reproduces [[Clustering.gmmFit2d]]'s fitted output exactly
+  * (GmmKdSpec); s96 keeps that member, which runs faster at its size
+  * (its scaladoc has the measurement).
   *
-  * Conventions inherited from the legacy members (declared deviations
-  * from the reference, same rationale):
-  *   - d = 1 carries the gmm3 naming/scale (x raw units; means/vars
-  *     milli: m{k}m, v{k}m); d = 2 the gmm2 naming/scale (x, y milli;
-  *     means milli m{k}x/m{k}y, covariances micro c{k}11/c{k}12/c{k}22).
+  * Declared deviations from the reference:
+  *   - deterministic init from x-axis mean/half-mean region splits
+  *     (exact integer membership compares — no double ever decides a
+  *     region) instead of random sampling: K = 2 the mean split on the
+  *     FIRST coordinate, K = 3 the half-mean three regions (low /
+  *     middle / high), K = 4 all three boundaries; each region seeds
+  *     its own (weight, mean, covariance).
+  *   - responsibilities and parameters re-quantize to micro/milli
+  *     integers every step, so every state is engine-portable: d = 1
+  *     keeps x in raw units with milli means/variances (m{k}m, v{k}m);
+  *     d ≥ 2 keeps milli coordinates and means (m{k}x, m{k}y, …) with
+  *     micro covariances (c{k}11, c{k}12, …).
+  *   - variances and covariance diagonals floored at 1 (milli at d = 1,
+  *     micro at d ≥ 2), so the closed-form inverse never divides by a
+  *     collapsed variance; weights floored at 1 micro AND capped at
+  *     999999 (the ln-safety convention), so a collapsed component keeps
+  *     a live ln() argument on both sides of the 1e6 complement. A
+  *     component whose responsibility mass truly collapses (sr = 0)
+  *     still fails loudly in the mean division — the input must keep
+  *     all K components alive.
+  *
+  * Structure:
   *   - component K is the exact complement on every statistic — K−1
   *     responsibility columns per E-step scan, never a Kth.
   *   - K = 2 uses the numerically-stable binary SIGMOID responsibility
-  *     (the historical gmm2 text — no max shift needed); K ≥ 3 the
-  *     max-shifted softmax (the historical gmm3 text).
-  *   - weights floored at 1 micro AND capped at 999999 (the r19
-  *     advisory ln-safety convention) — equal to the legacy texts on
-  *     any input where no component collapses.
-  *   - deterministic init from x-axis mean/half-mean region splits
-  *     (exact integer membership compares): K = 2 the mean split,
-  *     K = 3 the half-mean three regions, K = 4 all three boundaries.
+  *     (no max shift needed); K ≥ 3 the max-shifted softmax (the s15
+  *     softmax stabilization, so exp never overflows).
   *
-  * Scale shape (unchanged from the legacy members): init is 2–3 corpus
-  * scans; each EM iteration is ONE corpus scan against a broadcast
-  * 1-row state plus a 1-row update projection, localCheckpointed — at
-  * 1000 executors the per-iteration cost is the scan, and the state
-  * stays K·d² integers. */
+  * Scale shape: init is 2–3 corpus scans; each EM iteration is ONE
+  * corpus scan against a broadcast 1-row state plus a 1-row update
+  * projection, localCheckpointed — at 1000 executors the per-iteration
+  * cost is the scan, and the state stays K·d² integers. */
 object GmmKd {
 
   /** Axis names by dimension index 1..d. */
@@ -54,7 +63,7 @@ object GmmKd {
   def constCols(d: Int): Seq[String] =
     "n" +: (axes(d).map(a => s"s$a") ++ pairs(d).map { case (i, j) => s"s${ax(i)}${ax(j)}" })
 
-  /** Sum-column suffix: the binary slice keeps gmm2's unindexed names
+  /** Sum-column suffix: the binary slice keeps unindexed names
     * (sr, srx, …); K ≥ 3 indexes per component (sr1, srx1, …). */
   private def sfx(kTot: Int, k: Int): String = if (kTot == 2) "" else k.toString
 
@@ -95,7 +104,7 @@ object GmmKd {
   }
 
   /** Mahalanobis quadratic form dᵀΣ⁻¹d (d = 2 via the 2×2 adjugate —
-    * the gmm2 closed form; d = 3 via the symmetric cofactor matrix:
+    * the closed 2×2 form; d = 3 via the symmetric cofactor matrix:
     * Σ diag terms + 2× each off-diagonal). */
   private def qExpr(d: Int, k: Int): String = d match {
     case 1 => s"((${dx1(k)} * ${dx1(k)}) / ${detExpr(1, k)})"
@@ -112,8 +121,8 @@ object GmmKd {
       s"((${terms.reduce((a, b) => s"($a + $b)")}) / ${detExpr(3, k)})"
   }
 
-  /** Half quadratic form, in the historical parenthesization per d
-    * (d = 1 divides the squared deviation by 2σ² — the gmm3 text;
+  /** Half quadratic form, in a fixed parenthesization per d
+    * (d = 1 divides the squared deviation by 2σ²;
     * d = 2 halves the adjugate form). */
   private def halfQ(d: Int, k: Int): String = d match {
     case 1 => s"((${dx1(k)} * ${dx1(k)}) / (2.0 * ${detExpr(1, k)}))"
@@ -125,10 +134,9 @@ object GmmKd {
     s"((ln(${wD(kTot, k)}) - (0.5 * ln(${detExpr(d, k)}))) - ${halfQ(d, k)})"
 
   /** Component-k responsibility in micro units: the binary sigmoid at
-    * K = 2 (k must be 1 — the gmm2 text generalized over d), else the
-    * max-shifted softmax (the gmm3 text generalized over d and K).
+    * K = 2 (k must be 1), else the max-shifted softmax over all K.
     * exp overflow saturates identically to exactly 0 / 1e6 in both
-    * engines (the gmmRespExpr argument). */
+    * engines (the [[Clustering.gmmRespExpr]] argument). */
   def respExpr(d: Int, kTot: Int, k: Int): String =
     if (kTot == 2) {
       require(k == 1, "binary slice stores only component 1's responsibility")
@@ -162,8 +170,7 @@ object GmmKd {
 
   /** The M-step over the per-component responsibility sums plus the
     * constant totals: component K's statistics are exact complements on
-    * every axis (the legacy texts, generalized by reduce over the K−1
-    * stored components). */
+    * every axis (reduced over the K−1 stored components). */
   def updateExprs(d: Int, kTot: Int): Seq[(String, String)] = {
     def parts(base: String) =
       (1 until kTot).map(k => s"$base${sfx(kTot, k)}").reduce((a, b) => s"($a + $b)")
@@ -231,7 +238,7 @@ object GmmKd {
     weights ++ stored ++ lastMean ++ storedCov ++ lastCov
   }
 
-  /** Region labels in x-ascending order (the legacy suffixes). */
+  /** Region labels in x-ascending order. */
   def regionNames(kTot: Int): Seq[String] = kTot match {
     case 2 => Seq("l", "h")
     case 3 => Seq("l", "m", "h2")
@@ -292,7 +299,7 @@ object GmmKd {
   }
 
   /** Hard-assignment CASE over the K−1 responsibility columns (ties to
-    * the lower component — the gmm3 cascade; K = 2 is the r ≥ ½ test). */
+    * the lower component; K = 2 is the r ≥ ½ test). */
   def hardExpr(kTot: Int): String =
     if (kTot == 2) "CAST(CASE WHEN r >= 500000 THEN 1 ELSE 2 END AS BIGINT)"
     else {
@@ -319,8 +326,8 @@ object GmmKd {
   // arity. The scorer below binds each shared piece to a NAMED COLUMN in
   // a chain of projections instead — the same parse trees, the same IEEE
   // op order, just evaluated once per row each (substitution of a named
-  // subexpression is value-identical; GmmKdSpec pins the legacy slices
-  // and the oracle gates every output). Catalyst keeps the layers apart:
+  // subexpression is value-identical; the oracle, which evaluates
+  // [[respExpr]] verbatim, gates every output). Catalyst keeps the layers apart:
   // CollapseProject refuses to inline a non-cheap alias referenced more
   // than once, which every bound piece here is.
 
@@ -374,7 +381,7 @@ object GmmKd {
         s"((0.5 * ln(gkd_det_1 / gkd_det_2)) + (0.5 * (gkd_q_1 - gkd_q_2)))))) AS BIGINT) AS r"
       Seq(dxL, cfL, detL, qL, Seq(resp)).filter(_.nonEmpty)
     } else {
-      // half quadratic form per the historical parenthesization per d
+      // half quadratic form in the [[halfQ]] parenthesization per d
       def halfQRef(k: Int): String = d match {
         case 1 => s"((${dxr(k, "x")} * ${dxr(k, "x")}) / (2.0 * gkd_det_$k))"
         case _ => s"(0.5 * ${qRef(k)})"
@@ -411,8 +418,8 @@ object GmmKd {
   // ---- the EM driver --------------------------------------------------
 
   /** EM fit of a K-component, d-dimensional full-covariance mixture over
-    * a (x[, y] BIGINT) table (d = 1: raw units; d = 2: milli units —
-    * the legacy unit contracts). Output per component: d = 1
+    * a (x[, y[, z]] BIGINT) table (d = 1: raw units; d ≥ 2: milli
+    * units). Output per component: d = 1
     * (comp, weight_micro, mean_milli, var_milli, n_hard); d = 2
     * (comp, weight_micro, mean_x_milli, mean_y_milli, var_x_micro,
     * cov_xy_micro, var_y_micro, n_hard). */

@@ -2471,26 +2471,26 @@ object Learn {
       .select("tok", "chi2_micro")
   }
 
-  // ---- word2vec thin-slice (reference mllib/feature/Word2Vec.scala:41
-  // — skip-gram over a minCount-pruned vocabulary (learnVocab :139, the
-  // vocabulary bound that keeps the model size corpus-independent),
-  // window'd center/context pairs (:320), sigmoid gradient steps on
-  // dot(center, context) (:340-360 with the precomputed expTable :120).
-  // DECLARED DEVIATIONS, the s19/s44 conventions plus two structural
-  // ones: (1) the OBJECTIVE is Mikolov et al.'s negative-sampling
-  // variant (one deterministic rank-hash negative per pair) instead of
-  // the reference's hierarchical softmax — a Huffman path is a per-word
-  // variable-length traversal no oracle can unroll generically, while
-  // the NS form is two sigmoid terms per pair; (2) vectors are 2-d,
-  // ONE full-batch step from a deterministic ascii-hash init (the
+  // ---- word2vec (reference mllib/feature/Word2Vec.scala:41 — skip-gram
+  // over a minCount-pruned vocabulary (learnVocab :139, the vocabulary
+  // bound that keeps the model size corpus-independent), window'd
+  // center/context pairs (:320), sigmoid gradient steps on
+  // dot(center, context) (:340-360 with the precomputed expTable :120);
+  // `vectorSize` is the model's headline parameter, default 100, here
+  // the `dims` axis with 2 ≤ dims ≤ 4). DECLARED DEVIATIONS, the s19/s44
+  // conventions plus two structural ones: (1) the OBJECTIVE is Mikolov
+  // et al.'s negative-sampling variant (one deterministic rank-hash
+  // negative per pair) instead of the reference's hierarchical softmax —
+  // a Huffman path is a per-word variable-length traversal no oracle can
+  // unroll generically, while the NS form is two sigmoid terms per pair;
+  // (2) ONE full-batch step from a deterministic ascii-hash init (the
   // reference seeds per-word XORShift randoms, :291), every gradient
   // sum an exact micro×quant integer and the sigmoid/update each one
-  // shared fixed-parenthesization double expression. Deviation (2)'s
-  // dim axis is CLOSED by [[word2vecD]] (s113 gates dims = 3; the
-  // dims = 2 slice reproduces this member byte-identically); deviation
-  // (1) remains declared with the rationale above. ---------------------
+  // shared fixed-parenthesization double expression. The component
+  // loops (init residue mixes, fold-left dot products, per-component
+  // gradient sums) are generated from `dims`. -------------------------
 
-  /** Sigmoid of a quantized 2-d dot product in micro-units: `dot` is in
+  /** Sigmoid of a quantized dot product in micro-units: `dot` is in
     * Q² = 2^32 units. Shared verbatim with the oracle. */
   def w2vSigmoidExpr(dot: String): String =
     s"CAST(round(1000000.0 / (1.0 + exp(-(CAST($dot AS DOUBLE) / 4294967296.0)))) AS BIGINT)"
@@ -2510,28 +2510,44 @@ object Learn {
     "((ascii(substring(tok, 1, 1)) * 97) + " +
       "(ascii(substring(tok, length(tok), 1)) * 31) + (length(tok) * 7))"
 
-  /** Input- and output-side init components over (h) — the ALS
-    * sign-diverse recipe with different residue mixes per side. */
-  val w2vInitExprs: Seq[(String, String)] = Seq(
-    "u1q" -> "CAST(65536 + ((h % 7) * 8192) AS BIGINT)",
-    "u2q" -> "CAST(((h % 5) - 2) * 16384 AS BIGINT)",
-    "v1q" -> "CAST(65536 + ((h % 5) * 8192) AS BIGINT)",
-    "v2q" -> "CAST(((h % 7) - 3) * 16384 AS BIGINT)")
+  /** Per-component init residue mixes: component 1 of each side is the
+    * positive popularity direction, components ≥ 2 sign-diverse spreads
+    * on side-distinct coprime moduli (the ALS sign-diverse recipe, with
+    * different residue mixes per side). */
+  def w2vInitExprsD(dims: Int): Seq[(String, String)] = {
+    require(dims >= 2 && dims <= 4, s"w2vInitExprsD: dims $dims outside [2, 4]")
+    val uMods = Vector(7, 5, 3, 11)
+    val vMods = Vector(5, 7, 11, 3)
+    def side(prefix: String, mods: Vector[Int]): Seq[(String, String)] =
+      (1 to dims).map { i =>
+        if (i == 1) s"${prefix}1q" -> s"CAST(65536 + ((h % ${mods(0)}) * 8192) AS BIGINT)"
+        else {
+          val m = mods(i - 1)
+          s"$prefix${i}q" -> s"CAST(((h % $m) - ${(m - 1) / 2}) * 16384 AS BIGINT)"
+        }
+      }
+    side("u", uMods) ++ side("v", vMods)
+  }
 
-  /** Skip-gram word2vec over (`idCol`, `textCol`): top-`vocabN` tokens
-    * by (count desc, token) form the vocabulary (minCount's bounded-
-    * model analog — everything downstream is vocabulary-bounded except
-    * the row-linear pair extraction); center/context pairs within
-    * ±`window` positions over the VOCAB-FILTERED sequence (the
-    * reference drops OOV words before building sentences,
-    * Word2Vec.scala:300); per pair one positive sigmoid term and one
-    * deterministic negative (vocab rank (r_center + 7·r_context + 3)
-    * mod V). One full-batch step, then the joined in/out vectors for
-    * the top-`topK` ranks: (tok, rnk, u1q, u2q, v1q, v2q). */
-  def word2vec(docs: DataFrame, idCol: String, textCol: String,
-               vocabN: Int = 30, window: Int = 2, lr: Double = 0.025,
-               topK: Int = 20): DataFrame = {
+  private def w2vDot(a: Seq[String], b: Seq[String]): String =
+    a.zip(b).map { case (x, y) => s"($x * $y)" }.reduce((p, q) => s"$p + $q")
+
+  /** Skip-gram word2vec with `dims` vector components over (`idCol`,
+    * `textCol`): top-`vocabN` tokens by (count desc, token) form the
+    * vocabulary (minCount's bounded-model analog — everything downstream
+    * is vocabulary-bounded except the row-linear pair extraction);
+    * center/context pairs within ±`window` positions over the
+    * VOCAB-FILTERED sequence (the reference drops OOV words before
+    * building sentences, Word2Vec.scala:300); per pair one positive
+    * sigmoid term and one deterministic negative (vocab rank (r_center +
+    * 7·r_context + 3) mod V). One full-batch step, then the joined
+    * in/out vectors for the top-`topK` ranks: (tok, rnk, u1q..u{dims}q,
+    * v1q..v{dims}q). */
+  def word2vecD(docs: DataFrame, idCol: String, textCol: String,
+                vocabN: Int = 30, window: Int = 2, lr: Double = 0.025,
+                topK: Int = 20, dims: Int = 2): DataFrame = {
     import org.apache.spark.sql.expressions.Window
+    val ds = 1 to dims
     val toks = docs.select(col(idCol).as("did"),
         posexplode(split(col(textCol), " ")).as(Seq("pos", "tok")))
       .filter(length(col("tok")) > 0)
@@ -2555,111 +2571,6 @@ object Learn {
     // an out-of-vocabulary token must not consume a window slot. The
     // window is per-document (bounded by doc length), and posexplode's
     // pos is unique per doc, so the rank is deterministic.
-    val wt = toks.join(broadcast(vocab), "tok")
-      .select(col("did"), col("tok"), col("r"),
-        row_number().over(Window.partitionBy("did").orderBy("pos"))
-          .cast("long").as("pos"))
-    val pairs = wt.as("a").join(wt.as("b"),
-        col("a.did") === col("b.did") &&
-          col("b.pos") >= col("a.pos") - window &&
-          col("b.pos") <= col("a.pos") + window &&
-          col("b.pos") =!= col("a.pos"))
-      .select(col("a.tok").as("cw"), col("a.r").as("rc"),
-        col("b.tok").as("ct"), col("b.r").as("rx"))
-      .withColumn("rn", (col("rc") + (col("rx") * 7) + 3) % vsize)
-    val init = vocab.selectExpr("tok", "r", s"$w2vHashExpr AS h")
-      .selectExpr(Seq("tok", "r") ++
-        w2vInitExprs.map { case (c, e) => s"$e AS $c" }: _*)
-      .localCheckpoint()
-    val scored = pairs
-      .join(broadcast(init.select(col("tok").as("cw"), col("u1q"), col("u2q"))), "cw")
-      .join(broadcast(init.select(col("tok").as("ct"),
-        col("v1q").as("p1q"), col("v2q").as("p2q"))), "ct")
-      .join(broadcast(init.select(col("r").as("rn"),
-        col("v1q").as("n1q"), col("v2q").as("n2q"))), "rn")
-      .selectExpr("cw", "ct", "rn", "u1q", "u2q", "p1q", "p2q", "n1q", "n2q",
-        s"${w2vSigmoidExpr("(u1q * p1q) + (u2q * p2q)")} AS sp",
-        s"${w2vSigmoidExpr("(u1q * n1q) + (u2q * n2q)")} AS sn")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val du = scored.groupBy("cw")
-      .agg(sum(((lit(1000000L) - col("sp")) * col("p1q")) - (col("sn") * col("n1q"))).as("g1"),
-        sum(((lit(1000000L) - col("sp")) * col("p2q")) - (col("sn") * col("n2q"))).as("g2"))
-    val dvPos = scored.groupBy(col("ct").as("tok"))
-      .agg(sum((lit(1000000L) - col("sp")) * col("u1q")).as("gp1"),
-        sum((lit(1000000L) - col("sp")) * col("u2q")).as("gp2"))
-    val dvNeg = scored.join(broadcast(init.select(col("r").as("rn"), col("tok"))), "rn")
-      .groupBy("tok")
-      .agg(sum(-(col("sn") * col("u1q"))).as("gn1"),
-        sum(-(col("sn") * col("u2q"))).as("gn2"))
-    val vin = init.join(du.withColumnRenamed("cw", "tok"), Seq("tok"), "left")
-      .na.fill(0L, Seq("g1", "g2"))
-      .selectExpr("tok", "r",
-        s"${w2vUpdExpr("u1q", "g1", lr)} AS u1q",
-        s"${w2vUpdExpr("u2q", "g2", lr)} AS u2q")
-    val vout = init.join(dvPos, Seq("tok"), "left").join(dvNeg, Seq("tok"), "left")
-      .na.fill(0L, Seq("gp1", "gp2", "gn1", "gn2"))
-      .selectExpr("tok", "r",
-        s"${w2vUpdExpr("v1q", "(gp1 + gn1)", lr)} AS v1q",
-        s"${w2vUpdExpr("v2q", "(gp2 + gn2)", lr)} AS v2q")
-    val out = vin.join(vout.drop("r"), "tok")
-      .filter(col("r") < topK)
-      .selectExpr("tok", "r + 1 AS rnk", "u1q", "u2q", "v1q", "v2q")
-    scored.unpersist()
-    out
-  }
-
-  // ---- general-dimension word2vec (reference mllib/feature/Word2Vec
-  // .scala:41 — `vectorSize` is the model's headline parameter, default
-  // 100; the member above fixes 2 components). The dim axis is
-  // GENERATED (the s105/alsRank discipline): per-component init residue
-  // mixes, fold-left dot products, and per-component gradient sums whose
-  // dims = 2 instantiation reproduces [[word2vec]] byte-identically
-  // (LearnSpec pins the fitted vectors). The hierarchical-softmax
-  // deviation stays declared — a Huffman path is a per-word
-  // variable-length traversal neither engine can unroll generically —
-  // and this row shows the OTHER declared fixed axis is not
-  // load-bearing. -------------------------------------------------------
-
-  /** Per-component init residue mixes: component 1 of each side is the
-    * positive popularity direction, components ≥ 2 sign-diverse spreads
-    * on side-distinct coprime moduli — the dims = 2 slice is
-    * [[w2vInitExprs]] string-for-string. */
-  def w2vInitExprsD(dims: Int): Seq[(String, String)] = {
-    require(dims >= 2 && dims <= 4, s"w2vInitExprsD: dims $dims outside [2, 4]")
-    val uMods = Vector(7, 5, 3, 11)
-    val vMods = Vector(5, 7, 11, 3)
-    def side(prefix: String, mods: Vector[Int]): Seq[(String, String)] =
-      (1 to dims).map { i =>
-        if (i == 1) s"${prefix}1q" -> s"CAST(65536 + ((h % ${mods(0)}) * 8192) AS BIGINT)"
-        else {
-          val m = mods(i - 1)
-          s"$prefix${i}q" -> s"CAST(((h % $m) - ${(m - 1) / 2}) * 16384 AS BIGINT)"
-        }
-      }
-    side("u", uMods) ++ side("v", vMods)
-  }
-
-  private def w2vDot(a: Seq[String], b: Seq[String]): String =
-    a.zip(b).map { case (x, y) => s"($x * $y)" }.reduce((p, q) => s"$p + $q")
-
-  /** [[word2vec]] with `dims` vector components — identical vocabulary,
-    * pair extraction, negative-rank residue, objective and update
-    * machinery; only the component loops widen. Returns
-    * (tok, rnk, u1q..u{dims}q, v1q..v{dims}q). */
-  def word2vecD(docs: DataFrame, idCol: String, textCol: String,
-                vocabN: Int = 30, window: Int = 2, lr: Double = 0.025,
-                topK: Int = 20, dims: Int = 2): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val ds = 1 to dims
-    val toks = docs.select(col(idCol).as("did"),
-        posexplode(split(col(textCol), " ")).as(Seq("pos", "tok")))
-      .filter(length(col("tok")) > 0)
-    val vocab = toks.groupBy("tok").agg(count(lit(1)).as("c"))
-      .orderBy(col("c").desc, col("tok")).limit(vocabN)
-      .select(col("tok"), (row_number().over(
-        Window.orderBy(col("c").desc, col("tok"))) - 1).cast("long").as("r"))
-      .localCheckpoint()
-    val vsize = vocab.count()
     val wt = toks.join(broadcast(vocab), "tok")
       .select(col("did"), col("tok"), col("r"),
         row_number().over(Window.partitionBy("did").orderBy("pos"))

@@ -12,33 +12,35 @@ import org.apache.spark.sql.functions._
   * Catalyst for free: each half-step is one equi-join + one
   * map-side-combined hash aggregate on the solve key).
   *
-  * Deliberate deviations from MLlib's ALS, both in service of the
+  * Deliberate deviations from MLlib's ALS, all in service of the
   * cross-engine oracle:
-  *   - rank is FIXED at 2, so the per-key normal equation
-  *     (YᵀY + λI)x = Yᵀr has a closed 2x2 ridge form — three exact
-  *     integer sum-of-products aggregates and a Cramer solve in plain
-  *     SQL expressions, no per-row LAPACK call (MLlib uses a Cholesky
-  *     per key via NormalEquation, CAT-free but opaque to an oracle).
+  *   - rank is bounded (r ≤ 4), and every per-key normal equation
+  *     (YᵀY/Q² + λI)x = Yᵀr/Q is solved by generated pivoting-free
+  *     Gaussian-elimination projection layers over exact integer
+  *     sum-of-products aggregates, in plain SQL expressions — no per-row
+  *     LAPACK call (MLlib uses a Cholesky per key via NormalEquation,
+  *     opaque to an oracle). The nonnegative mode and SVD++ stay at
+  *     rank 2, where the closed 2x2 Cramer form is the solve.
   *   - factors are QUANTIZED to integer units (2^16 per 1.0, the k-means
   *     QuantScale recipe) after every solve: all cross-partition sums are
   *     over exact integers (bit-identical under any partitioning or
-  *     engine), and the one double expression per solve consumes exact
+  *     engine), and the double layer text of each solve consumes exact
   *     BIGINT inputs in a fixed parenthesization, so DuckDB reproduces
   *     every factor bit-for-bit. A float-summing ALS would drift at 1000
   *     executors.
   *   - init is a deterministic hash of the item id, not a seeded RNG —
   *     MLlib's XORShiftRandom stream depends on block layout; a content
   *     hash does not.
-  *   - λ is plain (not ALS-WR's rating-count-weighted λ); fine for the
-  *     fixed-rank demo and one less per-key divisor to mirror.
+  *   - λ is plain (not ALS-WR's rating-count-weighted λ); one less
+  *     per-key divisor to mirror.
   *
   * Scale shape per half-step: join ratings (u, i, r) to the other side's
-  * factor table on its key, aggregate five integer sums per solve key,
-  * solve in a projection. Ratings shuffle once per half-step on the solve
-  * key; the factor tables are (key, 2 longs) — broadcastable when one
-  * side is small (item catalogs usually are), AQE picks that up from
-  * stats. Overflow headroom: |fq| stays under ~2^25 quantized units on
-  * real rating scales, so a11-class sums clear 2^63 with thousands of
+  * factor table on its key, aggregate r(r+3)/2 integer sums per solve
+  * key, solve in a projection chain. Ratings shuffle once per half-step
+  * on the solve key; the factor tables are (key, r longs) — broadcastable
+  * when one side is small (item catalogs usually are), AQE picks that up
+  * from stats. Overflow headroom: |fq| stays under ~2^25 quantized units
+  * on real rating scales, so a11-class sums clear 2^63 with thousands of
   * ratings per key to spare.
   */
 object Recommend {
@@ -54,25 +56,8 @@ object Recommend {
     * `0.1::DOUBLE` literal in the oracle. */
   val Lambda: Double = 0.1
 
-  /** Deterministic item-factor init in quantized units: f1 in
-    * [1, 1.75] stepped by id hash (a positive "popularity" direction —
-    * every item loads on it, like the all-positive first singular
-    * direction of a ratings matrix), f2 SIGN-DIVERSE in
-    * {-0.5, -0.25, 0, 0.25, 0.5} (the differentiating direction). An
-    * earlier all-positive init put every item in a narrow cone, the
-    * first user solve encoded mostly noise along the second axis, and
-    * completion came out anti-correlated with the training blocks
-    * (RecommendSpec's held-out check caught it); signed spread gives the
-    * alternation a real second direction from round one. Engine-exact by
-    * construction — no RNG. */
-  def initItemFactors(ratings: DataFrame): DataFrame =
-    ratings.select("i").distinct().select(col("i"),
-      (lit(QuantScale) + (col("i") % 7) * lit(QuantScale / 8)).as("f1q"),
-      (((col("i") % 5) - 2) * lit(QuantScale / 4)).as("f2q"))
-
   // ---- general rank-r ALS (reference mllib/recommendation/ALS.scala:59 —
-  // `rank` is the API's FIRST parameter, default 10; the fixed rank-2
-  // Cramer solve below is its r = 2 slice). The per-key (r×r) SPD normal
+  // `rank` is the API's FIRST parameter, default 10). The per-key (r×r) SPD normal
   // equation (YᵀY/Q² + λI)x = Yᵀr/Q solves by the [[Solve]] module's
   // pivoting-free Gaussian-elimination layers — but where olsK runs the
   // layers over a 1-row moment state, here EVERY SOLVE KEY'S ROW IS ITS
@@ -84,12 +69,19 @@ object Recommend {
   // is shared verbatim with the oracle. r ≤ 4 bounds the collapsed
   // expression tree Catalyst builds from the chained projections. --------
 
-  /** Deterministic rank-`rank` item-factor init: dimension 1 is the
-    * all-positive popularity direction (f1q ∈ [Q, 1.75Q] stepped by id),
-    * dimensions ≥ 2 are sign-diverse spreads on coprime moduli — the
-    * rank = 2 slice reproduces [[initItemFactors]] value-for-value
-    * (RecommendSpec pins it). Emitted as expression text so both engines
-    * evaluate the identical integer arithmetic. */
+  /** Deterministic rank-`rank` item-factor init in quantized units:
+    * dimension 1 is the all-positive popularity direction (f1q ∈ [Q,
+    * 1.75Q] stepped by id — every item loads on it, like the
+    * all-positive first singular direction of a ratings matrix),
+    * dimensions ≥ 2 are SIGN-DIVERSE spreads on coprime moduli (at rank
+    * 2, f2q ∈ {-0.5, -0.25, 0, 0.25, 0.5}, the differentiating
+    * direction). An all-positive init put every item in a narrow cone,
+    * the first user solve encoded mostly noise along the second axis,
+    * and completion came out anti-correlated with the training blocks
+    * (RecommendSpec's held-out check caught it); signed spread gives the
+    * alternation a real second direction from round one. Emitted as
+    * expression text so both engines evaluate the identical integer
+    * arithmetic — no RNG. */
   def initFactorExprsK(rank: Int, key: String): Seq[String] = {
     require(rank >= 1 && rank <= 4, s"initFactorExprsK: rank $rank outside [1, 4]")
     val mods = Vector(5, 3, 11) // k = 2, 3, 4; coprime to the f1 stepper 7
@@ -139,6 +131,11 @@ object Recommend {
       (for { i <- 1 to rank; j <- i to rank }
         yield sum(col(s"f${i}q") * col(s"f${j}q")).as(s"a_${i}_$j")) ++
         (1 to rank).map(i => sum(col("r") * col(s"f${i}q")).as(s"b_$i"))
+    // bcastOther marks the catalog-bounded ITEM side (r21, guide §3.1):
+    // checkpointed factor generations carry no size statistics, so the
+    // planner would sort-merge-join and shuffle the ratings by item; the
+    // user-side solves keep the shuffle join (a user factor table is not
+    // broadcastable at scale)
     var st = ratings.join(if (bcastOther) broadcast(other) else other, otherKey)
       .groupBy(solveKey)
       .agg(aggs.head, aggs.tail: _*)
@@ -149,24 +146,29 @@ object Recommend {
   }
 
   /** `iters` general-rank ALS rounds (reference ALS.scala:59 `rank`,
-    * default 10 — here r ≤ 4, the generated-layer guard): [[als]]'s
-    * alternation with every solve through [[solveSideK]]. At rank = 2
-    * the elimination solve and the closed Cramer form are the same SPD
-    * system in a different (IEEE-reassociated) op order; the 2^16
-    * quantization after every solve absorbs the ulp seam, so the
-    * quantized factor STATE matches [[als]] exactly (RecommendSpec pins
-    * it per half-step on the fixture and the gate data). */
+    * default 10 — here r ≤ 4, the generated-layer guard) over a (u, i, r)
+    * ratings table with integer ratings: item-init, then per round solve
+    * users against items and items against the fresh users, every solve
+    * through [[solveSideK]]. Returns the final (users(u, f1q..frq),
+    * items(i, f1q..frq)) factor tables. */
   def alsRank(ratings: DataFrame, rank: Int, iters: Int = 2,
               lambda: Double = Lambda): (DataFrame, DataFrame) = {
     require(rank >= 1 && rank <= 4, s"alsRank: rank $rank outside [1, 4]")
     val r = ratings.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    r.count()
+    // no eager count: the init distinct populates the cache on first read.
+    // r21: the generations checkpoint LAZILY (each factor table's single
+    // consumer is the next half-step's join, which materializes it inside
+    // its own job); the INIT stays eager — its scan populates the ratings
+    // cache before the chained jobs' concurrent map stages touch it — and
+    // the final item solve is eager, materializing the whole chain
+    // (including the final users) before the unpersist. solveSideK
+    // references `other` exactly once, which is what makes the lazy chain
+    // race-free; the implicit solve references it twice (the Gramian) and
+    // keeps eager generations.
     var items = r.select("i").distinct()
       .selectExpr("i" +: initFactorExprsK(rank, "i"): _*)
       .localCheckpoint()
     var users: DataFrame = null
-    // r21: lazy generation chain (the [[als]] rationale — solveSideK
-    // references `other` exactly once); init and the final solve eager
     for (t <- 1 to iters) {
       users = solveSideK(r, items, "u", "i", rank, lambda, bcastOther = true).localCheckpoint(false)
       items = solveSideK(r, users, "i", "u", rank, lambda).localCheckpoint(t == iters)
@@ -175,12 +177,20 @@ object Recommend {
     (users, items)
   }
 
-  /** One general-rank IMPLICIT half-step (Hu/Koren/Volinsky — the
-    * reference's implicitPrefs path composed with its rank parameter):
-    * the 1-row YᵀY Gramian over the other side (r(r+1)/2 sums,
-    * broadcast — the paper's trick keeping per-key work proportional to
-    * observed ratings), per-key confidence-weighted correction sums,
-    * then a pre-layer projection a_ij := g_ij + s_ij feeding the SAME
+  /** One general-rank implicit-feedback half-step (Hu/Koren/Volinsky,
+    * ICDM'08 — reference ALS.scala's implicitPrefs path, :91
+    * `implicitPrefs` param, updateBlock's `implicitPrefs` branch,
+    * composed with its rank parameter): every observation becomes
+    * preference p = 1 with confidence c = 1 + α·r, and the normal
+    * equation is (YᵀY + Yᵀ(C−I)Y + λI)x = YᵀCp. The term the reference
+    * calls YtY — computed ONCE over the full other-side factor table and
+    * broadcast (its central scale trick: the c = 1 baseline over ALL
+    * items collapses to this 1-row Gramian of r(r+1)/2 sums, so the
+    * per-key work is proportional to OBSERVED ratings only, exactly as
+    * in the paper) — is the `g` aggregate below; the per-key correction
+    * sums carry the α·r confidence weights (exact integers for integer
+    * α·r), and b = Σ(1 + α·r)·y since p = 1 on observed pairs. A
+    * pre-layer projection a_ij := g_ij + s_ij feeds the SAME
     * [[alsSolveLayersK]] elimination chain as the explicit solve. */
   private def solveSideImplicitK(ratings: DataFrame, other: DataFrame,
                                  solveKey: String, otherKey: String,
@@ -208,10 +218,11 @@ object Recommend {
     st
   }
 
-  /** `iters` general-rank implicit-feedback ALS rounds — [[alsImplicit]]
-    * with every solve through [[solveSideImplicitK]]; at rank = 2 the
-    * quantized factor state matches [[alsImplicit]] exactly (the
-    * [[alsRank]] ulp-absorption argument, RecommendSpec-pinned). */
+  /** `iters` general-rank implicit-feedback ALS rounds over (u, i, r)
+    * with integer ratings-as-counts: the [[alsRank]] alternation, init
+    * and quantization, each half-step through [[solveSideImplicitK]]
+    * against confidences c = 1 + α·r. α stays integer so every
+    * confidence-weighted sum is exact. */
   def alsImplicitRank(ratings: DataFrame, rank: Int, iters: Int = 2,
                       alpha: Long = 40L,
                       lambda: Double = Lambda): (DataFrame, DataFrame) = {
@@ -230,39 +241,6 @@ object Recommend {
     (users, items)
   }
 
-  /** One half-step: solve every `solveKey`'s rank-2 ridge normal equation
-    * against the fixed `other`-side factors. Five exact integer sums per
-    * key, then the closed-form Cramer solve in ONE double expression per
-    * factor (fixed parenthesization — the oracle repeats it verbatim),
-    * re-quantized on the way out. */
-  private def solveSide(ratings: DataFrame, other: DataFrame,
-                        solveKey: String, otherKey: String,
-                        bcastOther: Boolean = false): DataFrame = {
-    // bcastOther marks the catalog-bounded ITEM side (r21, guide §3.1):
-    // checkpointed factor generations carry no size statistics, so the
-    // planner would sort-merge-join and shuffle the ratings by item; the
-    // user-side solves keep the shuffle join (a user factor table is not
-    // broadcastable at scale)
-    val sums = ratings.join(if (bcastOther) broadcast(other) else other, otherKey)
-      .groupBy(solveKey)
-      .agg(
-        sum(col("f1q") * col("f1q")).as("a11"),
-        sum(col("f1q") * col("f2q")).as("a12"),
-        sum(col("f2q") * col("f2q")).as("a22"),
-        sum(col("r") * col("f1q")).as("b1"),
-        sum(col("r") * col("f2q")).as("b2"))
-    val a11 = (col("a11") / lit(Q2)) + lit(Lambda)
-    val a12 = col("a12") / lit(Q2)
-    val a22 = (col("a22") / lit(Q2)) + lit(Lambda)
-    val b1 = col("b1") / lit(Q)
-    val b2 = col("b2") / lit(Q)
-    val det = (a11 * a22) - (a12 * a12)
-    def quant(x: Column): Column = round(x * lit(Q)).cast("long")
-    sums.select(col(solveKey),
-      quant(((a22 * b1) - (a12 * b2)) / det).as("f1q"),
-      quant(((a11 * b2) - (a12 * b1)) / det).as("f2q"))
-  }
-
   /** One NONNEGATIVE half-step (reference mllib/optimization/NNLS
     * .scala:65 solve — projected conjugate gradient per key, wired in
     * by recommendation/ALS.scala:85,173 setNonnegative): at rank 2 the
@@ -275,7 +253,8 @@ object Recommend {
     * evaluate both single-variable candidates x2 = 0 (x1 = max(0,
     * b1/a11)) and x1 = 0 (x2 = max(0, b2/a22)) and keep the one with
     * the lower objective ½xᵀAx − bᵀx (ties to the x2 = 0 branch).
-    * Sums, λ, quantization identical to [[als]]'s solve. */
+    * Sums, λ and quantization as in [[alsRank]] at rank 2; the
+    * unconstrained solve is the closed 2x2 Cramer form. */
   private def solveSideNonneg(ratings: DataFrame, other: DataFrame,
                               solveKey: String, otherKey: String,
                               bcastOther: Boolean = false): DataFrame = {
@@ -306,111 +285,26 @@ object Recommend {
       quant(when(interior, x2u).when(o1 <= o2, lit(0.0)).otherwise(c2)).as("f2q"))
   }
 
-  /** `iters` NONNEGATIVE ALS rounds — [[als]]'s alternation with every
+  /** `iters` NONNEGATIVE ALS rounds — [[alsRank]]'s alternation with every
     * solve through [[solveSideNonneg]], the reference's setNonnegative
     * mode: both final factor tables are elementwise ≥ 0, the
     * interpretable-parts contract (NMF) users ask the third ALS mode
-    * for. Init stays the sign-diverse [[initItemFactors]] — only SOLVED
+    * for. Init stays the sign-diverse [[initFactorExprsK]] at rank 2 — only SOLVED
     * sides are constrained (as in the reference, which clamps inside
     * each solve, not the init); after the first user half-step every
     * subsequent generation lives in the positive cone. */
   def alsNonneg(ratings: DataFrame, iters: Int = 2): (DataFrame, DataFrame) = {
     val r = ratings.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // no eager count: the init scan populates the cache (the [[als]] shape)
-    var items = initItemFactors(r).localCheckpoint()
+    // no eager count: the init scan populates the cache (the [[alsRank]] shape)
+    var items = r.select("i").distinct()
+      .selectExpr("i" +: initFactorExprsK(2, "i"): _*)
+      .localCheckpoint()
     var users: DataFrame = null
-    // r21: lazy generation chain (the [[als]] rationale — solveSideNonneg
+    // r21: lazy generation chain (the [[alsRank]] rationale — solveSideNonneg
     // references `other` exactly once); init and the final solve eager
     for (t <- 1 to iters) {
       users = solveSideNonneg(r, items, "u", "i", bcastOther = true).localCheckpoint(false)
       items = solveSideNonneg(r, users, "i", "u").localCheckpoint(t == iters)
-    }
-    r.unpersist()
-    (users, items)
-  }
-
-  /** One implicit-feedback half-step (Hu/Koren/Volinsky, ICDM'08 —
-    * reference ALS.scala's implicitPrefs path, :91 `implicitPrefs`
-    * param, updateBlock's `implicitPrefs` branch): every observation
-    * becomes preference p = 1 with confidence c = 1 + α·r, and the
-    * normal equation is (YᵀY + Yᵀ(C−I)Y + λI)x = YᵀCp. The term the
-    * reference calls YtY — computed ONCE over the full other-side
-    * factor table and broadcast (its central scale trick: the c = 1
-    * baseline over ALL items collapses to this 1-row Gramian, so the
-    * per-key work is proportional to OBSERVED ratings only, exactly as
-    * in the paper) — is the 3-sum `g` aggregate below; the per-key
-    * correction sums carry the α·r confidence weights (exact integers
-    * for integer α·r), and b = Σ(1 + α·r)·y since p = 1 on observed
-    * pairs. Solve + quantization conventions identical to [[als]]. */
-  private def solveSideImplicit(ratings: DataFrame, other: DataFrame,
-                                solveKey: String, otherKey: String,
-                                alpha: Long,
-                                bcastOther: Boolean = false): DataFrame = {
-    val g = other.agg(
-      sum(col("f1q") * col("f1q")).as("g11"),
-      sum(col("f1q") * col("f2q")).as("g12"),
-      sum(col("f2q") * col("f2q")).as("g22"))
-    val sums = ratings.join(if (bcastOther) broadcast(other) else other, otherKey)
-      .groupBy(solveKey)
-      .agg(
-        sum(lit(alpha) * col("r") * col("f1q") * col("f1q")).as("s11"),
-        sum(lit(alpha) * col("r") * col("f1q") * col("f2q")).as("s12"),
-        sum(lit(alpha) * col("r") * col("f2q") * col("f2q")).as("s22"),
-        sum((lit(1L) + (lit(alpha) * col("r"))) * col("f1q")).as("b1"),
-        sum((lit(1L) + (lit(alpha) * col("r"))) * col("f2q")).as("b2"))
-    val a11 = ((col("g11") + col("s11")) / lit(Q2)) + lit(Lambda)
-    val a12 = (col("g12") + col("s12")) / lit(Q2)
-    val a22 = ((col("g22") + col("s22")) / lit(Q2)) + lit(Lambda)
-    val b1 = col("b1") / lit(Q)
-    val b2 = col("b2") / lit(Q)
-    val det = (a11 * a22) - (a12 * a12)
-    def quant(x: Column): Column = round(x * lit(Q)).cast("long")
-    sums.crossJoin(broadcast(g)).select(col(solveKey),
-      quant(((a22 * b1) - (a12 * b2)) / det).as("f1q"),
-      quant(((a11 * b2) - (a12 * b1)) / det).as("f2q"))
-  }
-
-  /** `iters` implicit-feedback ALS rounds over (u, i, r) with integer
-    * ratings-as-counts: same alternation, init and quantization as
-    * [[als]], each half-step solving against confidences c = 1 + α·r.
-    * α stays integer so every confidence-weighted sum is exact. */
-  def alsImplicit(ratings: DataFrame, iters: Int = 2,
-                  alpha: Long = 40L): (DataFrame, DataFrame) = {
-    val r = ratings.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    r.count()
-    var items = initItemFactors(r).localCheckpoint()
-    var users: DataFrame = null
-    for (_ <- 1 to iters) {
-      users = solveSideImplicit(r, items, "u", "i", alpha, bcastOther = true).localCheckpoint()
-      items = solveSideImplicit(r, users, "i", "u", alpha).localCheckpoint()
-    }
-    r.unpersist()
-    (users, items)
-  }
-
-  /** `iters` full ALS rounds (item-init, then per round: solve users
-    * against items, solve items against the fresh users) over a
-    * (u, i, r) ratings table with integer ratings. Returns the final
-    * (users(u, f1q, f2q), items(i, f1q, f2q)) factor tables, each
-    * generation localCheckpointed so plan depth stays constant across
-    * rounds (the pregel discipline). */
-  def als(ratings: DataFrame, iters: Int = 2): (DataFrame, DataFrame) = {
-    val r = ratings.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // no eager count: the init distinct populates the cache on first read.
-    // r21: the generations checkpoint LAZILY (each factor table's single
-    // consumer is the next half-step's join, which materializes it inside
-    // its own job); the INIT stays eager — its scan populates the ratings
-    // cache before the chained jobs' concurrent map stages touch it — and
-    // the final item solve is eager, materializing the whole chain
-    // (including the final users) before the unpersist. solveSide
-    // references `other` exactly once, which is what makes the lazy chain
-    // race-free; the implicit variants reference it twice (the Gramian)
-    // and keep eager generations.
-    var items = initItemFactors(r).localCheckpoint()
-    var users: DataFrame = null
-    for (t <- 1 to iters) {
-      users = solveSide(r, items, "u", "i", bcastOther = true).localCheckpoint(false)
-      items = solveSide(r, users, "i", "u").localCheckpoint(t == iters)
     }
     r.unpersist()
     (users, items)
@@ -430,7 +324,7 @@ object Recommend {
     * hash aggregate). Same γ1/γ2/γ6/γ7 learning/decay structure, same
     * min/max rating clamp, same bias init b_v = mean(ratings at v) − μ.
     *
-    * Deliberate deviations, same rationale as [[als]]:
+    * Deliberate deviations, same rationale as [[alsRank]]:
     *   - deterministic hash init instead of `Random.nextDouble` arrays
     *     (the reference's TODO at SVDPlusPlus.scala:72 concedes the seed
     *     should be fixed);

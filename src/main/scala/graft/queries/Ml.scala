@@ -47,18 +47,15 @@ object Ml {
     // after clustering): implicit star ratings from purchase counts
     // (user = customer, item = supplier, rating = min(5, n_lineitems)),
     // two alternating rounds of exact-integer rank-2 ridge solves
-    // (graft.ext.Recommend scaladoc has the determinism argument), then
+    // (Recommend.alsRank at rank 2; the graft.ext.Recommend scaladoc has
+    // the determinism argument), then
     // the top unrated supplier for the custkey <= 300 cohort — the batch
     // scoring shape: factors train on EVERYTHING, the serving cohort is
     // bounded. Scores are exact integer dot products, so the argmax (and
     // the oracle's) cannot tie-drift.
     "s12_als_recommend" -> { (s, dir) =>
-      val ratings = Tables.lineitem(s, dir)
-        .join(Tables.orders(s, dir),
-          col("l_orderkey") === col("o_orderkey"))
-        .groupBy(col("o_custkey").as("u"), col("l_suppkey").as("i"))
-        .agg(least(lit(5L), count(lit(1))).as("r"))
-      val (users, items) = Recommend.als(ratings, iters = 2)
+      val ratings = purchaseRatings(s, dir)
+      val (users, items) = Recommend.alsRank(ratings, rank = 2, iters = 2)
       Recommend.recommendTop1(ratings, users.filter(col("u") <= 300), items)
         .orderBy("u")
     },
@@ -70,12 +67,8 @@ object Ml {
     // unrated-only serving): the same two-round ALS factors as s12,
     // then the top-3 suppliers per customer in the bounded cohort.
     "s64_recommend_for_all" -> { (s, dir) =>
-      val ratings = Tables.lineitem(s, dir)
-        .join(Tables.orders(s, dir),
-          col("l_orderkey") === col("o_orderkey"))
-        .groupBy(col("o_custkey").as("u"), col("l_suppkey").as("i"))
-        .agg(least(lit(5L), count(lit(1))).as("r"))
-      val (users, items) = Recommend.als(ratings, iters = 2)
+      val ratings = purchaseRatings(s, dir)
+      val (users, items) = Recommend.alsRank(ratings, rank = 2, iters = 2)
       Recommend.recommendTopK(users.filter(col("u") <= 300), items, k = 3)
         .orderBy("u", "rnk")
     },
@@ -83,18 +76,14 @@ object Ml {
     // Implicit-feedback ALS (reference mllib/.../recommendation/
     // ALS.scala:91 implicitPrefs + Hu/Koren/Volinsky ICDM'08): the same
     // purchase counts as s12 read as CONFIDENCES c = 1 + 40·r over
-    // binary preferences, two alternating rounds of the implicit normal
-    // equation with the 1-row broadcast YᵀY Gramian (the paper's trick:
+    // binary preferences, two alternating rounds of the rank-2 implicit
+    // normal equation with the 1-row broadcast YᵀY Gramian (the paper's trick:
     // per-key work stays proportional to observed ratings). Emits the
     // item-side factor table — exact quantized integers, every solve
     // reproduced bit-for-bit by the oracle's unrolled half-steps.
     "s47_implicit_als" -> { (s, dir) =>
-      val ratings = Tables.lineitem(s, dir)
-        .join(Tables.orders(s, dir),
-          col("l_orderkey") === col("o_orderkey"))
-        .groupBy(col("o_custkey").as("u"), col("l_suppkey").as("i"))
-        .agg(least(lit(5L), count(lit(1))).as("r"))
-      val (_, items) = Recommend.alsImplicit(ratings, iters = 2, alpha = 40L)
+      val ratings = purchaseRatings(s, dir)
+      val (_, items) = Recommend.alsImplicitRank(ratings, rank = 2, iters = 2, alpha = 40L)
       items.select("i", "f1q", "f2q").orderBy("i")
     },
 
@@ -122,38 +111,28 @@ object Ml {
     },
 
     // General-rank ALS (reference mllib/recommendation/ALS.scala:59 —
-    // `rank` is the API's FIRST parameter, default 10; s12/s47/s89 fix
-    // rank = 2 for the closed Cramer form): rank 3 over the same
+    // `rank` is the API's FIRST parameter, default 10; s12/s64/s47 run
+    // the same kernel at rank 2): rank 3 over the same
     // purchase matrix, each per-key 3×3 SPD ridge solve run as
     // Recommend.alsSolveLayersK's generated Gaussian-elimination
     // projection layers (the Solve.scala machinery applied PER KEY —
     // every row of the sums table is its own system; no per-key LAPACK,
-    // one codegen projection chain per half-step). RecommendSpec pins
-    // the rank-2 slice equal to s12's Cramer machinery half-step by
-    // half-step. Emits the item factor table, gating the full chain.
+    // one codegen projection chain per half-step). Emits the item
+    // factor table, gating the full chain.
     "s109_als_rank" -> { (s, dir) =>
-      val ratings = Tables.lineitem(s, dir)
-        .join(Tables.orders(s, dir),
-          col("l_orderkey") === col("o_orderkey"))
-        .groupBy(col("o_custkey").as("u"), col("l_suppkey").as("i"))
-        .agg(least(lit(5L), count(lit(1))).as("r"))
+      val ratings = purchaseRatings(s, dir)
       val (_, items) = Recommend.alsRank(ratings, rank = 3, iters = 2)
       items.select("i", "f1q", "f2q", "f3q").orderBy("i")
     },
 
     // General-rank IMPLICIT ALS (reference ALS.scala composes
     // implicitPrefs WITH rank — a real user's call passes both; s47
-    // fixes rank = 2, s109 generalizes the explicit mode only): rank 3
-    // over the same confidence matrix, the 1-row Gramian + per-key
-    // confidence sums feeding the SAME generated elimination layers as
-    // s109 through an a = g + s pre-layer. RecommendSpec pins the
-    // rank-2 slice equal to alsImplicit's quantized state.
+    // runs the same kernel at rank 2): rank 3 over the same confidence
+    // matrix, the 1-row Gramian + per-key confidence sums feeding the
+    // SAME generated elimination layers as s109 through an a = g + s
+    // pre-layer.
     "s114_als_implicit_rank" -> { (s, dir) =>
-      val ratings = Tables.lineitem(s, dir)
-        .join(Tables.orders(s, dir),
-          col("l_orderkey") === col("o_orderkey"))
-        .groupBy(col("o_custkey").as("u"), col("l_suppkey").as("i"))
-        .agg(least(lit(5L), count(lit(1))).as("r"))
+      val ratings = purchaseRatings(s, dir)
       val (_, items) = Recommend.alsImplicitRank(ratings, rank = 3, iters = 2)
       items.select("i", "f1q", "f2q", "f3q").orderBy("i")
     },
@@ -166,11 +145,7 @@ object Ml {
     // every phase of the chain, so the oracle's unrolled mirror gates the
     // whole training loop.
     "s13_svdpp" -> { (s, dir) =>
-      val ratings = Tables.lineitem(s, dir)
-        .join(Tables.orders(s, dir),
-          col("l_orderkey") === col("o_orderkey"))
-        .groupBy(col("o_custkey").as("u"), col("l_suppkey").as("i"))
-        .agg(least(lit(5L), count(lit(1))).as("r"))
+      val ratings = purchaseRatings(s, dir)
       val (_, items, _) = Recommend.svdpp(ratings, iters = 2)
       items.select("i", "q1q", "q2q", "y1q", "y2q", "biq").orderBy("i")
     },
@@ -1337,6 +1312,15 @@ object Ml {
     }
   )
 
+  /** Purchase ratings (u = customer, i = supplier, r = min(5,
+    * n_lineitems)) — the s12-family ALS / SVD++ input; [[ratingsCte]]
+    * is its DuckDB mirror. */
+  private def purchaseRatings(s: SparkSession, dir: String): DataFrame =
+    Tables.lineitem(s, dir)
+      .join(Tables.orders(s, dir), col("l_orderkey") === col("o_orderkey"))
+      .groupBy(col("o_custkey").as("u"), col("l_suppkey").as("i"))
+      .agg(least(lit(5L), count(lit(1))).as("r"))
+
   /** Per-order (o_orderkey, x1 = n_lineitems, qty = total quantity) —
     * the shared feature base of s19/s20/s21. */
   private def ordersBase(s: SparkSession, dir: String): DataFrame =
@@ -1384,43 +1368,41 @@ object Ml {
       expr(s"CAST(qty DIV $xDiv AS BIGINT)").as("x2"),
       expr(s"CAST(CASE WHEN qty + 5 * (o_orderkey % 13) > 130 THEN $yScale ELSE 0 END AS BIGINT)").as("yq"))
 
-  /** One unrolled ALS half-step as a CTE: solve `solveKey`'s rank-2 ridge
-    * normal equation against the `other` factor table — five exact BIGINT
-    * sums (CAST from DuckDB's HUGEINT), then the Cramer solve with every
-    * constant pinned ::DOUBLE and the exact parenthesization of
-    * graft.ext.Recommend.solveSide, re-quantized to 2^16 units. */
-  /** Implicit-ALS half-step mirror: the 1-row YᵀY Gramian over the
-    * other-side factors plus the per-key α·r confidence sums, the same
-    * Cramer parenthesization as [[alsSolveCte]] with A = (G + S)/Q². */
-  private def alsImplicitSolveCte(out: String, other: String,
-                                  solveKey: String, otherKey: String,
-                                  alpha: Long): String = {
-    def a(gs: String) = s"((($gs) / 4294967296.0::DOUBLE) + 0.1::DOUBLE)"
-    val (a11, a22) = (a("g11 + s11"), a("g22 + s22"))
-    val a12 = "((g12 + s12) / 4294967296.0::DOUBLE)"
-    val det = s"(($a11 * $a22) - ($a12 * $a12))"
-    s"""g_$out AS (SELECT
-       |    CAST(sum(f1q * f1q) AS BIGINT) AS g11,
-       |    CAST(sum(f1q * f2q) AS BIGINT) AS g12,
-       |    CAST(sum(f2q * f2q) AS BIGINT) AS g22
-       |  FROM $other),
-       |$out AS MATERIALIZED (
-       |  SELECT $solveKey,
-       |    CAST(round(((($a22 * (b1 / 65536.0::DOUBLE)) - ($a12 * (b2 / 65536.0::DOUBLE))) / $det) * 65536.0::DOUBLE) AS BIGINT) AS f1q,
-       |    CAST(round(((($a11 * (b2 / 65536.0::DOUBLE)) - ($a12 * (b1 / 65536.0::DOUBLE))) / $det) * 65536.0::DOUBLE) AS BIGINT) AS f2q
-       |  FROM (
-       |    SELECT r.$solveKey,
-       |      CAST(sum($alpha * r.r * o.f1q * o.f1q) AS BIGINT) AS s11,
-       |      CAST(sum($alpha * r.r * o.f1q * o.f2q) AS BIGINT) AS s12,
-       |      CAST(sum($alpha * r.r * o.f2q * o.f2q) AS BIGINT) AS s22,
-       |      CAST(sum((1 + ($alpha * r.r)) * o.f1q) AS BIGINT) AS b1,
-       |      CAST(sum((1 + ($alpha * r.r)) * o.f2q) AS BIGINT) AS b2
-       |    FROM ratings r JOIN $other o ON o.$otherKey = r.$otherKey
-       |    GROUP BY r.$solveKey) CROSS JOIN g_$out)""".stripMargin
-  }
+  /** DuckDB mirror of [[purchaseRatings]]. */
+  private val ratingsCte =
+    """ratings AS MATERIALIZED (
+      |  SELECT o.o_custkey AS u, l.l_suppkey AS i,
+      |         least(5, count(*))::BIGINT AS r
+      |  FROM lineitem l JOIN orders o ON l.l_orderkey = o.o_orderkey
+      |  GROUP BY 1, 2)""".stripMargin
 
-  /** Nonnegative half-step mirror: the same five sums and Cramer
-    * doubles as [[alsSolveCte]], then Recommend.solveSideNonneg's
+  /** The s89 planted nonnegative rank-2 ratings over the observed
+    * purchase pairs. */
+  private val plantedRatingsCte =
+    """ratings AS MATERIALIZED (
+      |  SELECT u, i,
+      |    CAST((1 + u % 3) * (1 + i % 4) + (u % 2) * (i % 3) AS BIGINT) AS r
+      |  FROM (SELECT DISTINCT o.o_custkey AS u, l.l_suppkey AS i
+      |        FROM lineitem l JOIN orders o ON l.l_orderkey = o.o_orderkey))""".stripMargin
+
+  /** The unrolled ALS fit shared by every ALS oracle: the `ratings` CTE,
+    * the rank-`rank` item init (Recommend.initFactorExprsK) and four
+    * half-steps through `solve` (out, other, solveKey, otherKey), ending
+    * at users x2 and items y2. */
+  private def alsChainCtes(ratings: String, rank: Int,
+                           solve: (String, String, String, String) => String): String =
+    s"""$ratings,
+       |y0 AS MATERIALIZED (
+       |  SELECT i, ${graft.ext.Recommend.initFactorExprsK(rank, "i").mkString(",\n    ")}
+       |  FROM (SELECT DISTINCT i FROM ratings)),
+       |${solve("x1", "y0", "u", "i")},
+       |${solve("y1", "x1", "i", "u")},
+       |${solve("x2", "y1", "u", "i")},
+       |${solve("y2", "x2", "i", "u")}""".stripMargin
+
+  /** Nonnegative half-step mirror: five exact BIGINT sums (CAST from
+    * DuckDB's HUGEINT), the closed 2x2 Cramer doubles with every constant
+    * pinned ::DOUBLE, then Recommend.solveSideNonneg's
     * rank-2 NNLS enumeration CASE verbatim (interior solve if
     * nonnegative, else the lower-objective boundary candidate). */
   private def alsNonnegSolveCte(out: String, other: String,
@@ -1499,24 +1481,6 @@ object Ml {
         q = s"SELECT $solveKey, ${layer.mkString(",\n      ")}\n    FROM ($q)"
       }
     s"g_$out AS (SELECT $gSel FROM $other),\n$out AS MATERIALIZED (\n  $q)"
-  }
-
-  private def alsSolveCte(out: String, other: String,
-                          solveKey: String, otherKey: String): String = {
-    val det = "((((a11 / 4294967296.0::DOUBLE) + 0.1::DOUBLE) * ((a22 / 4294967296.0::DOUBLE) + 0.1::DOUBLE)) - ((a12 / 4294967296.0::DOUBLE) * (a12 / 4294967296.0::DOUBLE)))"
-    s"""$out AS MATERIALIZED (
-       |  SELECT $solveKey,
-       |    CAST(round(((((a22 / 4294967296.0::DOUBLE) + 0.1::DOUBLE) * (b1 / 65536.0::DOUBLE) - (a12 / 4294967296.0::DOUBLE) * (b2 / 65536.0::DOUBLE)) / $det) * 65536.0::DOUBLE) AS BIGINT) AS f1q,
-       |    CAST(round(((((a11 / 4294967296.0::DOUBLE) + 0.1::DOUBLE) * (b2 / 65536.0::DOUBLE) - (a12 / 4294967296.0::DOUBLE) * (b1 / 65536.0::DOUBLE)) / $det) * 65536.0::DOUBLE) AS BIGINT) AS f2q
-       |  FROM (
-       |    SELECT r.$solveKey,
-       |      CAST(sum(o.f1q * o.f1q) AS BIGINT) AS a11,
-       |      CAST(sum(o.f1q * o.f2q) AS BIGINT) AS a12,
-       |      CAST(sum(o.f2q * o.f2q) AS BIGINT) AS a22,
-       |      CAST(sum(r.r * o.f1q) AS BIGINT) AS b1,
-       |      CAST(sum(r.r * o.f2q) AS BIGINT) AS b2
-       |    FROM ratings r JOIN $other o ON o.$otherKey = r.$otherKey
-       |    GROUP BY r.$solveKey))""".stripMargin
   }
 
   /** SVD++ mirror pieces: the quantized update form (exact
@@ -3745,11 +3709,7 @@ object Ml {
     // exact-integer sums everywhere, the one double expression per update
     // repeated with Recommend.svdpp's parenthesization.
     "s13_svdpp" ->
-      s"""WITH ratings AS MATERIALIZED (
-         |  SELECT o.o_custkey AS u, l.l_suppkey AS i,
-         |         least(5, count(*))::BIGINT AS r
-         |  FROM lineitem l JOIN orders o ON l.l_orderkey = o.o_orderkey
-         |  GROUP BY 1, 2),
+      s"""WITH $ratingsCte,
          |m AS (SELECT CAST(sum(r) AS BIGINT)::DOUBLE / count(*) AS mu FROM ratings),
          |u0 AS MATERIALIZED (
          |  SELECT u,
@@ -3774,23 +3734,11 @@ object Ml {
          |SELECT i, q1q, q2q, y1q, y2q, biq FROM i2 ORDER BY i""".stripMargin,
 
     // The full ALS chain unrolled: ratings -> deterministic item init ->
-    // user/item/user/item solves -> exact-integer scoring of the cohort's
+    // user/item/user/item solves (the shared rank-2 layer text) ->
+    // exact-integer scoring of the cohort's
     // unrated pairs -> per-user argmax (score DESC, item ASC).
     "s12_als_recommend" ->
-      s"""WITH ratings AS MATERIALIZED (
-         |  SELECT o.o_custkey AS u, l.l_suppkey AS i,
-         |         least(5, count(*))::BIGINT AS r
-         |  FROM lineitem l JOIN orders o ON l.l_orderkey = o.o_orderkey
-         |  GROUP BY 1, 2),
-         |y0 AS MATERIALIZED (
-         |  SELECT DISTINCT i,
-         |    (65536 + (i % 7) * 8192)::BIGINT AS f1q,
-         |    (((i % 5) - 2) * 16384)::BIGINT AS f2q
-         |  FROM ratings),
-         |${alsSolveCte("x1", "y0", "u", "i")},
-         |${alsSolveCte("y1", "x1", "i", "u")},
-         |${alsSolveCte("x2", "y1", "u", "i")},
-         |${alsSolveCte("y2", "x2", "i", "u")},
+      s"""WITH ${alsChainCtes(ratingsCte, 2, alsSolveCteK(_, _, _, _, 2))},
          |cand AS (
          |  SELECT x.u, y.i,
          |    CAST(x.f1q * y.f1q + x.f2q * y.f2q AS BIGINT) AS score_q
@@ -3806,20 +3754,7 @@ object Ml {
     // per cohort user (no rated-pair exclusion — the recommendProducts
     // contract), top-3 per user.
     "s64_recommend_for_all" ->
-      s"""WITH ratings AS MATERIALIZED (
-         |  SELECT o.o_custkey AS u, l.l_suppkey AS i,
-         |         least(5, count(*))::BIGINT AS r
-         |  FROM lineitem l JOIN orders o ON l.l_orderkey = o.o_orderkey
-         |  GROUP BY 1, 2),
-         |y0 AS MATERIALIZED (
-         |  SELECT DISTINCT i,
-         |    (65536 + (i % 7) * 8192)::BIGINT AS f1q,
-         |    (((i % 5) - 2) * 16384)::BIGINT AS f2q
-         |  FROM ratings),
-         |${alsSolveCte("x1", "y0", "u", "i")},
-         |${alsSolveCte("y1", "x1", "i", "u")},
-         |${alsSolveCte("x2", "y1", "u", "i")},
-         |${alsSolveCte("y2", "x2", "i", "u")},
+      s"""WITH ${alsChainCtes(ratingsCte, 2, alsSolveCteK(_, _, _, _, 2))},
          |cand AS (
          |  SELECT x.u, y.i,
          |    CAST(x.f1q * y.f1q + x.f2q * y.f2q AS BIGINT) AS score_q
@@ -3835,74 +3770,27 @@ object Ml {
     // ratings: each step the shared five sums, the Cramer doubles, and
     // the rank-2 NNLS enumeration CASE verbatim.
     "s89_nonneg_als" ->
-      s"""WITH ratings AS MATERIALIZED (
-         |  SELECT u, i,
-         |    CAST((1 + u % 3) * (1 + i % 4) + (u % 2) * (i % 3) AS BIGINT) AS r
-         |  FROM (SELECT DISTINCT o.o_custkey AS u, l.l_suppkey AS i
-         |        FROM lineitem l JOIN orders o ON l.l_orderkey = o.o_orderkey)),
-         |y0 AS MATERIALIZED (
-         |  SELECT DISTINCT i,
-         |    (65536 + (i % 7) * 8192)::BIGINT AS f1q,
-         |    (((i % 5) - 2) * 16384)::BIGINT AS f2q
-         |  FROM ratings),
-         |${alsNonnegSolveCte("x1", "y0", "u", "i")},
-         |${alsNonnegSolveCte("y1", "x1", "i", "u")},
-         |${alsNonnegSolveCte("x2", "y1", "u", "i")},
-         |${alsNonnegSolveCte("y2", "x2", "i", "u")}
+      s"""WITH ${alsChainCtes(plantedRatingsCte, 2, alsNonnegSolveCte)}
          |SELECT i, f1q, f2q FROM y2 ORDER BY i""".stripMargin,
 
     // Four unrolled rank-3 IMPLICIT half-steps: per step a fresh 1-row
     // Gramian, the confidence sums, and the shared layer text.
     "s114_als_implicit_rank" ->
-      s"""WITH ratings AS MATERIALIZED (
-         |  SELECT o.o_custkey AS u, l.l_suppkey AS i,
-         |         least(5, count(*))::BIGINT AS r
-         |  FROM lineitem l JOIN orders o ON l.l_orderkey = o.o_orderkey
-         |  GROUP BY 1, 2),
-         |y0 AS MATERIALIZED (
-         |  SELECT i, ${graft.ext.Recommend.initFactorExprsK(3, "i").mkString(",\n    ")}
-         |  FROM (SELECT DISTINCT i FROM ratings)),
-         |${alsImplicitSolveCteK("x1", "y0", "u", "i", 3, 40L)},
-         |${alsImplicitSolveCteK("y1", "x1", "i", "u", 3, 40L)},
-         |${alsImplicitSolveCteK("x2", "y1", "u", "i", 3, 40L)},
-         |${alsImplicitSolveCteK("y2", "x2", "i", "u", 3, 40L)}
+      s"""WITH ${alsChainCtes(ratingsCte, 3, alsImplicitSolveCteK(_, _, _, _, 3, 40L))}
          |SELECT i, f1q, f2q, f3q FROM y2 ORDER BY i""".stripMargin,
 
     // Four unrolled rank-3 half-steps, each the shared generated
     // init → elimination → back-substitution → quantize layer text
     // evaluated per solve key.
     "s109_als_rank" ->
-      s"""WITH ratings AS MATERIALIZED (
-         |  SELECT o.o_custkey AS u, l.l_suppkey AS i,
-         |         least(5, count(*))::BIGINT AS r
-         |  FROM lineitem l JOIN orders o ON l.l_orderkey = o.o_orderkey
-         |  GROUP BY 1, 2),
-         |y0 AS MATERIALIZED (
-         |  SELECT i, ${graft.ext.Recommend.initFactorExprsK(3, "i").mkString(",\n    ")}
-         |  FROM (SELECT DISTINCT i FROM ratings)),
-         |${alsSolveCteK("x1", "y0", "u", "i", 3)},
-         |${alsSolveCteK("y1", "x1", "i", "u", 3)},
-         |${alsSolveCteK("x2", "y1", "u", "i", 3)},
-         |${alsSolveCteK("y2", "x2", "i", "u", 3)}
+      s"""WITH ${alsChainCtes(ratingsCte, 3, alsSolveCteK(_, _, _, _, 3))}
          |SELECT i, f1q, f2q, f3q FROM y2 ORDER BY i""".stripMargin,
 
-    // Four unrolled implicit half-steps: per step a fresh 1-row YᵀY
-    // Gramian over the other side plus the per-key confidence sums.
+    // Four unrolled rank-2 implicit half-steps: per step a fresh 1-row
+    // YᵀY Gramian over the other side, the per-key confidence sums, and
+    // the shared layer text.
     "s47_implicit_als" ->
-      s"""WITH ratings AS MATERIALIZED (
-         |  SELECT o.o_custkey AS u, l.l_suppkey AS i,
-         |         least(5, count(*))::BIGINT AS r
-         |  FROM lineitem l JOIN orders o ON l.l_orderkey = o.o_orderkey
-         |  GROUP BY 1, 2),
-         |y0 AS MATERIALIZED (
-         |  SELECT DISTINCT i,
-         |    (65536 + (i % 7) * 8192)::BIGINT AS f1q,
-         |    (((i % 5) - 2) * 16384)::BIGINT AS f2q
-         |  FROM ratings),
-         |${alsImplicitSolveCte("x1", "y0", "u", "i", 40L)},
-         |${alsImplicitSolveCte("y1", "x1", "i", "u", 40L)},
-         |${alsImplicitSolveCte("x2", "y1", "u", "i", 40L)},
-         |${alsImplicitSolveCte("y2", "x2", "i", "u", 40L)}
+      s"""WITH ${alsChainCtes(ratingsCte, 2, alsImplicitSolveCteK(_, _, _, _, 2, 40L))}
          |SELECT i, f1q, f2q FROM y2 ORDER BY i""".stripMargin,
     // Unrolls the same pipeline: train-slice df counts -> smoothed
     // reciprocal idf -> whole-corpus tf -> rescale -> L2 -> argmax (first

@@ -181,12 +181,12 @@ object MlEval {
 
     // Two-topic PLSA (reference mllib/clustering/LDA.scala:46 via the
     // EMLDAOptimizer path, LDAOptimizer.scala:79/:150 — deviations
-    // declared in Clustering.plsaTopics' scaladoc): two integer-exact EM
+    // declared at Clustering.plsaTopicsK): two integer-exact EM
     // iterations over the document-term counts, parity-seeded mixtures;
     // top-8 words per topic with their micro emission weights.
     "s38_plsa_topics" -> { (s, dir) =>
-      graft.ext.Clustering.plsaTopics(Tables.documents(s, dir),
-          "doc_id", "text", iters = 2, topK = 8)
+      graft.ext.Clustering.plsaTopicsK(Tables.documents(s, dir),
+          "doc_id", "text", kTot = 2, iters = 2, topK = 8)
         .orderBy("topic", "rnk")
     },
 
@@ -194,26 +194,27 @@ object MlEval {
     // computePTopic + LDAOptimizer.scala:150 next — the reference's
     // ACTUAL Dirichlet-smoothed EM with its default priors α = 26,
     // η = 1.1, closing s38's declared no-smoothing deviation; remaining
-    // deviations in Clustering.ldaTopics' scaladoc): two iterations over
-    // the document-term counts, expected-count state in exact micro
-    // integers, the E-step ratio one shared double formula string.
+    // deviations declared at Clustering.ldaTopicsK): two topics, two
+    // iterations over the document-term counts, expected-count state in
+    // exact micro integers, the E-step ratio one shared double formula
+    // string.
     "s46_lda_topics" -> { (s, dir) =>
-      graft.ext.Clustering.ldaTopics(Tables.documents(s, dir),
-          "doc_id", "text", iters = 2, topK = 8)
+      graft.ext.Clustering.ldaTopicsK(Tables.documents(s, dir),
+          "doc_id", "text", kTot = 2, iters = 2, topK = 8)
         .orderBy("topic", "rnk")
     },
 
     // ONLINE variational LDA (reference LDAOptimizer.scala:231
     // OnlineLDAOptimizer / :538 variationalTopicInference / :467
     // updateLambda — the second registered optimizer, closing the
-    // s38/s46 EM-only coverage; deviations declared in
-    // Clustering.onlineLdaTopics' scaladoc): two minibatch iterations
+    // s38/s46 EM-only coverage; deviations declared at
+    // Clustering.onlineLdaTopicsK): two topics, two minibatch iterations
     // over disjoint hash-residue quarters of the corpus, one quantized
     // γ update per doc, sufficient statistics blended into λ at
     // ρ_t = (1024 + t)^−0.51. Top-8 terms per topic by λ.
     "s75_online_lda" -> { (s, dir) =>
-      graft.ext.Clustering.onlineLdaTopics(Tables.documents(s, dir),
-          "doc_id", "text", iters = 2, topK = 8)
+      graft.ext.Clustering.onlineLdaTopicsK(Tables.documents(s, dir),
+          "doc_id", "text", kTot = 2, iters = 2, topK = 8)
         .orderBy("topic", "rnk")
     },
 
@@ -233,23 +234,22 @@ object MlEval {
     // Word2vec skip-gram thin-slice (reference mllib/feature/
     // Word2Vec.scala:41 — minCount-pruned vocabulary :139, ±window
     // center/context pairs :320, sigmoid gradient steps :340; the
-    // negative-sampling objective and the other declared deviations in
-    // Learn.word2vec's scaladoc): top-30 vocabulary over documents, one
-    // full-batch quantized step, the joined in/out vectors for the 20
-    // most frequent tokens.
+    // negative-sampling objective and the other deviations declared at
+    // Learn.word2vecD): 2-d vectors over a top-30 vocabulary of the
+    // documents, one full-batch quantized step, the joined in/out
+    // vectors for the 20 most frequent tokens.
     "s48_word2vec" -> { (s, dir) =>
-      graft.ext.Learn.word2vec(Tables.documents(s, dir), "doc_id", "text",
-          vocabN = 30, window = 2, lr = 0.025, topK = 20)
+      graft.ext.Learn.word2vecD(Tables.documents(s, dir), "doc_id", "text",
+          vocabN = 30, window = 2, lr = 0.025, topK = 20, dims = 2)
         .orderBy("rnk")
     },
 
     // General-dimension word2vec (reference mllib/feature/Word2Vec
     // .scala:41 — vectorSize is the model's headline parameter, default
-    // 100; s48 fixes 2): the same skip-gram negative-sampling chain at
-    // dims = 3, component loops generated, dims = 2 slice byte-identical
-    // to s48's machinery (LearnSpec pins the fitted vectors). The
-    // hierarchical-softmax deviation stays declared; this row closes
-    // the vector-dimension axis.
+    // 100; s48 runs the same kernel at 2): the same skip-gram
+    // negative-sampling chain at dims = 3, component loops generated.
+    // The hierarchical-softmax deviation stays declared; this row
+    // closes the vector-dimension axis.
     "s113_word2vec_dim" -> { (s, dir) =>
       graft.ext.Learn.word2vecD(Tables.documents(s, dir), "doc_id", "text",
           vocabN = 30, window = 2, lr = 0.025, topK = 20, dims = 3)
@@ -289,7 +289,6 @@ object MlEval {
     // topic scaffolding): three topics, per-topic column loops over the
     // same ratio/fraction/blend strings (no complement — the
     // reference's λ stores all K rows, and so does this state).
-    // LdaKSpec pins the K = 2 slice equal to onlineLdaTopics.
     "s117_online_lda_k3" -> { (s, dir) =>
       graft.ext.Clustering.onlineLdaTopicsK(Tables.documents(s, dir),
           "doc_id", "text", kTot = 3, iters = 2, topK = 8)
@@ -299,9 +298,7 @@ object MlEval {
     // K-topic PLSA EM (reference LDA.scala's k parameter applied to
     // s38's declared PLSA model class — the alpha = eta -> 1 limit;
     // K-1 stored mixtures, complement sum columns, integer-only
-    // E-step whose K = 2 instantiation is value-identical to
-    // plsaRespExpr). LdaKSpec pins plsaTopicsK(2) equal to the legacy
-    // plsaTopics output; s38 untouched.
+    // E-step; s38 runs the same kernel at K = 2).
     "s115_plsa_k3" -> { (s, dir) =>
       graft.ext.Clustering.plsaTopicsK(Tables.documents(s, dir),
           "doc_id", "text", kTot = 3, iters = 2, topK = 8)
@@ -313,8 +310,7 @@ object MlEval {
     // fixed K = 2): three topics over the documents corpus, topic 3
     // the exact complement, responsibility the generated K-fold ratio
     // with the reference's K-dependent prior α = 50/K + 1 as a shared
-    // double literal. LdaKSpec pins ldaTopicsK(2) equal to the legacy
-    // ldaTopics output; s46/s38/s75/s82 are untouched.
+    // double literal (s46 runs the same kernel at K = 2).
     "s111_lda_k3" -> { (s, dir) =>
       graft.ext.Clustering.ldaTopicsK(Tables.documents(s, dir),
           "doc_id", "text", kTot = 3, iters = 2, topK = 8)
@@ -338,9 +334,8 @@ object MlEval {
     // Joint (d, K) Gaussian mixture — 2-D, THREE components, full
     // covariance each (reference mllib/clustering/GaussianMixture
     // .scala:161 run: the reference model is d-dimensional AND
-    // K-component at once; s96/s101 hold the axes separately and
-    // GmmKd.gmmFitKd generates both jointly — GmmKdSpec pins the
-    // (2, 2) and (1, 3) slices equal to the legacy fitted output).
+    // K-component at once; s101 runs the same kernel at (1, 3), and
+    // GmmKdSpec pins the (2, 2) slice equal to s96's gmmFit2d output).
     // Three EM iterations over the same correlated (quantity,
     // price) pair as s96, now with a middle component to absorb the
     // mid-price mass; all three covariances carried in full.
@@ -356,13 +351,13 @@ object MlEval {
     // component — closes both of s35's declared thin-slice deviations,
     // k = 2 and the pooled variance; softmax responsibilities
     // max-shifted, third component by exact complement; init from the
-    // half-mean three-region split, conventions in gmmFit1dK3's scaladoc):
+    // half-mean three-region split, conventions in GmmKd's scaladoc):
     // three EM iterations over the same thousand-dollar order buckets
     // as s35, so the two gated rows differ exactly by the model class.
     "s101_gmm_k3" -> { (s, dir) =>
       val xs = Tables.orders(s, dir)
         .selectExpr("CAST(CAST(round(o_totalprice) AS BIGINT) DIV 1000 AS BIGINT) AS x")
-      graft.ext.Clustering.gmmFit1dK3(xs, iters = 3).orderBy("comp")
+      graft.ext.GmmKd.gmmFitKd(xs, d = 1, kTot = 3, iters = 3).orderBy("comp")
     },
 
     // Chi-squared feature selection (reference mllib/feature/
@@ -424,29 +419,9 @@ object MlEval {
       .selectExpr("o_orderkey", "x1", "CAST(qty DIV 10 AS BIGINT) AS x2",
         "CAST(qty + 5 * (o_orderkey % 13) AS BIGINT) AS y")
 
-  /** One online-LDA responsibility stage: cells ⋈ γ ⋈ expElogbeta,
-    * emitting (did, tok, c, pn, f1, f2) from the shared ratio/fraction
-    * strings (`//` for DIV — non-negative operands). */
-  private def oldaScoreCte(name: String, cellsTab: String, gTab: String,
-                           ebTab: String): String = {
-    import graft.ext.Clustering
-    s"""$name AS (SELECT did, tok, c, pn,
-       |    ${Clustering.oldaFracExpr("et1", "eb1", "pn", "//")} AS f1,
-       |    ${Clustering.oldaFracExpr("et2", "eb2", "pn", "//")} AS f2
-       |  FROM (SELECT did, tok, c, et1, et2, eb1, eb2,
-       |      (et1 * eb1) + (et2 * eb2) AS pn
-       |    FROM (SELECT b.did, b.tok, b.c,
-       |        ${Clustering.oldaRatioExpr("g1", "(g1 + g2)", "//")} AS et1,
-       |        ${Clustering.oldaRatioExpr("g2", "(g1 + g2)", "//")} AS et2,
-       |        e.eb1, e.eb2
-       |      FROM $cellsTab b JOIN $gTab USING (did) JOIN $ebTab e USING (tok))))""".stripMargin
-  }
-
-  /** The s75 online-LDA fitting chain: corpus counts, parity λ seed,
-    * two unrolled minibatch iterations ending at `lam2`. Shared by the
-    * s75 and s82 oracles. */
-  /** [[oldaScoreCte]] at K topics — same ratio/fraction strings, loop
-    * columns. */
+  /** One online-LDA responsibility stage at K topics: cells ⋈ γ ⋈
+    * expElogbeta, emitting (did, tok, c, pn, f1..fK) from the shared
+    * ratio/fraction strings (`//` for DIV — non-negative operands). */
   private def oldaScoreCteK(name: String, cellsTab: String, gTab: String,
                             ebTab: String, kTot: Int): String = {
     import graft.ext.Clustering
@@ -463,27 +438,45 @@ object MlEval {
        |      FROM $cellsTab b JOIN $gTab USING (did) JOIN $ebTab e USING (tok))))""".stripMargin
   }
 
-  /** The s117 K-topic online chain: [[oldaChainCtes]] with per-topic
-    * column loops over the same seed/ratio/blend strings. */
+  /** expElogbeta CTEs over the λ table `lam`: its column sums ls`t` and
+    * the ratio rows eb`t`. */
+  private def oldaEbCtes(t: String, lam: String, kTot: Int): String = {
+    import graft.ext.Clustering
+    val ks = 1 to kTot
+    s"""ls$t AS (SELECT ${ks.map(k => s"CAST(sum(l$k) AS BIGINT) AS ls$k").mkString(", ")}
+       |  FROM $lam),
+       |eb$t AS MATERIALIZED (SELECT tok,
+       |    ${ks.map(k => s"${Clustering.oldaRatioExpr(s"l$k", s"ls$k", "//")} AS eb$k").mkString(",\n    ")}
+       |  FROM $lam CROSS JOIN ls$t)""".stripMargin
+  }
+
+  /** Per-doc variational inference over the cells table `cells` against
+    * eb`t`: the seeded γ (gz`t`), one γ update (sa`t` → gu`t`), and the
+    * re-score under the updated γ (sb`t`). */
+  private def oldaGammaCtes(t: String, cells: String, kTot: Int): String = {
+    import graft.ext.Clustering
+    val ks = 1 to kTot
+    s"""gz$t AS (SELECT did, ${Clustering.oldaGammaInitExprsK(kTot).mkString(",\n    ")}
+       |  FROM (SELECT DISTINCT did FROM $cells)),
+       |${oldaScoreCteK(s"sa$t", cells, s"gz$t", s"eb$t", kTot)},
+       |gu$t AS MATERIALIZED (SELECT did,
+       |    ${ks.map(k => s"CAST(500000 + sum(c * f$k) AS BIGINT) AS g$k").mkString(",\n    ")}
+       |  FROM sa$t GROUP BY 1),
+       |${oldaScoreCteK(s"sb$t", cells, s"gu$t", s"eb$t", kTot)}""".stripMargin
+  }
+
+  /** The online-LDA fitting chain at K topics: corpus counts, the λ
+    * seed, two unrolled minibatch iterations ending at `lam2`. Shared
+    * by the s75, s82 and s117 oracles. */
   private def oldaChainCtesK(kTot: Int): String = {
     import graft.ext.Clustering
     val ks = 1 to kTot
     val tokHash = "CAST('0x' || substr(md5('olda:' || tok), 1, 15) AS BIGINT)"
     val didHash = "CAST('0x' || substr(md5('oldab:' || CAST(did AS VARCHAR)), 1, 15) AS BIGINT)"
     val iters = (1 to 2).map { t =>
-      s"""ls$t AS (SELECT ${ks.map(k => s"CAST(sum(l$k) AS BIGINT) AS ls$k").mkString(", ")}
-         |  FROM lam${t - 1}),
-         |eb$t AS MATERIALIZED (SELECT tok,
-         |    ${ks.map(k => s"${Clustering.oldaRatioExpr(s"l$k", s"ls$k", "//")} AS eb$k").mkString(",\n    ")}
-         |  FROM lam${t - 1} CROSS JOIN ls$t),
+      s"""${oldaEbCtes(t.toString, s"lam${t - 1}", kTot)},
          |bc$t AS MATERIALIZED (SELECT * FROM counts WHERE $didHash % 4 = ${(t - 1) % 4}),
-         |gz$t AS (SELECT did, ${Clustering.oldaGammaInitExprsK(kTot).mkString(",\n    ")}
-         |  FROM (SELECT DISTINCT did FROM bc$t)),
-         |${oldaScoreCteK(s"sa$t", s"bc$t", s"gz$t", s"eb$t", kTot)},
-         |gu$t AS MATERIALIZED (SELECT did,
-         |    ${ks.map(k => s"CAST(500000 + sum(c * f$k) AS BIGINT) AS g$k").mkString(",\n    ")}
-         |  FROM sa$t GROUP BY 1),
-         |${oldaScoreCteK(s"sb$t", s"bc$t", s"gu$t", s"eb$t", kTot)},
+         |${oldaGammaCtes(t.toString, s"bc$t", kTot)},
          |br$t AS MATERIALIZED (SELECT tok, ${ks.map(k => s"CAST(sum(c * f$k) AS BIGINT) AS br$k").mkString(", ")}
          |  FROM sb$t GROUP BY 1),
          |bs$t AS (SELECT CAST(count(DISTINCT did) AS BIGINT) AS ss FROM bc$t),
@@ -504,48 +497,171 @@ object MlEval {
        |$iters""".stripMargin
   }
 
-  private def oldaChainCtes: String = {
+  /** Mirror of Clustering.onlineLdaTopicsK: the [[oldaChainCtesK]] fit,
+    * then the top-8 terms per topic by λ. */
+  private def oldaTopicsOracleSql(kTot: Int): String =
+    s"""WITH ${oldaChainCtesK(kTot)}
+       |SELECT topic, CAST(rn AS BIGINT) AS rnk, tok, lambda_micro FROM (
+       |  SELECT topic, tok, lambda_micro,
+       |    row_number() OVER (PARTITION BY topic ORDER BY lambda_micro DESC, tok) AS rn
+       |  FROM (${(1 to kTot).map(k =>
+             s"SELECT ${if (k == 1) "1::BIGINT AS topic, tok, l1 AS lambda_micro"
+             else s"$k::BIGINT, tok, l$k"} FROM lam2").mkString("\n        UNION ALL ")}))
+       |WHERE rn <= 8 ORDER BY topic, rnk""".stripMargin
+
+  /** Mirror of Clustering.plsaTopicsK: two unrolled EM iterations with
+    * K−1 stored mixture columns and the generated K-fold integer
+    * responsibility (DIV → // on the all-non-negative operands;
+    * complement sum columns keep every total exact), then the per-topic
+    * emission ranking. */
+  private def plsaOracleSql(kTot: Int): String = {
     import graft.ext.Clustering
-    val tokHash = "CAST('0x' || substr(md5('olda:' || tok), 1, 15) AS BIGINT)"
-    val didHash = "CAST('0x' || substr(md5('oldab:' || CAST(did AS VARCHAR)), 1, 15) AS BIGINT)"
-    val iters = (1 to 2).map { t =>
-      s"""ls$t AS (SELECT CAST(sum(l1) AS BIGINT) AS ls1, CAST(sum(l2) AS BIGINT) AS ls2
-         |  FROM lam${t - 1}),
-         |eb$t AS MATERIALIZED (SELECT tok,
-         |    ${Clustering.oldaRatioExpr("l1", "ls1", "//")} AS eb1,
-         |    ${Clustering.oldaRatioExpr("l2", "ls2", "//")} AS eb2
-         |  FROM lam${t - 1} CROSS JOIN ls$t),
-         |bc$t AS MATERIALIZED (SELECT * FROM counts WHERE $didHash % 4 = ${(t - 1) % 4}),
-         |gz$t AS (SELECT did, CAST(750000 + (did % 2) * 500000 AS BIGINT) AS g1,
-         |    CAST(1750000 - (did % 2) * 500000 AS BIGINT) AS g2
-         |  FROM (SELECT DISTINCT did FROM bc$t)),
-         |${oldaScoreCte(s"sa$t", s"bc$t", s"gz$t", s"eb$t")},
-         |gu$t AS MATERIALIZED (SELECT did,
-         |    CAST(500000 + sum(c * f1) AS BIGINT) AS g1,
-         |    CAST(500000 + sum(c * f2) AS BIGINT) AS g2
-         |  FROM sa$t GROUP BY 1),
-         |${oldaScoreCte(s"sb$t", s"bc$t", s"gu$t", s"eb$t")},
-         |br$t AS MATERIALIZED (SELECT tok, CAST(sum(c * f1) AS BIGINT) AS br1,
-         |    CAST(sum(c * f2) AS BIGINT) AS br2 FROM sb$t GROUP BY 1),
-         |bs$t AS (SELECT CAST(count(DISTINCT did) AS BIGINT) AS ss FROM bc$t),
-         |lam$t AS MATERIALIZED (SELECT tok,
-         |    ${Clustering.oldaLambdaUpdExpr("l1", "br1", Clustering.oldaRho(t))} AS l1,
-         |    ${Clustering.oldaLambdaUpdExpr("l2", "br2", Clustering.oldaRho(t))} AS l2
-         |  FROM (SELECT l.tok, l.l1, l.l2, coalesce(b.br1, 0) AS br1,
-         |      coalesce(b.br2, 0) AS br2
-         |    FROM lam${t - 1} l LEFT JOIN br$t b USING (tok))
-         |  CROSS JOIN dtot CROSS JOIN bs$t)""".stripMargin
+    val ks = 1 until kTot
+    val rK = s"(1000000 - ${ks.map(k => s"r$k").reduce((a, b) => s"($a + $b)")})"
+    val iters = (1 to 2).map { it =>
+      s"""sc$it AS MATERIALIZED (
+         |  SELECT did, c, tok, ${ks.map(k => s"r$k * c AS s${k}c").mkString(", ")}, $rK * c AS s${kTot}c FROM (
+         |    SELECT cn.did, cn.tok, cn.c,
+         |      ${ks.map(k => s"${Clustering.plsaRespExprK(kTot, k).replace(" DIV ", " // ")} AS r$k").mkString(",\n      ")}
+         |    FROM counts cn JOIN th${it - 1} USING (did) JOIN ph${it - 1} USING (tok))),
+         |th$it AS MATERIALIZED (
+         |  SELECT did, ${ks.map(k => s"CAST(CAST(sum(s${k}c) AS BIGINT) // CAST(sum(c) AS BIGINT) AS BIGINT) AS th$k").mkString(", ")}
+         |  FROM sc$it GROUP BY 1),
+         |pa$it AS (SELECT tok, ${(1 to kTot).map(k => s"CAST(sum(s${k}c) AS BIGINT) AS w$k").mkString(", ")}
+         |  FROM sc$it GROUP BY 1),
+         |tt$it AS (SELECT ${(1 to kTot).map(k => s"CAST(sum(w$k) AS BIGINT) AS t$k").mkString(", ")} FROM pa$it),
+         |ph$it AS MATERIALIZED (
+         |  SELECT tok, ${(1 to kTot).map(k => s"CAST((w$k * 1000000) // t$k AS BIGINT) AS p$k").mkString(",\n         ")}
+         |  FROM pa$it CROSS JOIN tt$it)""".stripMargin
     }.mkString(",\n")
-    s"""counts AS MATERIALIZED (
+    s"""WITH counts AS MATERIALIZED (
        |  SELECT did, tok, CAST(count(*) AS BIGINT) AS c
        |  FROM (SELECT doc_id AS did, unnest(string_split(text, ' ')) AS tok FROM documents)
        |  GROUP BY 1, 2),
-       |dtot AS (SELECT CAST(count(DISTINCT did) AS BIGINT) AS dd FROM counts),
-       |lam0 AS MATERIALIZED (SELECT tok,
-       |    CAST(1000000 + ($tokHash % 2) * 500000 AS BIGINT) AS l1,
-       |    CAST(1500000 - ($tokHash % 2) * 500000 AS BIGINT) AS l2
-       |  FROM (SELECT DISTINCT tok FROM counts)),
-       |$iters""".stripMargin
+       |v AS (SELECT CAST(count(DISTINCT tok) AS BIGINT) AS vn FROM counts),
+       |th0 AS MATERIALIZED (
+       |  SELECT did, ${ks.map(k => s"CAST(${Clustering.ldaSeedFracExpr(kTot, k)} AS BIGINT) AS th$k").mkString(", ")}
+       |  FROM (SELECT DISTINCT did FROM counts)),
+       |ph0 AS MATERIALIZED (
+       |  SELECT tok, ${(1 to kTot).map(k => s"CAST(1000000 // vn AS BIGINT) AS p$k").mkString(", ")}
+       |  FROM (SELECT DISTINCT tok FROM counts) CROSS JOIN v),
+       |$iters
+       |SELECT topic, CAST(rn AS BIGINT) AS rnk, tok, phi_micro FROM (
+       |  SELECT topic, tok, phi_micro,
+       |    row_number() OVER (PARTITION BY topic ORDER BY phi_micro DESC, tok) AS rn
+       |  FROM (${(1 to kTot).map(k =>
+             s"SELECT ${if (k == 1) s"$k::BIGINT AS topic, tok, p$k AS phi_micro"
+             else s"$k::BIGINT, tok, p$k"} FROM ph2").mkString("\n        UNION ALL ")}))
+       |WHERE rn <= 8 ORDER BY topic, rnk""".stripMargin
+  }
+
+  /** Mirror of Clustering.ldaTopicsK: two unrolled smoothed-EM
+    * iterations with K−1 stored topic-count columns per state and the
+    * generated K-fold responsibility ratio (pure double arithmetic +
+    * round — no DIV seam), then the final φ normalization on // over
+    * operands positive by construction, topic K by complement. */
+  private def ldaOracleSql(kTot: Int): String = {
+    import graft.ext.Clustering
+    val ks = 1 until kTot
+    val iters = (1 to 2).map { it =>
+      s"""sc$it AS MATERIALIZED (
+         |  SELECT did, tok, ${ks.map(k => s"c * r$k AS s${k}c").mkString(", ")} FROM (
+         |    SELECT cn.did, cn.tok, cn.c,
+         |      ${ks.map(k => s"${Clustering.ldaRespExprK(kTot, k)} AS r$k").mkString(",\n      ")}
+         |    FROM counts cn JOIN d${it - 1} USING (did) JOIN t${it - 1} USING (tok)
+         |    CROSS JOIN g${it - 1} CROSS JOIN tot)),
+         |d$it AS MATERIALIZED (
+         |  SELECT s.did, dt.nj, ${ks.map(k => s"CAST(sum(s${k}c) AS BIGINT) AS nj$k").mkString(", ")}
+         |  FROM sc$it s JOIN dt USING (did) GROUP BY 1, 2),
+         |t$it AS MATERIALIZED (
+         |  SELECT s.tok, tt.nw, ${ks.map(k => s"CAST(sum(s${k}c) AS BIGINT) AS nw$k").mkString(", ")}
+         |  FROM sc$it s JOIN tt USING (tok) GROUP BY 1, 2),
+         |g$it AS (SELECT ${ks.map(k => s"CAST(sum(nw$k) AS BIGINT) AS n$k").mkString(", ")} FROM t$it)""".stripMargin
+    }.mkString(",\n")
+    val uni = 1000000 / kTot
+    val parts = (b: String) => ks.map(k => s"$b$k").reduce((a, b2) => s"($a + $b2)")
+    s"""WITH counts AS MATERIALIZED (
+       |  SELECT did, tok, CAST(count(*) AS BIGINT) AS c
+       |  FROM (SELECT doc_id AS did, unnest(string_split(text, ' ')) AS tok FROM documents)
+       |  GROUP BY 1, 2),
+       |dt AS MATERIALIZED (SELECT did, CAST(sum(c) AS BIGINT) AS nj FROM counts GROUP BY 1),
+       |tt AS MATERIALIZED (SELECT tok, CAST(sum(c) AS BIGINT) AS nw FROM counts GROUP BY 1),
+       |tot AS (SELECT CAST(sum(nw) AS BIGINT) AS ntot, CAST(count(*) AS BIGINT) AS vn FROM tt),
+       |d0 AS MATERIALIZED (SELECT did, nj,
+       |  ${ks.map(k => s"CAST(nj * ${Clustering.ldaSeedFracExpr(kTot, k)} AS BIGINT) AS nj$k").mkString(",\n  ")}
+       |  FROM dt),
+       |t0 AS MATERIALIZED (SELECT tok, nw,
+       |  ${ks.map(k => s"CAST(nw * $uni AS BIGINT) AS nw$k").mkString(", ")} FROM tt),
+       |g0 AS (SELECT ${ks.map(k => s"CAST(ntot * $uni AS BIGINT) AS n$k").mkString(", ")} FROM tot),
+       |$iters,
+       |ph AS (SELECT tok,
+       |    ${ks.map(k => s"CAST((nw$k * 1000000) // n$k AS BIGINT) AS p$k").mkString(",\n    ")},
+       |    CAST((((nw * 1000000) - ${parts("nw")}) * 1000000) // ((ntot * 1000000) - ${parts("n")}) AS BIGINT) AS p$kTot
+       |  FROM t2 CROSS JOIN g2 CROSS JOIN tot)
+       |SELECT topic, CAST(rn AS BIGINT) AS rnk, tok, phi_micro FROM (
+       |  SELECT topic, tok, phi_micro,
+       |    row_number() OVER (PARTITION BY topic ORDER BY phi_micro DESC, tok) AS rn
+       |  FROM (${(1 to kTot).map(k =>
+             s"SELECT ${if (k == 1) s"$k::BIGINT AS topic, tok, p$k AS phi_micro"
+             else s"$k::BIGINT, tok, p$k"} FROM ph").mkString("\n        UNION ALL ")}))
+       |WHERE rn <= 8 ORDER BY topic, rnk""".stripMargin
+  }
+
+  /** Mirror of Learn.word2vecD: positional pairs, rank-hash negative,
+    * the shared sigmoid / init / update formula strings with generated
+    * component loops (ascii and substring behave identically in both
+    * engines on these tokens). */
+  private def w2vOracleSql(dims: Int): String = {
+    import graft.ext.Learn
+    val ds = 1 to dims
+    val initCols = Learn.w2vInitExprsD(dims)
+      .map { case (c, e) => s"$e AS $c" }.mkString(", ")
+    def dot(a: Seq[String], b: Seq[String]) =
+      a.zip(b).map { case (x, y) => s"($x * $y)" }.reduce((p, q) => s"$p + $q")
+    val us = ds.map(i => s"u${i}q")
+    s"""WITH toks AS MATERIALIZED (
+       |  SELECT did, i AS pos, toks[i] AS tok FROM (
+       |    SELECT doc_id AS did, string_split(text, ' ') AS toks FROM documents),
+       |    unnest(range(1, len(toks) + 1)) t(i)
+       |  WHERE len(toks[i]) > 0),
+       |vocab AS MATERIALIZED (SELECT tok, r FROM (
+       |  SELECT tok, CAST(row_number() OVER (ORDER BY c DESC, tok) - 1 AS BIGINT) AS r
+       |  FROM (SELECT tok, count(*) AS c FROM toks GROUP BY 1)) WHERE r < 30),
+       |wt AS MATERIALIZED (
+       |  SELECT t.did, row_number() OVER (PARTITION BY t.did ORDER BY t.pos) AS pos,
+       |    t.tok, v.r FROM toks t JOIN vocab v USING (tok)),
+       |init AS MATERIALIZED (SELECT tok, r, $initCols FROM (
+       |  SELECT tok, r, ${Learn.w2vHashExpr} AS h FROM vocab)),
+       |pairs AS MATERIALIZED (
+       |  SELECT a.tok AS cw, b.tok AS ct,
+       |    (a.r + (b.r * 7) + 3) % (SELECT count(*) FROM vocab) AS rn
+       |  FROM wt a JOIN wt b ON a.did = b.did
+       |    AND b.pos >= a.pos - 2 AND b.pos <= a.pos + 2 AND b.pos <> a.pos),
+       |scored AS MATERIALIZED (
+       |  SELECT cw, ct, rn, ${(us ++ ds.map(i => s"p${i}q") ++ ds.map(i => s"n${i}q")).mkString(", ")},
+       |    ${Learn.w2vSigmoidExpr(dot(us, ds.map(i => s"p${i}q")))} AS sp,
+       |    ${Learn.w2vSigmoidExpr(dot(us, ds.map(i => s"n${i}q")))} AS sn
+       |  FROM pairs
+       |  JOIN (SELECT tok AS cw, ${us.mkString(", ")} FROM init) USING (cw)
+       |  JOIN (SELECT tok AS ct, ${ds.map(i => s"v${i}q AS p${i}q").mkString(", ")} FROM init) USING (ct)
+       |  JOIN (SELECT r AS rn, ${ds.map(i => s"v${i}q AS n${i}q").mkString(", ")} FROM init) USING (rn)),
+       |du AS (SELECT cw AS tok,
+       |    ${ds.map(i => s"CAST(sum(((1000000 - sp) * p${i}q) - (sn * n${i}q)) AS BIGINT) AS g$i").mkString(",\n    ")}
+       |  FROM scored GROUP BY 1),
+       |dvp AS (SELECT ct AS tok,
+       |    ${ds.map(i => s"CAST(sum((1000000 - sp) * u${i}q) AS BIGINT) AS gp$i").mkString(",\n    ")}
+       |  FROM scored GROUP BY 1),
+       |dvn AS (SELECT i.tok,
+       |    ${ds.map(i => s"CAST(sum(-(s.sn * s.u${i}q)) AS BIGINT) AS gn$i").mkString(",\n    ")}
+       |  FROM scored s JOIN init i ON i.r = s.rn GROUP BY 1),
+       |vin AS (SELECT i.tok, i.r,
+       |    ${ds.map(i => s"${Learn.w2vUpdExpr(s"u${i}q", s"COALESCE(g$i, 0)", 0.025)} AS u${i}q").mkString(",\n    ")}
+       |  FROM init i LEFT JOIN du USING (tok)),
+       |vout AS (SELECT i.tok,
+       |    ${ds.map(i => s"${Learn.w2vUpdExpr(s"v${i}q", s"(COALESCE(gp$i, 0) + COALESCE(gn$i, 0))", 0.025)} AS v${i}q").mkString(",\n    ")}
+       |  FROM init i LEFT JOIN dvp USING (tok) LEFT JOIN dvn USING (tok))
+       |SELECT vin.tok, CAST(vin.r + 1 AS BIGINT) AS rnk, ${(us ++ ds.map(i => s"v${i}q")).mkString(", ")}
+       |FROM vin JOIN vout USING (tok) WHERE vin.r < 20 ORDER BY rnk""".stripMargin
   }
 
   private val qtyCte =
@@ -894,324 +1010,21 @@ object MlEval {
          |ORDER BY o_orderkey""".stripMargin
     },
 
-    // Mirror of Clustering.onlineLdaTopicsK at K = 3: the s75 chain
-    // with per-topic column loops (same seed/ratio/blend strings).
-    "s117_online_lda_k3" ->
-      s"""WITH ${oldaChainCtesK(3)}
-         |SELECT topic, CAST(rn AS BIGINT) AS rnk, tok, lambda_micro FROM (
-         |  SELECT topic, tok, lambda_micro,
-         |    row_number() OVER (PARTITION BY topic ORDER BY lambda_micro DESC, tok) AS rn
-         |  FROM (SELECT 1::BIGINT AS topic, tok, l1 AS lambda_micro FROM lam2
-         |        UNION ALL SELECT 2::BIGINT, tok, l2 FROM lam2
-         |        UNION ALL SELECT 3::BIGINT, tok, l3 FROM lam2))
-         |WHERE rn <= 8 ORDER BY topic, rnk""".stripMargin,
+    // Mirrors of the K-topic kernels at K = 3 (the s75/s38 rows run the
+    // same generators at K = 2).
+    "s117_online_lda_k3" -> oldaTopicsOracleSql(3),
+    "s115_plsa_k3" -> plsaOracleSql(3),
+    "s38_plsa_topics" -> plsaOracleSql(2),
 
-    // Mirror of Clustering.plsaTopicsK at K = 3: the s38 chain with
-    // K−1 stored mixture columns and the generated K-fold integer
-    // responsibility (complement sum columns keep every total exact).
-    "s115_plsa_k3" -> {
-      import graft.ext.Clustering
-      val K = 3
-      val ks = 1 until K
-      val rK = s"(1000000 - ${ks.map(k => s"r$k").reduce((a, b) => s"($a + $b)")})"
-      val iters = (1 to 2).map { it =>
-        s"""sc$it AS MATERIALIZED (
-           |  SELECT did, c, tok, ${ks.map(k => s"r$k * c AS s${k}c").mkString(", ")}, $rK * c AS s${K}c FROM (
-           |    SELECT cn.did, cn.tok, cn.c,
-           |      ${ks.map(k => s"${Clustering.plsaRespExprK(K, k).replace(" DIV ", " // ")} AS r$k").mkString(",\n      ")}
-           |    FROM counts cn JOIN th${it - 1} USING (did) JOIN ph${it - 1} USING (tok))),
-           |th$it AS MATERIALIZED (
-           |  SELECT did, ${ks.map(k => s"CAST(CAST(sum(s${k}c) AS BIGINT) // CAST(sum(c) AS BIGINT) AS BIGINT) AS th$k").mkString(", ")}
-           |  FROM sc$it GROUP BY 1),
-           |pa$it AS (SELECT tok, ${(1 to K).map(k => s"CAST(sum(s${k}c) AS BIGINT) AS w$k").mkString(", ")}
-           |  FROM sc$it GROUP BY 1),
-           |tt$it AS (SELECT ${(1 to K).map(k => s"CAST(sum(w$k) AS BIGINT) AS t$k").mkString(", ")} FROM pa$it),
-           |ph$it AS MATERIALIZED (
-           |  SELECT tok, ${(1 to K).map(k => s"CAST((w$k * 1000000) // t$k AS BIGINT) AS p$k").mkString(",\n         ")}
-           |  FROM pa$it CROSS JOIN tt$it)""".stripMargin
-      }.mkString(",\n")
-      s"""WITH counts AS MATERIALIZED (
-         |  SELECT did, tok, CAST(count(*) AS BIGINT) AS c
-         |  FROM (SELECT doc_id AS did, unnest(string_split(text, ' ')) AS tok FROM documents)
-         |  GROUP BY 1, 2),
-         |v AS (SELECT CAST(count(DISTINCT tok) AS BIGINT) AS vn FROM counts),
-         |th0 AS MATERIALIZED (
-         |  SELECT did, ${ks.map(k => s"CAST(${Clustering.ldaSeedFracExpr(K, k)} AS BIGINT) AS th$k").mkString(", ")}
-         |  FROM (SELECT DISTINCT did FROM counts)),
-         |ph0 AS MATERIALIZED (
-         |  SELECT tok, ${(1 to K).map(k => s"CAST(1000000 // vn AS BIGINT) AS p$k").mkString(", ")}
-         |  FROM (SELECT DISTINCT tok FROM counts) CROSS JOIN v),
-         |$iters
-         |SELECT topic, CAST(rn AS BIGINT) AS rnk, tok, phi_micro FROM (
-         |  SELECT topic, tok, phi_micro,
-         |    row_number() OVER (PARTITION BY topic ORDER BY phi_micro DESC, tok) AS rn
-         |  FROM (${(1 to K).map(k =>
-               s"SELECT ${if (k == 1) s"$k::BIGINT AS topic, tok, p$k AS phi_micro"
-               else s"$k::BIGINT, tok, p$k"} FROM ph2").mkString("\n        UNION ALL ")}))
-         |WHERE rn <= 8 ORDER BY topic, rnk""".stripMargin
-    },
+    // Mirrors of Learn.word2vecD at dims = 3 and dims = 2.
+    "s113_word2vec_dim" -> w2vOracleSql(3),
+    "s48_word2vec" -> w2vOracleSql(2),
 
-    // Two unrolled PLSA-EM iterations sharing Clustering.plsaRespExpr
-    // (DIV -> // on the all-non-negative integer operands), then the
-    // per-topic emission ranking.
-    "s38_plsa_topics" -> {
-      val resp = graft.ext.Clustering.plsaRespExpr.replace(" DIV ", " // ")
-      val iters = (1 to 2).map { k =>
-        s"""sc$k AS MATERIALIZED (
-           |  SELECT did, c, tok, r * c AS s1c, (1000000 - r) * c AS s2c FROM (
-           |    SELECT cn.did, cn.tok, cn.c, $resp AS r
-           |    FROM counts cn JOIN th${k - 1} USING (did) JOIN ph${k - 1} USING (tok))),
-           |th$k AS MATERIALIZED (
-           |  SELECT did, CAST(CAST(sum(s1c) AS BIGINT) // CAST(sum(c) AS BIGINT) AS BIGINT) AS th
-           |  FROM sc$k GROUP BY 1),
-           |pa$k AS (SELECT tok, CAST(sum(s1c) AS BIGINT) AS w1, CAST(sum(s2c) AS BIGINT) AS w2
-           |  FROM sc$k GROUP BY 1),
-           |tt$k AS (SELECT CAST(sum(w1) AS BIGINT) AS t1, CAST(sum(w2) AS BIGINT) AS t2 FROM pa$k),
-           |ph$k AS MATERIALIZED (
-           |  SELECT tok, CAST((w1 * 1000000) // t1 AS BIGINT) AS p1,
-           |         CAST((w2 * 1000000) // t2 AS BIGINT) AS p2
-           |  FROM pa$k CROSS JOIN tt$k)""".stripMargin
-      }.mkString(",\n")
-      s"""WITH counts AS MATERIALIZED (
-         |  SELECT did, tok, CAST(count(*) AS BIGINT) AS c
-         |  FROM (SELECT doc_id AS did, unnest(string_split(text, ' ')) AS tok FROM documents)
-         |  GROUP BY 1, 2),
-         |v AS (SELECT CAST(count(DISTINCT tok) AS BIGINT) AS vn FROM counts),
-         |th0 AS MATERIALIZED (
-         |  SELECT did, CAST(250000 + (did % 2) * 500000 AS BIGINT) AS th
-         |  FROM (SELECT DISTINCT did FROM counts)),
-         |ph0 AS MATERIALIZED (
-         |  SELECT tok, CAST(1000000 // vn AS BIGINT) AS p1, CAST(1000000 // vn AS BIGINT) AS p2
-         |  FROM (SELECT DISTINCT tok FROM counts) CROSS JOIN v),
-         |$iters
-         |SELECT topic, CAST(rn AS BIGINT) AS rnk, tok, phi_micro FROM (
-         |  SELECT topic, tok, phi_micro,
-         |    row_number() OVER (PARTITION BY topic ORDER BY phi_micro DESC, tok) AS rn
-         |  FROM (SELECT 1::BIGINT AS topic, tok, p1 AS phi_micro FROM ph2
-         |        UNION ALL SELECT 2::BIGINT, tok, p2 FROM ph2))
-         |WHERE rn <= 8 ORDER BY topic, rnk""".stripMargin
-    },
-
-    // Mirror of Learn.word2vec: positional pairs, rank-hash negative,
-    // the shared sigmoid / init / update formula strings (ascii and
-    // substring behave identically in both engines on these tokens).
-    // Mirror of Learn.word2vecD at dims = 3: the s48 chain with
-    // generated component loops (same init/sigmoid/update strings).
-    "s113_word2vec_dim" -> {
-      import graft.ext.Learn
-      val dims = 3
-      val ds = 1 to dims
-      val initCols = Learn.w2vInitExprsD(dims)
-        .map { case (c, e) => s"$e AS $c" }.mkString(", ")
-      def dot(a: Seq[String], b: Seq[String]) =
-        a.zip(b).map { case (x, y) => s"($x * $y)" }.reduce((p, q) => s"$p + $q")
-      val us = ds.map(i => s"u${i}q")
-      s"""WITH toks AS MATERIALIZED (
-         |  SELECT did, i AS pos, toks[i] AS tok FROM (
-         |    SELECT doc_id AS did, string_split(text, ' ') AS toks FROM documents),
-         |    unnest(range(1, len(toks) + 1)) t(i)
-         |  WHERE len(toks[i]) > 0),
-         |vocab AS MATERIALIZED (SELECT tok, r FROM (
-         |  SELECT tok, CAST(row_number() OVER (ORDER BY c DESC, tok) - 1 AS BIGINT) AS r
-         |  FROM (SELECT tok, count(*) AS c FROM toks GROUP BY 1)) WHERE r < 30),
-         |wt AS MATERIALIZED (
-         |  SELECT t.did, row_number() OVER (PARTITION BY t.did ORDER BY t.pos) AS pos,
-         |    t.tok, v.r FROM toks t JOIN vocab v USING (tok)),
-         |init AS MATERIALIZED (SELECT tok, r, $initCols FROM (
-         |  SELECT tok, r, ${Learn.w2vHashExpr} AS h FROM vocab)),
-         |pairs AS MATERIALIZED (
-         |  SELECT a.tok AS cw, b.tok AS ct,
-         |    (a.r + (b.r * 7) + 3) % (SELECT count(*) FROM vocab) AS rn
-         |  FROM wt a JOIN wt b ON a.did = b.did
-         |    AND b.pos >= a.pos - 2 AND b.pos <= a.pos + 2 AND b.pos <> a.pos),
-         |scored AS MATERIALIZED (
-         |  SELECT cw, ct, rn, ${(us ++ ds.map(i => s"p${i}q") ++ ds.map(i => s"n${i}q")).mkString(", ")},
-         |    ${Learn.w2vSigmoidExpr(dot(us, ds.map(i => s"p${i}q")))} AS sp,
-         |    ${Learn.w2vSigmoidExpr(dot(us, ds.map(i => s"n${i}q")))} AS sn
-         |  FROM pairs
-         |  JOIN (SELECT tok AS cw, ${us.mkString(", ")} FROM init) USING (cw)
-         |  JOIN (SELECT tok AS ct, ${ds.map(i => s"v${i}q AS p${i}q").mkString(", ")} FROM init) USING (ct)
-         |  JOIN (SELECT r AS rn, ${ds.map(i => s"v${i}q AS n${i}q").mkString(", ")} FROM init) USING (rn)),
-         |du AS (SELECT cw AS tok,
-         |    ${ds.map(i => s"CAST(sum(((1000000 - sp) * p${i}q) - (sn * n${i}q)) AS BIGINT) AS g$i").mkString(",\n    ")}
-         |  FROM scored GROUP BY 1),
-         |dvp AS (SELECT ct AS tok,
-         |    ${ds.map(i => s"CAST(sum((1000000 - sp) * u${i}q) AS BIGINT) AS gp$i").mkString(",\n    ")}
-         |  FROM scored GROUP BY 1),
-         |dvn AS (SELECT i.tok,
-         |    ${ds.map(i => s"CAST(sum(-(s.sn * s.u${i}q)) AS BIGINT) AS gn$i").mkString(",\n    ")}
-         |  FROM scored s JOIN init i ON i.r = s.rn GROUP BY 1),
-         |vin AS (SELECT i.tok, i.r,
-         |    ${ds.map(i => s"${Learn.w2vUpdExpr(s"u${i}q", s"COALESCE(g$i, 0)", 0.025)} AS u${i}q").mkString(",\n    ")}
-         |  FROM init i LEFT JOIN du USING (tok)),
-         |vout AS (SELECT i.tok,
-         |    ${ds.map(i => s"${Learn.w2vUpdExpr(s"v${i}q", s"(COALESCE(gp$i, 0) + COALESCE(gn$i, 0))", 0.025)} AS v${i}q").mkString(",\n    ")}
-         |  FROM init i LEFT JOIN dvp USING (tok) LEFT JOIN dvn USING (tok))
-         |SELECT vin.tok, CAST(vin.r + 1 AS BIGINT) AS rnk, ${(us ++ ds.map(i => s"v${i}q")).mkString(", ")}
-         |FROM vin JOIN vout USING (tok) WHERE vin.r < 20 ORDER BY rnk""".stripMargin
-    },
-
-    "s48_word2vec" -> {
-      import graft.ext.Learn
-      val initCols = Learn.w2vInitExprs
-        .map { case (c, e) => s"$e AS $c" }.mkString(", ")
-      s"""WITH toks AS MATERIALIZED (
-         |  SELECT did, i AS pos, toks[i] AS tok FROM (
-         |    SELECT doc_id AS did, string_split(text, ' ') AS toks FROM documents),
-         |    unnest(range(1, len(toks) + 1)) t(i)
-         |  WHERE len(toks[i]) > 0),
-         |vocab AS MATERIALIZED (SELECT tok, r FROM (
-         |  SELECT tok, CAST(row_number() OVER (ORDER BY c DESC, tok) - 1 AS BIGINT) AS r
-         |  FROM (SELECT tok, count(*) AS c FROM toks GROUP BY 1)) WHERE r < 30),
-         |wt AS MATERIALIZED (
-         |  SELECT t.did, row_number() OVER (PARTITION BY t.did ORDER BY t.pos) AS pos,
-         |    t.tok, v.r FROM toks t JOIN vocab v USING (tok)),
-         |init AS MATERIALIZED (SELECT tok, r, $initCols FROM (
-         |  SELECT tok, r, ${Learn.w2vHashExpr} AS h FROM vocab)),
-         |pairs AS MATERIALIZED (
-         |  SELECT a.tok AS cw, b.tok AS ct,
-         |    (a.r + (b.r * 7) + 3) % (SELECT count(*) FROM vocab) AS rn
-         |  FROM wt a JOIN wt b ON a.did = b.did
-         |    AND b.pos >= a.pos - 2 AND b.pos <= a.pos + 2 AND b.pos <> a.pos),
-         |scored AS MATERIALIZED (
-         |  SELECT cw, ct, rn, u1q, u2q, p1q, p2q, n1q, n2q,
-         |    ${Learn.w2vSigmoidExpr("(u1q * p1q) + (u2q * p2q)")} AS sp,
-         |    ${Learn.w2vSigmoidExpr("(u1q * n1q) + (u2q * n2q)")} AS sn
-         |  FROM pairs
-         |  JOIN (SELECT tok AS cw, u1q, u2q FROM init) USING (cw)
-         |  JOIN (SELECT tok AS ct, v1q AS p1q, v2q AS p2q FROM init) USING (ct)
-         |  JOIN (SELECT r AS rn, v1q AS n1q, v2q AS n2q FROM init) USING (rn)),
-         |du AS (SELECT cw AS tok,
-         |    CAST(sum(((1000000 - sp) * p1q) - (sn * n1q)) AS BIGINT) AS g1,
-         |    CAST(sum(((1000000 - sp) * p2q) - (sn * n2q)) AS BIGINT) AS g2
-         |  FROM scored GROUP BY 1),
-         |dvp AS (SELECT ct AS tok,
-         |    CAST(sum((1000000 - sp) * u1q) AS BIGINT) AS gp1,
-         |    CAST(sum((1000000 - sp) * u2q) AS BIGINT) AS gp2
-         |  FROM scored GROUP BY 1),
-         |dvn AS (SELECT i.tok,
-         |    CAST(sum(-(s.sn * s.u1q)) AS BIGINT) AS gn1,
-         |    CAST(sum(-(s.sn * s.u2q)) AS BIGINT) AS gn2
-         |  FROM scored s JOIN init i ON i.r = s.rn GROUP BY 1),
-         |vin AS (SELECT i.tok, i.r,
-         |    ${Learn.w2vUpdExpr("u1q", "COALESCE(g1, 0)", 0.025)} AS u1q,
-         |    ${Learn.w2vUpdExpr("u2q", "COALESCE(g2, 0)", 0.025)} AS u2q
-         |  FROM init i LEFT JOIN du USING (tok)),
-         |vout AS (SELECT i.tok,
-         |    ${Learn.w2vUpdExpr("v1q", "(COALESCE(gp1, 0) + COALESCE(gn1, 0))", 0.025)} AS v1q,
-         |    ${Learn.w2vUpdExpr("v2q", "(COALESCE(gp2, 0) + COALESCE(gn2, 0))", 0.025)} AS v2q
-         |  FROM init i LEFT JOIN dvp USING (tok) LEFT JOIN dvn USING (tok))
-         |SELECT vin.tok, CAST(vin.r + 1 AS BIGINT) AS rnk, u1q, u2q, v1q, v2q
-         |FROM vin JOIN vout USING (tok) WHERE vin.r < 20 ORDER BY rnk""".stripMargin
-    },
-
-    // Mirror of Clustering.ldaTopicsK at K = 3: the s46 chain with K−1
-    // stored topic-count columns per state and the generated K-fold
-    // responsibility ratio (same shared text; topic 3 by complement).
-    "s111_lda_k3" -> {
-      import graft.ext.Clustering
-      val K = 3
-      val ks = 1 until K
-      val iters = (1 to 2).map { it =>
-        s"""sc$it AS MATERIALIZED (
-           |  SELECT did, tok, ${ks.map(k => s"c * r$k AS s${k}c").mkString(", ")} FROM (
-           |    SELECT cn.did, cn.tok, cn.c,
-           |      ${ks.map(k => s"${Clustering.ldaRespExprK(K, k)} AS r$k").mkString(",\n      ")}
-           |    FROM counts cn JOIN d${it - 1} USING (did) JOIN t${it - 1} USING (tok)
-           |    CROSS JOIN g${it - 1} CROSS JOIN tot)),
-           |d$it AS MATERIALIZED (
-           |  SELECT s.did, dt.nj, ${ks.map(k => s"CAST(sum(s${k}c) AS BIGINT) AS nj$k").mkString(", ")}
-           |  FROM sc$it s JOIN dt USING (did) GROUP BY 1, 2),
-           |t$it AS MATERIALIZED (
-           |  SELECT s.tok, tt.nw, ${ks.map(k => s"CAST(sum(s${k}c) AS BIGINT) AS nw$k").mkString(", ")}
-           |  FROM sc$it s JOIN tt USING (tok) GROUP BY 1, 2),
-           |g$it AS (SELECT ${ks.map(k => s"CAST(sum(nw$k) AS BIGINT) AS n$k").mkString(", ")} FROM t$it)""".stripMargin
-      }.mkString(",\n")
-      val uni = 1000000 / K
-      val parts = (b: String) => ks.map(k => s"$b$k").reduce((a, b2) => s"($a + $b2)")
-      s"""WITH counts AS MATERIALIZED (
-         |  SELECT did, tok, CAST(count(*) AS BIGINT) AS c
-         |  FROM (SELECT doc_id AS did, unnest(string_split(text, ' ')) AS tok FROM documents)
-         |  GROUP BY 1, 2),
-         |dt AS MATERIALIZED (SELECT did, CAST(sum(c) AS BIGINT) AS nj FROM counts GROUP BY 1),
-         |tt AS MATERIALIZED (SELECT tok, CAST(sum(c) AS BIGINT) AS nw FROM counts GROUP BY 1),
-         |tot AS (SELECT CAST(sum(nw) AS BIGINT) AS ntot, CAST(count(*) AS BIGINT) AS vn FROM tt),
-         |d0 AS MATERIALIZED (SELECT did, nj,
-         |  ${ks.map(k => s"CAST(nj * ${Clustering.ldaSeedFracExpr(K, k)} AS BIGINT) AS nj$k").mkString(",\n  ")}
-         |  FROM dt),
-         |t0 AS MATERIALIZED (SELECT tok, nw,
-         |  ${ks.map(k => s"CAST(nw * $uni AS BIGINT) AS nw$k").mkString(", ")} FROM tt),
-         |g0 AS (SELECT ${ks.map(k => s"CAST(ntot * $uni AS BIGINT) AS n$k").mkString(", ")} FROM tot),
-         |$iters,
-         |ph AS (SELECT tok,
-         |    ${ks.map(k => s"CAST((nw$k * 1000000) // n$k AS BIGINT) AS p$k").mkString(",\n    ")},
-         |    CAST((((nw * 1000000) - ${parts("nw")}) * 1000000) // ((ntot * 1000000) - ${parts("n")}) AS BIGINT) AS p$K
-         |  FROM t2 CROSS JOIN g2 CROSS JOIN tot)
-         |SELECT topic, CAST(rn AS BIGINT) AS rnk, tok, phi_micro FROM (
-         |  SELECT topic, tok, phi_micro,
-         |    row_number() OVER (PARTITION BY topic ORDER BY phi_micro DESC, tok) AS rn
-         |  FROM (${(1 to K).map(k =>
-                 s"SELECT ${if (k == 1) s"$k::BIGINT AS topic, tok, p$k AS phi_micro"
-                 else s"$k::BIGINT, tok, p$k"} FROM ph").mkString("\n        UNION ALL ")}))
-         |WHERE rn <= 8 ORDER BY topic, rnk""".stripMargin
-    },
-
-    // Two unrolled smoothed-EM iterations sharing Clustering.ldaRespExpr
-    // verbatim (pure double arithmetic + round — no DIV seam), the final
-    // φ normalization on // over operands positive by construction.
-    "s46_lda_topics" -> {
-      val resp = graft.ext.Clustering.ldaRespExpr
-      val iters = (1 to 2).map { k =>
-        s"""sc$k AS MATERIALIZED (
-           |  SELECT did, tok, c * r AS s1c FROM (
-           |    SELECT cn.did, cn.tok, cn.c, $resp AS r
-           |    FROM counts cn JOIN d${k - 1} USING (did) JOIN t${k - 1} USING (tok)
-           |    CROSS JOIN g${k - 1} CROSS JOIN tot)),
-           |d$k AS MATERIALIZED (
-           |  SELECT s.did, dt.nj, CAST(sum(s1c) AS BIGINT) AS nj1
-           |  FROM sc$k s JOIN dt USING (did) GROUP BY 1, 2),
-           |t$k AS MATERIALIZED (
-           |  SELECT s.tok, tt.nw, CAST(sum(s1c) AS BIGINT) AS nw1
-           |  FROM sc$k s JOIN tt USING (tok) GROUP BY 1, 2),
-           |g$k AS (SELECT CAST(sum(nw1) AS BIGINT) AS n1 FROM t$k)""".stripMargin
-      }.mkString(",\n")
-      s"""WITH counts AS MATERIALIZED (
-         |  SELECT did, tok, CAST(count(*) AS BIGINT) AS c
-         |  FROM (SELECT doc_id AS did, unnest(string_split(text, ' ')) AS tok FROM documents)
-         |  GROUP BY 1, 2),
-         |dt AS MATERIALIZED (SELECT did, CAST(sum(c) AS BIGINT) AS nj FROM counts GROUP BY 1),
-         |tt AS MATERIALIZED (SELECT tok, CAST(sum(c) AS BIGINT) AS nw FROM counts GROUP BY 1),
-         |tot AS (SELECT CAST(sum(nw) AS BIGINT) AS ntot, CAST(count(*) AS BIGINT) AS vn FROM tt),
-         |d0 AS MATERIALIZED (SELECT did, nj,
-         |  CAST(nj * (250000 + ((did % 2) * 500000)) AS BIGINT) AS nj1 FROM dt),
-         |t0 AS MATERIALIZED (SELECT tok, nw, CAST(nw * 500000 AS BIGINT) AS nw1 FROM tt),
-         |g0 AS (SELECT CAST(ntot * 500000 AS BIGINT) AS n1 FROM tot),
-         |$iters,
-         |ph AS (SELECT tok,
-         |    CAST((nw1 * 1000000) // n1 AS BIGINT) AS p1,
-         |    CAST((((nw * 1000000) - nw1) * 1000000) // ((ntot * 1000000) - n1) AS BIGINT) AS p2
-         |  FROM t2 CROSS JOIN g2 CROSS JOIN tot)
-         |SELECT topic, CAST(rn AS BIGINT) AS rnk, tok, phi_micro FROM (
-         |  SELECT topic, tok, phi_micro,
-         |    row_number() OVER (PARTITION BY topic ORDER BY phi_micro DESC, tok) AS rn
-         |  FROM (SELECT 1::BIGINT AS topic, tok, p1 AS phi_micro FROM ph
-         |        UNION ALL SELECT 2::BIGINT, tok, p2 FROM ph))
-         |WHERE rn <= 8 ORDER BY topic, rnk""".stripMargin
-    },
-
-    // Two unrolled online iterations sharing Clustering's ratio /
-    // fraction / λ-blend formula strings (`//` for DIV — non-negative
-    // operands throughout): hash minibatch, one γ update, sufficient
-    // stats under the updated γ, the ρ_t power() blend over every
-    // vocabulary row.
-    "s75_online_lda" ->
-      s"""WITH $oldaChainCtes
-         |SELECT topic, CAST(rn AS BIGINT) AS rnk, tok, lambda_micro FROM (
-         |  SELECT topic, tok, lambda_micro,
-         |    row_number() OVER (PARTITION BY topic ORDER BY lambda_micro DESC, tok) AS rn
-         |  FROM (SELECT 1::BIGINT AS topic, tok, l1 AS lambda_micro FROM lam2
-         |        UNION ALL SELECT 2::BIGINT, tok, l2 FROM lam2))
-         |WHERE rn <= 8 ORDER BY topic, rnk""".stripMargin,
+    // Mirrors of Clustering.ldaTopicsK at K = 3 and K = 2, and of
+    // onlineLdaTopicsK at K = 2.
+    "s111_lda_k3" -> ldaOracleSql(3),
+    "s46_lda_topics" -> ldaOracleSql(2),
+    "s75_online_lda" -> oldaTopicsOracleSql(2),
 
     // The s75 chain, then the reference's logPerplexity evaluation:
     // full-corpus per-doc variational inference against the final λ
@@ -1220,22 +1033,9 @@ object MlEval {
     // mean at the end — every stage the shared formula strings.
     "s82_lda_perplexity" -> {
       import graft.ext.Clustering
-      s"""WITH $oldaChainCtes,
-         |lsF AS (SELECT CAST(sum(l1) AS BIGINT) AS ls1, CAST(sum(l2) AS BIGINT) AS ls2
-         |  FROM lam2),
-         |ebF AS MATERIALIZED (SELECT tok,
-         |    ${Clustering.oldaRatioExpr("l1", "ls1", "//")} AS eb1,
-         |    ${Clustering.oldaRatioExpr("l2", "ls2", "//")} AS eb2
-         |  FROM lam2 CROSS JOIN lsF),
-         |gzF AS (SELECT did, CAST(750000 + (did % 2) * 500000 AS BIGINT) AS g1,
-         |    CAST(1750000 - (did % 2) * 500000 AS BIGINT) AS g2
-         |  FROM (SELECT DISTINCT did FROM counts)),
-         |${oldaScoreCte("saF", "counts", "gzF", "ebF")},
-         |guF AS MATERIALIZED (SELECT did,
-         |    CAST(500000 + sum(c * f1) AS BIGINT) AS g1,
-         |    CAST(500000 + sum(c * f2) AS BIGINT) AS g2
-         |  FROM saF GROUP BY 1),
-         |${oldaScoreCte("sbF", "counts", "guF", "ebF")},
+      s"""WITH ${oldaChainCtesK(2)},
+         |${oldaEbCtes("F", "lam2", 2)},
+         |${oldaGammaCtes("F", "counts", 2)},
          |lncells AS (SELECT c, ${Clustering.oldaLnCellExpr} AS lnq FROM sbF),
          |agg AS (SELECT CAST(count(*) AS BIGINT) AS n_cells,
          |    CAST(sum(c) AS BIGINT) AS n_tokens,
@@ -1288,9 +1088,6 @@ object MlEval {
          |FROM comps c LEFT JOIN hc h USING (comp) ORDER BY comp""".stripMargin
     },
 
-    // Mirror of Clustering.gmmFit1dK3: unrolled heteroscedastic 3-way
-    // EM sharing the softmax / update / init formula strings (DIV -> //
-    // on the non-negative operands; HUGEINT second moments).
     // Mirror of GmmKd.gmmFitKd(3, 2): same generator-assembled oracle,
     // 3-D kernel (cofactor det/Mahalanobis), HUGEINT second moments.
     "s116_gmm_3d" -> graft.ext.GmmKd.oracleSql(3, 2, 3,
@@ -1309,72 +1106,12 @@ object MlEval {
         |         CAST(round(l_extendedprice) AS BIGINT) AS y
         |  FROM lineitem)""".stripMargin),
 
-    "s101_gmm_k3" -> {
-      import graft.ext.Clustering
-      val cc = Clustering.gmm3ConstCols.mkString(", ")
-      val init = Clustering.gmm3InitExprs
-        .map { case (c, e) => s"${e.replace(" DIV ", " // ")} AS $c" }.mkString(",\n  ")
-      val upd = Clustering.gmm3UpdateExprs
-        .map { case (c, e) => s"${e.replace(" DIV ", " // ")} AS $c" }.mkString(",\n    ")
-      val iters = (1 to 3).map { k =>
-        s"""ga$k AS MATERIALIZED (
-           |  SELECT CAST(sum(r1) AS BIGINT) AS sr1,
-           |    sum(CAST(r1 * x AS HUGEINT)) AS srx1,
-           |    sum(CAST(r1 * x AS HUGEINT) * x) AS srxx1,
-           |    CAST(sum(r2) AS BIGINT) AS sr2,
-           |    sum(CAST(r2 * x AS HUGEINT)) AS srx2,
-           |    sum(CAST(r2 * x AS HUGEINT) * x) AS srxx2
-           |  FROM (SELECT ${Clustering.gmm3RespExpr(1)} AS r1,
-           |          ${Clustering.gmm3RespExpr(2)} AS r2, x
-           |        FROM xs CROSS JOIN g${k - 1})),
-           |g$k AS MATERIALIZED (SELECT $cc, $upd FROM ga$k CROSS JOIN g${k - 1})""".stripMargin
-      }.mkString(",\n")
-      s"""WITH xs AS MATERIALIZED (
-         |  SELECT CAST(CAST(round(o_totalprice) AS BIGINT) // 1000 AS BIGINT) AS x
-         |  FROM orders),
-         |tot AS (SELECT CAST(count(*) AS BIGINT) AS n, CAST(sum(x) AS BIGINT) AS sx,
-         |  sum(CAST(x * x AS HUGEINT)) AS sxx FROM xs),
-         |hv AS (SELECT n, sx, sxx,
-         |    CAST(sum(lo) AS BIGINT) AS nlo, CAST(sum(x * lo) AS BIGINT) AS slo,
-         |    CAST(sum(1 - lo) AS BIGINT) AS nhi, CAST(sum(x * (1 - lo)) AS BIGINT) AS shi
-         |  FROM (SELECT n, sx, sxx, x,
-         |          CASE WHEN ${Clustering.gmmSplitExpr} THEN 1 ELSE 0 END AS lo
-         |        FROM xs CROSS JOIN tot)
-         |  GROUP BY n, sx, sxx),
-         |g0 AS MATERIALIZED (SELECT $cc,
-         |  $init
-         |  FROM (
-         |  SELECT n, sx, sxx,
-         |    CAST(sum(CASE WHEN reg = 1 THEN 1 ELSE 0 END) AS BIGINT) AS nl,
-         |    CAST(sum(CASE WHEN reg = 1 THEN x ELSE 0 END) AS BIGINT) AS sl,
-         |    sum(CAST(CASE WHEN reg = 1 THEN x * x ELSE 0 END AS HUGEINT)) AS ssl,
-         |    CAST(sum(CASE WHEN reg = 2 THEN 1 ELSE 0 END) AS BIGINT) AS nm,
-         |    CAST(sum(CASE WHEN reg = 2 THEN x ELSE 0 END) AS BIGINT) AS sm,
-         |    sum(CAST(CASE WHEN reg = 2 THEN x * x ELSE 0 END AS HUGEINT)) AS ssm,
-         |    CAST(sum(CASE WHEN reg = 3 THEN 1 ELSE 0 END) AS BIGINT) AS nh2,
-         |    CAST(sum(CASE WHEN reg = 3 THEN x ELSE 0 END) AS BIGINT) AS sh2,
-         |    sum(CAST(CASE WHEN reg = 3 THEN x * x ELSE 0 END AS HUGEINT)) AS ssh2
-         |  FROM (SELECT n, sx, sxx, x,
-         |          CASE WHEN (x * nlo) < slo THEN 1
-         |               WHEN (x * nhi) < shi THEN 2 ELSE 3 END AS reg
-         |        FROM xs CROSS JOIN hv)
-         |  GROUP BY n, sx, sxx)),
-         |$iters,
-         |hard AS (SELECT CAST(CASE WHEN r1 >= r2 AND r1 >= 1000000 - (r1 + r2) THEN 1
-         |    WHEN r2 >= 1000000 - (r1 + r2) THEN 2 ELSE 3 END AS BIGINT) AS comp
-         |  FROM (SELECT ${Clustering.gmm3RespExpr(1)} AS r1,
-         |          ${Clustering.gmm3RespExpr(2)} AS r2
-         |        FROM xs CROSS JOIN g3)),
-         |hc AS (SELECT comp, CAST(count(*) AS BIGINT) AS n_hard FROM hard GROUP BY 1),
-         |comps AS (SELECT 1::BIGINT AS comp, w1u AS weight_micro,
-         |    m1m AS mean_milli, v1m AS var_milli FROM g3
-         |  UNION ALL SELECT 2::BIGINT, w2u, m2m, v2m FROM g3
-         |  UNION ALL SELECT 3::BIGINT, CAST(1000000 - (w1u + w2u) AS BIGINT),
-         |    m3m, v3m FROM g3)
-         |SELECT c.comp, c.weight_micro, c.mean_milli, c.var_milli,
-         |  COALESCE(h.n_hard, 0) AS n_hard
-         |FROM comps c LEFT JOIN hc h USING (comp) ORDER BY comp""".stripMargin
-    },
+    // Mirror of GmmKd.gmmFitKd(1, 3): the same generator over the s35
+    // order buckets.
+    "s101_gmm_k3" -> graft.ext.GmmKd.oracleSql(1, 3, 3,
+      """xs AS MATERIALIZED (
+        |  SELECT CAST(CAST(round(o_totalprice) AS BIGINT) // 1000 AS BIGINT) AS x
+        |  FROM orders)""".stripMargin),
 
     // Mirror of Clustering.gmmFit2d: three unrolled 2-D EM iterations
     // sharing the responsibility / update / init formula strings.

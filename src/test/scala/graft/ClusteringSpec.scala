@@ -1,6 +1,6 @@
 package graft
 
-import graft.ext.Clustering
+import graft.ext.{Clustering, GmmKd}
 import org.apache.spark.sql.functions._
 
 /** Relational Lloyd k-means: partitioning invariants plus value parity
@@ -123,7 +123,7 @@ class ClusteringSpec extends SparkSpec {
     val xs = ((1 to 30).map(i => 100L + (i % 3) - 1) ++
       (1 to 30).map(i => 140L + ((i * 7) % 41) - 20) ++
       (1 to 40).map(i => 300L + (i % 7) - 3)).toDF("x")
-    val got = graft.ext.Clustering.gmmFit1dK3(xs, iters = 6)
+    val got = GmmKd.gmmFitKd(xs, d = 1, kTot = 3, iters = 6)
       .orderBy("comp").collect()
       .map(r => (r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4)))
     assert(got.length === 3)
@@ -153,9 +153,9 @@ class ClusteringSpec extends SparkSpec {
   test("gmm k=3 state is deterministic across partitionings") {
     import spark.implicits._
     val xs = (1L to 300L).map(i => (i * i) % 157).toDF("x")
-    val a = graft.ext.Clustering.gmmFit1dK3(xs.repartition(1), iters = 2)
+    val a = GmmKd.gmmFitKd(xs.repartition(1), d = 1, kTot = 3, iters = 2)
       .orderBy("comp").collect()
-    val b = graft.ext.Clustering.gmmFit1dK3(xs.repartition(17, col("x")), iters = 2)
+    val b = GmmKd.gmmFitKd(xs.repartition(17, col("x")), d = 1, kTot = 3, iters = 2)
       .orderBy("comp").collect()
     assert(a.toSeq === b.toSeq)
   }
@@ -236,15 +236,15 @@ class ClusteringSpec extends SparkSpec {
     val docs = (1L to 20L).map { i =>
       (i, if (i % 2 == 1) "u v u" else "x y x")
     }.toDF("doc_id", "text")
-    val got = Clustering.plsaTopics(docs, "doc_id", "text", iters = 2, topK = 2)
+    val got = Clustering.plsaTopicsK(docs, "doc_id", "text", kTot = 2, iters = 2, topK = 2)
       .collect().groupBy(_.getLong(0))
       .map { case (t, rs) => t -> rs.map(_.getString(2)).toSet }
     assert(got(1L) === Set("u", "v"))
     assert(got(2L) === Set("x", "y"))
     // partitioning determinism of the full integer-exact chain
-    val a = Clustering.plsaTopics(docs.repartition(1), "doc_id", "text", 2, 4)
+    val a = Clustering.plsaTopicsK(docs.repartition(1), "doc_id", "text", 2, 2, 4)
       .orderBy("topic", "rnk").collect()
-    val b = Clustering.plsaTopics(docs.repartition(7, col("doc_id")), "doc_id", "text", 2, 4)
+    val b = Clustering.plsaTopicsK(docs.repartition(7, col("doc_id")), "doc_id", "text", 2, 2, 4)
       .orderBy("topic", "rnk").collect()
     assert(a.toSeq === b.toSeq)
   }
@@ -279,7 +279,7 @@ class ClusteringSpec extends SparkSpec {
     val docs = (1L to 20L).map { i =>
       (i, (if (i % 2 == 1) "u v " else "x y ") * 50)
     }.toDF("doc_id", "text")
-    val all = Clustering.ldaTopics(docs, "doc_id", "text", iters = 2, topK = 4)
+    val all = Clustering.ldaTopicsK(docs, "doc_id", "text", kTot = 2, iters = 2, topK = 4)
       .collect().map(r => (r.getLong(0), r.getString(2), r.getLong(3)))
     val top = all.groupBy(_._1).map { case (t, rs) =>
       t -> rs.sortBy(-_._3).take(2).map(_._2).toSet
@@ -292,9 +292,9 @@ class ClusteringSpec extends SparkSpec {
     assert(all.forall(_._3 > 0L), s"expected all phi > 0: ${all.mkString(",")}")
     // partitioning determinism of the full chain (integer state + one
     // fixed-parenthesization double ratio per cell)
-    val a = Clustering.ldaTopics(docs.repartition(1), "doc_id", "text", 2, 4)
+    val a = Clustering.ldaTopicsK(docs.repartition(1), "doc_id", "text", 2, 2, 4)
       .orderBy("topic", "rnk").collect()
-    val b = Clustering.ldaTopics(docs.repartition(7, col("doc_id")), "doc_id", "text", 2, 4)
+    val b = Clustering.ldaTopicsK(docs.repartition(7, col("doc_id")), "doc_id", "text", 2, 2, 4)
       .orderBy("topic", "rnk").collect()
     assert(a.toSeq === b.toSeq)
   }
@@ -309,7 +309,7 @@ class ClusteringSpec extends SparkSpec {
     val docs = (1L to 40L).map { i =>
       (i, (if (i % 2 == 1) "u v " else "x y ") * 10)
     }.toDF("doc_id", "text")
-    val out = Clustering.onlineLdaTopics(docs, "doc_id", "text", iters = 2, topK = 4)
+    val out = Clustering.onlineLdaTopicsK(docs, "doc_id", "text", kTot = 2, iters = 2, topK = 4)
       .collect().map(r => (r.getLong(0), r.getString(2), r.getLong(3)))
     val top = out.groupBy(_._1).map { case (t, rs) =>
       t -> rs.sortBy(-_._3).take(2).map(_._2).toSet
@@ -321,9 +321,9 @@ class ClusteringSpec extends SparkSpec {
     assert(out.forall(r => !seeds.contains(r._3)), out.mkString(","))
     // partitioning determinism (integer state; the only double is the
     // fixed-parenthesization rho blend rounded once per cell)
-    val a = Clustering.onlineLdaTopics(docs.repartition(1), "doc_id", "text", 2, 4)
+    val a = Clustering.onlineLdaTopicsK(docs.repartition(1), "doc_id", "text", 2, 2, 4)
       .orderBy("topic", "rnk").collect()
-    val b = Clustering.onlineLdaTopics(docs.repartition(7, col("doc_id")), "doc_id", "text", 2, 4)
+    val b = Clustering.onlineLdaTopicsK(docs.repartition(7, col("doc_id")), "doc_id", "text", 2, 2, 4)
       .orderBy("topic", "rnk").collect()
     assert(a.toSeq === b.toSeq)
   }

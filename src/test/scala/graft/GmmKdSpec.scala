@@ -3,20 +3,12 @@ package graft
 import graft.ext.{Clustering, GmmKd}
 import org.apache.spark.sql.functions._
 
-/** Joint (d, K) GMM pins: the generated text must reproduce BOTH
-  * historical arities' fitted output exactly — (1-D, K = 3) against
-  * gmmFit1dK3 and (2-D, K = 2) against gmmFit2d — and the new joint
-  * (2-D, K = 3) point must recover a planted anisotropic 3-mixture. */
+/** Joint (d, K) GMM: the (2, 2) point must reproduce Clustering.gmmFit2d's
+  * fitted output exactly (s96 keeps that member), planted mixtures at the
+  * (2, 3), (1, 4), (2, 4) and (3, 2) points must be recovered, and the
+  * arity guards must hold. The (1, 3) point is covered by
+  * ClusteringSpec's gmm k=3 tests. */
 class GmmKdSpec extends SparkSpec {
-
-  // three 1-D clusters with different spreads, asymmetric sizes
-  private def xs1d = {
-    import spark.implicits._
-    val pts = (1 to 120).map(i => 10L + (i % 5)) ++
-      (1 to 80).map(i => 52L + (i % 9)) ++
-      (1 to 40).map(i => 103L + (i % 13))
-    pts.map(Tuple1(_)).toDF("x")
-  }
 
   // two anisotropic 2-D clusters (milli units), correlated differently
   private def xs2d = {
@@ -40,12 +32,6 @@ class GmmKdSpec extends SparkSpec {
     val b = (1 to 90).map { i => (52000L + (i % 7) * 800L, 10000L - (i % 7) * 600L + (i % 5) * 700L) }
     val c = (1 to 60).map { i => (99000L + (i % 5) * 400L, 70000L + (i % 5) * 1200L + (i % 3) * 1100L) }
     (a ++ b ++ c).toDF("x", "y")
-  }
-
-  test("(1, 3) reproduces gmmFit1dK3's fitted output exactly") {
-    val legacy = Clustering.gmmFit1dK3(xs1d, iters = 3).orderBy("comp").collect().toSeq
-    val joint = GmmKd.gmmFitKd(xs1d, d = 1, kTot = 3, iters = 3).orderBy("comp").collect().toSeq
-    assert(joint === legacy)
   }
 
   test("(2, 2) reproduces gmmFit2d's fitted output exactly") {

@@ -253,38 +253,33 @@ class LearnSpec extends SparkSpec {
       val (g1, g2) = du(t); val (gv1, gv2) = dv(t)
       (t, rank(t) + 1, upd(u1, g1), upd(u2, g2), upd(v1, gv1), upd(v2, gv2))
     }
-    val got = Learn.word2vec(docs, "doc_id", "text", vocabN = 30, topK = 20)
+    val got = Learn.word2vecD(docs, "doc_id", "text", vocabN = 30, topK = 20, dims = 2)
       .orderBy("rnk").collect()
       .map(r => (r.getString(0), r.getLong(1), r.getLong(2), r.getLong(3),
         r.getLong(4), r.getLong(5)))
     assert(got.toSeq === want)
     // partitioning determinism
-    val a = Learn.word2vec(docs.repartition(1), "doc_id", "text").orderBy("rnk").collect()
-    val b = Learn.word2vec(docs.repartition(7, col("doc_id")), "doc_id", "text")
+    val a = Learn.word2vecD(docs.repartition(1), "doc_id", "text", dims = 2).orderBy("rnk").collect()
+    val b = Learn.word2vecD(docs.repartition(7, col("doc_id")), "doc_id", "text", dims = 2)
       .orderBy("rnk").collect()
     assert(a.toSeq === b.toSeq)
   }
 
-  test("word2vecD at dims = 2 reproduces the legacy word2vec output; dims = 3 widens") {
+  test("word2vecD at dims = 3 keeps the dims = 2 vocabulary and widens the vectors") {
     import spark.implicits._
     val docs = Seq((1L, "a b c"), (2L, "b d e"), (3L, "a c e a"),
       (4L, "d c b"), (5L, "e a d b"))
       .toDF("doc_id", "text")
-    // init text at dims = 2 is the legacy Seq string-for-string
-    assert(Learn.w2vInitExprsD(2) === Learn.w2vInitExprs)
-    val legacy = Learn.word2vec(docs, "doc_id", "text", vocabN = 30, topK = 20)
-      .orderBy("rnk").collect().toSeq
     val d2 = Learn.word2vecD(docs, "doc_id", "text", vocabN = 30, topK = 20, dims = 2)
       .orderBy("rnk").collect().toSeq
-    assert(d2 === legacy)
     // dims = 3: same vocabulary/ranks, wider vectors, every third
     // component live (the sign-diverse init leaves it nonzero for some
     // token, and the update machinery touches it)
     val d3 = Learn.word2vecD(docs, "doc_id", "text", vocabN = 30, topK = 20, dims = 3)
       .orderBy("rnk").collect()
     assert(d3.map(r => (r.getString(0), r.getLong(1))).toSeq ===
-      legacy.map(r => (r.getString(0), r.getLong(1))))
-    assert(d3.length === legacy.length && d3.head.length === 8)
+      d2.map(r => (r.getString(0), r.getLong(1))))
+    assert(d3.length === d2.length && d3.head.length === 8)
     assert(d3.exists(_.getLong(4) !== 0L), "u3q must carry signal")
     intercept[IllegalArgumentException](
       Learn.word2vecD(docs, "doc_id", "text", dims = 5))

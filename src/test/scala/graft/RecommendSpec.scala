@@ -24,7 +24,7 @@ class RecommendSpec extends SparkSpec {
   }
 
   test("als completes every user's held-out in-block item as the top recommendation") {
-    val (users, items) = Recommend.als(ratings, iters = 4)
+    val (users, items) = Recommend.alsRank(ratings, rank = 2, iters = 4)
     val rec = Recommend.recommendTop1(ratings, users, items)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     // each user's unrated block partner must beat all cross-block items
@@ -33,7 +33,7 @@ class RecommendSpec extends SparkSpec {
   }
 
   test("recommendTopK scores ALL items (rated included), ranks k per user, exact dot products") {
-    val (users, items) = Recommend.als(ratings, iters = 4)
+    val (users, items) = Recommend.alsRank(ratings, rank = 2, iters = 4)
     val topAll = Recommend.recommendTopK(users, items, k = 100)
       .collect()
     // every (user, item) pair is scored — recommendProducts does NOT
@@ -58,7 +58,7 @@ class RecommendSpec extends SparkSpec {
   test("first user solve matches a driver-side re-derivation exactly (quantized parity)") {
     val Q = Recommend.QuantScale.toDouble
     val lam = Recommend.Lambda
-    // init factors exactly as initItemFactors does
+    // init factors exactly as initFactorExprsK(2, "i") does
     def init(i: Long): (Long, Long) =
       (Recommend.QuantScale + (i % 7) * (Recommend.QuantScale / 8),
         ((i % 5) - 2) * (Recommend.QuantScale / 4))
@@ -80,7 +80,7 @@ class RecommendSpec extends SparkSpec {
       u -> (quant(((va22 * vb1) - (va12 * vb2)) / det),
         quant(((va11 * vb2) - (va12 * vb1)) / det))
     }
-    val (users, _) = Recommend.als(ratings, iters = 1)
+    val (users, _) = Recommend.alsRank(ratings, rank = 2, iters = 1)
     // iters=1 runs user-solve(init items) then item-solve; users is the
     // first half-step's output, directly comparable
     val got = users.collect().map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2))).toMap
@@ -101,7 +101,7 @@ class RecommendSpec extends SparkSpec {
     // the clamp must actually fire: the unconstrained fit on the same
     // data goes negative somewhere (sign-diverse init), so the two
     // factor sets differ
-    val (uu, ui) = Recommend.als(planted, iters = 3)
+    val (uu, ui) = Recommend.alsRank(planted, rank = 2, iters = 3)
     val uuF = uu.collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
     val clampedDiffers =
       uuF != nu.collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
@@ -130,14 +130,14 @@ class RecommendSpec extends SparkSpec {
   }
 
   test("als factors are deterministic across partitionings") {
-    val (u1, i1) = Recommend.als(ratings.repartition(1), iters = 2)
-    val (u7, i7) = Recommend.als(ratings.repartition(7, col("i")), iters = 2)
+    val (u1, i1) = Recommend.alsRank(ratings.repartition(1), rank = 2, iters = 2)
+    val (u7, i7) = Recommend.alsRank(ratings.repartition(7, col("i")), rank = 2, iters = 2)
     assert(u1.orderBy("u").collect().toSeq === u7.orderBy("u").collect().toSeq)
     assert(i1.orderBy("i").collect().toSeq === i7.orderBy("i").collect().toSeq)
   }
 
   test("recommendTop1 never surfaces an already-rated pair") {
-    val (users, items) = Recommend.als(ratings, iters = 2)
+    val (users, items) = Recommend.alsRank(ratings, rank = 2, iters = 2)
     val rated = ratings.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     Recommend.recommendTop1(ratings, users, items).collect().foreach { r =>
       assert(!rated.contains((r.getLong(0), r.getLong(1))))
@@ -240,8 +240,8 @@ class RecommendSpec extends SparkSpec {
   }
 
   test("alternating solves reduce reconstruction error on the training set") {
-    val (u1, i1) = Recommend.als(ratings, iters = 1)
-    val (u2, i2) = Recommend.als(ratings, iters = 2)
+    val (u1, i1) = Recommend.alsRank(ratings, rank = 2, iters = 1)
+    val (u2, i2) = Recommend.alsRank(ratings, rank = 2, iters = 2)
     def sse(users: org.apache.spark.sql.DataFrame,
             items: org.apache.spark.sql.DataFrame): Double = {
       val q2 = (Recommend.QuantScale * Recommend.QuantScale).toDouble
@@ -285,14 +285,14 @@ class RecommendSpec extends SparkSpec {
       u -> (quant(((va22 * vb1) - (va12 * vb2)) / det),
         quant(((va11 * vb2) - (va12 * vb1)) / det))
     }
-    val (users, _) = Recommend.alsImplicit(ratings, iters = 1, alpha = alpha)
+    val (users, _) = Recommend.alsImplicitRank(ratings, rank = 2, iters = 1, alpha = alpha)
     val got = users.collect().map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2))).toMap
     assert(got === expected)
   }
 
   test("implicit als factors are deterministic across partitionings and score in-block higher") {
-    val (u1, i1) = Recommend.alsImplicit(ratings.repartition(1), iters = 2)
-    val (u7, i7) = Recommend.alsImplicit(ratings.repartition(7, col("i")), iters = 2)
+    val (u1, i1) = Recommend.alsImplicitRank(ratings.repartition(1), rank = 2, iters = 2)
+    val (u7, i7) = Recommend.alsImplicitRank(ratings.repartition(7, col("i")), rank = 2, iters = 2)
     assert(u1.orderBy("u").collect().toSeq === u7.orderBy("u").collect().toSeq)
     assert(i1.orderBy("i").collect().toSeq === i7.orderBy("i").collect().toSeq)
     // user 1 (block A: items 10-12, weak link to 20) must score its
@@ -302,26 +302,6 @@ class RecommendSpec extends SparkSpec {
     def score(u: Long, i: Long) = uf(u)._1 * fi(i)._1 + uf(u)._2 * fi(i)._2
     assert(score(1L, 12L) > score(1L, 22L),
       s"in-block preference lost: ${score(1L, 12L)} vs ${score(1L, 22L)}")
-  }
-
-  test("alsRank at rank 2 reproduces the Cramer machinery's quantized state") {
-    // Cramer and the generated elimination layers are the same SPD solve
-    // in reassociated IEEE order; the 2^16 quantization after EVERY solve
-    // absorbs the ulp seam, so the factor tables must match exactly —
-    // per half-step, across the full alternation.
-    val (uC, iC) = Recommend.als(ratings, iters = 4)
-    val (uK, iK) = Recommend.alsRank(ratings, rank = 2, iters = 4)
-    assert(uC.orderBy("u").collect().toSeq === uK.orderBy("u").collect().toSeq)
-    assert(iC.orderBy("i").collect().toSeq === iK.orderBy("i").collect().toSeq)
-  }
-
-  test("initFactorExprsK rank-2 slice equals initItemFactors value-for-value") {
-    val viaExprs = ratings.select("i").distinct()
-      .selectExpr("i" +: Recommend.initFactorExprsK(2, "i"): _*)
-      .orderBy("i").collect().toSeq
-    val legacy = Recommend.initItemFactors(ratings)
-      .orderBy("i").collect().toSeq
-    assert(viaExprs === legacy)
   }
 
   test("alsRank at rank 3 still completes held-out in-block items; guards reject bad args") {
@@ -339,11 +319,7 @@ class RecommendSpec extends SparkSpec {
     intercept[IllegalArgumentException](Recommend.alsSolveLayersK(3, -0.1))
   }
 
-  test("alsImplicitRank at rank 2 reproduces alsImplicit's quantized state; rank 3 scores in-block") {
-    val (uC, iC) = Recommend.alsImplicit(ratings, iters = 2)
-    val (uK, iK) = Recommend.alsImplicitRank(ratings, rank = 2, iters = 2)
-    assert(uC.orderBy("u").collect().toSeq === uK.orderBy("u").collect().toSeq)
-    assert(iC.orderBy("i").collect().toSeq === iK.orderBy("i").collect().toSeq)
+  test("alsImplicitRank at rank 3 still scores held-out in-block items higher") {
     val (u3, i3) = Recommend.alsImplicitRank(ratings, rank = 3, iters = 2)
     val uf = u3.collect().map(r => r.getLong(0) -> Seq(r.getLong(1), r.getLong(2), r.getLong(3))).toMap
     val fi = i3.collect().map(r => r.getLong(0) -> Seq(r.getLong(1), r.getLong(2), r.getLong(3))).toMap
