@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 /** Headline benchmark. Contention-proof by construction (round-5 verdict
   * item 1): `bench_out.json` is rewritten after EVERY query, so a
   * timeout-killed run still leaves a parseable artifact with per-query
@@ -145,6 +144,14 @@ object Bench {
     // survives instead.
     val outPath = java.nio.file.Paths.get(
       sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "/root/repo/bench_out.json"))
+    // The full per-query JSON is ~6 KB — past the driver's stdout tail
+    // capture, so rounds 1-4 recorded "parsed": null. The full record
+    // lives in bench_out.json; stdout's single JSON line stays SHORT.
+    def summaryLine(): String = {
+      val total = if (results.nonEmpty) results.values.sum else 0.0
+      val (ht, hn) = headlineOf(results)
+      s"""{"metric":"total","value":$total,"unit":"sec","sf":"$sfDir","queries_file":"$outPath","n_queries":${results.size},"n_errors":${errors.size},"headline_total":$ht,"headline_n":$hn}"""
+    }
     def flush(): Unit = {
       val tmp = outPath.resolveSibling(outPath.getFileName.toString + ".tmp")
       java.nio.file.Files.writeString(tmp, summaryJson())
@@ -161,31 +168,41 @@ object Bench {
     // Block-manager hygiene between timed runs (GraftSession.sweepBlocks
     // scaladoc has the full rationale): every query starts from the same
     // clean block manager.
+    // Each timed iteration runs under the per-query wall budget that
+    // Verify has (QueryBudget): an overrun records a TIMEOUT error row.
     // Returns (completed timings, error): a failure on iteration k still
     // returns the k-1 completed timings, so an extra adjudication
     // iteration's transient failure never erases a valid measurement.
-    def timeQuery(run: () => Unit, iters: Int): (Seq[Double], Option[String]) = {
+    val budgetMs = QueryBudget.budgetMs
+    def timeQuery(name: String, iters: Int): (Seq[Double], Option[String]) = {
       var err: Option[String] = None
       val times = (1 to iters).flatMap { _ =>
         if (err.isDefined) None
         else {
           GraftSession.sweepBlocks(spark)
           val t0 = System.nanoTime()
-          try { run(); Some((System.nanoTime() - t0) / 1e9) }
-          catch {
-            case e: Throwable =>
-              err = Some(s"${e.getClass.getSimpleName}: ${String.valueOf(e.getMessage).take(200)}")
-              None
+          val outcome = QueryBudget.run(spark, s"bench-$name", budgetMs) {
+            queries(name)(spark, sfDir).write.format("noop").mode("overwrite").save()
           }
+          val t = (System.nanoTime() - t0) / 1e9
+          err = QueryBudget.errorOf(outcome, budgetMs)
+          if (outcome == QueryBudget.Stuck) {
+            // a cancelled query still running would share the session
+            // with every later timing: keep what is measured and stop
+            errors(name) = err.get
+            println(s"# $name ERROR ${errors(name)}")
+            flush()
+            println(summaryLine())
+            sys.exit(3)
+          }
+          if (err.isEmpty) Some(t) else None
         }
       }
       (times, err)
     }
-    def runOf(fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): () => Unit =
-      () => fn(spark, sfDir).write.format("noop").mode("overwrite").save()
 
-    queries.foreach { case (name, fn) =>
-      var (times, err) = timeQuery(run = runOf(fn), iters = 2)
+    queries.keys.foreach { name =>
+      var (times, err) = timeQuery(name, iters = 2)
       // Suspect-spike re-time (scaladoc above): a min-of-2 more than 3x the
       // committed reference gets one extra iteration — contention bursts on
       // this box last seconds, so the third sample usually lands normal and
@@ -194,7 +211,7 @@ object Bench {
       // look once the suite stops competing for the box).
       val prev = prevTimes.get(name)
       if (err.isEmpty && spiked(prev, times.min)) {
-        val (extra, _) = timeQuery(run = runOf(fn), iters = 1)
+        val (extra, _) = timeQuery(name, iters = 1)
         times = times ++ extra // extra-iteration failure keeps the 2 good samples
         if (extra.isEmpty || spiked(prev, times.min)) suspects += name
       }
@@ -222,7 +239,7 @@ object Bench {
       val flagged = suspects.toList
       suspects.clear()
       flagged.foreach { name =>
-        val (times, _) = timeQuery(run = runOf(queries(name)), iters = 2)
+        val (times, _) = timeQuery(name, iters = 2)
         if (times.nonEmpty) {
           val merged = math.min(results(name), times.min)
           results(name) = merged
@@ -249,12 +266,7 @@ object Bench {
       java.nio.file.Files.copy(outPath, outPath.resolveSibling(stamped),
         java.nio.file.StandardCopyOption.REPLACE_EXISTING)
     } catch { case _: Throwable => () }
-    // The full per-query JSON is ~6 KB — past the driver's stdout tail
-    // capture, so rounds 1-4 recorded "parsed": null. The full record
-    // lives in bench_out.json; stdout's single JSON line stays SHORT.
-    val total = if (results.nonEmpty) results.values.sum else 0.0
-    val (ht, hn) = headlineOf(results)
-    println(s"""{"metric":"total","value":$total,"unit":"sec","sf":"$sfDir","queries_file":"$outPath","n_queries":${results.size},"n_errors":${errors.size},"headline_total":$ht,"headline_n":$hn}""")
+    println(summaryLine())
     spark.stop()
   }
 }

@@ -852,36 +852,47 @@ object Learn {
     if (Math.floor(x) <= Long.MaxValue && Math.ceil(x) >= Long.MinValue) x.toLong
     else throw new ArithmeticException(s"CAST($x AS BIGINT) overflows")
 
+  /** The forward pass of the packed row at offset `r` under weights `w`:
+    * fills `hid` with the micro hidden activations h_1..h_h
+    * ([[mlpHiddenExprDh]], fold-left affine) and returns the micro output
+    * o ([[mlpOutExprH]], reduce-left). Training and scoring share it, and
+    * each value is its SQL string's, operation for operation (see
+    * [[mlpFitDh]]). */
+  private def mlpForward(rows: Array[Long], r: Int, w: Array[Long], d: Int, h: Int,
+                         hid: Array[Long]): Long = {
+    import Math.{addExact, multiplyExact}
+    val (width, v0) = (d + 1, h * (d + 1))
+    var j = 0
+    while (j < h) {
+      var a = w(j * width)
+      var i = 1
+      while (i <= d) { a = addExact(a, multiplyExact(w(j * width + i), rows(r + i - 1))); i += 1 }
+      hid(j) = sqlLong(sqlRound(1000000.0 / (1.0 + StrictMath.exp(-(a.toDouble / 65536.0)))))
+      j += 1
+    }
+    var s = multiplyExact(w(v0 + 1), hid(0))
+    j = 1
+    while (j < h) { s = addExact(s, multiplyExact(w(v0 + 1 + j), hid(j))); j += 1 }
+    sqlLong(sqlRound(1000000.0 / (1.0 + StrictMath.exp(
+      -(addExact(multiplyExact(w(v0), 1000000L), s).toDouble / 65536000000.0)))))
+  }
+
   /** Adds the gradient sums of one partition's packed rows (x1..xd, yq
-    * repeated) under weights `w` into `acc`, whose layout is n, gv0..gvh,
-    * then g_j0..g_jd per hidden unit j: the weight layout of
-    * [[mlpWeightColsDh]] shifted by 2 + h, with v0q..vhq mapped to
-    * gv0..gvh. Each value is its SQL string's, operation for operation
-    * (see [[mlpFitDh]]). */
+    * first in each row of `stride` longs, see [[mlpPack]]) under weights
+    * `w` into `acc`, whose layout is n, gv0..gvh, then g_j0..g_jd per
+    * hidden unit j: the weight layout of [[mlpWeightColsDh]] shifted by
+    * 2 + h, with v0q..vhq mapped to gv0..gvh. */
   private def mlpGradSums(acc: Array[Long], rows: Array[Long], w: Array[Long],
-                          d: Int, h: Int): Array[Long] = {
+                          d: Int, h: Int, stride: Int): Array[Long] = {
     import Math.{addExact, multiplyExact}
     val (width, v0, g0) = (d + 1, h * (d + 1), 2 + h)
     val hid = new Array[Long](h)
     var r = 0
     while (r < rows.length) {
-      var j = 0
-      while (j < h) { // mlpHiddenExprDh
-        var a = w(j * width)
-        var i = 1
-        while (i <= d) { a = addExact(a, multiplyExact(w(j * width + i), rows(r + i - 1))); i += 1 }
-        hid(j) = sqlLong(sqlRound(1000000.0 / (1.0 + StrictMath.exp(-(a.toDouble / 65536.0)))))
-        j += 1
-      }
-      var s = multiplyExact(w(v0 + 1), hid(0)) // mlpOutExprH
-      j = 1
-      while (j < h) { s = addExact(s, multiplyExact(w(v0 + 1 + j), hid(j))); j += 1 }
-      val o = sqlLong(sqlRound(1000000.0 / (1.0 + StrictMath.exp(
-        -(addExact(multiplyExact(w(v0), 1000000L), s).toDouble / 65536000000.0)))))
-      val dlt = Math.subtractExact(rows(r + d), o)
+      val dlt = Math.subtractExact(rows(r + d), mlpForward(rows, r, w, d, h, hid))
       acc(0) = addExact(acc(0), 1L)
       acc(1) = addExact(acc(1), dlt)
-      j = 0
+      var j = 0
       while (j < h) {
         val hm = hid(j).toDouble / 1000000.0 // mlpHidDeltaExpr
         val dh = sqlLong(sqlRound(
@@ -893,7 +904,7 @@ object Learn {
         while (i <= d) { acc(b + i) = addExact(acc(b + i), multiplyExact(dh, rows(r + i - 1))); i += 1 }
         j += 1
       }
-      r += width
+      r += stride
     }
     acc
   }
@@ -910,12 +921,70 @@ object Learn {
     }
   }
 
+  /** Reads the BIGINT columns x1..xd and yq of `feats`, plus `idCol` when
+    * given, once into a persisted RDD: one packed array of longs per
+    * partition. A row is x1..xd, yq, and with an id column two more longs:
+    * 1 if the id is non-null (else 0), then the id (0 when null). A
+    * non-BIGINT column, or a null in x1..xd or yq, raises
+    * IllegalArgumentException naming the column; `who` names the caller. */
+  private def mlpPack(feats: DataFrame, d: Int, idCol: Option[String],
+                      who: String): org.apache.spark.rdd.RDD[Array[Long]] = {
+    val cols = (1 to d).map(i => s"x$i") :+ "yq"
+    (cols ++ idCol).foreach(c => require(feats.schema(c).dataType == LongType,
+      s"$who: column $c is ${feats.schema(c).dataType.sql}, not BIGINT"))
+    val withId = idCol.isDefined
+    feats.select((cols ++ idCol).map(col): _*).queryExecution.toRdd.mapPartitions { it =>
+      val packed = new scala.collection.mutable.ArrayBuilder.ofLong
+      it.foreach { r =>
+        for (k <- cols.indices) {
+          if (r.isNullAt(k))
+            throw new IllegalArgumentException(s"$who: column ${cols(k)} holds a null")
+          packed += r.getLong(k)
+        }
+        if (withId) {
+          val isNull = r.isNullAt(cols.length)
+          packed += (if (isNull) 0L else 1L)
+          packed += (if (isNull) 0L else r.getLong(cols.length))
+        }
+      }
+      Iterator.single(packed.result())
+    }.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+  }
+
+  /** `iters` steps from [[mlpInitValsDh]] over the packed `rows` (rows of
+    * `stride` longs): each step is ONE `treeAggregate` of the
+    * [[mlpGradSums]], then [[mlpUpdate]] on the driver. */
+  private def mlpTrain(rows: org.apache.spark.rdd.RDD[Array[Long]], stride: Int,
+                       d: Int, h: Int, iters: Int, lr: Double): Array[Long] =
+    (1 to iters).foldLeft(mlpInitValsDh(d, h).toArray) { (w, _) =>
+      val g = rows.treeAggregate(new Array[Long](2 + h + h * (d + 1)))(
+        (acc, part) => mlpGradSums(acc, part, w, d, h, stride),
+        (a, b) => { for (k <- a.indices) a(k) = Math.addExact(a(k), b(k)); a })
+      // no rows: the SQL update is NULL, and there is no row to score
+      if (g(0) == 0L) w else mlpUpdate(w, g, h, lr)
+    }
+
+  /** Runs `body` over the packed `rows`, then unpersists them. A task's
+    * input or overflow error surfaces as itself, not as Spark's job-abort
+    * wrapper. */
+  private def mlpOver[T](rows: org.apache.spark.rdd.RDD[Array[Long]])(body: => T): T =
+    try body
+    catch {
+      case e: org.apache.spark.SparkException
+          if e.getCause.isInstanceOf[IllegalArgumentException] ||
+            e.getCause.isInstanceOf[ArithmeticException] => throw e.getCause
+    } finally rows.unpersist(blocking = false)
+
+  private def mlpCheckSize(d: Int, h: Int, who: String): Unit =
+    require(d >= 2 && d <= 4 && h >= 2 && h <= 4,
+      s"$who: (d, h) = ($d, $h) outside [2, 4] x [2, 4]")
+
   /** Train `iters` full-batch backprop steps at (d, h) over the BIGINT
     * columns x1..xd and yq of `feats`; returns the fitted weights in
     * [[mlpWeightColsDh]] order, starting from [[mlpInitValsDh]].
     *
-    * The rows are read once into a persisted RDD (one packed array of
-    * longs per partition). Each step is then ONE `treeAggregate` of the
+    * The rows are read once into a persisted RDD ([[mlpPack]] without an
+    * id column). Each step is then ONE `treeAggregate` of the
     * 1 + (h+1) + h(d+1) exact sums — n, gv0..gvh and the g_ji — followed
     * by the weight update on the driver: the shape of the reference's
     * optimizers (mllib GradientDescent.runMiniBatchSGD runs one
@@ -923,14 +992,15 @@ object Learn {
     * Catalyst because a step written as SQL is a planned, code-generated
     * and checkpointed query that AQE runs as several stage jobs, while the
     * work is one pass over the rows; a SQL step's fixed cost is most of a
-    * small fit's time.
+    * small fit's time. `iters = 0` returns the init weights and reads no
+    * row.
     *
     * The arithmetic repeats the SQL step's formula strings operation for
     * operation, so the weights are the ones those strings compute (the
     * DuckDB oracle runs them; MlpDhSpec compares against the SQL step in
     * Spark):
-    *   - per row: h_j = [[mlpHiddenExprDh]] (fold-left affine),
-    *     o = [[mlpOutExprH]] (reduce-left), dlt = yq − o and
+    *   - per row ([[mlpForward]]): h_j = [[mlpHiddenExprDh]] (fold-left
+    *     affine), o = [[mlpOutExprH]] (reduce-left); then dlt = yq − o and
     *     dh_j = [[mlpHidDeltaExpr]];
     *   - sums: gv0 = Σ dlt, gv_j = Σ dlt·h_j, g_j0 = Σ dh_j,
     *     g_ji = Σ dh_j·x_i;
@@ -946,56 +1016,66 @@ object Learn {
     * A null in x1..xd or yq raises IllegalArgumentException naming the
     * column (the SQL step would drop such a row from every sum but n). */
   def mlpFitDh(feats: DataFrame, d: Int, h: Int, iters: Int, lr: Double): Seq[Long] = {
-    require(d >= 2 && d <= 4 && h >= 2 && h <= 4,
-      s"mlpFitDh: (d, h) = ($d, $h) outside [2, 4] x [2, 4]")
+    mlpCheckSize(d, h, "mlpFitDh")
     if (iters == 0) return mlpInitValsDh(d, h)
-    val cols = (1 to d).map(i => s"x$i") :+ "yq"
-    cols.foreach(c => require(feats.schema(c).dataType == LongType,
-      s"mlpFitDh: column $c is ${feats.schema(c).dataType.sql}, not BIGINT"))
-    val rows = feats.select(cols.map(col): _*).queryExecution.toRdd.mapPartitions { it =>
-      val packed = new scala.collection.mutable.ArrayBuilder.ofLong
-      it.foreach { r =>
-        for (k <- cols.indices) {
-          if (r.isNullAt(k))
-            throw new IllegalArgumentException(s"mlpFitDh: column ${cols(k)} holds a null")
-          packed += r.getLong(k)
-        }
-      }
-      Iterator.single(packed.result())
-    }.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try (1 to iters).foldLeft(mlpInitValsDh(d, h).toArray) { (w, _) =>
-      val g = rows.treeAggregate(new Array[Long](2 + h + h * (d + 1)))(
-        (acc, part) => mlpGradSums(acc, part, w, d, h),
-        (a, b) => { for (k <- a.indices) a(k) = Math.addExact(a(k), b(k)); a })
-      // no rows: the SQL update is NULL, and there is no row to score
-      if (g(0) == 0L) w else mlpUpdate(w, g, h, lr)
-    }.toSeq
-    catch {
-      // a task's input or overflow error, not Spark's job-abort wrapper
-      case e: org.apache.spark.SparkException
-          if e.getCause.isInstanceOf[IllegalArgumentException] ||
-            e.getCause.isInstanceOf[ArithmeticException] => throw e.getCause
-    } finally rows.unpersist(blocking = false)
+    val rows = mlpPack(feats, d, None, "mlpFitDh")
+    mlpOver(rows)(mlpTrain(rows, d + 1, d, h, iters, lr).toSeq)
   }
 
-  /** Train `iters` steps at (d, h) with [[mlpFitDh]], then score the
-    * cohort: emits (id, label, h1..hh, o_micro, pred). The fitted weights
-    * enter the scoring projection as a one-row local relation. */
+  /** Train `iters` steps at (d, h) as [[mlpFitDh]] does, then score the
+    * cohort — the rows whose BIGINT `idCol` is ≤ `cohort`; a null id
+    * leaves it, as SQL's `idCol <= cohort` drops it, but its row still
+    * trains. Emits (id, label, h1..hh, o_micro, pred) sorted by id, where
+    * label = `CAST(yq DIV 1000000 AS BIGINT)`, h_j and o_micro are the
+    * forward pass under the fitted weights ([[mlpHiddenExprDh]],
+    * [[mlpOutExprH]]) and pred = `o_micro >= 500000` as 1/0.
+    *
+    * The rows, ids included, are packed once ([[mlpPack]]); the training
+    * steps and then one more pass, one task per packed partition, run
+    * over that cached copy, and scoring goes through the same
+    * [[mlpForward]] as training.
+    * The scored cohort is collected, sorted by id on the driver and
+    * returned as a local relation, so the feature query is planned once
+    * and an action on the result starts no Spark job. The schema is the
+    * SQL scoring projection's (MlpDhSpec.sqlScore): the id field of
+    * `feats.schema`, nullable BIGINT label, h1..hh and o_micro, and a
+    * non-nullable BIGINT pred.
+    *
+    * A null in x1..xd or yq raises IllegalArgumentException at any
+    * `iters`, as does a non-BIGINT column; an overflow while scoring
+    * raises ArithmeticException like one while training. */
   def mlpFitPredictDh(feats: DataFrame, d: Int, h: Int, iters: Int,
                       lr: Double, idCol: String, cohort: Long): DataFrame = {
-    val w = feats.sparkSession.createDataFrame(
-      java.util.List.of(Row.fromSeq(mlpFitDh(feats, d, h, iters, lr))),
-      StructType(mlpWeightColsDh(d, h).map(StructField(_, LongType))))
-    val hs = (1 to h).map(j => s"h$j")
-    feats.filter(col(idCol) <= cohort)
-      .crossJoin(broadcast(w))
-      .selectExpr(Seq(idCol, "yq") ++ mlpWeightColsDh(d, h) ++
-        (1 to h).map(j => s"${mlpHiddenExprDh(j, d)} AS h$j"): _*)
-      .selectExpr(Seq(idCol, "CAST(yq DIV 1000000 AS BIGINT) AS label") ++ hs :+
-        s"${mlpOutExprH(h)} AS o_micro": _*)
-      .selectExpr(Seq(idCol, "label") ++ hs ++ Seq("o_micro",
-        "CAST(CASE WHEN o_micro >= 500000 THEN 1 ELSE 0 END AS BIGINT) AS pred"): _*)
-      .orderBy(idCol)
+    mlpCheckSize(d, h, "mlpFitPredictDh")
+    val rows = mlpPack(feats, d, Some(idCol), "mlpFitPredictDh")
+    val (stride, width) = (d + 3, h + 4)
+    val scored = mlpOver(rows) {
+      val w = mlpTrain(rows, stride, d, h, iters, lr)
+      rows.map { part =>
+        val (hid, out) = (new Array[Long](h), new scala.collection.mutable.ArrayBuilder.ofLong)
+        var r = 0
+        while (r < part.length) {
+          val id = part(r + d + 2)
+          if (part(r + d + 1) == 1L && id <= cohort) {
+            val o = mlpForward(part, r, w, d, h, hid)
+            out += id
+            out += part(r + d) / 1000000L
+            out ++= hid
+            out += o
+            out += (if (o >= 500000L) 1L else 0L)
+          }
+          r += stride
+        }
+        out.result()
+      }.collect()
+    }
+    import scala.jdk.CollectionConverters._
+    val out = scored.iterator.flatMap(_.grouped(width)).toSeq.sortBy(_(0))
+      .map(v => Row.fromSeq(v.toSeq))
+    val schema = StructType(feats.schema(idCol) +:
+      (("label" +: (1 to h).map(j => s"h$j") :+ "o_micro").map(StructField(_, LongType)) :+
+        StructField("pred", LongType, nullable = false)))
+    feats.sparkSession.createDataFrame(out.asJava, schema)
   }
 
   // ---- one-vs-rest multiclass reduction (reference ml/classification/

@@ -777,9 +777,15 @@ object Pipeline {
   final case class VectorSlicerStage(inputCol: String, outputCol: String,
                                      indices: Seq[Int]) extends Transformer {
     def transform(df: DataFrame): DataFrame =
-      // element_at is 1-based; indices follow the reference's 0-based API
+      // getItem is 0-based like the reference's API. element_at(v, i + 1)
+      // gave the same values, but once v's projection was collapsed into
+      // it, Spark generated code that declared no null flag for a
+      // non-null element of an array that may hold nulls and then
+      // assigned one: the stage failed to compile and fell back to
+      // interpreted execution (s61). getItem of a literal array
+      // simplifies to the element itself
       df.withColumn(outputCol,
-        array(indices.map(i => element_at(col(inputCol), i + 1)): _*))
+        array(indices.map(i => col(inputCol).getItem(i)): _*))
   }
 
   final case class IndexToStringStage(inputCol: String, outputCol: String,

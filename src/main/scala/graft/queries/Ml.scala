@@ -3270,9 +3270,10 @@ object Ml {
 
     // One exact-integer-sum scan -> graft.ext.Pipeline.Moments2's three
     // formula levels verbatim -> micro-quantized z-scores + projection.
-    // Mirrors of the MLP kernel (Learn.mlpFitDh evaluates these strings
-    // on the JVM; here DuckDB runs them): two unrolled SQL backprop steps
-    // over each query's feats CTE, then the scoring projection.
+    // Mirrors of the MLP kernel (Learn.mlpFitDh and mlpFitPredictDh
+    // evaluate these strings on the JVM; here DuckDB runs them): two
+    // unrolled SQL backprop steps over each query's feats CTE, then the
+    // scoring projection.
     "s44_mlp" -> mlpOracleSql(lrFeatsCte(10, 1000000L), d = 2, h = 2),
     "s112_mlp_dh" -> mlpOracleSql(
       s"""feats AS MATERIALIZED (

@@ -1,14 +1,16 @@
 package graft
 
 import graft.ext.Learn
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
 /** The (d, h) MLP kernel: its fitted weights equal the SQL step chain's
-  * exactly, it rejects null and overflowing input, it runs one Spark job
-  * per training iteration, and a 3-3-1 net separates a parity fixture
-  * whose signal lives on the third feature interaction — a shape the
-  * 2-2-1 net cannot express. */
+  * and its scored cohort the SQL scoring projection's exactly, it rejects
+  * null and overflowing input, it runs one Spark job per training
+  * iteration and none when its result is collected, and a 3-3-1 net
+  * separates a parity fixture whose signal lives on the third feature
+  * interaction — a shape the 2-2-1 net cannot express. */
 class MlpDhSpec extends SparkSpec {
   import MlpDhSpec._
 
@@ -55,15 +57,50 @@ class MlpDhSpec extends SparkSpec {
   private def causes(e: Throwable): Seq[Throwable] =
     Iterator.iterate(e)(_.getCause).takeWhile(_ != null).toSeq
 
-  test("the kernel's fitted weights equal the SQL step chain's exactly") {
-    for ((fixture, name) <- Seq((featsNeg, "signed"), (featsPos, "non-negative"));
+  // the SQL step chain's weights after 0..3 steps for each fixture,
+  // (d, h) and lr, with the fixture's id and feature columns
+  private lazy val sqlRefs: Seq[(String, DataFrame, Int, Int, Double, Seq[Seq[Long]])] =
+    for ((name, fixture) <- Seq(("signed", featsNeg), ("non-negative", featsPos));
          (d, h) <- Seq((2, 2), (3, 3), (4, 2), (2, 4));
-         lr <- Seq(0.5, 1.0, 4.0)) {
-      val f = fixture.select(((1 to d).map(i => s"x$i") :+ "yq").map(col): _*)
-      val ref = sqlFit(f, d, h, 3, lr)
-      for (iters <- Seq(0, 1, 3); parts <- Seq(1, 7))
-        assert(Learn.mlpFitDh(f.repartition(parts), d, h, iters, lr) === ref(iters),
-          s"$name fixture, (d, h) = ($d, $h), lr $lr, $iters iterations, $parts partitions")
+         lr <- Seq(0.5, 1.0, 4.0)) yield {
+      val xy = ((1 to d).map(i => s"x$i") :+ "yq").map(col)
+      val f = fixture.select(col("o_orderkey") +: xy: _*)
+      (name, f, d, h, lr, sqlFit(f.select(xy: _*), d, h, 3, lr))
+    }
+
+  test("the kernel's fitted weights equal the SQL step chain's exactly") {
+    for ((name, f, d, h, lr, ref) <- sqlRefs; iters <- Seq(0, 1, 3); parts <- Seq(1, 7))
+      assert(Learn.mlpFitDh(f.drop("o_orderkey").repartition(parts), d, h, iters, lr) === ref(iters),
+        s"$name fixture, (d, h) = ($d, $h), lr $lr, $iters iterations, $parts partitions")
+  }
+
+  /** Asserts that the kernel's scored cohort equals the SQL scoring
+    * projection's under the reference weights, rows and schema. */
+  private def assertScoresLikeSql(f: DataFrame, ref: Seq[Long], d: Int, h: Int, iters: Int,
+                                  lr: Double, cohort: Long, parts: Int, what: String): Unit = {
+    val want = sqlScore(f, ref, d, h, "o_orderkey", cohort)
+    val got = Learn.mlpFitPredictDh(f.repartition(parts), d, h, iters, lr, "o_orderkey", cohort)
+    assert(got.schema === want.schema, s"$what: schema")
+    assert(got.collect().toSeq === want.collect().toSeq, s"$what: rows")
+  }
+
+  test("the kernel's scored cohort equals the SQL scoring projection exactly, schema included") {
+    for ((name, f, d, h, lr, ref) <- sqlRefs; iters <- Seq(0, 1, 3); parts <- Seq(1, 7))
+      assertScoresLikeSql(f, ref(iters), d, h, iters, lr, 250L, parts,
+        s"$name fixture, (d, h) = ($d, $h), lr $lr, $iters iterations, $parts partitions")
+  }
+
+  test("scoring: a cohort bound inside a partition, and null ids that train but never score") {
+    val f = featsNeg.select("o_orderkey", "x1", "x2", "yq")
+    // every fifth id null: those rows leave the cohort, as SQL's
+    // o_orderkey <= cohort drops them, but still enter the reference fit
+    val holed = f.withColumn("o_orderkey",
+      when(col("o_orderkey") % 5 === 0, lit(null).cast("bigint")).otherwise(col("o_orderkey")))
+    for ((in, what) <- Seq((f, "ids"), (holed, "null ids"))) {
+      val ref = sqlFit(in.drop("o_orderkey"), 2, 2, 2, 1.0)(2)
+      for (parts <- Seq(1, 3); cohort <- Seq(137L, Long.MaxValue))
+        assertScoresLikeSql(in, ref, 2, 2, 2, 1.0, cohort, parts,
+          s"$what, cohort $cohort, $parts partitions")
     }
   }
 
@@ -76,6 +113,9 @@ class MlpDhSpec extends SparkSpec {
         Learn.mlpFitPredictDh(holed, 2, 2, 1, 1.0, "o_orderkey", 10L))
       assert(e.getMessage.contains(s"column $c"), e.getMessage)
     }
+    val intId = intercept[IllegalArgumentException](Learn.mlpFitPredictDh(
+      f.withColumn("o_orderkey", col("o_orderkey").cast("int")), 2, 2, 1, 1.0, "o_orderkey", 10L))
+    assert(intId.getMessage.contains("column o_orderkey"), intId.getMessage)
     // a weight times a feature, a gradient sum over two rows (each
     // dh1·x1 ≈ −5.06e18 fits, their sum does not), and the update's
     // CAST to BIGINT under a huge step
@@ -86,6 +126,12 @@ class MlpDhSpec extends SparkSpec {
       assert(causes(viaSql).exists(_.isInstanceOf[ArithmeticException]), viaSql)
       intercept[ArithmeticException](Learn.mlpFitDh(in, 2, 2, 1, lr))
     }
+    // with no training step the first forward pass is the scoring one
+    val scored = product.withColumn("o_orderkey", lit(1L))
+    val viaSql = intercept[Exception](
+      sqlScore(scored, Learn.mlpInitValsDh(2, 2), 2, 2, "o_orderkey", 10L).collect())
+    assert(causes(viaSql).exists(_.isInstanceOf[ArithmeticException]), viaSql)
+    intercept[ArithmeticException](Learn.mlpFitPredictDh(scored, 2, 2, 0, 1.0, "o_orderkey", 10L))
     // no rows: the SQL chain's weights turn NULL without an error, and
     // the cohort is empty either way
     assert(sqlStep(f.limit(0), sqlInit(spark, 2, 2), 2, 2, 1.0).head().isNullAt(0))
@@ -93,10 +139,12 @@ class MlpDhSpec extends SparkSpec {
   }
 
   test("a fit runs one Spark job per training iteration") {
-    def jobs(iters: Int) = jobsStartedBy {
-      Learn.mlpFitPredictDh(featsNeg, 2, 2, iters, 1.0, "o_orderkey", 400L).collect()
-    }
+    def fit(iters: Int) = Learn.mlpFitPredictDh(featsNeg, 2, 2, iters, 1.0, "o_orderkey", 400L)
+    def jobs(iters: Int) = jobsStartedBy(fit(iters).collect())
     assert(jobs(3) - jobs(1) === 2)
+    // the scored cohort comes back as a local relation
+    val scored = fit(2)
+    assert(jobsStartedBy(scored.collect()) === 0)
   }
 
   test("3-3-1 separates the x1 xor x3 parity; a 2-feature net cannot") {
@@ -117,9 +165,10 @@ class MlpDhSpec extends SparkSpec {
   }
 }
 
-/** The reference Learn.mlpFitDh mirrors: the backprop step as Spark SQL
-  * over the shared formula strings, one 1-row weight frame per step. The
-  * DuckDB oracles of s44 and s112 unroll the same SQL. */
+/** The references Learn.mlpFitDh and Learn.mlpFitPredictDh mirror: the
+  * backprop step as Spark SQL over the shared formula strings, one 1-row
+  * weight frame per step, and the cohort scoring projection. The DuckDB
+  * oracles of s44 and s112 unroll the same SQL. */
 object MlpDhSpec {
 
   def sqlInit(spark: SparkSession, d: Int, h: Int): DataFrame =
@@ -154,6 +203,27 @@ object MlpDhSpec {
         s"${lrUpdExpr(s"w$j${i}q", s"g$j$i", lr)} AS w$j${i}q")) ++
         (s"${lrUpdExpr("v0q", "gv0", lr)} AS v0q" +:
           (1 to h).map(j => s"${mlpUpd12Expr(s"v${j}q", s"gv$j", lr)} AS v${j}q"))): _*)
+  }
+
+  /** The cohort scoring Learn.mlpFitPredictDh mirrors, as Spark SQL over
+    * the shared formula strings: the rows with `idCol` <= `cohort` under
+    * the weights `w` (in mlpWeightColsDh order) as a broadcast 1-row frame,
+    * sorted by id. The DuckDB oracles of s44 and s112 run the same SQL. */
+  def sqlScore(feats: DataFrame, w: Seq[Long], d: Int, h: Int, idCol: String,
+               cohort: Long): DataFrame = {
+    import Learn._
+    val wf = feats.sparkSession.createDataFrame(java.util.List.of(Row.fromSeq(w)),
+      StructType(mlpWeightColsDh(d, h).map(StructField(_, LongType))))
+    val hs = (1 to h).map(j => s"h$j")
+    feats.filter(col(idCol) <= cohort)
+      .crossJoin(broadcast(wf))
+      .selectExpr(Seq(idCol, "yq") ++ mlpWeightColsDh(d, h) ++
+        (1 to h).map(j => s"${mlpHiddenExprDh(j, d)} AS h$j"): _*)
+      .selectExpr(Seq(idCol, "CAST(yq DIV 1000000 AS BIGINT) AS label") ++ hs :+
+        s"${mlpOutExprH(h)} AS o_micro": _*)
+      .selectExpr(Seq(idCol, "label") ++ hs ++ Seq("o_micro",
+        "CAST(CASE WHEN o_micro >= 500000 THEN 1 ELSE 0 END AS BIGINT) AS pred"): _*)
+      .orderBy(idCol)
   }
 
   /** The weights after 0..iters reference steps, in mlpWeightColsDh order. */

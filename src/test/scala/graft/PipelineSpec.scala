@@ -329,6 +329,21 @@ class PipelineSpec extends SparkSpec {
     assert(loaded.transform(df).orderBy("id").collect().toSeq === out.toSeq)
   }
 
+  test("s61 runs under whole-stage codegen with no interpreted fallback") {
+    // the noop sink computes every column; with the fallback off, a
+    // generated class that fails to compile fails the write instead of
+    // silently running interpreted. With VectorSlicerStage on element_at,
+    // s61 compiled on a JVM's first run and failed from its second run on
+    // (the optimizer collapsed the projections differently), so run it
+    // twice
+    val key = "spark.sql.codegen.fallback"
+    val prev = spark.conf.getOption(key)
+    spark.conf.set(key, "false")
+    try for (_ <- 1 to 2) SparkEntry.queries("s61_plumbing_stages")(spark, sf001)
+      .write.format("noop").mode("overwrite").save()
+    finally prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+  }
+
   test("vectorIndexer: zero-first category order, continuous cutoff, unseen -> null") {
     import spark.implicits._
     val df = Seq(
