@@ -301,12 +301,14 @@ object Plans {
         "sort); per-row deviations quantize to exact micro-integers so " +
         "the final max is one map-side-combined aggregate."),
     "s19_logistic_regression" ->
-      ("Full-batch logistic GD: each iteration is ONE scan of the " +
+      ("Full-batch logistic GD on the d-feature kernel at d = 2, run by " +
+        "the shared full-batch loop: each iteration is ONE scan of the " +
         "persisted feature table computing three exact-integer gradient " +
         "sums (map-side combined) against a broadcast 1-row weight table; " +
         "the sigmoid and the quantized update are formula strings shared " +
-        "verbatim with the oracle, and the weight row localCheckpoints so " +
-        "plan depth stays constant across iterations."),
+        "verbatim with the oracle, and the weight row localCheckpoints " +
+        "(lazily, the last one eagerly) so plan depth stays constant " +
+        "across iterations."),
     "s20_decision_tree" ->
       ("Histogram decision tree: per level the HISTOGRAM shuffles (nodes " +
         "x features x bins rows), never the data — one hash aggregate, a " +
@@ -356,7 +358,8 @@ object Plans {
         "the embedding k-means touches only the vertex table. Integer-" +
         "exact end to end — no doubles anywhere in the plan."),
     "s27_linear_svm" ->
-      ("Linear SVM: per hinge step ONE scan with a broadcast 1-row " +
+      ("Linear SVM on the d-feature hinge kernel at d = 2, run by the " +
+        "shared full-batch loop: per hinge step ONE scan with a broadcast 1-row " +
         "weight table — the violator test is an exact integer margin " +
         "compare inside whole-stage codegen, the gradient three " +
         "map-side-combined integer sums; iteration count, not data " +

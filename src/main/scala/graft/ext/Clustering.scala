@@ -911,7 +911,7 @@ object Clustering {
     * sums, then the mean-split conditional sums via [[gmmSplitExpr]]),
     * then `iters` iterations of ONE scan each (responsibilities from the
     * broadcast 1-row state, two exact integer sums) plus a 1-row update
-    * projection, localCheckpointed — the logisticFit2 discipline.
+    * projection, localCheckpointed — the Learn.fullBatch discipline.
     * Returns two rows (comp, weight_micro, mean_milli, n_hard) with
     * n_hard the r ≥ 0.5 hard-assignment count under the FINAL state. */
   def gmmFit1d(xs: DataFrame, iters: Int = 3): DataFrame = {
@@ -1043,7 +1043,7 @@ object Clustering {
     * the global totals, one for the x-mean-split side statistics, then
     * `iters` iterations of ONE scan each (responsibilities from the
     * broadcast 1-row state, six exact sums) plus a 1-row update
-    * projection, localCheckpointed — the gmmFit1d/logisticFit2
+    * projection, localCheckpointed — the gmmFit1d/Learn.fullBatch
     * discipline. Returns two rows (comp, weight_micro, mean_x_milli,
     * mean_y_milli, var_x_micro, cov_xy_micro, var_y_micro, n_hard). */
   def gmmFit2d(xs: DataFrame, iters: Int = 3): DataFrame = {

@@ -280,21 +280,71 @@ object Learn {
       .selectExpr(s"CAST($nn AS BIGINT) AS n", "d_micro")
   }
 
-  // ---- logistic regression (reference mllib/src/main/scala/org/apache/
-  // spark/mllib/classification/LogisticRegression.scala:213 trains by
-  // mllib/optimization/GradientDescent.scala:215's full-gradient loop:
-  // per-iteration one treeAggregate of per-row gradients, then a driver
-  // weight update — exactly the relational shape below) -----------------
+  // ---- the full-batch gradient loop (reference mllib/optimization/
+  // GradientDescent.scala:215 runMiniBatchSGD: ONE loop over a pluggable
+  // Gradient and Updater trains LogisticRegressionWithSGD, SVMWithSGD and
+  // LassoWithSGD alike — per iteration one treeAggregate of per-row
+  // gradients, then a driver weight update). Here the loop is
+  // [[fullBatch]]; each family supplies only its one-step frame. --------
 
-  /** Micro-probability of the positive class under quantized weights —
-    * the sigmoid formula string, shared VERBATIM between the Spark plan
-    * and the oracle (both engines parse the identical text; `exp` is the
-    * one libm call, and the 1e-6 quantization makes a last-ulp engine
-    * difference visible only within ~1e-10 of a rounding boundary — the
-    * s15 micro-nat ln precedent). Expects (w0q, w1q, w2q) quantized
-    * 2^16-unit weights and BIGINT features (x1, x2) in scope. */
-  val lrProbExpr: String =
-    "CAST(round(1000000.0 / (1.0 + exp(-(CAST(((w0q + (w1q * x1)) + (w2q * x2)) AS DOUBLE) / 65536.0)))) AS BIGINT)"
+  /** A weight updater (reference optimization/Updater.scala): iteration t
+    * (from 1), a quantized weight column and its gradient-sum column =>
+    * the updated weight as one SQL expression, shared verbatim with the
+    * oracle. */
+  type Updater = (Int, String, String) => String
+
+  /** `iters` steps from the 1-row state `init`; owns the materialization
+    * policy every full-batch fit shares. The input is persisted with no
+    * eager count (iteration 1's scan populates the cache). Each step's
+    * 1-row state is localCheckpointed LAZILY: its single consumer is the
+    * next step's broadcast, which materializes it inside its own job, so
+    * a per-iteration eager action would be pure driver tax. Only the LAST
+    * checkpoint is eager, materializing the whole chain through the
+    * nested broadcasts in one action before the unpersist. This is safe
+    * because every step frame references its state exactly once (the
+    * state rides THROUGH the gradient aggregate as the max of a broadcast
+    * constant); a second reference would race to materialize the same
+    * lazy frame inside one job (the d18 pattern).
+    *
+    * eagerLast = false hands even the last pin to the caller
+    * ([[oneVsRest]]: its class chains are independent lazy subtrees whose
+    * broadcast cascades then materialize CONCURRENTLY under its one
+    * models-union action; the inner persist is released unmaterialized,
+    * so the chain's scans re-derive the label projection from the
+    * caller's eagerly-populated feature cache — a narrow in-memory map). */
+  private def fullBatch(feats: DataFrame, init: DataFrame, iters: Int,
+                        eagerLast: Boolean = true)(
+      step: (DataFrame, DataFrame, Int) => DataFrame): DataFrame = {
+    val f = feats.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    var w = init.localCheckpoint(false)
+    for (t <- 1 to iters)
+      w = step(f, w, t).localCheckpoint(eagerLast && t == iters)
+    f.unpersist()
+    w
+  }
+
+  /** The zero start (w0q..wdq) of the d-feature linear fits. */
+  def zeroWeights(spark: org.apache.spark.sql.SparkSession, d: Int): DataFrame =
+    spark.range(1).selectExpr((0 to d).map(i => s"CAST(0 AS BIGINT) AS w${i}q"): _*)
+
+  /** The d-feature quantized margin w0q + Σ wiq·xi, left-folded with fixed
+    * parenthesization — shared verbatim with the oracle. */
+  def marginK(d: Int): String =
+    (1 to d).map(i => s"(w${i}q * x$i)").foldLeft("w0q")((a, t) => s"($a + $t)")
+
+  // ---- logistic regression (reference mllib/src/main/scala/org/apache/
+  // spark/mllib/classification/LogisticRegression.scala:213, trained by
+  // the GradientDescent loop above) ---------------------------------------
+
+  /** Micro-probability of the positive class under quantized weights over
+    * d features — the sigmoid formula string, shared VERBATIM between the
+    * Spark plan and the oracle (both engines parse the identical text;
+    * `exp` is the one libm call, and the 1e-6 quantization makes a
+    * last-ulp engine difference visible only within ~1e-10 of a rounding
+    * boundary — the s15 micro-nat ln precedent). Expects (w0q..wdq)
+    * quantized 2^16-unit weights and BIGINT features x1..xd in scope. */
+  def lrProbExprK(d: Int): String =
+    s"CAST(round(1000000.0 / (1.0 + exp(-(CAST(${marginK(d)} AS DOUBLE) / 65536.0)))) AS BIGINT)"
 
   /** One weight's gradient-ascent update in quantized units — the mean
     * gradient (exact micro-integer sum / n) scaled by the constant step,
@@ -302,82 +352,16 @@ object Learn {
   def lrUpdExpr(wq: String, g: String, lr: Double): String =
     s"$wq + CAST(round(($lr * ((CAST($g AS DOUBLE) / 1000000.0) / n)) * 65536.0) AS BIGINT)"
 
-  /** Binary logistic regression, y ~ sigmoid(w0 + w1·x1 + w2·x2), trained
-    * by `iters` FULL-BATCH gradient-ascent iterations on the log
-    * likelihood over a (x1, x2, yq) table (yq the micro-scaled 0/1e6
-    * label). Per iteration: ONE scan of the persisted feature table
-    * computing three exact-integer gradient sums (micro-unit errors times
-    * integer features — map-side combined, bit-identical under any
-    * partitioning), then a 1-row update projection; the weight row is
-    * localCheckpointed so plan depth stays constant (the pregel
-    * discipline). This is GradientDescent.scala's runMiniBatchSGD at
-    * miniBatchFraction = 1.0 re-expressed relationally.
-    *
-    * Deliberate deviations, per the [[Recommend.als]] rationale: weights
-    * quantized to 2^16 units after every update (all cross-partition sums
-    * are exact integers; the one double expression per update has fixed
-    * parenthesization, so DuckDB reproduces every weight bit-for-bit),
-    * and a CONSTANT step instead of the reference's stepSize/sqrt(t)
-    * decay — one fewer engine-shared libm term per iteration, and at
-    * full-batch (no stochastic noise to anneal) the decay buys nothing.
-    *
-    * Returns the 1-row (w0q, w1q, w2q). */
-  /** The zero-weight starting row. */
-  def logisticInit(spark: org.apache.spark.sql.SparkSession): DataFrame =
-    spark.range(1).selectExpr("CAST(0 AS BIGINT) AS w0q",
-      "CAST(0 AS BIGINT) AS w1q", "CAST(0 AS BIGINT) AS w2q")
-
-  /** ONE full-gradient step over `feats` from the 1-row `w`: the shared
-    * unit of [[logisticFit2]]'s batch loop and the streaming variant's
-    * per-micro-batch update (reference mllib/classification/
-    * StreamingLogisticRegressionWithSGD.scala:89 — trainOn re-runs
-    * algorithm.run per batch, i.e. a FULL GradientDescent loop of
-    * numIterations (default 50) seeded from the carried model; v12's
-    * one-step-per-batch form is a deliberate thin-slice deviation —
-    * one oracle-gated update per batch — declared the same way as the
-    * other deviations in this file). */
-  def logisticStep(feats: DataFrame, w: DataFrame, lr: Double): DataFrame = {
-    // r21: the weight row rides THROUGH the gradient aggregate (max of a
-    // broadcast constant = the constant — exact BIGINTs) instead of
-    // re-joining `w` after it, so the step references `w` exactly once.
-    // Single-reference is what makes the lazy-checkpoint chain in
-    // [[logisticFit2]] safe: a second reference would race to
-    // materialize the same lazy frame inside one job (the d18 pattern).
-    feats.crossJoin(broadcast(w))
-      .selectExpr(s"$lrProbExpr AS pq", "yq", "x1", "x2",
-        "w0q", "w1q", "w2q")
-      .agg(count(lit(1)).as("n"),
-        sum(col("yq") - col("pq")).as("g0"),
-        sum((col("yq") - col("pq")) * col("x1")).as("g1"),
-        sum((col("yq") - col("pq")) * col("x2")).as("g2"),
-        max("w0q").as("w0q"), max("w1q").as("w1q"), max("w2q").as("w2q"))
-      .selectExpr(
-        s"${lrUpdExpr("w0q", "g0", lr)} AS w0q",
-        s"${lrUpdExpr("w1q", "g1", lr)} AS w1q",
-        s"${lrUpdExpr("w2q", "g2", lr)} AS w2q")
-  }
-
-  def logisticFit2(feats: DataFrame, iters: Int = 8, lr: Double = 1.0,
-                   eagerLast: Boolean = true): DataFrame = {
-    val f = feats.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // no eager count: iteration 1's gradient scan populates the cache.
-    // r21: the iteration checkpoints are LAZY (each 1-row weight frame's
-    // single consumer is the next step's broadcast, which materializes it
-    // inside its own job — the per-iteration eager action was pure driver
-    // tax); only the LAST step is eager, materializing the whole chain
-    // through the nested broadcasts in one action, before the unpersist.
-    // eagerLast = false hands even that to the caller's own pin
-    // (oneVsRest: the class chains are independent subtrees whose
-    // broadcast cascades then materialize CONCURRENTLY under the one
-    // models-union action; the inner persist is released unmaterialized,
-    // so the chain's scans re-derive the label projection from the
-    // caller's eagerly-populated feature cache — a narrow in-memory map).
-    var w = logisticInit(f.sparkSession).localCheckpoint(false)
-    for (i <- 1 to iters)
-      w = logisticStep(f, w, lr).localCheckpoint(eagerLast && i == iters)
-    f.unpersist()
-    w
-  }
+  /** The constant-step updater ([[lrUpdExpr]]). Deliberate deviations from
+    * the reference, which the quantized fits all share: weights quantized
+    * to 2^16 units after every update (all cross-partition sums are exact
+    * integers; the one double expression per update has fixed
+    * parenthesization, so DuckDB reproduces every weight bit-for-bit), and
+    * a CONSTANT step instead of the reference's stepSize/sqrt(t) decay —
+    * one fewer engine-shared libm term per iteration, and at full batch
+    * (no stochastic noise to anneal) the decay buys nothing
+    * ([[decayL2Step]] is the reference's form). */
+  def constStep(lr: Double): Updater = (_, wq, g) => lrUpdExpr(wq, g, lr)
 
   /** One weight's DECAYED, L2-REGULARIZED ascent update — the
     * reference's two remaining GradientDescent knobs in one expression
@@ -396,118 +380,71 @@ object Learn {
       s" - (CAST($lambda AS DOUBLE) * (CAST($wq AS DOUBLE) / 65536.0)))) * 65536.0) AS BIGINT)"
   }
 
-  /** [[logisticFit2]] under the √t step decay + SquaredL2Updater —
-    * closes the constant-step / no-regularizer declared deviations the
-    * full-batch fits carry. Same scan shape; only the 1-row update
-    * projection changes per iteration. */
-  def logisticFitDecayL2(feats: DataFrame, iters: Int = 8,
-                         lr0: Double = 1.0,
-                         lambda: Double = 0.001): DataFrame = {
-    val f = feats.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // r21: lazy-chained like [[logisticFit2]] — the weight row rides
-    // through the gradient aggregate (single reference), iteration
-    // checkpoints are lazy, only the last is eager; iteration 1's scan
-    // populates the cache.
-    var w = logisticInit(f.sparkSession).localCheckpoint(false)
-    for (t <- 1 to iters) {
-      w = f.crossJoin(broadcast(w))
-        .selectExpr(s"$lrProbExpr AS pq", "yq", "x1", "x2",
-          "w0q", "w1q", "w2q")
-        .agg(count(lit(1)).as("n"),
-          sum(col("yq") - col("pq")).as("g0"),
-          sum((col("yq") - col("pq")) * col("x1")).as("g1"),
-          sum((col("yq") - col("pq")) * col("x2")).as("g2"),
-          max("w0q").as("w0q"), max("w1q").as("w1q"), max("w2q").as("w2q"))
-        .selectExpr(
-          s"${lrUpdDecayL2Expr("w0q", "g0", lr0, t, lambda)} AS w0q",
-          s"${lrUpdDecayL2Expr("w1q", "g1", lr0, t, lambda)} AS w1q",
-          s"${lrUpdDecayL2Expr("w2q", "g2", lr0, t, lambda)} AS w2q")
-        .localCheckpoint(t == iters)
-    }
-    f.unpersist()
-    w
+  /** The √t-decayed, L2-regularized updater ([[lrUpdDecayL2Expr]]). */
+  def decayL2Step(lr0: Double, lambda: Double): Updater =
+    (t, wq, g) => lrUpdDecayL2Expr(wq, g, lr0, t, lambda)
+
+  /** The logistic gradient aggregate: ONE scan of (x1..xd, yq) rows (yq
+    * the micro-scaled 0/1e6 label) under the broadcast 1-row state `w`,
+    * emitting n, the exact-integer gradient sums g0..gd (micro-unit
+    * errors times integer features — map-side combined, bit-identical
+    * under any partitioning) and every column of `w` carried through. */
+  private def lrGradK(feats: DataFrame, w: DataFrame, d: Int): DataFrame = {
+    val st = w.columns.toSeq
+    feats.crossJoin(broadcast(w))
+      .selectExpr(Seq(s"${lrProbExprK(d)} AS pq", "yq") ++
+        (1 to d).map(i => s"x$i") ++ st: _*)
+      .agg(count(lit(1)).as("n"),
+        (sum(col("yq") - col("pq")).as("g0") +:
+          (1 to d).map(i => sum((col("yq") - col("pq")) * col(s"x$i")).as(s"g$i"))) ++
+          st.map(c => max(c).as(c)): _*)
   }
 
-  /** runMiniBatchSGD at miniBatchFraction < 1 — the reference's ACTUAL
-    * stochastic path (optimization/GradientDescent.scala:177: each
-    * iteration `sample`s the fraction and :201 averages the gradient
-    * over the SAMPLE's size; every repo fit so far ran the
-    * fraction = 1.0 degenerate case). Deterministic minibatches,
-    * declared: iteration t takes the hash residue class
-    * (h(id) + t − 1) mod `batches` = 0 — ~1/batches of the rows,
-    * ROTATING so `batches` consecutive iterations cover the corpus
-    * (the seeded Bernoulli sample is exactly what the oracle gate
-    * cannot allow). The per-iteration scan touches only the batch;
-    * at 100 TB that is the whole point of the knob. */
-  def logisticFitMiniBatch(feats: DataFrame, idCol: String,
-                           iters: Int = 8, lr: Double = 1.0,
-                           batches: Int = 4): DataFrame = {
-    val f = feats.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // r21: lazy-chained like [[logisticFit2]] (logisticStep is
-    // single-reference); iteration 1's batch scan populates the cache
-    var w = logisticInit(f.sparkSession).localCheckpoint(false)
-    for (t <- 1 to iters) {
-      val b = f.filter(expr(
-        s"pmod(${Dedup.portableHash(s"cast($idCol as string)", "'sgd'")} + ${t - 1}, $batches) = 0"))
-      w = logisticStep(b, w, lr).localCheckpoint(t == iters)
-    }
-    f.unpersist()
-    w
-  }
+  /** ONE full-gradient step over `feats` from the 1-row (w0q..wdq) under
+    * updater `upd` at iteration `t`: the family step of [[logisticFitK]]'s
+    * batch loop and the streaming variant's per-micro-batch update
+    * (reference mllib/classification/StreamingLogisticRegressionWithSGD
+    * .scala:89 — trainOn re-runs algorithm.run per batch, i.e. a FULL
+    * GradientDescent loop of numIterations (default 50) seeded from the
+    * carried model; v12's one-step-per-batch form is a deliberate
+    * thin-slice deviation — one oracle-gated update per batch). */
+  def logisticStepK(feats: DataFrame, w: DataFrame, d: Int, upd: Updater,
+                    t: Int = 1): DataFrame =
+    lrGradK(feats, w, d).selectExpr(
+      (0 to d).map(i => s"${upd(t, s"w${i}q", s"g$i")} AS w${i}q"): _*)
 
-  /** Score (idCol, x1, x2, yq) rows under fitted 1-row weights: broadcast
-    * the weights, emit (idCol, label, p_micro, pred) — pred thresholds at
-    * p >= 0.5, exact on the integer micro-probability. */
-  def logisticPredict2(feats: DataFrame, weights: DataFrame, idCol: String): DataFrame =
-    feats.crossJoin(broadcast(weights))
-      .selectExpr(idCol, "CAST(yq DIV 1000000 AS BIGINT) AS label",
-        s"$lrProbExpr AS p_micro")
-      .withColumn("pred",
-        expr("CAST(CASE WHEN p_micro >= 500000 THEN 1 ELSE 0 END AS BIGINT)"))
+  /** runMiniBatchSGD's minibatch at fraction 1/`batches` (the reference's
+    * actual stochastic path: optimization/GradientDescent.scala:177
+    * `sample`s the fraction each iteration and :201 averages the gradient
+    * over the SAMPLE's size, which n then is). Deterministic, declared:
+    * iteration t keeps the hash residue class (h(id) + t − 1) mod
+    * `batches` = 0 — ~1/batches of the rows, ROTATING so `batches`
+    * consecutive iterations cover the corpus (the seeded Bernoulli sample
+    * is exactly what the oracle gate cannot allow). Returns iteration t's
+    * filter predicate. */
+  def rotatingBatch(idCol: String, batches: Int): Int => String = t =>
+    s"pmod(${Dedup.portableHash(s"cast($idCol as string)", "'sgd'")} + ${t - 1}, $batches) = 0"
 
-  /** The d-feature margin/probability — the fold reproduces
-    * [[lrProbExpr]]'s text byte-identically at d = 2. */
-  def lrProbExprK(d: Int): String = {
-    val margin = (1 to d).map(i => s"(w${i}q * x$i)")
-      .foldLeft("w0q")((a, t) => s"($a + $t)")
-    s"CAST(round(1000000.0 / (1.0 + exp(-(CAST($margin AS DOUBLE) / 65536.0)))) AS BIGINT)"
-  }
-
-  def logisticInitK(spark: org.apache.spark.sql.SparkSession, d: Int): DataFrame =
-    spark.range(1).selectExpr(
-      (0 to d).map(i => s"CAST(0 AS BIGINT) AS w${i}q"): _*)
-
-  /** d-FEATURE binary logistic regression (reference ml/classification/
-    * LogisticRegression fits arbitrary-width vectors; [[logisticFit2]]
-    * is the historical d = 2 scaffolding, reproduced byte-identically
-    * here at d = 2 — same probability text, same per-weight update
-    * string, one gradient sum per feature in the same single scan). */
-  def logisticFitK(feats: DataFrame, d: Int, iters: Int = 8,
-                   lr: Double = 1.0): DataFrame = {
+  /** d-FEATURE binary logistic regression, y ~ sigmoid(w0 + Σ wi·xi)
+    * (reference ml/classification/LogisticRegression fits arbitrary-width
+    * vectors): `iters` gradient-ascent steps on the log likelihood over
+    * (x1..xd, yq) rows, each ONE scan computing d + 1 exact gradient sums,
+    * then a 1-row update projection under `upd`. `batch` restricts
+    * iteration t's scan to the rows its predicate keeps
+    * ([[rotatingBatch]]); without it every step is full batch
+    * (miniBatchFraction = 1.0). Returns the 1-row (w0q..wdq). */
+  def logisticFitK(feats: DataFrame, d: Int, iters: Int, upd: Updater,
+                   batch: Option[Int => String] = None,
+                   eagerLast: Boolean = true): DataFrame = {
     require(d >= 1 && d <= 16, s"logisticFitK: d = $d outside [1, 16]")
-    val f = feats.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // r21: lazy-chained like [[logisticFit2]] — weights ride through the
-    // aggregate (max of a broadcast constant), single state reference,
-    // lazy checkpoints with only the last eager
-    var w = logisticInitK(f.sparkSession, d).localCheckpoint(false)
-    for (t <- 1 to iters) {
-      w = f.crossJoin(broadcast(w))
-        .selectExpr(Seq(s"${lrProbExprK(d)} AS pq", "yq") ++
-          (1 to d).map(i => s"x$i") ++ (0 to d).map(i => s"w${i}q"): _*)
-        .agg(count(lit(1)).as("n"),
-          (sum(col("yq") - col("pq")).as("g0") +:
-            (1 to d).map(i => sum((col("yq") - col("pq")) * col(s"x$i")).as(s"g$i"))) ++
-            (0 to d).map(i => max(s"w${i}q").as(s"w${i}q")): _*)
-        .selectExpr(
-          (0 to d).map(i => s"${lrUpdExpr(s"w${i}q", s"g$i", lr)} AS w${i}q"): _*)
-        .localCheckpoint(t == iters)
+    fullBatch(feats, zeroWeights(feats.sparkSession, d), iters, eagerLast) { (f, w, t) =>
+      logisticStepK(batch.fold(f)(b => f.filter(expr(b(t)))), w, d, upd, t)
     }
-    f.unpersist()
-    w
   }
 
-  /** Score (idCol, x1..xd, yq) under d-feature logistic weights — the
-    * [[logisticPredict2]] output contract. */
+  /** Score (idCol, x1..xd, yq) under d-feature logistic weights: emit
+    * (idCol, label, p_micro, pred) — pred thresholds at p >= 0.5, exact on
+    * the integer micro-probability. */
   def logisticPredictK(feats: DataFrame, weights: DataFrame, d: Int,
                        idCol: String): DataFrame =
     feats.crossJoin(broadcast(weights))
@@ -524,79 +461,18 @@ object Learn {
   // below; the s43 one-vs-rest row is the REDUCTION, this is the joint
   // model). House conventions: 2^16-quantized weights per block, micro
   // probabilities through ONE shared exp/denominator string, exact
-  // integer gradient sums, constant step (declared like s19). --------
+  // integer gradient sums, constant step. ------------------------------
 
   private def smZ(k: Int): String =
     // least(·, 700) keeps exp finite for |z| beyond the IEEE overflow knee
     // (~709.78) — without it one wide margin turns the softmax into
-    // Inf/Inf = NaN → null, unlike lrProbExpr's 1/(1+exp(−z)) which
+    // Inf/Inf = NaN → null, unlike lrProbExprK's 1/(1+exp(−z)) which
     // saturates gracefully. Shared verbatim with the oracle, so both
     // engines clamp identically; a no-op at the gated magnitudes.
     s"least((CAST(((w0${k}q + (w1${k}q * x1)) + (w2${k}q * x2)) AS DOUBLE) / 65536.0), 700.0)"
 
-  /** Class-k micro softmax probability over the two pivoted weight
-    * blocks (k ∈ {1, 2}; class 0 carries the remaining mass). */
-  def smProbExpr(k: Int): String =
-    s"CAST(round((exp(${smZ(k)}) / (1.0 + (exp(${smZ(1)}) + exp(${smZ(2)})))) * 1000000.0) AS BIGINT)"
-
-  /** The six-zero starting row (two blocks × three weights). */
-  def softmaxInit(spark: org.apache.spark.sql.SparkSession): DataFrame =
-    spark.range(1).selectExpr(
-      (for (k <- 1 to 2; j <- 0 to 2) yield s"CAST(0 AS BIGINT) AS w$j${k}q"): _*)
-
-  /** One full-batch softmax ascent step: six exact integer gradient
-    * sums Σ(1e6·[y = k] − p_k)·x_j, then the shared [[lrUpdExpr]]
-    * update per weight. */
-  def softmaxStep(feats: DataFrame, w: DataFrame, lr: Double): DataFrame = {
-    // r21: single-reference — the six weight columns ride through the
-    // scan and the aggregate (max of a broadcast constant = the
-    // constant), so the lazy-checkpoint chain in [[softmaxFit2]] is safe
-    val wCols = for (k <- 1 to 2; j <- 0 to 2) yield s"w$j${k}q"
-    val scored = feats.crossJoin(broadcast(w))
-      .selectExpr(Seq("y", "x1", "x2",
-        s"${smProbExpr(1)} AS pm1", s"${smProbExpr(2)} AS pm2") ++ wCols: _*)
-      .selectExpr(Seq("x1", "x2",
-        "CAST(CASE WHEN y = 1 THEN 1000000 ELSE 0 END AS BIGINT) - pm1 AS e1",
-        "CAST(CASE WHEN y = 2 THEN 1000000 ELSE 0 END AS BIGINT) - pm2 AS e2") ++
-        wCols: _*)
-    scored.agg(count(lit(1)).as("n"),
-      Seq(sum("e1").as("g01"), sum(col("e1") * col("x1")).as("g11"),
-        sum(col("e1") * col("x2")).as("g21"),
-        sum("e2").as("g02"), sum(col("e2") * col("x1")).as("g12"),
-        sum(col("e2") * col("x2")).as("g22")) ++
-        wCols.map(c => max(c).as(c)): _*)
-      .selectExpr(
-        (for (k <- 1 to 2; j <- 0 to 2)
-          yield s"${lrUpdExpr(s"w$j${k}q", s"g$j$k", lr)} AS w$j${k}q"): _*)
-  }
-
-  def softmaxFit2(feats: DataFrame, iters: Int = 6,
-                  lr: Double = 1.0): DataFrame = {
-    val f = feats.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // r21: lazy-chained like [[logisticFit2]]
-    var w = softmaxInit(f.sparkSession).localCheckpoint(false)
-    for (t <- 1 to iters)
-      w = softmaxStep(f, w, lr).localCheckpoint(t == iters)
-    f.unpersist()
-    w
-  }
-
-  /** Score rows under fitted blocks: micro p1/p2, p0 the exact
-    * complement, argmax prediction with ties to the SMALLEST class
-    * (reference :108's first-max scan order). */
-  def softmaxPredict2(feats: DataFrame, weights: DataFrame,
-                      idCol: String): DataFrame =
-    feats.crossJoin(broadcast(weights))
-      .selectExpr(idCol, "CAST(y AS BIGINT) AS label",
-        s"${smProbExpr(1)} AS p1_micro", s"${smProbExpr(2)} AS p2_micro")
-      .selectExpr(idCol, "label", "p1_micro", "p2_micro",
-        "CAST(1000000 - (p1_micro + p2_micro) AS BIGINT) AS p0_micro")
-      .selectExpr(idCol, "label", "p0_micro", "p1_micro", "p2_micro",
-        "CAST(CASE WHEN p0_micro >= p1_micro AND p0_micro >= p2_micro THEN 0" +
-          " WHEN p1_micro >= p2_micro THEN 1 ELSE 2 END AS BIGINT) AS pred")
-
-  /** Class-k probability at K total classes — the generated denominator
-    * reproduces [[smProbExpr]]'s text byte-identically at K = 3. */
+  /** Class-k micro probability at K total classes (k ∈ 1..K−1; class 0
+    * carries the remaining mass). */
   def smProbExprK(k: Int, kTot: Int): String = {
     val den = (1 until kTot).map(j => s"exp(${smZ(j)})")
       .reduce((a, b) => s"($a + $b)")
@@ -608,42 +484,42 @@ object Learn {
     spark.range(1).selectExpr(
       (for (k <- 1 until kTot; j <- 0 to 2) yield s"CAST(0 AS BIGINT) AS w$j${k}q"): _*)
 
-  /** K-CLASS softmax regression (reference LogisticRegression.scala:91
-    * trains K−1 pivoted blocks for ANY numClasses; [[softmaxFit2]] is
-    * the K = 3 scaffolding, reproduced byte-identically there — same
-    * shared exp/denominator string, same per-weight update, 3·(K−1)
-    * exact gradient sums in one scan). */
+  /** One full-batch softmax ascent step at K classes: 3·(K−1) exact
+    * integer gradient sums Σ(1e6·[y = k] − p_k)·x_j in one scan, then the
+    * shared [[lrUpdExpr]] per weight; the weights ride through the scan
+    * and the aggregate. */
+  private def softmaxStepK(feats: DataFrame, w: DataFrame, kTot: Int,
+                           lr: Double): DataFrame = {
+    val wCols = for (k <- 1 until kTot; j <- 0 to 2) yield s"w$j${k}q"
+    val scored = feats.crossJoin(broadcast(w))
+      .selectExpr(Seq("y", "x1", "x2") ++
+        (1 until kTot).map(k => s"${smProbExprK(k, kTot)} AS pm$k") ++
+        wCols: _*)
+      .selectExpr(Seq("x1", "x2") ++
+        (1 until kTot).map(k =>
+          s"CAST(CASE WHEN y = $k THEN 1000000 ELSE 0 END AS BIGINT) - pm$k AS e$k") ++
+        wCols: _*)
+    val aggsTail =
+      (for (k <- 1 until kTot; j <- 0 to 2) yield {
+        val e = if (j == 0) sum(col(s"e$k"))
+                else sum(col(s"e$k") * col(s"x$j"))
+        e.as(s"g$j$k")
+      }) ++ wCols.map(c => max(c).as(c))
+    scored.agg(count(lit(1)).as("n"), aggsTail: _*)
+      .selectExpr(
+        (for (k <- 1 until kTot; j <- 0 to 2)
+          yield s"${lrUpdExpr(s"w$j${k}q", s"g$j$k", lr)} AS w$j${k}q"): _*)
+  }
+
+  /** K-CLASS softmax regression over (x1, x2, y) (reference
+    * LogisticRegression.scala:91 trains K−1 pivoted blocks for ANY
+    * numClasses): `iters` [[softmaxStepK]]s on the batch loop. */
   def softmaxFitK(feats: DataFrame, kTot: Int, iters: Int = 6,
                   lr: Double = 1.0): DataFrame = {
     require(kTot >= 2 && kTot <= 10, s"softmaxFitK: K = $kTot outside [2, 10]")
-    val f = feats.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // r21: lazy-chained like [[logisticFit2]] — weights ride through
-    // the scan/aggregate (single state reference per step)
-    val wCols = for (k <- 1 until kTot; j <- 0 to 2) yield s"w$j${k}q"
-    var w = softmaxInitK(f.sparkSession, kTot).localCheckpoint(false)
-    for (t <- 1 to iters) {
-      val scored = f.crossJoin(broadcast(w))
-        .selectExpr(Seq("y", "x1", "x2") ++
-          (1 until kTot).map(k => s"${smProbExprK(k, kTot)} AS pm$k") ++
-          wCols: _*)
-        .selectExpr(Seq("x1", "x2") ++
-          (1 until kTot).map(k =>
-            s"CAST(CASE WHEN y = $k THEN 1000000 ELSE 0 END AS BIGINT) - pm$k AS e$k") ++
-          wCols: _*)
-      val aggsTail =
-        (for (k <- 1 until kTot; j <- 0 to 2) yield {
-          val e = if (j == 0) sum(col(s"e$k"))
-                  else sum(col(s"e$k") * col(s"x$j"))
-          e.as(s"g$j$k")
-        }) ++ wCols.map(c => max(c).as(c))
-      w = scored.agg(count(lit(1)).as("n"), aggsTail: _*)
-        .selectExpr(
-          (for (k <- 1 until kTot; j <- 0 to 2)
-            yield s"${lrUpdExpr(s"w$j${k}q", s"g$j$k", lr)} AS w$j${k}q"): _*)
-        .localCheckpoint(t == iters)
+    fullBatch(feats, softmaxInitK(feats.sparkSession, kTot), iters) { (f, w, _) =>
+      softmaxStepK(f, w, kTot, lr)
     }
-    f.unpersist()
-    w
   }
 
   /** p0 as the exact complement of the block probabilities, floored at
@@ -681,6 +557,26 @@ object Learn {
       .selectExpr(Seq(idCol, "label", "p0_micro") ++ probs :+ smArgmaxExprK(kTot): _*)
   }
 
+  /** p0 as the UNclamped complement at K = 3, the form s87's gated
+    * output carries (a nullable column; [[smP0ExprK]]'s floor at 0 makes
+    * it non-nullable). Shared verbatim with the oracle. */
+  val smP0Unclamped3: String =
+    "CAST(1000000 - (p1_micro + p2_micro) AS BIGINT) AS p0_micro"
+
+  /** Score rows under fitted K = 3 blocks with [[smP0Unclamped3]] —
+    * s87's scoring, kept beside [[softmaxPredictK]] so its output schema
+    * stays what it was; the argmax ties to the SMALLEST class (reference
+    * :108's first-max scan order). */
+  def softmaxPredict2(feats: DataFrame, weights: DataFrame,
+                      idCol: String): DataFrame =
+    feats.crossJoin(broadcast(weights))
+      .selectExpr(idCol, "CAST(y AS BIGINT) AS label",
+        s"${smProbExprK(1, 3)} AS p1_micro", s"${smProbExprK(2, 3)} AS p2_micro")
+      .selectExpr(idCol, "label", "p1_micro", "p2_micro", smP0Unclamped3)
+      .selectExpr(idCol, "label", "p0_micro", "p1_micro", "p2_micro",
+        "CAST(CASE WHEN p0_micro >= p1_micro AND p0_micro >= p2_micro THEN 0" +
+          " WHEN p1_micro >= p2_micro THEN 1 ELSE 2 END AS BIGINT) AS pred")
+
   // ---- L-BFGS (reference mllib/optimization/LBFGS.scala:40 — the
   // second registered optimizer next to GradientDescent; runLBFGS :169
   // delegates the direction to breeze's LBFGS over a CostFun computing
@@ -697,8 +593,8 @@ object Learn {
   // history, takes that branch by construction. ------------------------
 
   /** The two-loop recursion as staged column batches over the 1-row
-    * (n, gs0..gs2, w0q..w2q, pw0q..pw2q, pg0..pg2) frame: quantized mean
-    * ascent gradient, minimization-land s/y/q doubles, the three inner
+    * (n, g0..g2, w0q..w2q, pw0q..pw2q, pg0..pg2) frame: quantized mean
+    * ascent gradient gm, minimization-land s/y/q doubles, the three inner
     * products, guarded alpha/h0, r, beta, and the final direction.
     * Applied as consecutive `SELECT *, expr AS col` layers — shared
     * verbatim with the oracle's nested mirror. */
@@ -708,12 +604,12 @@ object Learn {
     val sd = (i: Int) => s"s${i}d"; val yd = (i: Int) => s"y${i}d"
     val qd = (i: Int) => s"q${i}d"; val rr = (i: Int) => s"r$i"
     Seq(
-      (0 to 2).map(i => s"g$i" ->
-        s"CAST(round(CAST(gs$i AS DOUBLE) / n) AS BIGINT)"),
+      (0 to 2).map(i => s"gm$i" ->
+        s"CAST(round(CAST(g$i AS DOUBLE) / n) AS BIGINT)"),
       (0 to 2).flatMap(i => Seq(
         s"s${i}d" -> s"(CAST(w${i}q - pw${i}q AS DOUBLE) / 65536.0)",
-        s"y${i}d" -> s"(CAST(pg$i - g$i AS DOUBLE) / 1000000.0)",
-        s"q${i}d" -> s"(CAST(0 - g$i AS DOUBLE) / 1000000.0)")),
+        s"y${i}d" -> s"(CAST(pg$i - gm$i AS DOUBLE) / 1000000.0)",
+        s"q${i}d" -> s"(CAST(0 - gm$i AS DOUBLE) / 1000000.0)")),
       Seq("sy" -> sdot(sd, yd), "sq" -> sdot(sd, qd), "yy" -> sdot(yd, yd)),
       Seq("alpha" -> "(CASE WHEN sy > 0.0 THEN sq / sy ELSE 0.0 END)",
         "h0" -> "(CASE WHEN sy > 0.0 THEN sy / yy ELSE 0.0 END)"),
@@ -731,9 +627,9 @@ object Learn {
         s"w${i}q" -> (s"CASE WHEN sy > 0.0 THEN w${i}q + " +
           s"CAST(round(CAST($step AS DOUBLE) * (d$i * 65536.0)) AS BIGINT) " +
           s"ELSE w${i}q + CAST(round(CAST($lr0 AS DOUBLE) * " +
-          s"((CAST(g$i AS DOUBLE) / 1000000.0) * 65536.0)) AS BIGINT) END"),
+          s"((CAST(gm$i AS DOUBLE) / 1000000.0) * 65536.0)) AS BIGINT) END"),
         s"pw${i}q" -> s"w${i}q",
-        s"pg$i" -> s"g$i")
+        s"pg$i" -> s"gm$i")
     }
 
   /** Zero state: weights, previous weights and previous gradient all
@@ -743,41 +639,26 @@ object Learn {
       (0 to 2).flatMap(i => Seq(s"CAST(0 AS BIGINT) AS w${i}q",
         s"CAST(0 AS BIGINT) AS pw${i}q", s"CAST(0 AS BIGINT) AS pg$i")): _*)
 
-  /** ONE L-BFGS(m=1) iteration: the s19 gradient aggregate at the
-    * current weights, then the staged two-loop over the 1-row frame. */
+  /** ONE L-BFGS(m=1) iteration: the logistic gradient aggregate at the
+    * current weights (the full 9-column state rides through it), then
+    * the staged two-loop over the aggregate's own 1-row output. */
   def lbfgsStep(feats: DataFrame, state: DataFrame,
                 step: Double = 0.5, lr0: Double = 1.0): DataFrame = {
-    // r21: single-reference — the full 9-column state rides through the
-    // gradient scan and aggregate (max of broadcast constants), so the
-    // lazy-checkpoint chain in [[lbfgsFit2]] is safe; the two-loop
-    // stages then run over the aggregate's own 1-row output.
-    val stCols = (0 to 2).flatMap(i => Seq(s"w${i}q", s"pw${i}q", s"pg$i"))
-    var cur = feats
-      .crossJoin(broadcast(state))
-      .selectExpr(Seq(s"$lrProbExpr AS pq", "yq", "x1", "x2") ++ stCols: _*)
-      .agg(count(lit(1)).as("n"),
-        Seq(sum(col("yq") - col("pq")).as("gs0"),
-          sum((col("yq") - col("pq")) * col("x1")).as("gs1"),
-          sum((col("yq") - col("pq")) * col("x2")).as("gs2")) ++
-          stCols.map(c => max(c).as(c)): _*)
+    var cur = lrGradK(feats, state, 2)
     for (stage <- lbfgsStages)
       cur = cur.selectExpr(("*" +: stage.map { case (c, e) => s"$e AS $c" }): _*)
     cur.selectExpr(lbfgsUpdateExprs(step, lr0)
       .map { case (c, e) => s"$e AS $c" }: _*)
   }
 
-  /** `iters` L-BFGS(m=1) iterations from zero state; returns the 1-row
-    * (w0q, w1q, w2q) weight frame (history columns dropped). */
+  /** `iters` L-BFGS(m=1) iterations from zero state on the batch loop;
+    * returns the 1-row (w0q, w1q, w2q) weight frame (history columns
+    * dropped). */
   def lbfgsFit2(feats: DataFrame, iters: Int = 6,
-                step: Double = 0.5, lr0: Double = 1.0): DataFrame = {
-    val f = feats.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // r21: lazy-chained like [[logisticFit2]]
-    var st = lbfgsInit(f.sparkSession).localCheckpoint(false)
-    for (t <- 1 to iters)
-      st = lbfgsStep(f, st, step, lr0).localCheckpoint(t == iters)
-    f.unpersist()
-    st.select("w0q", "w1q", "w2q")
-  }
+                step: Double = 0.5, lr0: Double = 1.0): DataFrame =
+    fullBatch(feats, lbfgsInit(feats.sparkSession), iters) { (f, st, _) =>
+      lbfgsStep(f, st, step, lr0)
+    }.select("w0q", "w1q", "w2q")
 
   // ---- multilayer perceptron, d inputs -> h sigmoid units -> 1 sigmoid
   // output (reference ml/ann/Layer.scala — AffineLayer :173 forward
@@ -1088,7 +969,7 @@ object Learn {
   // reference's raw-score argmax except at quantized-probability TIES,
   // which are pinned to the smallest class — declared). -----------------
 
-  /** OVR over (idCol, x1, x2, cls): one [[logisticFit2]] per class on
+  /** OVR over (idCol, x1, x2, cls): one d = 2 [[logisticFitK]] per class on
     * the cls-vs-rest micro label (each fit re-reads the SAME persisted
     * projection — classes multiply scans, never shuffles), then ONE
     * broadcast scoring pass over the `cohort` keys. Emits
@@ -1098,21 +979,21 @@ object Learn {
                 lr: Double, idCol: String, cohort: Long): DataFrame = {
     val f = feats.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     f.count()
-    // r21: eagerLast = false — the three class chains are independent
-    // lazy subtrees, so THIS union checkpoint is the single action that
+    // eagerLast = false — the three class chains are independent lazy
+    // subtrees, so THIS union checkpoint is the single action that
     // materializes all of them, and their broadcast cascades run
     // concurrently instead of one fit at a time
     val models = classes.map { c =>
-      logisticFit2(f.selectExpr("x1", "x2",
+      logisticFitK(f.selectExpr("x1", "x2",
           s"CAST(CASE WHEN cls = $c THEN 1000000 ELSE 0 END AS BIGINT) AS yq"),
-        iters, lr, eagerLast = false)
+        2, iters, constStep(lr), eagerLast = false)
         .selectExpr(s"CAST($c AS BIGINT) AS mcls", "w0q", "w1q", "w2q")
     }.reduce(_.unionByName(_)).localCheckpoint()
     val pivots = classes.map(c =>
       expr(s"max(CASE WHEN mcls = $c THEN p_micro END)").as(s"p$c"))
     val out = f.filter(col(idCol) <= cohort)
       .crossJoin(broadcast(models))
-      .selectExpr(idCol, "cls", "mcls", s"$lrProbExpr AS p_micro")
+      .selectExpr(idCol, "cls", "mcls", s"${lrProbExprK(2)} AS p_micro")
       .groupBy(idCol, "cls")
       .agg(pivots.head,
         (pivots.tail :+
@@ -1935,96 +1816,15 @@ object Learn {
     * feature) iff its margin y·(w·x) is below 1 — in quantized units the
     * test is the EXACT INTEGER comparison ys·zq < 2^16, so the violator
     * set is engine-identical by construction (no doubles touch the
-    * margin). `mult` is "" for the intercept, " * x1" / " * x2" for the
+    * margin). `mult` is "" for the intercept, " * x1" … " * xd" for the
     * weights. */
-  def svmGradTerm(mult: String): String =
-    s"CASE WHEN ys * ((w0q + (w1q * x1)) + (w2q * x2)) < 65536 THEN ys$mult ELSE 0 END"
+  def svmGradTermK(d: Int, mult: String): String =
+    s"CASE WHEN ys * ${marginK(d)} < 65536 THEN ys$mult ELSE 0 END"
 
   /** One weight's hinge-ascent update — mean violator gradient scaled by
     * the constant step, re-quantized; shared verbatim with the oracle. */
   def svmUpdExpr(wq: String, g: String, lr: Double): String =
     s"$wq + CAST(round(($lr * (CAST($g AS DOUBLE) / n)) * 65536.0) AS BIGINT)"
-
-  /** Linear SVM over (x1, x2, ys) with ys ∈ {-1, +1}: `iters` full-batch
-    * hinge subgradient steps (SVMWithSGD at miniBatchFraction = 1.0,
-    * regParam = 0 — plain hinge; both legal reference settings, and one
-    * less per-step term to mirror). Per iteration ONE scan computing
-    * three exact integer gradient sums over the integer-exact violator
-    * set; the single double expression per update has fixed
-    * parenthesization. Weights quantized to 2^16 units; the weight row
-    * localCheckpoints per step. Callers should CENTER wide features
-    * (x - mean-ish offset): hinge GD from zero oscillates on offset
-    * features exactly like logistic GD does (measured: 52% vs 89%
-    * accuracy on the same s19-style data, centered vs not). */
-  def svmFit2(feats: DataFrame, iters: Int = 8, lr: Double = 0.5): DataFrame = {
-    val f = feats.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // r21: lazy-chained like [[logisticFit2]] — the weights ride through
-    // the gradient aggregate (max of a broadcast constant), single state
-    // reference per step, only the last checkpoint eager
-    var w = f.sparkSession.range(1)
-      .selectExpr("CAST(0 AS BIGINT) AS w0q", "CAST(0 AS BIGINT) AS w1q",
-        "CAST(0 AS BIGINT) AS w2q")
-      .localCheckpoint(false)
-    for (t <- 1 to iters) {
-      w = f.crossJoin(broadcast(w))
-        .agg(count(lit(1)).as("n"),
-          sum(expr(svmGradTerm(""))).as("g0"),
-          sum(expr(svmGradTerm(" * x1"))).as("g1"),
-          sum(expr(svmGradTerm(" * x2"))).as("g2"),
-          max("w0q").as("w0q"), max("w1q").as("w1q"), max("w2q").as("w2q"))
-        .selectExpr(
-          s"${svmUpdExpr("w0q", "g0", lr)} AS w0q",
-          s"${svmUpdExpr("w1q", "g1", lr)} AS w1q",
-          s"${svmUpdExpr("w2q", "g2", lr)} AS w2q")
-        .localCheckpoint(t == iters)
-    }
-    f.unpersist()
-    w
-  }
-
-  /** The d-feature quantized margin — reproduces the historical text
-    * byte-identically at d = 2. */
-  def svmMarginK(d: Int): String =
-    (1 to d).map(i => s"(w${i}q * x$i)").foldLeft("w0q")((a, t) => s"($a + $t)")
-
-  def svmGradTermK(d: Int, mult: String): String =
-    s"CASE WHEN ys * ${svmMarginK(d)} < 65536 THEN ys$mult ELSE 0 END"
-
-  /** d-FEATURE linear SVM (reference SVMWithSGD fits arbitrary-width
-    * vectors; [[svmFit2]] is the 2-feature scaffolding, reproduced
-    * byte-identically at d = 2 — same integer violator test, same
-    * per-weight update string, one hinge gradient sum per feature in
-    * one scan). The centering caveat from svmFit2 applies per feature. */
-  def svmFitK(feats: DataFrame, d: Int, iters: Int = 8,
-              lr: Double = 0.5): DataFrame = {
-    require(d >= 1 && d <= 16, s"svmFitK: d = $d outside [1, 16]")
-    val f = feats.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // r21: lazy-chained like [[svmFit2]]
-    var w = f.sparkSession.range(1)
-      .selectExpr((0 to d).map(i => s"CAST(0 AS BIGINT) AS w${i}q"): _*)
-      .localCheckpoint(false)
-    for (t <- 1 to iters) {
-      w = f.crossJoin(broadcast(w))
-        .agg(count(lit(1)).as("n"),
-          (sum(expr(svmGradTermK(d, ""))).as("g0") +:
-            (1 to d).map(i => sum(expr(svmGradTermK(d, s" * x$i"))).as(s"g$i"))) ++
-            (0 to d).map(i => max(s"w${i}q").as(s"w${i}q")): _*)
-        .selectExpr(
-          (0 to d).map(i => s"${svmUpdExpr(s"w${i}q", s"g$i", lr)} AS w${i}q"): _*)
-        .localCheckpoint(t == iters)
-    }
-    f.unpersist()
-    w
-  }
-
-  /** Score (idCol, x1..xd, ys) under d-feature SVM weights — the
-    * svmPredict2 output contract. */
-  def svmPredictK(feats: DataFrame, weights: DataFrame, d: Int,
-                  idCol: String): DataFrame =
-    feats.crossJoin(broadcast(weights))
-      .selectExpr(idCol, "CAST(ys AS BIGINT) AS label",
-        s"CAST(${svmMarginK(d)} AS BIGINT) AS score_q",
-        s"CAST(CASE WHEN ${svmMarginK(d)} >= 0 THEN 1 ELSE -1 END AS BIGINT) AS pred")
 
   /** [[svmUpdExpr]] under SquaredL2Updater (Updater.scala:93; the
     * reference's SVMWithSGD DEFAULTS to regParam 0.01 — SVM.scala:71 —
@@ -2038,40 +1838,44 @@ object Learn {
     s"$wq + CAST(round(($lr * ((CAST($g AS DOUBLE) / n)" +
       s" - (CAST($lambda AS DOUBLE) * (CAST($wq AS DOUBLE) / 65536.0)))) * 65536.0) AS BIGINT)"
 
-  /** [[svmFit2]] with the reference's default L2 regularization. */
-  def svmFitL2(feats: DataFrame, iters: Int = 8, lr: Double = 0.5,
-               lambda: Double = 0.01): DataFrame = {
-    val f = feats.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // r21: lazy-chained like [[svmFit2]]
-    var w = f.sparkSession.range(1)
-      .selectExpr("CAST(0 AS BIGINT) AS w0q", "CAST(0 AS BIGINT) AS w1q",
-        "CAST(0 AS BIGINT) AS w2q")
-      .localCheckpoint(false)
-    for (t <- 1 to iters) {
-      w = f.crossJoin(broadcast(w))
+  /** The constant-step hinge updater ([[svmUpdExpr]]: regParam = 0). */
+  def svmStep(lr: Double): Updater = (_, wq, g) => svmUpdExpr(wq, g, lr)
+
+  /** The L2-regularized hinge updater ([[svmUpdL2Expr]]). */
+  def svmL2Step(lr: Double, lambda: Double): Updater =
+    (_, wq, g) => svmUpdL2Expr(wq, g, lr, lambda)
+
+  /** d-FEATURE linear SVM over (x1..xd, ys) with ys ∈ {-1, +1} (reference
+    * SVMWithSGD fits arbitrary-width vectors): `iters` full-batch hinge
+    * subgradient steps (miniBatchFraction = 1.0) on the batch loop, each
+    * ONE scan computing d + 1 exact integer gradient sums over the
+    * integer-exact violator set, then a 1-row update under `upd`
+    * ([[svmStep]] or [[svmL2Step]]). Weights quantized to 2^16 units.
+    * Callers should CENTER wide features (x - mean-ish offset): hinge GD
+    * from zero oscillates on offset features exactly like logistic GD
+    * does (measured: 52% vs 89% accuracy on the same s19-style data,
+    * centered vs not). */
+  def svmFitK(feats: DataFrame, d: Int, iters: Int, upd: Updater): DataFrame = {
+    require(d >= 1 && d <= 16, s"svmFitK: d = $d outside [1, 16]")
+    fullBatch(feats, zeroWeights(feats.sparkSession, d), iters) { (f, w, t) =>
+      f.crossJoin(broadcast(w))
         .agg(count(lit(1)).as("n"),
-          sum(expr(svmGradTerm(""))).as("g0"),
-          sum(expr(svmGradTerm(" * x1"))).as("g1"),
-          sum(expr(svmGradTerm(" * x2"))).as("g2"),
-          max("w0q").as("w0q"), max("w1q").as("w1q"), max("w2q").as("w2q"))
+          (sum(expr(svmGradTermK(d, ""))).as("g0") +:
+            (1 to d).map(i => sum(expr(svmGradTermK(d, s" * x$i"))).as(s"g$i"))) ++
+            (0 to d).map(i => max(s"w${i}q").as(s"w${i}q")): _*)
         .selectExpr(
-          s"${svmUpdL2Expr("w0q", "g0", lr, lambda)} AS w0q",
-          s"${svmUpdL2Expr("w1q", "g1", lr, lambda)} AS w1q",
-          s"${svmUpdL2Expr("w2q", "g2", lr, lambda)} AS w2q")
-        .localCheckpoint(t == iters)
+          (0 to d).map(i => s"${upd(t, s"w${i}q", s"g$i")} AS w${i}q"): _*)
     }
-    f.unpersist()
-    w
   }
 
-  /** Score (idCol, x1, x2, ys) under fitted weights: the quantized
+  /** Score (idCol, x1..xd, ys) under d-feature SVM weights: the quantized
     * decision value and the sign prediction — both exact integers. */
-  def svmPredict2(feats: DataFrame, weights: DataFrame, idCol: String): DataFrame =
+  def svmPredictK(feats: DataFrame, weights: DataFrame, d: Int,
+                  idCol: String): DataFrame =
     feats.crossJoin(broadcast(weights))
       .selectExpr(idCol, "CAST(ys AS BIGINT) AS label",
-        "CAST((w0q + (w1q * x1)) + (w2q * x2) AS BIGINT) AS score_q")
-      .withColumn("pred",
-        expr("CAST(CASE WHEN score_q >= 0 THEN 1 ELSE -1 END AS BIGINT)"))
+        s"CAST(${marginK(d)} AS BIGINT) AS score_q",
+        s"CAST(CASE WHEN ${marginK(d)} >= 0 THEN 1 ELSE -1 END AS BIGINT) AS pred")
 
   // ---- lasso / linear SGD (reference mllib/src/main/scala/org/apache/
   // spark/mllib/regression/Lasso.scala:88 trains squared loss through
@@ -2081,8 +1885,7 @@ object Learn {
 
   /** Prediction in y-units under quantized linear weights: one rounded
     * double division, shared verbatim with the oracle. */
-  val linPredExpr: String =
-    "CAST(round(CAST(((w0q + (w1q * x1)) + (w2q * x2)) AS DOUBLE) / 65536.0) AS BIGINT)"
+  val linPredExpr: String = s"CAST(round(CAST(${marginK(2)} AS DOUBLE) / 65536.0) AS BIGINT)"
 
   /** One weight's squared-loss gradient-descent update — mean residual
     * gradient (exact integer sum / n) scaled by the constant step,
@@ -2104,8 +1907,9 @@ object Learn {
     s"(CASE WHEN $wq >= 0 THEN 1 ELSE -1 END) * greatest(CAST(0 AS BIGINT), abs($wq) - $shrinkq)"
 
   /** One full-batch squared-loss gradient step over (x1, x2, y) BIGINT
-    * features from the 1-row weight frame — the shared unit of
-    * [[lassoFit2]] and the streaming linear-regression query (reference
+    * features from the 1-row weight frame — the family step of
+    * [[elasticNetFit2]]'s batch loop and the streaming linear-regression
+    * query (reference
     * regression/StreamingLinearRegressionWithSGD.scala:43, trained
     * through StreamingLinearAlgorithm.scala:88's trainOn — which runs a
     * full numIterations GradientDescent pass per batch seeded from the
@@ -2114,9 +1918,8 @@ object Learn {
     * minus the rounded integer prediction), so the three gradient sums
     * are partitioning-independent. */
   def linearStep(feats: DataFrame, w: DataFrame, lr: Double): DataFrame = {
-    // r21: single-reference — the weights ride through the residual scan
-    // and aggregate (max of a broadcast constant), so the lazy-checkpoint
-    // chains in [[lassoFit2]]/[[elasticNetFit2]] are safe
+    // single-reference: the weights ride through the residual scan and
+    // aggregate (max of a broadcast constant), as [[fullBatch]] requires
     feats.crossJoin(broadcast(w))
       .selectExpr(s"y - $linPredExpr AS r", "x1", "x2",
         "w0q", "w1q", "w2q")
@@ -2134,23 +1937,12 @@ object Learn {
     * then the L1 soft-threshold on the two FEATURE weights (the intercept
     * is never penalized; deliberate deviation from the reference, whose
     * appendBias weight rides through L1Updater like any other — the s23
-    * ridge convention, declared the same way). Per iteration ONE scan;
-    * weight frame localCheckpoints per step. */
+    * ridge convention, declared the same way). Per iteration ONE scan.
+    * This is [[elasticNetFit2]] at α = 1, whose proximal step IS the
+    * soft-threshold. */
   def lassoFit2(feats: DataFrame, iters: Int = 8, lr: Double = 0.002,
-                lambda: Double = 20.0): DataFrame = {
-    val f = feats.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // r21: lazy-chained like [[logisticFit2]]
-    val shrinkq = lassoShrinkQ(lr, lambda)
-    var w = logisticInit(f.sparkSession).localCheckpoint(false)
-    for (t <- 1 to iters)
-      w = linearStep(f, w, lr).selectExpr(
-          "w0q",
-          s"${softThresholdExpr("w1q", shrinkq)} AS w1q",
-          s"${softThresholdExpr("w2q", shrinkq)} AS w2q")
-        .localCheckpoint(t == iters)
-    f.unpersist()
-    w
-  }
+                lambda: Double = 20.0): DataFrame =
+    elasticNetFit2(feats, iters, lr, lambda, alpha = 1.0)
 
   /** Elastic-net L2 divisor 1 + lr·λ·(1−α): the proximal operator of the
     * mixed penalty λ(α‖w‖₁ + (1−α)/2·‖w‖₂²) is soft-threshold by
@@ -2171,29 +1963,24 @@ object Learn {
     if (l2div == 1.0) softThresholdExpr(wq, shrinkq)
     else s"CAST(round(CAST((${softThresholdExpr(wq, shrinkq)}) AS DOUBLE) / CAST($l2div AS DOUBLE)) AS BIGINT)"
 
-  /** Elastic-net regression over (x1, x2, y): [[lassoFit2]]'s ISTA loop
-    * with the mixed proximal step — soft-threshold by lr·λ·α, then the
+  /** Elastic-net regression over (x1, x2, y): ISTA on the batch loop, a
+    * [[linearStep]] then the mixed proximal step — soft-threshold by lr·λ·α, then the
     * L2 shrink division; the intercept stays unpenalized (the s23/s33
-    * convention, declared there). α = 1 IS lassoFit2 by construction;
+    * convention, declared there). α = 1 is [[lassoFit2]];
     * α = 0 converges to [[ridgeFit2]]'s normal-equation solution with
     * the SAME λ (both minimize (1/n)Σr² + λ‖w‖₂² up to the shared
     * factor — spec-pinned). Per iteration ONE scan. */
   def elasticNetFit2(feats: DataFrame, iters: Int = 8, lr: Double = 0.002,
                      lambda: Double = 20.0, alpha: Double = 0.5): DataFrame = {
     require(alpha >= 0.0 && alpha <= 1.0, s"elasticNetFit2: alpha $alpha outside [0, 1]")
-    val f = feats.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // r21: lazy-chained like [[logisticFit2]]
     val shrinkq = lassoShrinkQ(lr, lambda * alpha)
     val l2div = elasticL2Div(lr, lambda, alpha)
-    var w = logisticInit(f.sparkSession).localCheckpoint(false)
-    for (t <- 1 to iters)
-      w = linearStep(f, w, lr).selectExpr(
-          "w0q",
-          s"${elasticStepExpr("w1q", shrinkq, l2div)} AS w1q",
-          s"${elasticStepExpr("w2q", shrinkq, l2div)} AS w2q")
-        .localCheckpoint(t == iters)
-    f.unpersist()
-    w
+    fullBatch(feats, zeroWeights(feats.sparkSession, 2), iters) { (f, w, _) =>
+      linearStep(f, w, lr).selectExpr(
+        "w0q",
+        s"${elasticStepExpr("w1q", shrinkq, l2div)} AS w1q",
+        s"${elasticStepExpr("w2q", shrinkq, l2div)} AS w2q")
+    }
   }
 
   /** Score (idCol, x1, x2, y) under fitted quantized linear weights. */
@@ -2800,8 +2587,8 @@ object Learn {
     * sums (map-side combined), then a 1-row update projection. */
   def aftStep(feats: DataFrame, p: DataFrame, step: Double): DataFrame = {
     // r21: single-reference — the params ride through the gradient scan
-    // and aggregate (max of a broadcast constant), so the lazy-checkpoint
-    // chain in [[aftFit2]] is safe
+    // and aggregate (max of a broadcast constant), as [[fullBatch]]
+    // requires
     feats.crossJoin(broadcast(p))
       .selectExpr(
         s"${aftGradBetaExpr("1")} AS c0",
@@ -2821,17 +2608,9 @@ object Learn {
         s"${aftUpdExpr("b2m", "g2", step)} AS b2m")
   }
 
-  /** `iters` full-batch steps; the param row localCheckpoints each
-    * iteration (constant plan depth — the pregel discipline). */
-  def aftFit2(feats: DataFrame, iters: Int = 3, step: Double = 2e-4): DataFrame = {
-    val f = feats.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // r21: lazy-chained like [[logisticFit2]]
-    var p = aftInit(f.sparkSession).localCheckpoint(false)
-    for (t <- 1 to iters)
-      p = aftStep(f, p, step).localCheckpoint(t == iters)
-    f.unpersist()
-    p
-  }
+  /** `iters` full-batch [[aftStep]]s on the batch loop. */
+  def aftFit2(feats: DataFrame, iters: Int = 3, step: Double = 2e-4): DataFrame =
+    fullBatch(feats, aftInit(feats.sparkSession), iters)((f, p, _) => aftStep(f, p, step))
 
   /** Score rows under the fitted params: predicted lifetime
     * λ = exp(x'β) milli-quantized, plus the Weibull median

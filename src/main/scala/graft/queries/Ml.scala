@@ -566,22 +566,21 @@ object Ml {
     // base rate). Cohort scoring like s14.
     "s19_logistic_regression" -> { (s, dir) =>
       val feats = lrFeatures(s, dir, 10, 1000000)
-      val w = Learn.logisticFit2(feats, iters = 8, lr = 1.0)
-      Learn.logisticPredict2(feats.filter(col("o_orderkey") <= 4000), w, "o_orderkey")
+      val w = Learn.logisticFitK(feats, d = 2, iters = 8, Learn.constStep(1.0))
+      Learn.logisticPredictK(feats.filter(col("o_orderkey") <= 4000), w, 2, "o_orderkey")
         .orderBy("o_orderkey")
     },
 
     // THREE-feature binary logistic regression (reference
     // ml/classification/LogisticRegression fits arbitrary-width
-    // vectors; s19 is the historical 2-feature scaffolding, which
-    // logisticFitK reproduces byte-identically at d = 2, spec-pinned):
+    // vectors; s19 runs the same kernel at d = 2):
     // the s19 problem plus x3 = o_orderkey % 13 — the very term the
     // label's threshold mixes in, so the third feature carries REAL
     // signal the 2-feature model cannot see.
     "s105_logistic_k" -> { (s, dir) =>
       val feats = lrFeatures(s, dir, 10, 1000000)
         .withColumn("x3", expr("CAST(o_orderkey % 13 AS BIGINT)"))
-      val w = Learn.logisticFitK(feats, d = 3, iters = 8, lr = 1.0)
+      val w = Learn.logisticFitK(feats, d = 3, iters = 8, Learn.constStep(1.0))
       Learn.logisticPredictK(feats.filter(col("o_orderkey") <= 4000), w, 3, "o_orderkey")
         .orderBy("o_orderkey")
     },
@@ -593,21 +592,22 @@ object Ml {
     // model): three qty bands over centered features, twelve
     // full-batch ascent steps (enough that all three classes carry
     // predictions), cohort scored with the exact-complement p0 and
-    // smallest-class tie argmax.
+    // smallest-class tie argmax. The fit is the K-class kernel at K = 3;
+    // the scoring keeps Learn.softmaxPredict2's unclamped p0, whose
+    // column is nullable where softmaxPredictK's is not.
     "s87_softmax_regression" -> { (s, dir) =>
       val feats = ordersBase(s, dir).select(col("o_orderkey"), col("x1"),
         expr("CAST((qty DIV 10) - 10 AS BIGINT)").as("x2"),
         expr("CAST(CASE WHEN qty + 5 * (o_orderkey % 13) > 150 THEN 2" +
           " WHEN qty + 5 * (o_orderkey % 13) > 115 THEN 1 ELSE 0 END AS BIGINT)").as("y"))
-      val w = Learn.softmaxFit2(feats, iters = 12, lr = 2.0)
+      val w = Learn.softmaxFitK(feats, kTot = 3, iters = 12, lr = 2.0)
       Learn.softmaxPredict2(feats.filter(col("o_orderkey") <= 4000), w, "o_orderkey")
         .orderBy("o_orderkey")
     },
 
     // FOUR-class softmax regression (reference LogisticRegression
-    // .scala:91 trains K-1 pivoted blocks for ANY numClasses; s87 is
-    // the K = 3 scaffolding, which softmaxFitK reproduces
-    // byte-identically — spec-pinned): four qty bands, twelve ascent
+    // .scala:91 trains K-1 pivoted blocks for ANY numClasses; s87 runs
+    // the same kernel at K = 3): four qty bands, twelve ascent
     // steps, nine exact gradient sums per round, argmax with ties to
     // the smallest class.
     "s107_softmax_k4" -> { (s, dir) =>
@@ -630,8 +630,9 @@ object Ml {
     // update string, so the whole 8-step trajectory is gated.
     "s85_sgd_decay_l2" -> { (s, dir) =>
       val feats = lrFeatures(s, dir, 10, 1000000)
-      val w = Learn.logisticFitDecayL2(feats, iters = 8, lr0 = 1.0, lambda = 0.001)
-      Learn.logisticPredict2(feats.filter(col("o_orderkey") <= 4000), w, "o_orderkey")
+      val w = Learn.logisticFitK(feats, d = 2, iters = 8,
+        Learn.decayL2Step(lr0 = 1.0, lambda = 0.001))
+      Learn.logisticPredictK(feats.filter(col("o_orderkey") <= 4000), w, 2, "o_orderkey")
         .orderBy("o_orderkey")
     },
 
@@ -640,15 +641,15 @@ object Ml {
     // averaged over the SAMPLE size — the reference's actual stochastic
     // path; s19 is its fraction = 1.0 degenerate case): the s19
     // objective trained on rotating deterministic quarter-batches
-    // (declared in Learn.logisticFitMiniBatch's scaladoc). Eight
+    // (declared in Learn.rotatingBatch's scaladoc). Eight
     // noisier, 4x-cheaper steps — each batch's exact gradient sums are
     // the oracle's to re-derive, so the whole stochastic trajectory is
     // gated, not just the final boundary.
     "s84_minibatch_sgd" -> { (s, dir) =>
       val feats = lrFeatures(s, dir, 10, 1000000)
-      val w = Learn.logisticFitMiniBatch(feats, "o_orderkey", iters = 8,
-        lr = 1.0, batches = 4)
-      Learn.logisticPredict2(feats.filter(col("o_orderkey") <= 4000), w, "o_orderkey")
+      val w = Learn.logisticFitK(feats, d = 2, iters = 8, Learn.constStep(1.0),
+        batch = Some(Learn.rotatingBatch("o_orderkey", batches = 4)))
+      Learn.logisticPredictK(feats.filter(col("o_orderkey") <= 4000), w, 2, "o_orderkey")
         .orderBy("o_orderkey")
     },
 
@@ -662,7 +663,7 @@ object Ml {
     "s50_lbfgs" -> { (s, dir) =>
       val feats = lrFeatures(s, dir, 10, 1000000)
       val w = Learn.lbfgsFit2(feats, iters = 6)
-      Learn.logisticPredict2(feats.filter(col("o_orderkey") <= 4000), w, "o_orderkey")
+      Learn.logisticPredictK(feats.filter(col("o_orderkey") <= 4000), w, 2, "o_orderkey")
         .orderBy("o_orderkey")
     },
 
@@ -916,14 +917,13 @@ object Ml {
       val feats = ordersBase(s, dir).select(col("o_orderkey"), col("x1"),
         expr("CAST((qty DIV 10) - 10 AS BIGINT)").as("x2"),
         expr("CAST(CASE WHEN qty + 5 * (o_orderkey % 13) > 130 THEN 1 ELSE -1 END AS BIGINT)").as("ys"))
-      val w = Learn.svmFit2(feats, iters = 8, lr = 0.5)
-      Learn.svmPredict2(feats.filter(col("o_orderkey") <= 4000), w, "o_orderkey")
+      val w = Learn.svmFitK(feats, d = 2, iters = 8, Learn.svmStep(0.5))
+      Learn.svmPredictK(feats.filter(col("o_orderkey") <= 4000), w, 2, "o_orderkey")
         .orderBy("o_orderkey")
     },
 
     // THREE-feature linear SVM (reference SVMWithSGD fits
-    // arbitrary-width vectors; svmFitK reproduces the 2-feature
-    // machinery byte-identically at d = 2, spec-pinned): the s27
+    // arbitrary-width vectors; s27 runs the same kernel at d = 2): the s27
     // problem plus the CENTERED x3 = (o_orderkey % 13) - 6 — the
     // label's own noise term, real margin signal the 2-feature
     // violator set cannot use.
@@ -932,7 +932,7 @@ object Ml {
         expr("CAST((qty DIV 10) - 10 AS BIGINT)").as("x2"),
         expr("CAST((o_orderkey % 13) - 6 AS BIGINT)").as("x3"),
         expr("CAST(CASE WHEN qty + 5 * (o_orderkey % 13) > 130 THEN 1 ELSE -1 END AS BIGINT)").as("ys"))
-      val w = Learn.svmFitK(feats, d = 3, iters = 8, lr = 0.5)
+      val w = Learn.svmFitK(feats, d = 3, iters = 8, Learn.svmStep(0.5))
       Learn.svmPredictK(feats.filter(col("o_orderkey") <= 4000), w, 3, "o_orderkey")
         .orderBy("o_orderkey")
     },
@@ -945,8 +945,8 @@ object Ml {
       val feats = ordersBase(s, dir).select(col("o_orderkey"), col("x1"),
         expr("CAST((qty DIV 10) - 10 AS BIGINT)").as("x2"),
         expr("CAST(CASE WHEN qty + 5 * (o_orderkey % 13) > 130 THEN 1 ELSE -1 END AS BIGINT)").as("ys"))
-      val w = Learn.svmFitL2(feats, iters = 8, lr = 0.5, lambda = 0.01)
-      Learn.svmPredict2(feats.filter(col("o_orderkey") <= 4000), w, "o_orderkey")
+      val w = Learn.svmFitK(feats, d = 2, iters = 8, Learn.svmL2Step(0.5, lambda = 0.01))
+      Learn.svmPredictK(feats.filter(col("o_orderkey") <= 4000), w, 2, "o_orderkey")
         .orderBy("o_orderkey")
     },
 
@@ -1705,101 +1705,76 @@ object Ml {
        |ORDER BY o_orderkey""".stripMargin
   }
 
-  /** One unrolled logistic-regression gradient iteration: the sigmoid
-    * micro-probability and the quantized update REUSE graft.ext.Learn's
-    * formula strings verbatim — the mirror IS the plan. */
-  /** [[lrIterCte]] with a per-model name prefix — the OVR oracle
-    * instantiates one chain per class over its own label CTE f`p`. */
-  private def lrIterCteP(p: String, k: Int, lr: Double): String =
+  /** The d-feature zero weight row (w0q..wdq) of the linear oracles. */
+  private def zeroWeightsSql(d: Int): String =
+    (0 to d).map(i => s"0::BIGINT AS w${i}q").mkString(", ")
+
+  /** Gradient CTE `${p}g$k` of logistic chain `p`: n and the exact sums
+    * g0..gd over the (x1..xd, yq) rows of `src` that `batch(k)` keeps (n
+    * is then the batch size, the reference's :201 miniBatchSize divisor),
+    * under the state row `${p}w${k-1}` — Learn.lrProbExprK verbatim. */
+  private def lrGradCteK(p: String, src: String, k: Int, d: Int,
+                         batch: Option[Int => String]): String = {
+    val gsums = (1 to d)
+      .map(i => s"    CAST(sum((yq - pq) * x$i) AS BIGINT) AS g$i").mkString(",\n")
+    val xs = (1 to d).map(i => s"x$i").mkString(", ")
+    val rows = batch.fold(src)(b => s"(SELECT * FROM $src WHERE ${b(k)})")
     s"""${p}g$k AS MATERIALIZED (
        |  SELECT CAST(count(*) AS BIGINT) AS n,
        |    CAST(sum(yq - pq) AS BIGINT) AS g0,
-       |    CAST(sum((yq - pq) * x1) AS BIGINT) AS g1,
-       |    CAST(sum((yq - pq) * x2) AS BIGINT) AS g2
-       |  FROM (SELECT yq, x1, x2, ${Learn.lrProbExpr} AS pq
-       |        FROM f$p CROSS JOIN ${p}w${k - 1})),
-       |${p}w$k AS MATERIALIZED (
-       |  SELECT ${Learn.lrUpdExpr("w0q", "g0", lr)} AS w0q,
-       |    ${Learn.lrUpdExpr("w1q", "g1", lr)} AS w1q,
-       |    ${Learn.lrUpdExpr("w2q", "g2", lr)} AS w2q
-       |  FROM ${p}g$k CROSS JOIN ${p}w${k - 1})""".stripMargin
+       |$gsums
+       |  FROM (SELECT yq, $xs, ${Learn.lrProbExprK(d)} AS pq
+       |        FROM $rows CROSS JOIN ${p}w${k - 1}))""".stripMargin
+  }
 
-  /** One unrolled L-BFGS(m=1) iteration: the s19 gradient CTE, then the
-    * staged two-loop as nested `SELECT *, ...` layers — every stage and
-    * the guarded update REUSE graft.ext.Learn.lbfgsStages /
+  /** The logistic oracle generator, mirror of Learn.logisticFitK: the zero
+    * row `${p}w0`, then `iters` unrolled iterations over `src`, each the
+    * gradient CTE and the 1-row update `${p}w$k` under `upd` — the
+    * probability and update strings are Learn's verbatim, so the mirror
+    * IS the plan. `p` prefixes every CTE name so one oracle can hold a
+    * chain per model (s43). */
+  private[queries] def lrChainCteK(p: String, src: String, d: Int, iters: Int,
+                                   upd: Learn.Updater,
+                                   batch: Option[Int => String] = None): String =
+    (s"${p}w0 AS (SELECT ${zeroWeightsSql(d)})" +: (1 to iters).map { k =>
+      val upds = (0 to d)
+        .map(i => s"    ${upd(k, s"w${i}q", s"g$i")} AS w${i}q").mkString(",\n")
+      s"""${lrGradCteK(p, src, k, d, batch)},
+         |${p}w$k AS MATERIALIZED (
+         |  SELECT
+         |$upds
+         |  FROM ${p}g$k CROSS JOIN ${p}w${k - 1})""".stripMargin
+    }).mkString(",\n")
+
+  /** A logistic oracle over the s19 features: `ctes` (ending in the
+    * fitted weight row `last`) after the base and feats CTEs, then the
+    * o_orderkey <= 4000 cohort scored from `src` at d features. */
+  private def lrCohortSql(ctes: String, last: String, d: Int = 2,
+                          src: String = "feats"): String =
+    s"""WITH $ordersBaseCte,
+       |${lrFeatsCte(10, 1000000L)},
+       |$ctes
+       |SELECT o_orderkey, CAST(yq // 1000000 AS BIGINT) AS label,
+       |  ${Learn.lrProbExprK(d)} AS p_micro,
+       |  CAST(CASE WHEN ${Learn.lrProbExprK(d)} >= 500000 THEN 1 ELSE 0 END AS BIGINT) AS pred
+       |FROM $src CROSS JOIN $last WHERE o_orderkey <= 4000
+       |ORDER BY o_orderkey""".stripMargin
+
+  /** One unrolled L-BFGS(m=1) iteration: the logistic gradient CTE, then
+    * the staged two-loop as nested `SELECT *, ...` layers — every stage
+    * and the guarded update REUSE graft.ext.Learn.lbfgsStages /
     * lbfgsUpdateExprs verbatim, so the mirror IS the plan. */
   private def lbfgsIterCte(k: Int, step: Double, lr0: Double): String = {
-    val inner = s"SELECT * FROM lbg$k CROSS JOIN lb${k - 1}"
+    val inner = s"SELECT * FROM lbg$k CROSS JOIN lbw${k - 1}"
     val nested = Learn.lbfgsStages.foldLeft(inner) { (acc, st) =>
       s"SELECT *, ${st.map { case (c, e) => s"$e AS $c" }.mkString(", ")} FROM ($acc)"
     }
     val upd = Learn.lbfgsUpdateExprs(step, lr0)
       .map { case (c, e) => s"$e AS $c" }.mkString(",\n    ")
-    s"""lbg$k AS MATERIALIZED (
-       |  SELECT CAST(count(*) AS BIGINT) AS n,
-       |    CAST(sum(yq - pq) AS BIGINT) AS gs0,
-       |    CAST(sum((yq - pq) * x1) AS BIGINT) AS gs1,
-       |    CAST(sum((yq - pq) * x2) AS BIGINT) AS gs2
-       |  FROM (SELECT yq, x1, x2, ${Learn.lrProbExpr} AS pq
-       |        FROM feats CROSS JOIN lb${k - 1})),
-       |lb$k AS MATERIALIZED (
+    s"""${lrGradCteK("lb", "feats", k, 2, None)},
+       |lbw$k AS MATERIALIZED (
        |  SELECT $upd
        |  FROM ($nested))""".stripMargin
-  }
-
-  /** One unrolled MINIBATCH gradient iteration: the s19 gradient CTE
-    * over iteration k's rotating hash-residue quarter, n = the BATCH
-    * size (the reference's :201 miniBatchSize divisor). */
-  private def sgdIterCte(k: Int, lr: Double, batches: Int): String = {
-    val h = "CAST('0x' || substr(md5('sgd:' || CAST(o_orderkey AS VARCHAR)), 1, 15) AS BIGINT)"
-    s"""sg$k AS MATERIALIZED (
-       |  SELECT CAST(count(*) AS BIGINT) AS n,
-       |    CAST(sum(yq - pq) AS BIGINT) AS g0,
-       |    CAST(sum((yq - pq) * x1) AS BIGINT) AS g1,
-       |    CAST(sum((yq - pq) * x2) AS BIGINT) AS g2
-       |  FROM (SELECT yq, x1, x2, ${Learn.lrProbExpr} AS pq
-       |        FROM (SELECT * FROM feats WHERE ($h + ${k - 1}) % $batches = 0)
-       |        CROSS JOIN sw${k - 1})),
-       |sw$k AS MATERIALIZED (
-       |  SELECT ${Learn.lrUpdExpr("w0q", "g0", lr)} AS w0q,
-       |    ${Learn.lrUpdExpr("w1q", "g1", lr)} AS w1q,
-       |    ${Learn.lrUpdExpr("w2q", "g2", lr)} AS w2q
-       |  FROM sg$k CROSS JOIN sw${k - 1})""".stripMargin
-  }
-
-  private[queries] def lrIterCte(k: Int, lr: Double): String =
-    s"""g$k AS MATERIALIZED (
-       |  SELECT CAST(count(*) AS BIGINT) AS n,
-       |    CAST(sum(yq - pq) AS BIGINT) AS g0,
-       |    CAST(sum((yq - pq) * x1) AS BIGINT) AS g1,
-       |    CAST(sum((yq - pq) * x2) AS BIGINT) AS g2
-       |  FROM (SELECT yq, x1, x2, ${Learn.lrProbExpr} AS pq
-       |        FROM feats CROSS JOIN w${k - 1})),
-       |w$k AS MATERIALIZED (
-       |  SELECT ${Learn.lrUpdExpr("w0q", "g0", lr)} AS w0q,
-       |    ${Learn.lrUpdExpr("w1q", "g1", lr)} AS w1q,
-       |    ${Learn.lrUpdExpr("w2q", "g2", lr)} AS w2q
-       |  FROM g$k CROSS JOIN w${k - 1})""".stripMargin
-
-  /** [[lrIterCte]] with the feature axis generalized (reads feats3,
-    * one gradient sum per feature). */
-  private def lrIterCteK(k: Int, d: Int, lr: Double): String = {
-    val gsums = (1 to d)
-      .map(i => s"    CAST(sum((yq - pq) * x$i) AS BIGINT) AS g$i").mkString(",\n|")
-    val xs = (1 to d).map(i => s"x$i").mkString(", ")
-    val upds = (0 to d)
-      .map(i => s"    ${Learn.lrUpdExpr(s"w${i}q", s"g$i", lr)} AS w${i}q")
-      .mkString(",\n|")
-    s"""g$k AS MATERIALIZED (
-       |  SELECT CAST(count(*) AS BIGINT) AS n,
-       |    CAST(sum(yq - pq) AS BIGINT) AS g0,
-       |$gsums
-       |  FROM (SELECT yq, $xs, ${Learn.lrProbExprK(d)} AS pq
-       |        FROM feats3 CROSS JOIN w${k - 1})),
-       |w$k AS MATERIALIZED (
-       |  SELECT
-       |$upds
-       |  FROM g$k CROSS JOIN w${k - 1})""".stripMargin
   }
 
   /** One unrolled decision-tree level: histogram -> prefix-sum candidate
@@ -2081,107 +2056,107 @@ object Ml {
   private def gbtTerm(b: String): String =
     s"(CASE WHEN (CASE WHEN $b.feat = 1 THEN c.x1 ELSE c.x2 END) <= $b.thr THEN $b.leftq ELSE $b.rightq END)"
 
-  /** One unrolled SVM hinge step (Learn.svmGradTerm/svmUpdExpr shared
-    * verbatim — the integer margin test and the one double update). */
-  private def svmL2IterCte(k: Int, lr: Double, lambda: Double): String =
-    s"""zg$k AS MATERIALIZED (
-       |  SELECT CAST(count(*) AS BIGINT) AS n,
-       |    CAST(sum(${Learn.svmGradTerm("")}) AS BIGINT) AS g0,
-       |    CAST(sum(${Learn.svmGradTerm(" * x1")}) AS BIGINT) AS g1,
-       |    CAST(sum(${Learn.svmGradTerm(" * x2")}) AS BIGINT) AS g2
-       |  FROM feats CROSS JOIN zw${k - 1}),
-       |zw$k AS MATERIALIZED (
-       |  SELECT ${Learn.svmUpdL2Expr("w0q", "g0", lr, lambda)} AS w0q,
-       |    ${Learn.svmUpdL2Expr("w1q", "g1", lr, lambda)} AS w1q,
-       |    ${Learn.svmUpdL2Expr("w2q", "g2", lr, lambda)} AS w2q
-       |  FROM zg$k CROSS JOIN zw${k - 1})""".stripMargin
+  /** The SVM oracle generator, mirror of Learn.svmFitK: the zero row vw0,
+    * then `iters` unrolled hinge steps, each the d + 1 exact violator sums
+    * (Learn.svmGradTermK's integer margin test) and the 1-row update under
+    * `upd` — Learn's strings verbatim. */
+  private def svmChainCteK(d: Int, iters: Int, upd: Learn.Updater): String =
+    (s"vw0 AS (SELECT ${zeroWeightsSql(d)})" +: (1 to iters).map { k =>
+      val gsums = (0 to d).map { i =>
+        val mult = if (i == 0) "" else s" * x$i"
+        s"    CAST(sum(${Learn.svmGradTermK(d, mult)}) AS BIGINT) AS g$i"
+      }.mkString(",\n")
+      val upds = (0 to d)
+        .map(i => s"    ${upd(k, s"w${i}q", s"g$i")} AS w${i}q").mkString(",\n")
+      s"""vg$k AS MATERIALIZED (
+         |  SELECT CAST(count(*) AS BIGINT) AS n,
+         |$gsums
+         |  FROM feats CROSS JOIN vw${k - 1}),
+         |vw$k AS MATERIALIZED (
+         |  SELECT
+         |$upds
+         |  FROM vg$k CROSS JOIN vw${k - 1})""".stripMargin
+    }).mkString(",\n")
 
-  private def svmIterCte(k: Int, lr: Double): String =
-    s"""vg$k AS MATERIALIZED (
-       |  SELECT CAST(count(*) AS BIGINT) AS n,
-       |    CAST(sum(${Learn.svmGradTerm("")}) AS BIGINT) AS g0,
-       |    CAST(sum(${Learn.svmGradTerm(" * x1")}) AS BIGINT) AS g1,
-       |    CAST(sum(${Learn.svmGradTerm(" * x2")}) AS BIGINT) AS g2
-       |  FROM feats CROSS JOIN vw${k - 1}),
-       |vw$k AS MATERIALIZED (
-       |  SELECT ${Learn.svmUpdExpr("w0q", "g0", lr)} AS w0q,
-       |    ${Learn.svmUpdExpr("w1q", "g1", lr)} AS w1q,
-       |    ${Learn.svmUpdExpr("w2q", "g2", lr)} AS w2q
-       |  FROM vg$k CROSS JOIN vw${k - 1})""".stripMargin
+  /** An SVM oracle: the base CTE, `feats` (o_orderkey, x1..xd, ys) from
+    * `featsSel`, eight hinge steps under `upd`, cohort scoring under vw8. */
+  private def svmOracleSql(featsSel: String, d: Int, upd: Learn.Updater): String =
+    s"""WITH $ordersBaseCte,
+       |feats AS MATERIALIZED (
+       |  SELECT $featsSel
+       |  FROM base),
+       |${svmChainCteK(d, 8, upd)}
+       |SELECT o_orderkey, CAST(ys AS BIGINT) AS label,
+       |  CAST(${Learn.marginK(d)} AS BIGINT) AS score_q,
+       |  CAST(CASE WHEN ${Learn.marginK(d)} >= 0 THEN 1 ELSE -1 END AS BIGINT) AS pred
+       |FROM feats CROSS JOIN vw8 WHERE o_orderkey <= 4000
+       |ORDER BY o_orderkey""".stripMargin
 
-  /** [[svmIterCte]] with the feature axis generalized. */
-  private def svmIterCteK(k: Int, d: Int, lr: Double): String = {
-    val gsums = (1 to d)
-      .map(i => s"    CAST(sum(${Learn.svmGradTermK(d, s" * x$i")}) AS BIGINT) AS g$i")
-      .mkString(",\n|")
-    val upds = (0 to d)
-      .map(i => s"    ${Learn.svmUpdExpr(s"w${i}q", s"g$i", lr)} AS w${i}q")
-      .mkString(",\n|")
-    s"""vg$k AS MATERIALIZED (
-       |  SELECT CAST(count(*) AS BIGINT) AS n,
-       |    CAST(sum(${Learn.svmGradTermK(d, "")}) AS BIGINT) AS g0,
-       |$gsums
-       |  FROM feats CROSS JOIN vw${k - 1}),
-       |vw$k AS MATERIALIZED (
-       |  SELECT
-       |$upds
-       |  FROM vg$k CROSS JOIN vw${k - 1})""".stripMargin
+  /** The softmax oracle, mirror of Learn.softmaxFitK at K classes over
+    * centered qty features with label `yCase`: twelve unrolled lr-2.0
+    * rounds, then the o_orderkey <= 4000 cohort with the p0 string `p0`
+    * and the generated argmax. */
+  private def softmaxOracleSql(kTot: Int, yCase: String,
+                               p0: String): String = {
+    val iters = (1 to 12).map { k =>
+      val esels = (1 until kTot).map(kk =>
+        s"      CAST(CASE WHEN y = $kk THEN 1000000 ELSE 0 END AS BIGINT) - ${Learn.smProbExprK(kk, kTot)} AS e$kk")
+        .mkString(",\n")
+      val gsums = (for (kk <- 1 until kTot; j <- 0 to 2) yield
+        if (j == 0) s"    CAST(sum(e$kk) AS BIGINT) AS g0$kk"
+        else s"    CAST(sum(e$kk * x$j) AS BIGINT) AS g$j$kk").mkString(",\n")
+      val upds = (for (kk <- 1 until kTot; j <- 0 to 2)
+        yield s"    ${Learn.lrUpdExpr(s"w$j${kk}q", s"g$j$kk", 2.0)} AS w$j${kk}q")
+        .mkString(",\n")
+      s"""mg$k AS MATERIALIZED (
+         |  SELECT CAST(count(*) AS BIGINT) AS n,
+         |$gsums
+         |  FROM (SELECT x1, x2,
+         |$esels
+         |    FROM mfeats CROSS JOIN mw${k - 1})),
+         |mw$k AS MATERIALIZED (
+         |  SELECT
+         |$upds
+         |  FROM mg$k CROSS JOIN mw${k - 1})""".stripMargin
+    }.mkString(",\n")
+    val probs = (1 until kTot).map(kk =>
+      s"${Learn.smProbExprK(kk, kTot)} AS p${kk}_micro").mkString(",\n  ")
+    val pcols = (1 until kTot).map(kk => s"p${kk}_micro").mkString(", ")
+    val zeros = (for (kk <- 1 until kTot; j <- 0 to 2)
+      yield s"0::BIGINT AS w$j${kk}q").mkString(", ")
+    s"""WITH $ordersBaseCte,
+       |mfeats AS MATERIALIZED (
+       |  SELECT o_orderkey, x1, CAST((qty // 10) - 10 AS BIGINT) AS x2,
+       |    CAST($yCase AS BIGINT) AS y
+       |  FROM base),
+       |mw0 AS (SELECT $zeros),
+       |$iters,
+       |scored AS (SELECT o_orderkey, CAST(y AS BIGINT) AS label,
+       |  $probs
+       |  FROM mfeats CROSS JOIN mw12 WHERE o_orderkey <= 4000)
+       |SELECT o_orderkey, label, p0_micro, $pcols, ${Learn.smArgmaxExprK(kTot)}
+       |FROM (SELECT o_orderkey, label, $pcols, $p0 FROM scored)
+       |ORDER BY o_orderkey""".stripMargin
   }
+
+  private val svmFeats2 =
+    "o_orderkey, x1, CAST((qty // 10) - 10 AS BIGINT) AS x2,\n" +
+      "    CAST(CASE WHEN qty + 5 * (o_orderkey % 13) > 130 THEN 1 ELSE -1 END AS BIGINT) AS ys"
 
   val oracles: Map[String, String] = Map(
     // The s27 oracle with the feature axis at d = 3.
-    "s106_svm_k" -> {
-      val iters = (1 to 8).map(svmIterCteK(_, 3, 0.5)).mkString(",\n")
-      s"""WITH $ordersBaseCte,
-         |feats AS MATERIALIZED (
-         |  SELECT o_orderkey, x1, CAST((qty // 10) - 10 AS BIGINT) AS x2,
-         |         CAST((o_orderkey % 13) - 6 AS BIGINT) AS x3,
-         |         CAST(CASE WHEN qty + 5 * (o_orderkey % 13) > 130 THEN 1 ELSE -1 END AS BIGINT) AS ys
-         |  FROM base),
-         |vw0 AS (SELECT 0::BIGINT AS w0q, 0::BIGINT AS w1q, 0::BIGINT AS w2q,
-         |  0::BIGINT AS w3q),
-         |$iters
-         |SELECT o_orderkey, CAST(ys AS BIGINT) AS label,
-         |  CAST(${Learn.svmMarginK(3)} AS BIGINT) AS score_q,
-         |  CAST(CASE WHEN ${Learn.svmMarginK(3)} >= 0 THEN 1 ELSE -1 END AS BIGINT) AS pred
-         |FROM feats CROSS JOIN vw8 WHERE o_orderkey <= 4000
-         |ORDER BY o_orderkey""".stripMargin
-    },
+    "s106_svm_k" -> svmOracleSql(
+      "o_orderkey, x1, CAST((qty // 10) - 10 AS BIGINT) AS x2,\n" +
+        "    CAST((o_orderkey % 13) - 6 AS BIGINT) AS x3,\n" +
+        "    CAST(CASE WHEN qty + 5 * (o_orderkey % 13) > 130 THEN 1 ELSE -1 END AS BIGINT) AS ys",
+      3, Learn.svmStep(0.5)),
 
     // The s27 chain under the L2-shrunk update strings.
-    "s86_svm_l2" -> {
-      val iters = (1 to 8).map(svmL2IterCte(_, 0.5, 0.01)).mkString(",\n")
-      s"""WITH $ordersBaseCte,
-         |feats AS MATERIALIZED (
-         |  SELECT o_orderkey, x1, CAST((qty // 10) - 10 AS BIGINT) AS x2,
-         |         CAST(CASE WHEN qty + 5 * (o_orderkey % 13) > 130 THEN 1 ELSE -1 END AS BIGINT) AS ys
-         |  FROM base),
-         |zw0 AS (SELECT 0::BIGINT AS w0q, 0::BIGINT AS w1q, 0::BIGINT AS w2q),
-         |$iters
-         |SELECT o_orderkey, CAST(ys AS BIGINT) AS label,
-         |  CAST((w0q + (w1q * x1)) + (w2q * x2) AS BIGINT) AS score_q,
-         |  CAST(CASE WHEN (w0q + (w1q * x1)) + (w2q * x2) >= 0 THEN 1 ELSE -1 END AS BIGINT) AS pred
-         |FROM feats CROSS JOIN zw8 WHERE o_orderkey <= 4000
-         |ORDER BY o_orderkey""".stripMargin
-    },
+    "s86_svm_l2" -> svmOracleSql(svmFeats2, 2, Learn.svmL2Step(0.5, 0.01)),
 
     // 8 unrolled hinge subgradient steps sharing Learn's margin-test and
     // update formula strings, then cohort scoring under vw8.
-    "s27_linear_svm" -> {
-      val iters = (1 to 8).map(svmIterCte(_, 0.5)).mkString(",\n")
-      s"""WITH $ordersBaseCte,
-         |feats AS MATERIALIZED (
-         |  SELECT o_orderkey, x1, CAST((qty // 10) - 10 AS BIGINT) AS x2,
-         |         CAST(CASE WHEN qty + 5 * (o_orderkey % 13) > 130 THEN 1 ELSE -1 END AS BIGINT) AS ys
-         |  FROM base),
-         |vw0 AS (SELECT 0::BIGINT AS w0q, 0::BIGINT AS w1q, 0::BIGINT AS w2q),
-         |$iters
-         |SELECT o_orderkey, CAST(ys AS BIGINT) AS label,
-         |  CAST((w0q + (w1q * x1)) + (w2q * x2) AS BIGINT) AS score_q,
-         |  CAST(CASE WHEN (w0q + (w1q * x1)) + (w2q * x2) >= 0 THEN 1 ELSE -1 END AS BIGINT) AS pred
-         |FROM feats CROSS JOIN vw8 WHERE o_orderkey <= 4000
-         |ORDER BY o_orderkey""".stripMargin
-    },
+    "s27_linear_svm" -> svmOracleSql(svmFeats2, 2, Learn.svmStep(0.5)),
 
     // Three unrolled boosting rounds: each round's split constants are
     // re-derived from the previous round's residual table, then the
@@ -2659,189 +2634,53 @@ object Ml {
          |ORDER BY m.round""".stripMargin
     },
 
-    // 8 unrolled full-batch gradient iterations sharing Learn's sigmoid /
-    // update formula strings, then cohort scoring under w8.
     // Six unrolled L-BFGS(m=1) iterations over the shared staged
-    // two-loop, then the s19 prediction projection under lb6.
+    // two-loop, then the s19 prediction projection under lbw6.
     "s50_lbfgs" -> {
-      val iters = (1 to 6).map(lbfgsIterCte(_, 0.5, 1.0)).mkString(",\n")
       val zeros = (0 to 2).flatMap(i => Seq(s"0::BIGINT AS w${i}q",
         s"0::BIGINT AS pw${i}q", s"0::BIGINT AS pg$i")).mkString(", ")
-      s"""WITH $ordersBaseCte,
-         |${lrFeatsCte(10, 1000000L)},
-         |lb0 AS (SELECT $zeros),
-         |$iters
-         |SELECT o_orderkey, CAST(yq // 1000000 AS BIGINT) AS label,
-         |  ${Learn.lrProbExpr} AS p_micro,
-         |  CAST(CASE WHEN ${Learn.lrProbExpr} >= 500000 THEN 1 ELSE 0 END AS BIGINT) AS pred
-         |FROM feats CROSS JOIN lb6 WHERE o_orderkey <= 4000
-         |ORDER BY o_orderkey""".stripMargin
+      lrCohortSql(s"lbw0 AS (SELECT $zeros),\n" +
+        (1 to 6).map(lbfgsIterCte(_, 0.5, 1.0)).mkString(",\n"), "lbw6")
     },
 
-    "s19_logistic_regression" -> {
-      val iters = (1 to 8).map(lrIterCte(_, 1.0)).mkString(",\n")
-      s"""WITH $ordersBaseCte,
-         |${lrFeatsCte(10, 1000000L)},
-         |w0 AS (SELECT 0::BIGINT AS w0q, 0::BIGINT AS w1q, 0::BIGINT AS w2q),
-         |$iters
-         |SELECT o_orderkey, CAST(yq // 1000000 AS BIGINT) AS label,
-         |  ${Learn.lrProbExpr} AS p_micro,
-         |  CAST(CASE WHEN ${Learn.lrProbExpr} >= 500000 THEN 1 ELSE 0 END AS BIGINT) AS pred
-         |FROM feats CROSS JOIN w8 WHERE o_orderkey <= 4000
-         |ORDER BY o_orderkey""".stripMargin
-    },
+    // 8 unrolled full-batch gradient iterations sharing Learn's sigmoid /
+    // update formula strings, then cohort scoring under w8.
+    "s19_logistic_regression" ->
+      lrCohortSql(lrChainCteK("", "feats", 2, 8, Learn.constStep(1.0)), "w8"),
 
-    // The s19 oracle with the feature axis at d = 3 (lrIterCteK shares
-    // lrProbExprK/lrUpdExpr verbatim).
-    "s105_logistic_k" -> {
-      val iters = (1 to 8).map(lrIterCteK(_, 3, 1.0)).mkString(",\n")
-      s"""WITH $ordersBaseCte,
-         |${lrFeatsCte(10, 1000000L)},
-         |feats3 AS MATERIALIZED (
+    // The s19 oracle with the feature axis at d = 3.
+    "s105_logistic_k" -> lrCohortSql(
+      s"""feats3 AS MATERIALIZED (
          |  SELECT o_orderkey, x1, x2, CAST(o_orderkey % 13 AS BIGINT) AS x3, yq
          |  FROM feats),
-         |w0 AS (SELECT 0::BIGINT AS w0q, 0::BIGINT AS w1q, 0::BIGINT AS w2q,
-         |  0::BIGINT AS w3q),
-         |$iters
-         |SELECT o_orderkey, CAST(yq // 1000000 AS BIGINT) AS label,
-         |  ${Learn.lrProbExprK(3)} AS p_micro,
-         |  CAST(CASE WHEN ${Learn.lrProbExprK(3)} >= 500000 THEN 1 ELSE 0 END AS BIGINT) AS pred
-         |FROM feats3 CROSS JOIN w8 WHERE o_orderkey <= 4000
-         |ORDER BY o_orderkey""".stripMargin
-    },
+         |${lrChainCteK("", "feats3", 3, 8, Learn.constStep(1.0))}""".stripMargin,
+      "w8", d = 3, src = "feats3"),
 
-    // The s87 oracle at K = 4: nine gradient sums per round, the same
-    // generated probability / complement / argmax strings.
-    "s107_softmax_k4" -> {
-      val K = 4
-      val iters = (1 to 12).map { k =>
-        val esels = (1 until K).map(kk =>
-          s"      CAST(CASE WHEN y = $kk THEN 1000000 ELSE 0 END AS BIGINT) - ${Learn.smProbExprK(kk, K)} AS e$kk")
-          .mkString(",\n|")
-        val gsums = (for (kk <- 1 until K; j <- 0 to 2) yield
-          if (j == 0) s"    CAST(sum(e$kk) AS BIGINT) AS g0$kk"
-          else s"    CAST(sum(e$kk * x$j) AS BIGINT) AS g$j$kk").mkString(",\n|")
-        val upds = (for (kk <- 1 until K; j <- 0 to 2)
-          yield s"    ${Learn.lrUpdExpr(s"w$j${kk}q", s"g$j$kk", 2.0)} AS w$j${kk}q")
-          .mkString(",\n|")
-        s"""mg$k AS MATERIALIZED (
-           |  SELECT CAST(count(*) AS BIGINT) AS n,
-           |$gsums
-           |  FROM (SELECT x1, x2,
-           |$esels
-           |    FROM mfeats CROSS JOIN mw${k - 1})),
-           |mw$k AS MATERIALIZED (
-           |  SELECT
-           |$upds
-           |  FROM mg$k CROSS JOIN mw${k - 1})""".stripMargin
-      }.mkString(",\n")
-      val probs = (1 until K).map(kk =>
-        s"${Learn.smProbExprK(kk, K)} AS p${kk}_micro").mkString(",\n|  ")
-      val pcols = (1 until K).map(kk => s"p${kk}_micro").mkString(", ")
-      s"""WITH $ordersBaseCte,
-         |mfeats AS MATERIALIZED (
-         |  SELECT o_orderkey, x1, CAST((qty // 10) - 10 AS BIGINT) AS x2,
-         |    CAST(CASE WHEN qty + 5 * (o_orderkey % 13) > 165 THEN 3
-         |         WHEN qty + 5 * (o_orderkey % 13) > 135 THEN 2
-         |         WHEN qty + 5 * (o_orderkey % 13) > 105 THEN 1 ELSE 0 END AS BIGINT) AS y
-         |  FROM base),
-         |mw0 AS (SELECT ${(for (kk <- 1 until K; j <- 0 to 2)
-            yield s"0::BIGINT AS w$j${kk}q").mkString(", ")}),
-         |$iters,
-         |scored AS (SELECT o_orderkey, CAST(y AS BIGINT) AS label,
-         |  $probs
-         |  FROM mfeats CROSS JOIN mw12 WHERE o_orderkey <= 4000)
-         |SELECT o_orderkey, label, p0_micro, $pcols, ${Learn.smArgmaxExprK(K)}
-         |FROM (SELECT o_orderkey, label, $pcols, ${Learn.smP0ExprK(K)} FROM scored)
-         |ORDER BY o_orderkey""".stripMargin
-    },
-
-    // Twelve unrolled softmax iterations: the shared probability
-    // strings, six exact gradient sums per round, the s19 update per
-    // block weight.
-    "s87_softmax_regression" -> {
-      val iters = (1 to 12).map { k =>
-        val upds = (for (kk <- 1 to 2; j <- 0 to 2)
-          yield s"${Learn.lrUpdExpr(s"w$j${kk}q", s"g$j$kk", 2.0)} AS w$j${kk}q")
-          .mkString(",\n    ")
-        s"""mg$k AS MATERIALIZED (
-           |  SELECT CAST(count(*) AS BIGINT) AS n,
-           |    CAST(sum(e1) AS BIGINT) AS g01, CAST(sum(e1 * x1) AS BIGINT) AS g11,
-           |    CAST(sum(e1 * x2) AS BIGINT) AS g21,
-           |    CAST(sum(e2) AS BIGINT) AS g02, CAST(sum(e2 * x1) AS BIGINT) AS g12,
-           |    CAST(sum(e2 * x2) AS BIGINT) AS g22
-           |  FROM (SELECT x1, x2,
-           |      CAST(CASE WHEN y = 1 THEN 1000000 ELSE 0 END AS BIGINT) - ${Learn.smProbExpr(1)} AS e1,
-           |      CAST(CASE WHEN y = 2 THEN 1000000 ELSE 0 END AS BIGINT) - ${Learn.smProbExpr(2)} AS e2
-           |    FROM mfeats CROSS JOIN mw${k - 1})),
-           |mw$k AS MATERIALIZED (
-           |  SELECT $upds
-           |  FROM mg$k CROSS JOIN mw${k - 1})""".stripMargin
-      }.mkString(",\n")
-      val zeros = (for (kk <- 1 to 2; j <- 0 to 2)
-        yield s"0::BIGINT AS w$j${kk}q").mkString(", ")
-      s"""WITH $ordersBaseCte,
-         |mfeats AS MATERIALIZED (
-         |  SELECT o_orderkey, x1, CAST((qty // 10) - 10 AS BIGINT) AS x2,
-         |    CAST(CASE WHEN qty + 5 * (o_orderkey % 13) > 150 THEN 2
-         |         WHEN qty + 5 * (o_orderkey % 13) > 115 THEN 1 ELSE 0 END AS BIGINT) AS y
-         |  FROM base),
-         |mw0 AS (SELECT $zeros),
-         |$iters,
-         |scored AS (
-         |  SELECT o_orderkey, CAST(y AS BIGINT) AS label,
-         |    ${Learn.smProbExpr(1)} AS p1_micro, ${Learn.smProbExpr(2)} AS p2_micro
-         |  FROM mfeats CROSS JOIN mw12 WHERE o_orderkey <= 4000)
-         |SELECT o_orderkey, label,
-         |  CAST(1000000 - (p1_micro + p2_micro) AS BIGINT) AS p0_micro,
-         |  p1_micro, p2_micro,
-         |  CAST(CASE WHEN 1000000 - (p1_micro + p2_micro) >= p1_micro
-         |         AND 1000000 - (p1_micro + p2_micro) >= p2_micro THEN 0
-         |       WHEN p1_micro >= p2_micro THEN 1 ELSE 2 END AS BIGINT) AS pred
-         |FROM scored ORDER BY o_orderkey""".stripMargin
-    },
+    // Twelve unrolled softmax rounds of 3(K - 1) gradient sums each: the
+    // generated probability / complement / argmax strings, the s19 update
+    // per block weight.
+    "s107_softmax_k4" -> softmaxOracleSql(4,
+      """CASE WHEN qty + 5 * (o_orderkey % 13) > 165 THEN 3
+        |         WHEN qty + 5 * (o_orderkey % 13) > 135 THEN 2
+        |         WHEN qty + 5 * (o_orderkey % 13) > 105 THEN 1 ELSE 0 END""".stripMargin,
+      Learn.smP0ExprK(4)),
+    // s87 scores with the unclamped p0 of Learn.softmaxPredict2.
+    "s87_softmax_regression" -> softmaxOracleSql(3,
+      """CASE WHEN qty + 5 * (o_orderkey % 13) > 150 THEN 2
+        |         WHEN qty + 5 * (o_orderkey % 13) > 115 THEN 1 ELSE 0 END""".stripMargin,
+      Learn.smP0Unclamped3),
 
     // Eight unrolled full-batch iterations under the per-iteration
     // decayed + L2 update strings, then cohort scoring under dw8.
-    "s85_sgd_decay_l2" -> {
-      val iters = (1 to 8).map { k =>
-        s"""dg$k AS MATERIALIZED (
-           |  SELECT CAST(count(*) AS BIGINT) AS n,
-           |    CAST(sum(yq - pq) AS BIGINT) AS g0,
-           |    CAST(sum((yq - pq) * x1) AS BIGINT) AS g1,
-           |    CAST(sum((yq - pq) * x2) AS BIGINT) AS g2
-           |  FROM (SELECT yq, x1, x2, ${Learn.lrProbExpr} AS pq
-           |        FROM feats CROSS JOIN dw${k - 1})),
-           |dw$k AS MATERIALIZED (
-           |  SELECT ${Learn.lrUpdDecayL2Expr("w0q", "g0", 1.0, k, 0.001)} AS w0q,
-           |    ${Learn.lrUpdDecayL2Expr("w1q", "g1", 1.0, k, 0.001)} AS w1q,
-           |    ${Learn.lrUpdDecayL2Expr("w2q", "g2", 1.0, k, 0.001)} AS w2q
-           |  FROM dg$k CROSS JOIN dw${k - 1})""".stripMargin
-      }.mkString(",\n")
-      s"""WITH $ordersBaseCte,
-         |${lrFeatsCte(10, 1000000L)},
-         |dw0 AS (SELECT 0::BIGINT AS w0q, 0::BIGINT AS w1q, 0::BIGINT AS w2q),
-         |$iters
-         |SELECT o_orderkey, CAST(yq // 1000000 AS BIGINT) AS label,
-         |  ${Learn.lrProbExpr} AS p_micro,
-         |  CAST(CASE WHEN ${Learn.lrProbExpr} >= 500000 THEN 1 ELSE 0 END AS BIGINT) AS pred
-         |FROM feats CROSS JOIN dw8 WHERE o_orderkey <= 4000
-         |ORDER BY o_orderkey""".stripMargin
-    },
+    "s85_sgd_decay_l2" ->
+      lrCohortSql(lrChainCteK("d", "feats", 2, 8, Learn.decayL2Step(1.0, 0.001)), "dw8"),
 
     // Eight unrolled rotating-quarter-batch iterations sharing the s19
     // sigmoid/update strings, then cohort scoring under sw8.
     "s84_minibatch_sgd" -> {
-      val iters = (1 to 8).map(sgdIterCte(_, 1.0, 4)).mkString(",\n")
-      s"""WITH $ordersBaseCte,
-         |${lrFeatsCte(10, 1000000L)},
-         |sw0 AS (SELECT 0::BIGINT AS w0q, 0::BIGINT AS w1q, 0::BIGINT AS w2q),
-         |$iters
-         |SELECT o_orderkey, CAST(yq // 1000000 AS BIGINT) AS label,
-         |  ${Learn.lrProbExpr} AS p_micro,
-         |  CAST(CASE WHEN ${Learn.lrProbExpr} >= 500000 THEN 1 ELSE 0 END AS BIGINT) AS pred
-         |FROM feats CROSS JOIN sw8 WHERE o_orderkey <= 4000
-         |ORDER BY o_orderkey""".stripMargin
+      val h = "CAST('0x' || substr(md5('sgd:' || CAST(o_orderkey AS VARCHAR)), 1, 15) AS BIGINT)"
+      lrCohortSql(lrChainCteK("s", "feats", 2, 8, Learn.constStep(1.0),
+        batch = Some(k => s"($h + ${k - 1}) % 4 = 0")), "sw8")
     },
 
     // Two unrolled histogram-split levels, then the leaf populations —
@@ -3293,12 +3132,11 @@ object Ml {
           s"""fc$c AS MATERIALIZED (
              |  SELECT o_orderkey, x1, x2,
              |         CAST(CASE WHEN cls = $c THEN 1000000 ELSE 0 END AS BIGINT) AS yq
-             |  FROM fx),
-             |c${c}w0 AS (SELECT CAST(0 AS BIGINT) AS w0q, CAST(0 AS BIGINT) AS w1q, CAST(0 AS BIGINT) AS w2q)""".stripMargin
-        (Seq(label) ++ (1 to 4).map(k => lrIterCteP(s"c$c", k, 1.0))).mkString(",\n")
+             |  FROM fx)""".stripMargin
+        s"$label,\n${lrChainCteK(s"c$c", s"fc$c", 2, 4, Learn.constStep(1.0))}"
       }.mkString(",\n")
       val scoreUnion = classes.map { c =>
-        s"""  SELECT o_orderkey, cls, CAST($c AS BIGINT) AS mcls, ${Learn.lrProbExpr} AS p_micro
+        s"""  SELECT o_orderkey, cls, CAST($c AS BIGINT) AS mcls, ${Learn.lrProbExprK(2)} AS p_micro
            |  FROM (SELECT * FROM fx WHERE o_orderkey <= 2000) CROSS JOIN c${c}w4""".stripMargin
       }.mkString("\n  UNION ALL\n")
       s"""WITH $ordersBaseCte,

@@ -311,7 +311,7 @@ object Streams {
     // gradient update per micro-batch, the model held on the driver
     // between batches): per-event features (user residue, value decile)
     // with a purchase label, the events file as one micro-batch through
-    // foreachBatch, weights updated by graft.ext.Learn.logisticStep —
+    // foreachBatch, weights updated by graft.ext.Learn.logisticStepK —
     // the identical quantized step s19's batch loop uses, so the oracle
     // is one unrolled iteration over the same features.
     // Streaming linear regression (reference mllib/regression/
@@ -491,7 +491,7 @@ object Streams {
         "CAST(user_id % 10 AS BIGINT) AS x1",
         "CAST(CAST(round(value) AS BIGINT) DIV 10 AS BIGINT) AS x2",
         "CAST(round(value) AS BIGINT) AS y")
-      var w = graft.ext.Learn.logisticInit(s).localCheckpoint()
+      var w = graft.ext.Learn.zeroWeights(s, 2).localCheckpoint()
       val q = feats.writeStream
         .foreachBatch { (b: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
           w = graft.ext.Learn.linearStep(b, w, lr = 0.05).localCheckpoint()
@@ -506,10 +506,10 @@ object Streams {
         "CAST(user_id % 10 AS BIGINT) AS x1",
         "CAST(CAST(round(value) AS BIGINT) DIV 10 AS BIGINT) AS x2",
         "CAST(CASE WHEN event_type = 'purchase' THEN 1000000 ELSE 0 END AS BIGINT) AS yq")
-      var w = graft.ext.Learn.logisticInit(s).localCheckpoint()
+      var w = graft.ext.Learn.zeroWeights(s, 2).localCheckpoint()
       val q = feats.writeStream
         .foreachBatch { (b: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-          w = graft.ext.Learn.logisticStep(b, w, lr = 1.0).localCheckpoint()
+          w = graft.ext.Learn.logisticStepK(b, w, 2, graft.ext.Learn.constStep(1.0)).localCheckpoint()
         }
         .start()
       try q.processAllAvailable() finally q.stop()
@@ -639,7 +639,7 @@ object Streams {
          |GROUP BY u.cl ORDER BY cluster""".stripMargin,
 
     // The corpus arrives as one micro-batch, so the streamed model equals
-    // exactly ONE unrolled gradient iteration (Ml.lrIterCte — the shared
+    // exactly ONE unrolled gradient iteration (Ml.lrChainCteK — the shared
     // sigmoid/update formula strings) over the event features.
     // Mirror of the streaming test: cumulative-window state over one
     // micro-batch equals the batch six sums; shared Welch formula
@@ -744,8 +744,7 @@ object Streams {
          |         CAST(CAST(round(value) AS BIGINT) // 10 AS BIGINT) AS x2,
          |         CAST(CASE WHEN event_type = 'purchase' THEN 1000000 ELSE 0 END AS BIGINT) AS yq
          |  FROM events),
-         |w0 AS (SELECT 0::BIGINT AS w0q, 0::BIGINT AS w1q, 0::BIGINT AS w2q),
-         |${Ml.lrIterCte(1, 1.0)}
+         |${Ml.lrChainCteK("", "feats", 2, 1, graft.ext.Learn.constStep(1.0))}
          |SELECT w0q, w1q, w2q FROM w1""".stripMargin
   )
 }

@@ -378,7 +378,7 @@ class LearnSpec extends SparkSpec {
       (i, i % 3, (i % 10) - 5, if ((i % 10) - 5 >= 0) 1000000L else 0L)
     }
     val feats = raw.toDF("id", "x1", "x2", "yq")
-    val w = Learn.logisticFit2(feats, iters = 8, lr = 1.0)
+    val w = Learn.logisticFitK(feats, d = 2, iters = 8, Learn.constStep(1.0))
     val wr = w.head()
     val got = (wr.getLong(0), wr.getLong(1), wr.getLong(2))
     // scalar mirror of the identical arithmetic: Math.exp IS Spark's exp,
@@ -400,7 +400,7 @@ class LearnSpec extends SparkSpec {
     }
     assert(got === mw)
     assert(got._3 > 0, "must learn the separating direction")
-    val scored = Learn.logisticPredict2(feats, w, "id").collect()
+    val scored = Learn.logisticPredictK(feats, w, 2, "id").collect()
     val acc = scored.count(r => r.getLong(3) == r.getLong(1)).toDouble / scored.length
     assert(acc === 1.0, s"separable fixture must fully separate, got $acc")
   }
@@ -414,12 +414,12 @@ class LearnSpec extends SparkSpec {
     // zero history -> sy = 0 -> the curvature guard must route iteration 1
     // through the identical plain ascent step
     val one = Learn.lbfgsFit2(feats, iters = 1, step = 0.5, lr0 = 1.0).head()
-    val gd = Learn.logisticStep(feats, Learn.logisticInit(spark), lr = 1.0).head()
+    val gd = Learn.logisticStepK(feats, Learn.zeroWeights(spark, 2), 2, Learn.constStep(1.0)).head()
     assert((one.getLong(0), one.getLong(1), one.getLong(2)) ===
       ((gd.getLong(0), gd.getLong(1), gd.getLong(2))))
     // after 6 iterations the separable boundary is learned
     val w = Learn.lbfgsFit2(feats, iters = 6)
-    val scored = Learn.logisticPredict2(feats, w, "id").collect()
+    val scored = Learn.logisticPredictK(feats, w, 2, "id").collect()
     val acc = scored.count(r => r.getLong(1) === r.getLong(3)).toDouble / scored.length
     assert(acc >= 0.95, s"lbfgs should separate the fixture, accuracy $acc")
     // partitioning determinism of the full staged two-loop
@@ -455,9 +455,35 @@ class LearnSpec extends SparkSpec {
     val feats = (1L to 200L).map { i =>
       (i, i % 5, (i * 7) % 23, if ((i * 3) % 11 > 5) 1000000L else 0L)
     }.toDF("id", "x1", "x2", "yq")
-    val a = Learn.logisticFit2(feats.repartition(1), iters = 4).head()
-    val b = Learn.logisticFit2(feats.repartition(13, col("x2")), iters = 4).head()
+    val a = Learn.logisticFitK(feats.repartition(1), 2, iters = 4, Learn.constStep(1.0)).head()
+    val b = Learn.logisticFitK(feats.repartition(13, col("x2")), 2, iters = 4,
+      Learn.constStep(1.0)).head()
     assert(a === b)
+  }
+
+  test("full-batch loop: two jobs per extra iteration, and the input cache is released") {
+    import spark.implicits._
+    import org.apache.spark.sql.DataFrame
+    val rows = (1L to 60L).map(i => (i % 3, (i % 10) - 5))
+    val lr = rows.map { case (x1, x2) => (x1, x2, if (x2 >= 0) 1000000L else 0L) }
+      .toDF("x1", "x2", "yq")
+    val sm = rows.map { case (x1, x2) => (x1, x2, if (x2 <= -3) 0L else if (x2 <= 2) 1L else 2L) }
+      .toDF("x1", "x2", "y")
+    val sv = rows.map { case (x1, x2) => (x1, x2, if (x2 >= 0) 1L else -1L) }
+      .toDF("x1", "x2", "ys")
+    val fits = Seq[(String, DataFrame, Int => DataFrame)](
+      ("logistic", lr, n => Learn.logisticFitK(lr, 2, n, Learn.constStep(1.0))),
+      ("softmax", sm, n => Learn.softmaxFitK(sm, 3, n, 1.0)),
+      ("svm", sv, n => Learn.svmFitK(sv, 2, n, Learn.svmStep(0.5))))
+    for ((name, feats, fit) <- fits) {
+      // only the last checkpoint is eager: an extra iteration adds its
+      // weight broadcast and its gradient aggregate to that one action;
+      // an eager pin per step would add a third
+      assert(jobsStartedBy(fit(4)) - jobsStartedBy(fit(3)) === 2, name)
+      assert(spark.sharedState.cacheManager.lookupCachedData(
+        feats.asInstanceOf[org.apache.spark.sql.classic.Dataset[_]]).isEmpty,
+        s"$name: the fit left its input cached")
+    }
   }
 
   test("decision tree: hand-checked splits, tie-breaks, and leaf populations") {
@@ -491,7 +517,7 @@ class LearnSpec extends SparkSpec {
       (i, i % 3, (i % 10) - 5, if ((i % 10) - 5 >= 0) 1L else -1L)
     }
     val feats = raw.toDF("id", "x1", "x2", "ys")
-    val w = Learn.svmFit2(feats, iters = 8, lr = 0.5)
+    val w = Learn.svmFitK(feats, d = 2, iters = 8, Learn.svmStep(0.5))
     val wr = w.head()
     // scalar mirror of the identical arithmetic: integer margin test,
     // half-away-from-zero quantized update
@@ -510,7 +536,7 @@ class LearnSpec extends SparkSpec {
       mw = (upd(mw._1, g0), upd(mw._2, g1), upd(mw._3, g2))
     }
     assert((wr.getLong(0), wr.getLong(1), wr.getLong(2)) === mw)
-    val scored = Learn.svmPredict2(feats, w, "id").collect()
+    val scored = Learn.svmPredictK(feats, w, 2, "id").collect()
     val acc = scored.count(r => r.getLong(3) == r.getLong(1)).toDouble / scored.length
     assert(acc === 1.0, s"separable svm must fully separate, got $acc")
   }
@@ -520,8 +546,8 @@ class LearnSpec extends SparkSpec {
     val feats = (1L to 200L).map { i =>
       (i, i % 5, ((i * 7) % 23) - 11, if ((i * 3) % 11 > 5) 1L else -1L)
     }.toDF("id", "x1", "x2", "ys")
-    val a = Learn.svmFit2(feats.repartition(1), iters = 4).head()
-    val b = Learn.svmFit2(feats.repartition(13, col("x2")), iters = 4).head()
+    val a = Learn.svmFitK(feats.repartition(1), 2, iters = 4, Learn.svmStep(0.5)).head()
+    val b = Learn.svmFitK(feats.repartition(13, col("x2")), 2, iters = 4, Learn.svmStep(0.5)).head()
     assert(a === b)
   }
 
@@ -1023,16 +1049,8 @@ class LearnSpec extends SparkSpec {
     }
   }
 
-  test("softmaxFitK: K = 3 is bit-identical to softmaxFit2; K = 4 predicts all four bands") {
+  test("softmaxFitK: K = 4 predicts all four bands") {
     import spark.implicits._
-    val three = (1L to 300L).map { i =>
-      val z = (i % 9) + (i * 7) % 13
-      (i, i % 9 - 4, (i * 7) % 13 - 6, if (z > 13) 2L else if (z > 8) 1L else 0L)
-    }.toDF("o_orderkey", "x1", "x2", "y")
-    val w3 = Learn.softmaxFit2(three.select("x1", "x2", "y"), iters = 5, lr = 1.0).head()
-    val wk = Learn.softmaxFitK(three.select("x1", "x2", "y"), kTot = 3,
-      iters = 5, lr = 1.0).head()
-    assert(w3 === wk)
     // 4 bands of a separable score: every class must appear in the
     // predictions and accuracy must clear the dominant-class rate
     val four = (1L to 400L).map { i =>
@@ -1054,38 +1072,23 @@ class LearnSpec extends SparkSpec {
     }
   }
 
-  test("svmFitK: d = 2 is bit-identical to svmFit2; x3 margin signal separates") {
+  test("svmFitK: the x3 margin signal separates") {
     import spark.implicits._
-    val two = (1L to 300L).map { i =>
-      (i % 9 - 4, (i * 7) % 13 - 6, if ((i % 9) + (i * 7) % 13 > 10) 1L else -1L)
-    }.toDF("x1", "x2", "ys")
-    val w2 = Learn.svmFit2(two, iters = 5, lr = 0.5).head()
-    val wk = Learn.svmFitK(two, d = 2, iters = 5, lr = 0.5).head()
-    assert(w2 === wk)
     // the label is a pure sign function of x3 (centered): the d = 3
     // hinge must separate ~perfectly; x1/x2 are uncorrelated noise
     val three = (1L to 400L).map { i =>
       (i, i % 4 - 2, (i * 3) % 5 - 2, (i % 11) - 5,
         if ((i % 11) - 5 >= 0) 1L else -1L)
     }.toDF("o_orderkey", "x1", "x2", "x3", "ys")
-    val w3 = Learn.svmFitK(three, d = 3, iters = 10, lr = 0.5)
+    val w3 = Learn.svmFitK(three, d = 3, iters = 10, Learn.svmStep(0.5))
     val preds = Learn.svmPredictK(three, w3, 3, "o_orderkey").collect()
     val acc = preds.count(r => r.getLong(3) === r.getLong(1)).toDouble / preds.length
     assert(acc > 0.95, s"3-feature hinge must separate on x3: acc $acc")
     assert(w3.head().getLong(3) > 0, "x3 weight carries the positive signal")
   }
 
-  test("logisticFitK: d = 2 is bit-identical to logisticFit2; the third feature separates") {
+  test("logisticFitK: the third feature separates") {
     import spark.implicits._
-    // d = 2 equality: the generated probability/update text reproduces
-    // the historical machinery byte-identically, so the fitted weight
-    // STATES agree exactly, not just predictions
-    val two = (1L to 300L).map { i =>
-      (i % 9, (i * 7) % 13, if ((i % 9) + (i * 7) % 13 > 10) 1000000L else 0L)
-    }.toDF("x1", "x2", "yq")
-    val w2 = Learn.logisticFit2(two, iters = 5, lr = 1.0).head()
-    val wk = Learn.logisticFitK(two, d = 2, iters = 5, lr = 1.0).head()
-    assert(w2 === wk)
     // a label that is a pure function of x3: the d = 3 fit must push
     // weight onto x3 and classify ~perfectly where the 2-feature fit
     // (blind to x3) cannot beat the base rate
@@ -1094,7 +1097,7 @@ class LearnSpec extends SparkSpec {
     }.toDF("o_orderkey", "x1", "x2", "x3", "yq")
     val centered = three.selectExpr("o_orderkey", "x1", "x2",
       "CAST(x3 - 5 AS BIGINT) AS x3", "yq") // center so w0 need not chase the offset
-    val w3 = Learn.logisticFitK(centered, d = 3, iters = 12, lr = 1.0)
+    val w3 = Learn.logisticFitK(centered, d = 3, iters = 12, Learn.constStep(1.0))
     val preds = Learn.logisticPredictK(centered, w3, 3, "o_orderkey").collect()
     val acc = preds.count(r => r.getLong(3) === r.getLong(1)).toDouble / preds.length
     assert(acc > 0.95, s"3-feature fit must separate on x3: acc $acc")
@@ -1437,14 +1440,14 @@ class LearnSpec extends SparkSpec {
       val x2 = (i % 15) - 7 // -7..7
       (i, i % 3, x2, if (x2 <= -3) 0L else if (x2 <= 2) 1L else 2L)
     }.toDF("id", "x1", "x2", "y")
-    val w = Learn.softmaxFit2(feats, iters = 20, lr = 2.0)
+    val w = Learn.softmaxFitK(feats, kTot = 3, iters = 20, lr = 2.0)
     val scored = Learn.softmaxPredict2(feats, w, "id").collect()
     val acc = scored.count(r => r.getLong(5) === r.getLong(1)).toDouble / scored.length
     assert(acc >= 0.95, s"softmax accuracy $acc")
     // p0 is the EXACT integer complement on every row
     assert(scored.forall(r => r.getLong(2) + r.getLong(3) + r.getLong(4) === 1000000L))
     // partitioning-deterministic
-    val w2 = Learn.softmaxFit2(feats.repartition(7), iters = 20, lr = 2.0)
+    val w2 = Learn.softmaxFitK(feats.repartition(7), kTot = 3, iters = 20, lr = 2.0)
     assert(w2.head().toSeq === w.head().toSeq)
   }
 
@@ -1453,12 +1456,12 @@ class LearnSpec extends SparkSpec {
     val feats = (1L to 200L)
       .map(i => (i, i % 3, (i % 10) - 5, if ((i % 10) - 5 >= 0) 1000000L else 0L))
       .toDF("id", "x1", "x2", "yq")
-    val w0 = Learn.logisticFitDecayL2(feats, iters = 8, lr0 = 1.0, lambda = 0.0).head()
-    val wL = Learn.logisticFitDecayL2(feats, iters = 8, lr0 = 1.0, lambda = 0.5).head()
+    val w0 = Learn.logisticFitK(feats, 2, iters = 8, Learn.decayL2Step(lr0 = 1.0, lambda = 0.0)).head()
+    val wL = Learn.logisticFitK(feats, 2, iters = 8, Learn.decayL2Step(lr0 = 1.0, lambda = 0.5)).head()
     assert(math.abs(wL.getLong(2)) < math.abs(w0.getLong(2)), // x2 carries the boundary
       s"l2 did not shrink: ${w0.getLong(2)} -> ${wL.getLong(2)}")
     // the sqrt(t) decay genuinely diverges from the constant-step fit
-    val wConst = Learn.logisticFit2(feats, iters = 8, lr = 1.0).head()
+    val wConst = Learn.logisticFitK(feats, 2, iters = 8, Learn.constStep(1.0)).head()
     assert(w0.toSeq !== wConst.toSeq)
   }
 
@@ -1468,16 +1471,18 @@ class LearnSpec extends SparkSpec {
     val feats = (1L to 200L)
       .map(i => (i, i % 3, (i % 10) - 5, if ((i % 10) - 5 >= 0) 1000000L else 0L))
       .toDF("id", "x1", "x2", "yq")
-    val wMb = Learn.logisticFitMiniBatch(feats, "id", iters = 8, lr = 1.0, batches = 4)
-    val scored = Learn.logisticPredict2(feats, wMb, "id").collect()
+    val wMb = Learn.logisticFitK(feats, 2, iters = 8, Learn.constStep(1.0),
+      batch = Some(Learn.rotatingBatch("id", batches = 4)))
+    val scored = Learn.logisticPredictK(feats, wMb, 2, "id").collect()
     val acc = scored.count(r => r.getLong(3) === r.getLong(1)).toDouble / scored.length
     assert(acc >= 0.9, s"minibatch accuracy $acc")
     // quarter-batch gradients are not the full-batch gradients: the
     // stochastic trajectory must land on different quantized weights
-    val wFull = Learn.logisticFit2(feats, iters = 8, lr = 1.0).head()
+    val wFull = Learn.logisticFitK(feats, 2, iters = 8, Learn.constStep(1.0)).head()
     assert(wMb.head().toSeq !== wFull.toSeq)
     // deterministic: the same rotation reproduces the same weights
-    val again = Learn.logisticFitMiniBatch(feats.repartition(5), "id", 8, 1.0, 4)
+    val again = Learn.logisticFitK(feats.repartition(5), 2, 8, Learn.constStep(1.0),
+      batch = Some(Learn.rotatingBatch("id", 4)))
     assert(again.head().toSeq === wMb.head().toSeq)
   }
 

@@ -703,16 +703,17 @@ class StreamingSpec extends SparkSpec {
     val b1 = (1L to 40L).map(i => (i % 3, (i % 10) - 5, if ((i % 10) - 5 >= 0) 1000000L else 0L))
     val b2 = (41L to 80L).map(i => (i % 4, (i % 9) - 4, if ((i % 9) - 4 >= 0) 1000000L else 0L))
     // expected: two sequential full-gradient steps, directly
-    var expected = Learn.logisticInit(spark).localCheckpoint()
+    var expected = Learn.zeroWeights(spark, 2).localCheckpoint()
     for (b <- Seq(b1, b2))
-      expected = Learn.logisticStep(b.toDF("x1", "x2", "yq"), expected, 1.0).localCheckpoint()
+      expected = Learn.logisticStepK(b.toDF("x1", "x2", "yq"), expected, 2,
+        Learn.constStep(1.0)).localCheckpoint()
     // actual: through the streaming engine, the model a driver var across
     // batches (the reference's trainOn contract, and v12's shape)
     val ms = MemoryStream[(Long, Long, Long)](spark)
-    var w = Learn.logisticInit(spark).localCheckpoint()
+    var w = Learn.zeroWeights(spark, 2).localCheckpoint()
     val q = ms.toDF().toDF("x1", "x2", "yq").writeStream
       .foreachBatch { (b: org.apache.spark.sql.Dataset[Row], _: Long) =>
-        w = Learn.logisticStep(b, w, 1.0).localCheckpoint()
+        w = Learn.logisticStepK(b, w, 2, Learn.constStep(1.0)).localCheckpoint()
       }
       .start()
     try {
@@ -722,8 +723,8 @@ class StreamingSpec extends SparkSpec {
     assert(w.head() === expected.head())
     // and the two-batch model differs from the one-batch model (the
     // second update really happened)
-    val oneBatch = Learn.logisticStep(b1.toDF("x1", "x2", "yq"),
-      Learn.logisticInit(spark), 1.0)
+    val oneBatch = Learn.logisticStepK(b1.toDF("x1", "x2", "yq"),
+      Learn.zeroWeights(spark, 2), 2, Learn.constStep(1.0))
     assert(w.head() !== oneBatch.head())
   }
 
@@ -767,11 +768,11 @@ class StreamingSpec extends SparkSpec {
     // 1-row weight frame IS the model state across micro-batches)
     val b1 = (1L to 30L).map(i => (i % 3, i % 10, 7 * (i % 10)))
     val b2 = (31L to 60L).map(i => (i % 5, i % 8, 7 * (i % 8)))
-    var expected = Learn.logisticInit(spark).localCheckpoint()
+    var expected = Learn.zeroWeights(spark, 2).localCheckpoint()
     for (b <- Seq(b1, b2))
       expected = Learn.linearStep(b.toDF("x1", "x2", "y"), expected, 0.05).localCheckpoint()
     val ms = MemoryStream[(Long, Long, Long)](spark)
-    var w = Learn.logisticInit(spark).localCheckpoint()
+    var w = Learn.zeroWeights(spark, 2).localCheckpoint()
     val q = ms.toDF().toDF("x1", "x2", "y").writeStream
       .foreachBatch { (b: org.apache.spark.sql.Dataset[Row], _: Long) =>
         w = Learn.linearStep(b, w, 0.05).localCheckpoint()
@@ -785,7 +786,7 @@ class StreamingSpec extends SparkSpec {
     // the second batch pulled the slope weight CLOSER to the true slope 7
     // (2^16-quantized: 458752; lr 0.05 overshoots on batch 1, so the
     // informative claim is error contraction, not monotone approach)
-    val one = Learn.linearStep(b1.toDF("x1", "x2", "y"), Learn.logisticInit(spark), 0.05).head().getLong(2)
+    val one = Learn.linearStep(b1.toDF("x1", "x2", "y"), Learn.zeroWeights(spark, 2), 0.05).head().getLong(2)
     val two = w.head().getLong(2)
     assert(one > 0L && math.abs(two - 458752L) < math.abs(one - 458752L))
   }
