@@ -245,13 +245,6 @@ object GmmKd {
     case 4 => Seq("l", "m", "m2", "h2")
   }
 
-  /** Per-region stat column names for region label `p`. */
-  def regionStatCols(d: Int, p: String): Seq[String] = d match {
-    case 1 => Seq(s"n$p", s"s$p", s"ss$p")
-    case _ => s"n$p" +: (axes(d).map(a => s"s$p$a") ++
-      pairs(d).map { case (i, j) => s"s$p${ax(i)}${ax(j)}" })
-  }
-
   /** Init from the K region stats: every component seeds from its own
     * x-region (weight = region fraction, per-region means and full
     * covariances, diagonals floored). */

@@ -48,10 +48,6 @@ object Streaming {
       .select(col("w.start").as("window_start"), col("event_type"),
         col("n"), col("cents"))
 
-  /** Event-time watermark: bound state retention / late-data acceptance. */
-  def withLateness(events: DataFrame, delay: String): DataFrame =
-    events.withWatermark("ts", delay)
-
   // ---- invertible windowed reduction (reference streaming/.../dstream/
   // PairDStreamFunctions.scala:249 reduceByKeyAndWindow with
   // invReduceFunc + ReducedWindowedDStream.scala:33; compute at :134-166

@@ -101,5 +101,14 @@ class CatalogSpec extends SparkSpec {
       .collect().map(_.getInt(0))
     assert(ranked.toSeq === Seq(1, 2))
     assert(a.assertAnalyzed().count() === 1)
+    // each renamed alias gives the modern function's values
+    val w = org.apache.spark.sql.expressions.Window.orderBy("k")
+    val ks = Seq(1, 1, 2, 3, 3, 3).toDF("k")
+    val legacy = ks.select(denseRank().over(w), percentRank().over(w), cumeDist().over(w))
+    val modern = ks.select(dense_rank().over(w), percent_rank().over(w), cume_dist().over(w))
+    assert(legacy.collect().toSeq === modern.collect().toSeq)
+    assert(legacy.collect().map(_.getInt(0)).toSeq === Seq(1, 1, 2, 3, 3, 3))
+    assert(ks.select(graft.compat.Legacy.approxCountDistinct(col("k"))).head().getLong(0) ===
+      ks.select(approx_count_distinct(col("k"))).head().getLong(0))
   }
 }

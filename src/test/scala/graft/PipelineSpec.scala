@@ -332,16 +332,23 @@ class PipelineSpec extends SparkSpec {
   test("s61 runs under whole-stage codegen with no interpreted fallback") {
     // the noop sink computes every column; with the fallback off, a
     // generated class that fails to compile fails the write instead of
-    // silently running interpreted. With VectorSlicerStage on element_at,
-    // s61 compiled on a JVM's first run and failed from its second run on
-    // (the optimizer collapsed the projections differently), so run it
-    // twice
+    // silently running interpreted. s61's optimized plan depends on the
+    // expression-id counter: whether CollapseProject merges the stacked
+    // CASE and array projections follows the ids, so one JVM plans it
+    // with 4, 5 or 6 projections from build to build (with
+    // VectorSlicerStage on element_at, one of those shapes failed to
+    // compile). Shift the counter between builds and write every shape
     val key = "spark.sql.codegen.fallback"
     val prev = spark.conf.getOption(key)
     spark.conf.set(key, "false")
-    try for (_ <- 1 to 2) SparkEntry.queries("s61_plumbing_stages")(spark, sf001)
-      .write.format("noop").mode("overwrite").save()
-    finally prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+    val shapes = scala.collection.mutable.Set.empty[Int]
+    try for (i <- 1 to 6) {
+      (0 until 3 * i).foreach(_ => org.apache.spark.sql.catalyst.expressions.NamedExpression.newExprId)
+      val df = SparkEntry.queries("s61_plumbing_stages")(spark, sf001)
+      val projects = df.queryExecution.optimizedPlan.collect {
+        case p: org.apache.spark.sql.catalyst.plans.logical.Project => p }.size
+      if (shapes.add(projects)) df.write.format("noop").mode("overwrite").save()
+    } finally prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
   }
 
   test("vectorIndexer: zero-first category order, continuous cutoff, unseen -> null") {

@@ -46,7 +46,7 @@ class StreamingSpec extends SparkSpec {
     def at(min: Int) = java.sql.Timestamp.valueOf(f"2024-01-01 ${10 + min / 60}%02d:${min % 60}%02d:00")
     val ms = MemoryStream[Event](spark)
     val agg = Streaming.tumblingStats(
-      Streaming.withLateness(ms.toDF(), "10 minutes"), "15 minutes")
+      ms.toDF().withWatermark("ts", "10 minutes"), "15 minutes")
     val q = agg.writeStream.format("memory").queryName("wm_stream")
       .outputMode(OutputMode.Append()).start()
     try {
